@@ -1,15 +1,16 @@
 """Bounding-box tile extract — the flagship query.
 
 Re-expresses the reference's `GET /minLat,minLon,maxLat,maxLon.pbf`
-pipeline (TileOSMSource.java:49-143) as one declarative DataFrame DAG:
+pipeline (TileOSMSource.java:49-143) as ONE DataFrame DAG over a batch
+of boxes; a single extract is a batch of one, as the reference's
+concurrent server (VanillaExtract.java:102-148) runs one pipeline per box:
 
-    bbox → z12 tile range (y-inverted, TileOSMSource.java:43-45)
-         → way_tiles range filter            (S5: partition-pruned scan)
-         → ways semi-join                    (J2)
-         → explode refs → nodes inner join   (J1 + J6 dedup)
-         → relation semi-joins by node/way   (J3/J4, INTENDED semantics)
-         → upward relation closure           (J5, semi-naive iteration)
-         → type-major ordered output         (O1)
+    bboxes → z12 tile ranges (y-inverted, TileOSMSource.java:43-45)
+           → envelope filter + bbox × way_tiles range join  (S5, J2)
+           → explode refs → dedup → node semi-join          (J1 + J6)
+           → relation lookups by node/way                   (J3/J4)
+           → one join against the precomputed closure       (J5)
+           → (bbox_id, entity_type, id); type-major order in Extract.ids (O1)
 
 Documented deviations from the reference (SURVEY §5.4 — reference bugs,
 we implement the intended semantics): the node→relation lookup keys on
@@ -17,19 +18,18 @@ nodeId (the reference accidentally uses wayId, TileOSMSource.java:87-89),
 relations are emitted once (not once per pass), and the closure frontier
 tests the discovered id (TileOSMSource.java:127).
 
-Scale design: the tile filter reaches the way_tiles parquet scan
-(min/max row-group skipping via the Hilbert-sorted layout); the J1 join
-deduplicates probe keys first so both join sides are key-unique (no
-skew); AQE picks broadcast at runtime when the bbox is small and its
-way-id set is tiny; the closure loop is semi-naive (joins only the
-frontier, not the whole seen set) and localCheckpoints each round to
-keep the plan from growing.
+Scale design: the envelope filter reaches the way_tiles parquet scan
+(row-group skipping via the Hilbert-sorted layout); J1 deduplicates
+probe keys first so both join sides are key-unique (no skew); the
+closure table is built once per dataset, and its exact row count picks
+a broadcast or a hash-partitioned closure join.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,12 +37,14 @@ from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.indexes import build_way_tiles
 
 MAX_CLOSURE_ITERATIONS = 50
+CLOSURE_ROW_BYTES = 16  # (relation_id, ancestor_id): two longs
 
 
-def relation_closure_table(relations: DataFrame) -> DataFrame:
+def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
     """Transitive UPWARD closure of the relation-membership graph:
     (relation_id, ancestor_id) for every relation that is reachable by
-    walking 'is member of' edges 0+ times (reflexive rows excluded).
+    walking 'is member of' edges 0+ times (reflexive rows excluded),
+    returned with its exact row count.
 
     Computed ONCE per dataset by semi-naive iteration over the (small)
     relation→relation edge set (the relationsByRelation index,
@@ -58,6 +60,7 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
             F.col("relation_id").alias("ancestor_id"),
         )
     ).localCheckpoint(eager=True)
+    rows = edges.count()
 
     closure = edges
     frontier = edges
@@ -65,90 +68,84 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
         # extend frontier paths by one parent hop
         step = (
             frontier.alias("f")
-            .join(
-                edges.alias("e"),
-                F.col("f.ancestor_id") == F.col("e.relation_id"),
-            )
-            .select(
-                F.col("f.relation_id").alias("relation_id"),
-                F.col("e.ancestor_id").alias("ancestor_id"),
-            )
+            .join(edges.alias("e"), F.col("f.ancestor_id") == F.col("e.relation_id"))
+            .select("f.relation_id", "e.ancestor_id")
             .distinct()
         )
         new = step.join(
             closure, ["relation_id", "ancestor_id"], "left_anti"
         ).localCheckpoint(eager=True)
-        if new.isEmpty():
+        n_new = new.count()
+        if not n_new:
             break
+        rows += n_new
         closure = closure.unionByName(new).localCheckpoint(eager=True)
         frontier = new
-    return closure
+    return closure, rows
 
 
 @dataclass
 class ExtractContext:
-    """Cached per-dataset state shared by a batch of extracts: the three
-    relation member indexes and the transitive closure table. Build once
-    with ``prepare_extract_context``; each bbox extract is then a pure
+    """Cached per-dataset state shared by extracts: the node/way member
+    indexes, the transitive closure table and its exact row count. Build
+    once with ``prepare_extract_context``; each extract is then a pure
     join DAG with no driver-side iteration."""
 
     rel_by_node: DataFrame
     rel_by_way: DataFrame
     rel_closure: DataFrame
+    closure_rows: int
 
 
 def prepare_extract_context(relations: DataFrame) -> ExtractContext:
     from osm_lib_spark.operators.indexes import rel_member_indexes
 
     idx = rel_member_indexes(relations)
+    closure, closure_rows = relation_closure_table(relations)
     return ExtractContext(
         rel_by_node=idx["node"].localCheckpoint(eager=True),
         rel_by_way=idx["way"].localCheckpoint(eager=True),
-        rel_closure=relation_closure_table(relations),
+        rel_closure=closure,
+        closure_rows=closure_rows,
     )
 
 
 @dataclass
 class Extract:
+    """One box's entity rows, and the (entity_type, id) frame selecting them."""
+
     nodes: DataFrame
     ways: DataFrame
     relations: DataFrame
+    entity_ids: DataFrame
 
     def ids(self, ordered: bool = True) -> DataFrame:
-        """(entity_type, id) union in type-major order (O1,
+        """(entity_type, id) in type-major order (O1,
         OSMEntitySource.java:10-13): nodes, then ways, then relations.
         ``ordered=False`` skips the global sort — use when the consumer
         only aggregates (a Sort below an Aggregate is pure waste)."""
-        u = (
-            self.nodes.select(F.lit("node").alias("entity_type"), "id")
-            .unionByName(self.ways.select(F.lit("way").alias("entity_type"), "id"))
-            .unionByName(
-                self.relations.select(F.lit("relation").alias("entity_type"), "id")
-            )
-        )
         if not ordered:
-            return u
+            return self.entity_ids
         type_rank = (
             F.when(F.col("entity_type") == "node", 0)
             .when(F.col("entity_type") == "way", 1)
             .otherwise(2)
         )
-        return u.orderBy(type_rank, "id")
+        return self.entity_ids.orderBy(type_rank, "id")
 
 
-def ways_in_bbox(
-    way_tiles: DataFrame, bbox: tuple[float, float, float, float]
-) -> DataFrame:
-    """Tile-range scan (S5, TileOSMSource.java:59-68) → way_id frame.
+def ways_in_tile_range(way_tiles: DataFrame, tile_range: tuple[int, int, int, int]) -> DataFrame:
+    """Tile-range scan (S5, TileOSMSource.java:59-68): the way_tiles rows
+    inside the inclusive (min_x, min_y, max_x, max_y) range.
 
     The between-predicates are plain column filters, so they push down
     into the parquet/Iceberg scan and prune row groups when way_tiles is
     stored Hilbert-sorted (write_way_tiles_partitioned).
     """
-    min_x, min_y, max_x, max_y = bbox_tile_range(*bbox)
+    min_x, min_y, max_x, max_y = tile_range
     return way_tiles.where(
         F.col("xtile").between(min_x, max_x) & F.col("ytile").between(min_y, max_y)
-    ).select("way_id")
+    )
 
 
 def bbox_extract_batch(
@@ -163,11 +160,12 @@ def bbox_extract_batch(
 
     The batch analog of the reference's concurrent extract server
     (VanillaExtract.java:102-148): instead of one join chain per bbox,
-    the bbox set becomes a broadcast dimension table joined against
-    way_tiles with range predicates, and every downstream join carries
-    bbox_id as part of the key. A batch of B extracts costs one set of
-    shuffles (not B sets) — at cluster scale this is what turns many
-    narrow queries into one wide, scalable job.
+    the bbox set becomes a dimension table joined against way_tiles
+    with range predicates, and every downstream join carries bbox_id as
+    part of the key. A batch of B extracts costs one set of shuffles
+    (not B sets). ``way_tiles`` may be a pre-built (ideally
+    Hilbert-partitioned) index table, else it is derived on the fly;
+    ``ctx`` (``prepare_extract_context``) is reusable across calls.
     """
     spark = nodes.sparkSession
     if way_tiles is None:
@@ -175,19 +173,26 @@ def bbox_extract_batch(
     if ctx is None:
         ctx = prepare_extract_context(relations)
 
-    ranges = [(i,) + bbox_tile_range(*b) for i, b in enumerate(bboxes)]
-    bbox_df = spark.createDataFrame(
-        ranges, "bbox_id int, min_x int, min_y int, max_x int, max_y int"
-    )
+    ranges = [bbox_tile_range(*b) for b in bboxes]
+    min_xs, min_ys, max_xs, max_ys = zip(*ranges)
+    envelope = (min(min_xs), min(min_ys), max(max_xs), max(max_ys))
+    # An Arrow-built frame is a LocalRelation of exactly known size
+    # (28 B/box), so the planner itself broadcasts it into the range join
+    # while it fits under spark.sql.autoBroadcastJoinThreshold.
+    bbox_df = spark.createDataFrame(pa.table(
+        [pa.array(c, pa.int32()) for c in (range(len(ranges)), min_xs, min_ys, max_xs, max_ys)],
+        names=["bbox_id", "min_x", "min_y", "max_x", "max_y"],
+    ))
     # lazy checkpoint: b_ways feeds THREE consumers (the ref explode,
     # the way→relation join, the way output branch); Spark plans union
     # branches as separate subtrees (no ReuseExchange matched here), so
     # without the barrier the BroadcastNestedLoopJoin over way_tiles
     # re-executes once per consumer (plan audit r06: the BNLJ subtree
     # appeared 3× in the physical plan).
-    hits = (
-        way_tiles.join(
-            F.broadcast(bbox_df),
+    b_ways = (
+        ways_in_tile_range(way_tiles, envelope)
+        .join(
+            bbox_df,
             F.col("xtile").between(F.col("min_x"), F.col("max_x"))
             & F.col("ytile").between(F.col("min_y"), F.col("max_y")),
         )
@@ -195,7 +200,6 @@ def bbox_extract_batch(
         .localCheckpoint(eager=False)
     )
 
-    b_ways = hits  # (bbox_id, way_id)
     # One exchange, keyed by ref_id only: hash(ref_id) satisfies the
     # distinct's ClusteredDistribution on (bbox_id, ref_id) — rows with
     # equal pairs share a ref_id — AND the downstream semi-join's
@@ -213,7 +217,8 @@ def bbox_extract_batch(
     # SHUFFLE_HASH: at scale neither side broadcasts (refs is the
     # exploded batch, nodes the corpus); hash-building the node side
     # beats sort-merge — it skips sorting both multi-million-row sides
-    # (same reasoning as the bench's way→node resolution join).
+    # (same reasoning as the bench's way→node resolution join). Orphan
+    # refs drop out (logged-and-skipped, TileOSMSource.java:80-82).
     b_nodes = (
         refs.join(
             nodes.select(F.col("id").alias("ref_id")).hint("SHUFFLE_HASH"),
@@ -231,11 +236,21 @@ def bbox_extract_batch(
         b_ways.withColumnRenamed("way_id", "member_id"), "member_id"
     ).select("bbox_id", "relation_id")
     # lazy checkpoint: seen feeds the direct relation output AND the
-    # closure join (was computed twice); it is bounded by the relation
-    # count, so broadcasting it into the closure join replaces the
-    # SortMergeJoin (+2 exchanges) the stats-free RDD scan planned.
+    # closure join (was computed twice).
     seen = rel_n.unionByName(rel_w).distinct().localCheckpoint(eager=False)
-    ancestors = F.broadcast(seen).join(ctx.rel_closure, "relation_id").select(
+    # J5 (TileOSMSource.java:112-132 semantics): the closure table is
+    # per dataset, so unlike seen it does not grow with the batch, and
+    # its exact size is known. Broadcast it when that fits under
+    # spark.sql.autoBroadcastJoinThreshold, else hash-join: left to the
+    # planner, the checkpointed closure keeps its origin plan's estimate
+    # (17 GB for the 10-row sf-xs closure on Spark 4.1.2) and the join
+    # plans as a SortMergeJoin.
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if ctx.closure_rows * CLOSURE_ROW_BYTES <= threshold:
+        closure = F.broadcast(ctx.rel_closure)
+    else:
+        closure = ctx.rel_closure.hint("SHUFFLE_HASH")
+    ancestors = seen.join(closure, "relation_id").select(
         "bbox_id", F.col("ancestor_id").alias("relation_id")
     )
     b_rels = seen.unionByName(ancestors).distinct()
@@ -255,74 +270,17 @@ def bbox_extract(
     way_tiles: DataFrame | None = None,
     ctx: ExtractContext | None = None,
 ) -> Extract:
-    """Full extract. ``bbox`` = (min_lat, min_lon, max_lat, max_lon).
+    """Extract of one ``bbox`` = (min_lat, min_lon, max_lat, max_lon): a
+    batch of one, each entity table semi-joined against its ids."""
+    entity_ids = bbox_extract_batch(nodes, ways, relations, [bbox], way_tiles, ctx).drop("bbox_id")
 
-    ``way_tiles`` may be a pre-built (ideally Hilbert-partitioned) index
-    table; if None it is derived on the fly. ``ctx`` (from
-    ``prepare_extract_context``) is reused across a batch of extracts —
-    the relation closure then costs ONE join per extract instead of an
-    iterative loop.
-    """
-    if way_tiles is None:
-        way_tiles = build_way_tiles(ways, nodes)
-    if ctx is None:
-        ctx = prepare_extract_context(relations)
-    hit_ways = ways_in_bbox(way_tiles, bbox)
+    def rows(table: DataFrame, entity_type: str) -> DataFrame:
+        ids = entity_ids.where(F.col("entity_type") == entity_type).select("id")
+        return table.join(ids, "id", "left_semi")
 
-    # J2: fetch way rows. left_semi keeps the probe side lean.
-    # Lazy checkpoint: the way subtree feeds THREE consumers (ref
-    # explode, rel-by-way semi, the output union) and the node subtree
-    # TWO (rel-by-node semi, output) — Spark plans union branches as
-    # separate subtrees, so without the barriers the tile scan + semi
-    # joins re-execute per branch (measured ~2× single-extract latency).
-    extract_ways = ways.join(
-        hit_ways, ways.id == hit_ways.way_id, "left_semi"
-    ).localCheckpoint(eager=False)
-
-    # J1 + J6: resolve refs → nodes, dedup before the join so both sides
-    # are key-unique (orphan refs drop out via the inner join, the
-    # logged-and-skipped semantics of TileOSMSource.java:80-82).
-    ref_ids = extract_ways.select(F.explode("node_ids").alias("ref_id")).distinct()
-    extract_nodes = nodes.join(
-        ref_ids, nodes.id == ref_ids.ref_id, "left_semi"
-    ).localCheckpoint(eager=False)
-
-    # J3/J4: relations referencing extracted nodes (by nodeId — intended
-    # semantics) or extracted ways.
-    rel_by_node = ctx.rel_by_node.join(
-        extract_nodes.select(F.col("id").alias("nid")),
-        F.col("member_id") == F.col("nid"),
-        "left_semi",
+    return Extract(
+        nodes=rows(nodes, "node"),
+        ways=rows(ways, "way"),
+        relations=rows(relations, "relation"),
+        entity_ids=entity_ids,
     )
-    rel_by_way = ctx.rel_by_way.join(
-        extract_ways.select(F.col("id").alias("wid")),
-        F.col("member_id") == F.col("wid"),
-        "left_semi",
-    )
-    # lazy checkpoint: seen feeds the closure semi-join AND the output
-    # union (it was planned twice — plan audit r06); it is bounded by
-    # the relation count, so the closure and final semi-joins broadcast
-    # it instead of sort-merging stats-free RDD scans.
-    seen = (
-        rel_by_node.select("relation_id")
-        .unionByName(rel_by_way.select("relation_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    # J5: upward closure resolved in ONE join against the precomputed
-    # transitive closure table (TileOSMSource.java:112-132 semantics).
-    ancestors = (
-        ctx.rel_closure.join(
-            F.broadcast(seen.withColumnRenamed("relation_id", "seen_id")),
-            ctx.rel_closure.relation_id == F.col("seen_id"),
-            "left_semi",
-        )
-        .select(F.col("ancestor_id").alias("relation_id"))
-    )
-    all_rels = seen.unionByName(ancestors).distinct()
-
-    extract_rels = relations.join(
-        F.broadcast(all_rels), relations.id == all_rels.relation_id, "left_semi"
-    )
-    return Extract(nodes=extract_nodes, ways=extract_ways, relations=extract_rels)

@@ -371,134 +371,135 @@ def knn_kring(
     parts_rows: list[tuple[int, int, int]] = []
     round_frames: list[DataFrame] = []  # persisted per-round top-k (large-Q mode)
 
-    while frontier:
-        # coarse prefilter: the frontier's global tile bounding box as
-        # PLAIN column predicates — these push down to parquet row-group
-        # stats / in-memory batch pruning, which the join condition
-        # cannot; skipped when any ring wraps the antimeridian
-        probe = coords
-        if all(2 * f["radius"] + 1 < NTILES and f["qx"] - f["radius"] >= 0
-               and f["qx"] + f["radius"] < NTILES for f in frontier):
-            gx0 = min(f["qx"] - f["radius"] for f in frontier)
-            gx1 = max(f["qx"] + f["radius"] for f in frontier)
-            gy0 = min(max(f["qy"] - f["radius"], 0) for f in frontier)
-            gy1 = max(min(f["qy"] + f["radius"], NTILES - 1) for f in frontier)
-            probe = coords.where(
-                F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
+    # the finally releases every persisted round frame (and the own
+    # coords cache) on success AND on error: a long-lived serving
+    # session must not accumulate caches without bound
+    try:
+        while frontier:
+            # coarse prefilter: the frontier's global tile bounding box as
+            # PLAIN column predicates — these push down to parquet row-group
+            # stats / in-memory batch pruning, which the join condition
+            # cannot; skipped when any ring wraps the antimeridian
+            probe = coords
+            if all(2 * f["radius"] + 1 < NTILES and f["qx"] - f["radius"] >= 0
+                   and f["qx"] + f["radius"] < NTILES for f in frontier):
+                gx0 = min(f["qx"] - f["radius"] for f in frontier)
+                gx1 = max(f["qx"] + f["radius"] for f in frontier)
+                gy0 = min(max(f["qy"] - f["radius"], 0) for f in frontier)
+                gy1 = max(min(f["qy"] + f["radius"], NTILES - 1) for f in frontier)
+                probe = coords.where(
+                    F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
+                )
+            est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
+            if est_strip_rows > strip_switch:
+                cand = _coarse_cell_candidates(spark, probe, frontier)
+            else:
+                strips = _frontier_strips(spark, frontier)
+                cand = (
+                    probe.join(F.broadcast(strips), "xtile")
+                    .where(F.col("ytile").between(F.col("ymin"), F.col("ymax")))
+                    .select(
+                        "query_id",
+                        "node_id",
+                        haversine_m(
+                            F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")
+                        ).alias("dist_m"),
+                    )
+                )
+            w = Window.partitionBy("query_id").orderBy(
+                F.col("dist_m").asc(), F.col("node_id").asc()
             )
-        est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
-        if est_strip_rows > strip_switch:
-            cand = _coarse_cell_candidates(spark, probe, frontier)
-        else:
-            strips = _frontier_strips(spark, frontier)
-            cand = (
-                probe.join(F.broadcast(strips), "xtile")
-                .where(F.col("ytile").between(F.col("ymin"), F.col("ymax")))
+            ranked = (
+                cand.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
                 .select(
                     "query_id",
+                    F.col("rank").cast("int").alias("rank"),
                     "node_id",
-                    haversine_m(
-                        F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")
-                    ).alias("dist_m"),
+                    "dist_m",
                 )
             )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist_m").asc(), F.col("node_id").asc()
-        )
-        ranked = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "query_id",
-                F.col("rank").cast("int").alias("rank"),
-                "node_id",
-                "dist_m",
-            )
-        )
-        rows_by_query: dict[int, list] = {}
+            rows_by_query: dict[int, list] = {}
+            if collect_mode:
+                # small batch: ONE job, the queries' own ≤ k·|frontier|-row
+                # top-k comes to the driver directly
+                for r in ranked.collect():
+                    rows_by_query.setdefault(r.query_id, []).append(r)
+                stats = {
+                    qid: (len(rs), max(r.dist_m for r in rs))
+                    for qid, rs in rows_by_query.items()
+                }
+            else:
+                # large batch: the top-k PERSISTS executor-side and the
+                # stats aggregate is the one materializing action — the
+                # round still costs ONE job, and the driver collects ONLY
+                # per-query (count, k-th distance) control rows. Frames
+                # stay persisted (k·Q rows per round; eviction merely
+                # recomputes deterministically from lineage).
+                ranked = ranked.persist()
+                round_frames.append(ranked)
+                stats = {
+                    r["query_id"]: (int(r["n"]), float(r["kth"]))
+                    for r in ranked.groupBy("query_id")
+                    .agg(F.count("*").alias("n"), F.max("dist_m").alias("kth"))
+                    .collect()
+                }
+
+            next_frontier = []
+            satisfied_ids: list[int] = []
+            for f in frontier:
+                n_rows, kth = stats.get(f["query_id"], (0, math.inf))
+                bound = _min_dist_beyond_ring(
+                    f["qlat"], f["qlon"], f["qx"], f["qy"], f["radius"]
+                )
+                covered_all = math.isinf(bound)
+                if covered_all or (n_rows >= k and kth <= bound) or f["radius"] >= max_ring:
+                    satisfied_ids.append(f["query_id"])
+                else:
+                    # deficit-adaptive growth: each round costs a fixed
+                    # Spark job, so sparse regions jump harder (×8 on an
+                    # empty ring, ×4 while short of k) and only the final
+                    # bound-tightening rounds double. Exactness is
+                    # untouched — termination is gated by the distance
+                    # bound, never by the growth schedule.
+                    growth = 2 if n_rows >= k else (4 if n_rows else 8)
+                    f["radius"] = min(f["radius"] * growth, max_ring)
+                    next_frontier.append(f)
+            if satisfied_ids and collect_mode:
+                for qid in satisfied_ids:
+                    parts_rows.extend(
+                        (r.query_id, r.rank, r.node_id)
+                        for r in sorted(rows_by_query.get(qid, []), key=lambda r: r.rank)
+                    )
+            elif satisfied_ids:
+                # slice this round's satisfied results out of the cached
+                # frame, executor-side. A literal isin filter below 8192
+                # ids (no broadcast-build latency), a broadcast semi-join
+                # above (the filter expression never carries 10⁶ literals).
+                if len(satisfied_ids) <= 8192:
+                    sliced = ranked.where(F.col("query_id").isin(satisfied_ids))
+                else:
+                    sat = spark.createDataFrame(
+                        [(int(q),) for q in satisfied_ids], "query_id int"
+                    )
+                    sliced = ranked.join(F.broadcast(sat), "query_id", "left_semi")
+                parts.append(sliced.select("query_id", "rank", "node_id"))
+            frontier = next_frontier
+
         if collect_mode:
-            # small batch: ONE job, the queries' own ≤ k·|frontier|-row
-            # top-k comes to the driver directly
-            for r in ranked.collect():
-                rows_by_query.setdefault(r.query_id, []).append(r)
-            stats = {
-                qid: (len(rs), max(r.dist_m for r in rs))
-                for qid, rs in rows_by_query.items()
-            }
-        else:
-            # large batch: the top-k PERSISTS executor-side and the
-            # stats aggregate is the one materializing action — the
-            # round still costs ONE job, and the driver collects ONLY
-            # per-query (count, k-th distance) control rows. Frames
-            # stay persisted (k·Q rows per round; eviction merely
-            # recomputes deterministically from lineage).
-            ranked = ranked.persist()
-            round_frames.append(ranked)
-            stats = {
-                r["query_id"]: (int(r["n"]), float(r["kth"]))
-                for r in ranked.groupBy("query_id")
-                .agg(F.count("*").alias("n"), F.max("dist_m").alias("kth"))
-                .collect()
-            }
-
-        next_frontier = []
-        satisfied_ids: list[int] = []
-        for f in frontier:
-            n_rows, kth = stats.get(f["query_id"], (0, math.inf))
-            bound = _min_dist_beyond_ring(
-                f["qlat"], f["qlon"], f["qx"], f["qy"], f["radius"]
+            return spark.createDataFrame(
+                parts_rows or [], "query_id int, rank int, node_id long"
             )
-            covered_all = math.isinf(bound)
-            if covered_all or (n_rows >= k and kth <= bound) or f["radius"] >= max_ring:
-                satisfied_ids.append(f["query_id"])
-            else:
-                # deficit-adaptive growth: each round costs a fixed
-                # Spark job, so sparse regions jump harder (×8 on an
-                # empty ring, ×4 while short of k) and only the final
-                # bound-tightening rounds double. Exactness is
-                # untouched — termination is gated by the distance
-                # bound, never by the growth schedule.
-                growth = 2 if n_rows >= k else (4 if n_rows else 8)
-                f["radius"] = min(f["radius"] * growth, max_ring)
-                next_frontier.append(f)
-        if satisfied_ids and collect_mode:
-            for qid in satisfied_ids:
-                parts_rows.extend(
-                    (r.query_id, r.rank, r.node_id)
-                    for r in sorted(rows_by_query.get(qid, []), key=lambda r: r.rank)
-                )
-        elif satisfied_ids:
-            # slice this round's satisfied results out of the cached
-            # frame, executor-side. A literal isin filter below 8192
-            # ids (no broadcast-build latency), a broadcast semi-join
-            # above (the filter expression never carries 10⁶ literals).
-            if len(satisfied_ids) <= 8192:
-                sliced = ranked.where(F.col("query_id").isin(satisfied_ids))
-            else:
-                sat = spark.createDataFrame(
-                    [(int(q),) for q in satisfied_ids], "query_id int"
-                )
-                sliced = ranked.join(F.broadcast(sat), "query_id", "left_semi")
-            parts.append(sliced.select("query_id", "rank", "node_id"))
-        frontier = next_frontier
-
-    if own_cache:
-        coords.unpersist()
-    if collect_mode:
-        return spark.createDataFrame(
-            parts_rows or [], "query_id int, rank int, node_id long"
-        )
-    if not parts:
-        return spark.createDataFrame([], "query_id int, rank int, node_id long")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # materialize the union ONCE executor-side (k·Q rows), then release
-    # every per-round persisted frame: a long-lived serving session must
-    # not accumulate round caches without bound (they were previously
-    # left persisted forever — ADVICE r05). The checkpointed result no
-    # longer references the round frames' lineage.
-    out = out.localCheckpoint(eager=True)
-    for rf in round_frames:
-        rf.unpersist()
-    return out
+        if not parts:
+            return spark.createDataFrame([], "query_id int, rank int, node_id long")
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        # materialize the union ONCE executor-side (k·Q rows); the
+        # checkpointed result no longer references the round frames' lineage
+        return out.localCheckpoint(eager=True)
+    finally:
+        if own_cache:
+            coords.unpersist()
+        for rf in round_frames:
+            rf.unpersist()

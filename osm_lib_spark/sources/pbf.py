@@ -1054,6 +1054,9 @@ def _encode_rel_block_arrow(chunk: "pa.RecordBatch") -> bytes:
     deltas = np.diff(mids, prepend=0)
     nonempty = m_counts > 0
     deltas[m_starts[nonempty]] = mids[m_starts[nonempty]]
+    bad = ~np.isin(mtypes, ["NODE", "WAY", "RELATION"])
+    if bad.any():
+        raise ValueError(f"unknown relation member type {mtypes[bad][0]!r}")
     tcodes = np.select(
         [mtypes == "NODE", mtypes == "WAY"], [0, 1], default=2
     ).astype(np.uint64)

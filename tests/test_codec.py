@@ -154,3 +154,21 @@ def test_empty_tags(spark):
     ).collect()
     assert all(r.e for r in got)
     assert all(r.r == "" for r in got)
+
+
+def test_pbf_relation_encoder_rejects_unknown_member_type():
+    """An unknown member type must fail loudly, not encode as RELATION."""
+    import pyarrow as pa
+    import pytest
+
+    from osm_lib_spark.sources.pbf import _encode_rel_block_arrow
+
+    def block(mtype):
+        members = [{"type": mtype, "member_id": 7, "role": "outer"}]
+        return pa.RecordBatch.from_pylist(
+            [{"id": 1, "members": members, "tags": [{"key": "type", "value": "route"}]}]
+        )
+
+    assert _encode_rel_block_arrow(block("WAY"))
+    with pytest.raises(ValueError, match="'AREA'"):
+        _encode_rel_block_arrow(block("AREA"))

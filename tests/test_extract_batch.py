@@ -1,17 +1,14 @@
-"""bbox_extract_batch must equal per-bbox bbox_extract exactly."""
+"""One bbox_extract_batch over the five named boxes must give each box
+exactly its golden (entity_type, id) set."""
 
 import json
 import os
 
-import pandas as pd
 import pytest
 
-from osm_lib_spark.operators.extract import (
-    bbox_extract,
-    bbox_extract_batch,
-    prepare_extract_context,
-)
+from osm_lib_spark.operators.extract import bbox_extract_batch
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
+from tests.conftest import assert_df_equal, golden
 
 
 @pytest.fixture(scope="module")
@@ -20,28 +17,18 @@ def meta_xs(fixture_xs):
         return json.load(f)
 
 
-def test_batch_equals_per_bbox(spark, docs_xs, meta_xs):
-    nodes = parse_nodes(docs_xs).cache()
-    ways = parse_ways(docs_xs).cache()
-    relations = parse_relations(docs_xs).cache()
-    ctx = prepare_extract_context(relations)
+def test_batch_equals_per_bbox(spark, docs_xs, fixture_xs, meta_xs):
     names = ["dense", "wide", "world", "empty", "equator"]
-    boxes = [tuple(meta_xs["bboxes"][n]) for n in names]
-
-    batch = (
-        bbox_extract_batch(nodes, ways, relations, boxes, ctx=ctx)
-        .toPandas()
-        .sort_values(["bbox_id", "entity_type", "id"])
-        .reset_index(drop=True)
-    )
-    singles = []
-    for i, b in enumerate(boxes):
-        df = bbox_extract(nodes, ways, relations, b, ctx=ctx).ids(ordered=False).toPandas()
-        df.insert(0, "bbox_id", i)
-        singles.append(df)
-    expected = (
-        pd.concat(singles, ignore_index=True)
-        .sort_values(["bbox_id", "entity_type", "id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(batch, expected, check_dtype=False)
+    batch = bbox_extract_batch(
+        parse_nodes(docs_xs),
+        parse_ways(docs_xs),
+        parse_relations(docs_xs),
+        [tuple(meta_xs["bboxes"][n]) for n in names],
+    ).cache()
+    for i, name in enumerate(names):
+        assert_df_equal(
+            batch.where(batch.bbox_id == i),
+            golden(fixture_xs, f"extract_{name}"),
+            sort_cols=["entity_type", "id"],
+        )
+    batch.unpersist()

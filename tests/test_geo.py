@@ -249,6 +249,32 @@ def test_knn_kring_fewer_than_k_nodes(spark):
     )
 
 
+def test_knn_kring_releases_caches_on_error(spark, monkeypatch):
+    """A round that raises must still unpersist the round frames and
+    the function's own coords cache."""
+    import osm_lib_spark.operators.knn as knn
+
+    nodes = spark.createDataFrame(
+        [(1, 100000000, 200000000, []), (2, -300000000, 1500000000, []), (3, 0, 0, [])],
+        "id long, fixed_lat int, fixed_lon int, tags array<struct<key:string,value:string>>",
+    )
+
+    def fail(*args):
+        raise RuntimeError("round failed")
+
+    monkeypatch.setattr(knn, "_min_dist_beyond_ring", fail)
+
+    def persisted():  # ids only: other tests' RDDs may be cleaned meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    # driver_collect_max_q=0: executor-side mode, which caches coords
+    # and persists each round's top-k before the bound check raises
+    with pytest.raises(RuntimeError, match="round failed"):
+        knn_kring(nodes, [(0, 10.0, 20.0)], k=10, driver_collect_max_q=0)
+    assert persisted() <= before
+
+
 def test_knn_kring_coarse_cell_path_q100(nodes_xs, meta_xs):
     """Large-Q path: ≥100 queries with strip_switch forced low so EVERY
     round uses the coarse-cell ancestor equi-join — results must equal

@@ -10,7 +10,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from osm_lib_spark.operators.extract import bbox_extract_batch, ways_in_bbox
+from osm_lib_spark.functions.tiles import bbox_tile_range
+from osm_lib_spark.operators.extract import (
+    CLOSURE_ROW_BYTES,
+    bbox_extract_batch,
+    prepare_extract_context,
+    ways_in_tile_range,
+)
 from osm_lib_spark.operators.indexes import build_way_tiles, write_way_tiles_partitioned
 from osm_lib_spark.operators.raster import rasterize_nodes, vectorize_raster
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
@@ -40,13 +46,13 @@ def test_partitioned_way_tiles_pruning(spark, docs_xs, meta_xs, tmp_path_factory
     write_way_tiles_partitioned(wt, out, num_partitions=8)
 
     stored = spark.read.parquet(out)
-    bbox = tuple(meta_xs["bboxes"]["dense"])
-    plan = _explain_str(ways_in_bbox(stored, bbox))
+    tiles = bbox_tile_range(*meta_xs["bboxes"]["dense"])
+    plan = _explain_str(ways_in_tile_range(stored, tiles))
     assert "PushedFilters" in plan
     assert "GreaterThanOrEqual(xtile" in plan and "LessThanOrEqual(ytile" in plan
 
-    got = sorted(r.way_id for r in ways_in_bbox(stored, bbox).collect())
-    exp = sorted(r.way_id for r in ways_in_bbox(wt, bbox).collect())
+    got = sorted(r.way_id for r in ways_in_tile_range(stored, tiles).collect())
+    exp = sorted(r.way_id for r in ways_in_tile_range(wt, tiles).collect())
     assert got == exp and len(got) > 0
 
     # Hilbert layout: each file's xtile stats should cover far less than
@@ -79,11 +85,41 @@ def test_parse_path_is_codegen(spark, docs_xs):
 
 
 def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
-    """The bbox dimension table must broadcast (never shuffle)."""
+    """The bbox dimension table must broadcast (never shuffle), and the
+    closure join must follow the closure's exact size: a broadcast hash
+    join under spark.sql.autoBroadcastJoinThreshold, a shuffled hash
+    join with the threshold set below it — never a sort-merge join or a
+    cartesian product."""
+    import re
+
     nodes, ways, rels = parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs)
     boxes = [tuple(meta_xs["bboxes"]["dense"]), tuple(meta_xs["bboxes"]["wide"])]
-    plan = _explain_str(bbox_extract_batch(nodes, ways, rels, boxes))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    ctx = prepare_extract_context(rels)
+    assert ctx.closure_rows == ctx.rel_closure.count() > 0
+    # the lazy checkpoints plan their subtrees when the DAG is built;
+    # the SQL status store keeps those plans
+    store = spark._jsparkSession.sharedState().statusStore()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    for threshold, closure_join in (
+        (saved, "BroadcastHashJoin"),
+        (str(ctx.closure_rows * CLOSURE_ROW_BYTES - 1), "ShuffledHashJoin"),
+    ):
+        n_before = store.executionsList().size()
+        spark.conf.set(key, threshold)
+        try:
+            plan = _explain_str(bbox_extract_batch(nodes, ways, rels, boxes, ctx=ctx))
+        finally:
+            spark.conf.set(key, saved)
+        execs = store.executionsList()
+        checkpoints = [
+            execs.apply(i).physicalPlanDescription() for i in range(n_before, execs.size())
+        ]
+        assert any("BroadcastNestedLoopJoin" in p for p in checkpoints)
+        assert not any("CartesianProduct" in p for p in checkpoints)
+        joins = set(re.findall(r"\b(BroadcastHashJoin|ShuffledHashJoin)\b", plan))
+        assert joins == {closure_join}
+        assert not re.search(r"SortMergeJoin|CartesianProduct", plan)
 
 
 def test_rasterize_matches_way_tiles_math(spark, docs_xs, fixture_xs):
