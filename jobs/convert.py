@@ -120,8 +120,7 @@ def _write_txt(path: str, ents) -> None:
         .when(F.col("entity_type") == "way", 1)
         .otherwise(2)
     )
-    # parallel part-file compose (same shape as the PBF/VEX sinks,
-    # pbf.compose_blob_frame): orderBy range-partitions the lines in
+    # parallel part-file compose (pbf.compose_blob_frame): orderBy range-partitions the lines in
     # global (rank, id) order, every partition writes its own part,
     # the driver concatenates — the old toLocalIterator wrote the whole
     # file serially on the driver (one job per partition, serial IO)

@@ -29,12 +29,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.indexes import build_way_tiles
+from osm_lib_spark.session import local_frame
 
 MAX_CLOSURE_ITERATIONS = 50
 CLOSURE_ROW_BYTES = 16  # (relation_id, ancestor_id): two longs
@@ -176,13 +176,14 @@ def bbox_extract_batch(
     ranges = [bbox_tile_range(*b) for b in bboxes]
     min_xs, min_ys, max_xs, max_ys = zip(*ranges)
     envelope = (min(min_xs), min(min_ys), max(max_xs), max(max_ys))
-    # An Arrow-built frame is a LocalRelation of exactly known size
+    # A local_frame is a LocalRelation of exactly known size
     # (28 B/box), so the planner itself broadcasts it into the range join
     # while it fits under spark.sql.autoBroadcastJoinThreshold.
-    bbox_df = spark.createDataFrame(pa.table(
-        [pa.array(c, pa.int32()) for c in (range(len(ranges)), min_xs, min_ys, max_xs, max_ys)],
-        names=["bbox_id", "min_x", "min_y", "max_x", "max_y"],
-    ))
+    bbox_df = local_frame(
+        spark,
+        list(zip(range(len(ranges)), min_xs, min_ys, max_xs, max_ys)),
+        "bbox_id int, min_x int, min_y int, max_x int, max_y int",
+    )
     # lazy checkpoint: b_ways feeds THREE consumers (the ref explode,
     # the way→relation join, the way output branch); Spark plans union
     # branches as separate subtrees (no ReuseExchange matched here), so

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m
 from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y
+from osm_lib_spark.session import local_frame
 
 import numpy as np
 
@@ -83,9 +84,9 @@ def knn_brute_force(
     (no Python). Output: (query_id, rank, node_id).
     """
     spark = nodes.sparkSession
-    q = spark.createDataFrame(query_points, "query_id int, qlat double, qlon double")
+    q = local_frame(spark, query_points, "query_id int, qlat double, qlon double")
     coords = _nodes_with_coords(nodes)
-    joined = coords.crossJoin(F.broadcast(q)).select(
+    joined = coords.crossJoin(q).select(
         "query_id",
         "node_id",
         haversine_m(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")).alias(
@@ -165,8 +166,8 @@ def _frontier_strips(spark, frontier: list[dict]) -> DataFrame:
         ymax = min(f["qy"] + r, NTILES - 1)
         for x in xs:
             rows.append((f["query_id"], int(x), ymin, ymax, f["qlat"], f["qlon"]))
-    return spark.createDataFrame(
-        rows, "query_id int, xtile int, ymin int, ymax int, qlat double, qlon double"
+    return local_frame(
+        spark, rows, "query_id int, xtile int, ymin int, ymax int, qlat double, qlon double"
     )
 
 
@@ -219,7 +220,8 @@ def _coarse_cell_candidates(spark, probe: DataFrame, frontier: list[dict]) -> Da
                 rows.append(
                     (f["query_id"], cell, f["qlat"], f["qlon"], f["qx"], f["qy"], r)
                 )
-    cells_df = spark.createDataFrame(
+    cells_df = local_frame(
+        spark,
         rows,
         "query_id int, cell long, qlat double, qlon double, qx int, qy int, radius int",
     )
@@ -241,7 +243,7 @@ def _coarse_cell_candidates(spark, probe: DataFrame, frontier: list[dict]) -> Da
         F.least(F.col("qy") + F.col("radius"), F.lit(NTILES - 1)),
     )
     return (
-        probed.join(F.broadcast(cells_df), "cell")
+        probed.join(cells_df, "cell")
         .where(in_x & in_y)
         .select(
             "query_id",
@@ -396,7 +398,7 @@ def knn_kring(
             else:
                 strips = _frontier_strips(spark, frontier)
                 cand = (
-                    probe.join(F.broadcast(strips), "xtile")
+                    probe.join(strips, "xtile")
                     .where(F.col("ytile").between(F.col("ymin"), F.col("ymax")))
                     .select(
                         "query_id",
@@ -479,19 +481,15 @@ def knn_kring(
                 if len(satisfied_ids) <= 8192:
                     sliced = ranked.where(F.col("query_id").isin(satisfied_ids))
                 else:
-                    sat = spark.createDataFrame(
-                        [(int(q),) for q in satisfied_ids], "query_id int"
-                    )
-                    sliced = ranked.join(F.broadcast(sat), "query_id", "left_semi")
+                    sat = local_frame(spark, [(int(q),) for q in satisfied_ids], "query_id int")
+                    sliced = ranked.join(sat, "query_id", "left_semi")
                 parts.append(sliced.select("query_id", "rank", "node_id"))
             frontier = next_frontier
 
         if collect_mode:
-            return spark.createDataFrame(
-                parts_rows or [], "query_id int, rank int, node_id long"
-            )
+            return local_frame(spark, parts_rows, "query_id int, rank int, node_id long")
         if not parts:
-            return spark.createDataFrame([], "query_id int, rank int, node_id long")
+            return local_frame(spark, [], "query_id int, rank int, node_id long")
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

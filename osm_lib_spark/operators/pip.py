@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from osm_lib_spark.functions.geo import from_fixed
 from osm_lib_spark.functions.tiles import ZOOM, tile_x_col, tile_y_col
+from osm_lib_spark.session import local_frame
 from osm_lib_spark.sources.oracle import ray_cast_contains
 
 
@@ -100,7 +101,7 @@ def polygons_df(spark, polygons: dict[int, list[np.ndarray]]) -> DataFrame:
         )
         for pid, rings in sorted(polygons.items())
     ]
-    return spark.createDataFrame(rows, "poly_id long, rings array<array<array<double>>>")
+    return local_frame(spark, rows, "poly_id long, rings array<array<array<double>>>")
 
 
 @F.pandas_udf(T.BooleanType())
@@ -153,10 +154,10 @@ def points_in_polygons_bucketed(
        when the tile table is ≤ ``broadcast_tile_rows`` (no point
        shuffles at all) and a SHUFFLE_HASH hint on the polygon side
        otherwise (both sides hash-exchange on uniform tile keys).
-       Without this the planner can invert the join at toy scale —
-       ``createDataFrame`` polygon sets carry no stats, so Catalyst
-       would broadcast the CORPUS side; a stats-bearing polygon table
-       (Iceberg) gives the same decision for free;
+       Without this the planner can invert the join at toy scale — a
+       polygon set without stats lets Catalyst broadcast the CORPUS
+       side; a stats-bearing polygon table (``polygons_df``'s
+       LocalRelation, Iceberg) gives the same decision for free;
     4. the shared ray-cast kernel filters candidates per bucket inside
        the post-join stage (no second shuffle — the rings ride the
        build side of the join into the same codegen stage).

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osm_lib_spark.functions.hashing import cosine_fold_col, dot_fold_np
+from osm_lib_spark.session import local_frame
 
 ANN_SEED = 7
 # Defaults are TEST-scale. For random-hyperplane LSH the collision
@@ -300,7 +301,8 @@ def _probe_lists(
 ) -> DataFrame:
     """(query_id, q_emb, list_id) DataFrame over ``_probe_list_rows``."""
     _, pairs = _probe_list_rows(embeddings, cents, n_queries, nprobe)
-    return embeddings.sparkSession.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         [(qid, lid, [float(v) for v in vec]) for qid, lid, vec in pairs],
         "query_id long, list_id int, q_emb array<double>",
     )
@@ -331,7 +333,7 @@ def _ivf_query(
     assign = _assign_local(embeddings, cents)
     probes = _probe_lists(embeddings, cents, n_queries, nprobe)
     cands = (
-        assign.join(F.broadcast(probes), "list_id")
+        assign.join(probes, "list_id")
         .where(F.col("vec_id") != F.col("query_id"))
     )
     rescored = cands.select(
@@ -546,8 +548,10 @@ def _pq_query_luts(
             for s in range(m)
         ]
         probe_rows.append((qid, [float(v) for v in vec], lut))
-    return embeddings.sparkSession.createDataFrame(
-        probe_rows, "query_id long, q_emb array<double>, lut array<array<double>>"
+    return local_frame(
+        embeddings.sparkSession,
+        probe_rows,
+        "query_id long, q_emb array<double>, lut array<array<double>>",
     )
 
 
@@ -588,7 +592,7 @@ def _pq_rerank_tail(
     exact = (
         embeddings.select("vec_id", "embedding")
         .join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qemb.select("query_id", "q_emb")), "query_id")
+        .join(qemb.select("query_id", "q_emb"), "query_id")
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -643,7 +647,7 @@ def pq_topk(
     # Scan phase is CODE-ONLY (see _pq_rerank_tail): the N×Q candidate
     # frame carries (query_id, vec_id, codes, adc), never the embedding.
     scored = (
-        coded.crossJoin(F.broadcast(probes.select("query_id", "lut")))
+        coded.crossJoin(probes.select("query_id", "lut"))
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("adc", _adc_expr(m))
     )
@@ -712,9 +716,9 @@ def ivf_pq_topk(
         # per (query, list), so the join yields each (query, vec) at
         # most once
         scored = (
-            coded.join(F.broadcast(plists), "list_id")
+            coded.join(plists, "list_id")
             .where(F.col("vec_id") != F.col("query_id"))
-            .join(F.broadcast(probes.select("query_id", "lut")), "query_id")
+            .join(probes.select("query_id", "lut"), "query_id")
             .withColumn("adc", _adc_expr(m))
         )
         return _pq_rerank_tail(embeddings, scored, probes, k, refine)
@@ -788,10 +792,11 @@ def _query_residual_ivf_pq(
             for s in range(m)
         ]
         lut_rows.append((qid, lid, lut))
-    probes_lut = spark.createDataFrame(
-        lut_rows, "query_id long, list_id int, lut array<array<double>>"
+    probes_lut = local_frame(
+        spark, lut_rows, "query_id long, list_id int, lut array<array<double>>"
     )
-    qemb = spark.createDataFrame(
+    qemb = local_frame(
+        spark,
         [(qid, [float(v) for v in vec]) for qid, vec in q_rows],
         "query_id long, q_emb array<double>",
     )
@@ -799,7 +804,7 @@ def _query_residual_ivf_pq(
         probed_lids = sorted({lid for _, lid, _ in pairs})
         coded = coded.where(F.col("list_id").isin(probed_lids))
     scored = (
-        coded.join(F.broadcast(probes_lut), "list_id")
+        coded.join(probes_lut, "list_id")
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("adc", _adc_expr(m))
     )
@@ -881,11 +886,13 @@ def build_ivf_pq_index(
     cents, cb, coded = _train_residual_ivf_pq(train_frame, stride, dim, m, kc)
     if train_on is not None:
         coded = _encode_ivf_pq(embeddings, cents, cb)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(lid), [float(x) for x in v]) for lid, v in cents],
         "list_id int, c_emb array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(path, "centroids"))
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (s, j, [float(x) for x in cb[s, j]])
             for s in range(cb.shape[0])

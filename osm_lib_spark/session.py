@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def _default_driver_memory() -> str:
@@ -73,6 +76,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver rows → a DataFrame planned as a ``LocalRelation``.
+
+    Every frame the engine builds from driver-side rows goes through
+    here. ``spark.createDataFrame(list, ddl)`` plans a ``LogicalRDD``
+    with no size stats: each action that scans it runs
+    ``defaultParallelism`` Python-worker tasks (~0.08 CPU-s each on a
+    4 vCPU host, whatever the row count), and joins against it need a
+    broadcast hint. Built from an Arrow table, the frame is a
+    ``LocalRelation``: no Python task, and stats from its row count
+    that let the planner broadcast it under
+    ``spark.sql.autoBroadcastJoinThreshold`` on its own.
+
+    ``rows`` are tuples in ``ddl`` column order (structs as tuples or
+    dicts).
+    """
+    schema = DataType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

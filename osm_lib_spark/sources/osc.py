@@ -127,7 +127,9 @@ def read_osc(spark, paths: list[str]):
     nondeterministic; the reference applies diffs strictly
     chronologically (Updater.java:73-153).
     """
-    idx = spark.createDataFrame([(p, i) for i, p in enumerate(paths)], "path string, i long")
+    from osm_lib_spark.session import local_frame
+
+    idx = local_frame(spark, [(p, i) for i, p in enumerate(paths)], "path string, i long")
     idx = idx.repartition(max(1, min(len(paths), 64)), "i")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

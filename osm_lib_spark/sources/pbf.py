@@ -30,25 +30,26 @@ Spark-first dataflow:
 
 * READ: the blob directory scan (`scan_blobs`) reads only the ~32-byte
   headers (seek + skip), yielding a (path, offset, size, seq) blob
-  table. Blobs are the parallelism unit — `mapInArrow` tasks seek into
-  the file and decode their own blobs, so a planet file fans out
-  across executors without ever landing whole on the driver. All hot
+  table (a ``local_frame``: no Python task scans it). Blobs are the
+  parallelism unit — `mapInArrow` tasks seek into the file and decode
+  their own blobs, so a planet file fans out across executors without
+  ever landing whole on the driver. All hot
   decode paths are block-wide numpy passes: packed varints decode once
   per COLUMN per block (`_batch_packed` concatenates every way's/
   relation's field payloads before one vectorized decode — per-entity
   numpy calls cost more in dispatch than decoding), dense-node tags
   assemble via zero-terminator arithmetic, and entity columns are
   built as Arrow arrays directly (never pandas object dicts).
-* WRITE: entities are range-partitioned type-major by id; executors
-  encode independent ≤8k-entity blocks (PBF blocks share no state —
-  delta coding and string tables reset per block). Node and way blocks
-  encode in block-wide numpy passes (`mapInArrow`): string-table codes
-  via one sorted-unique, keys_vals assembled by vectorized scatter,
-  refs as segmented-delta varints sliced per way by byte-span cumsums.
-  ONE parallel job writes every partition's blocks as a part file
-  (`compose_blob_frame`); the driver concatenates parts in partition
-  order — multipart PUT + compose on an object store, O(1) driver
-  memory, and the encode never serializes on driver round trips.
+* WRITE (``write_blocks``, shared with the VEX sink): rows are bucketed
+  by id range into ~``block_size``-row buckets, with tasks sized by
+  block count (a Python task costs a fixed ~0.08 CPU-s), and ONE
+  ``mapInArrow`` per task encodes its buckets into part files named by
+  (type, bucket); PBF blocks share no state (delta coding and string
+  tables reset per block). Blocks encode in block-wide numpy passes:
+  string-table codes via one sorted-unique, keys_vals by vectorized
+  scatter, refs as segmented-delta varints sliced by byte-span cumsums.
+  The driver concatenates the parts in name order — multipart PUT +
+  compose on an object store, O(1) driver memory.
 
 Measured at sf0.1 (2.9M entities, local[32]): decode ~2.6M entities/s,
 encode ~0.74M entities/s — same order as the reference's single-node
@@ -61,6 +62,8 @@ from __future__ import annotations
 import os
 import struct
 import zlib
+from contextlib import contextmanager
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -534,16 +537,19 @@ def _kv_tags_array(kv: np.ndarray, n_nodes: int, stab: np.ndarray) -> pa.ListArr
 
 def _kv_tags_array_scalar(kv: np.ndarray, n_nodes: int, stab: np.ndarray) -> pa.ListArray:
     """Slow-path keys_vals walk matching PBFInput.java:105-114 exactly:
-    only a 0 at a KEY position terminates a node's tag run."""
+    only a 0 at a KEY position terminates a node's tag run. A run that
+    ends before its terminator is a corrupt block (ValueError)."""
     key_idx: list[int] = []
     val_idx: list[int] = []
     offsets = np.zeros(n_nodes + 1, np.int64)
     pos = 0
     for i in range(n_nodes):
-        while kv[pos] != 0:
+        while pos + 1 < len(kv) and kv[pos] != 0:
             key_idx.append(int(kv[pos]))
             val_idx.append(int(kv[pos + 1]))
             pos += 2
+        if pos >= len(kv) or kv[pos] != 0:
+            raise ValueError("corrupt dense-node keys_vals: a tag run has no 0 terminator")
         pos += 1
         offsets[i + 1] = len(key_idx)
     keys = stab[np.array(key_idx, np.int64)] if key_idx else np.zeros(0, object)
@@ -1126,6 +1132,17 @@ ENTITY_SCHEMA = (
 BLOCK_SIZE = 8000  # PBFOutput.java:128 — ≤8k entities per block
 
 
+def blob_index(spark, rows: list, ddl: str, blobs_per_task: int):
+    """A blob/block index (rows with a ``seq`` column) as a ``local_frame``
+    on ≤ max(defaultParallelism, rows / blobs_per_task) tasks — measured
+    0.8s of task round trips at 91 tiny tasks on local[32] vs 0.3s at 32."""
+    from osm_lib_spark.session import local_frame
+
+    dp = spark.sparkContext.defaultParallelism
+    n_part = max(1, min(len(rows), max(dp, len(rows) // blobs_per_task)))
+    return local_frame(spark, rows, ddl).repartition(n_part, "seq")
+
+
 def read_pbf(spark, path: str, blobs_per_task: int = 16):
     """Distributed PBF read → unified entity DataFrame.
 
@@ -1142,16 +1159,12 @@ def read_pbf(spark, path: str, blobs_per_task: int = 16):
         for _, off, size, _, _ in header_blobs:
             f.seek(off)
             check_header_block(_inflate_blob(f.read(size)))
-    data_rows = [r for r in rows if r[3] == "OSMData"]
-    # Task count: never more than one task per blobs_per_task blobs, but
-    # also never more tasks than ~1× cluster parallelism when the file is
-    # small — measured 0.8s of pure task/Python-worker round-trip
-    # overhead at 91 tiny tasks on local[32] vs 0.3s at 32.
-    dp = spark.sparkContext.defaultParallelism
-    n_part = max(1, min(len(data_rows), max(dp, len(data_rows) // blobs_per_task)))
-    idx = spark.createDataFrame(
-        data_rows, "path string, offset long, size long, kind string, seq long"
-    ).repartition(n_part, "seq")
+    idx = blob_index(
+        spark,
+        [r for r in rows if r[3] == "OSMData"],
+        "path string, offset long, size long, kind string, seq long",
+        blobs_per_task,
+    )
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -1164,107 +1177,147 @@ def read_pbf(spark, path: str, blobs_per_task: int = 16):
     return idx.mapInArrow(decode, schema=ENTITY_SCHEMA)
 
 
-def pbf_nodes(entities):
-    from pyspark.sql import functions as F  # noqa: N812
+# by type_rank: the entity types and the pbf_* selectors' and encoders' columns
+TYPE_NAMES = ("node", "way", "relation")
+TYPE_COLUMNS = (
+    ("id", "fixed_lat", "fixed_lon", "tags"),
+    ("id", "node_ids", "tags"),
+    ("id", "members", "tags"),
+)
 
-    return entities.where(F.col("entity_type") == "node").select(
-        "id", "fixed_lat", "fixed_lon", "tags"
-    )
+
+def _of_type(entities, rank: int):
+    return entities.where(entities["entity_type"] == TYPE_NAMES[rank]).select(*TYPE_COLUMNS[rank])
+
+
+def pbf_nodes(entities):
+    return _of_type(entities, 0)
 
 
 def pbf_ways(entities):
-    from pyspark.sql import functions as F  # noqa: N812
-
-    return entities.where(F.col("entity_type") == "way").select(
-        "id", "node_ids", "tags"
-    )
+    return _of_type(entities, 1)
 
 
 def pbf_relations(entities):
-    from pyspark.sql import functions as F  # noqa: N812
+    return _of_type(entities, 2)
 
-    return entities.where(F.col("entity_type") == "relation").select(
-        "id", "members", "tags"
-    )
+
+@contextmanager
+def _part_files(path: str, header: bytes):
+    """A fresh ``.blobparts_`` directory next to ``path`` for one job's
+    part files; on a clean exit ``path`` gets ``header`` + the parts in
+    name order (multipart PUT + compose; O(1) driver memory)."""
+    import shutil
+    import tempfile
+
+    tmpdir = tempfile.mkdtemp(prefix=".blobparts_", dir=os.path.dirname(os.path.abspath(path)))
+    try:
+        yield tmpdir
+        with open(path, "wb") as outf:
+            outf.write(header)
+            for name in sorted(os.listdir(tmpdir)):
+                with open(os.path.join(tmpdir, name), "rb") as pf:
+                    shutil.copyfileobj(pf, outf)
+    finally:
+        shutil.rmtree(tmpdir, ignore_errors=True)
+
+
+def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b"") -> int:
+    """The block sink of ``write_pbf`` and ``write_vex``: write ``tables``
+    = (nodes, ways, relations), any of them None, type-major in id order
+    and return the number of blocks. ``encode(type_rank, batch)`` yields
+    the framed blocks of one id-sorted batch of ``TYPE_COLUMNS[type_rank]``.
+
+    One aggregate over the union gives each type's row count and id
+    range; rows are bucketed by id range into ~``block_size``-row
+    buckets, and each type gets clamp(ceil(rows / block_size), 1,
+    defaultParallelism) tasks, as a Python task has a fixed cost. ONE
+    ``mapInArrow`` per task writes each bucket as a part file named by
+    (type_rank, bucket), so the file does not depend on which task a
+    bucket hashed to. With AQE that is 4 jobs.
+    """
+    from pyspark.sql import functions as F  # noqa: N812
+    from pyspark.sql.types import ArrayType
+
+    typed = [df.select(F.lit(rank).alias("type_rank"), *TYPE_COLUMNS[rank])
+             for rank, df in enumerate(tables) if df is not None]
+    if not typed:
+        raise ValueError("nodes, ways and relations are all None — nothing to write")
+    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), typed)
+    # lists travel non-null (both encoders write a null list as an empty
+    # one): the JVM's Arrow writer spends ~5 CPU-µs a row on a null array,
+    # 0.5 CPU-s per filler column over the 100k sf-s nodes (4 vCPU host)
+    rows = rows.select(*(
+        F.coalesce(f.name, F.array().cast(f.dataType)).alias(f.name)
+        if isinstance(f.dataType, ArrayType) else f.name
+        for f in rows.schema.fields
+    ))
+    stats = rows.groupBy("type_rank").agg(
+        F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"), F.max("id").alias("hi")
+    ).collect()
+    dp = rows.sparkSession.sparkContext.defaultParallelism
+    n_tasks, bucket = 0, F.lit(None)
+    for r in stats:
+        n_buckets = -(-r.n // block_size)
+        step = -(-(r.hi - r.lo + 1) // n_buckets)
+        n_tasks += min(n_buckets, dp)
+        bucket = F.when(
+            F.col("type_rank") == r.type_rank, F.expr(f"(id - ({r.lo})) div {step}")
+        ).otherwise(bucket)
+
+    def write_part(key: tuple, pending: list) -> int:
+        batch = pa.Table.from_batches(pending).select(TYPE_COLUMNS[key[0]]).combine_chunks()
+        blobs = list(encode(key[0], batch.to_batches()[0]))
+        with open(os.path.join(tmpdir, "%d-%012d" % key), "wb") as f:
+            f.writelines(blobs)
+        return len(blobs)
+
+    def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # rows arrive sorted by (type_rank, bucket, id): cut each batch at
+        # key changes and write a bucket once its last row has passed
+        n, key, pending = 0, None, []
+        for batch in batches:
+            ranks = batch.column("type_rank").to_numpy(zero_copy_only=False)
+            buckets = batch.column("bucket").to_numpy(zero_copy_only=False)
+            cuts = np.flatnonzero((np.diff(ranks) != 0) | (np.diff(buckets) != 0)) + 1
+            for lo, hi in zip([0, *cuts], [*cuts, batch.num_rows]):
+                if lo == hi:
+                    continue
+                if (int(ranks[lo]), int(buckets[lo])) != key and pending:
+                    n += write_part(key, pending)
+                    pending = []
+                key = (int(ranks[lo]), int(buckets[lo]))
+                pending.append(batch.slice(lo, hi - lo))
+        if pending:
+            n += write_part(key, pending)
+        yield pa.RecordBatch.from_pydict({"n": [n]})
+
+    with _part_files(path, header) as tmpdir:
+        if not n_tasks:  # every table is empty: the header alone
+            return 0
+        counts = (
+            rows.withColumn("bucket", bucket)
+            .repartition(n_tasks, "type_rank", "bucket")
+            .sortWithinPartitions("type_rank", "bucket", "id")
+            .mapInArrow(sink, "n long")
+            .collect()
+        )
+    return sum(r.n for r in counts)
 
 
 def write_pbf(path: str, nodes, ways, relations, block_size: int = BLOCK_SIZE):
-    """Distributed PBF sink: encode independent blocks in executors,
-    stream them to the file in (type, first_id) order on the driver.
+    """Distributed PBF sink (``write_blocks``): each bucket encodes into
+    ≤``block_size``-entity blocks in block-wide numpy passes. PBF
+    blocks share NO state (per-block string table + delta reset)."""
+    encoders = (_encode_dense_block_arrow, _encode_way_block_arrow, _encode_rel_block_arrow)
 
-    PBF blocks share NO state (per-block string table + delta reset),
-    so the encode is embarrassingly parallel; only the byte
-    concatenation is sequential — the same shape as a multipart
-    object-store compose.
-    """
-    from pyspark.sql import functions as F  # noqa: N812
+    def encode(rank: int, batch: pa.RecordBatch) -> Iterator[bytes]:
+        for lo in range(0, batch.num_rows, block_size):
+            yield _blob_bytes("OSMData", encoders[rank](batch.slice(lo, block_size)))
 
-    blob_schema = "type_rank int, first_id long, blob binary"
-
-    def encoder(kind: str):
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rank = {"node": 0, "way": 1, "relation": 2}[kind]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.sort_values("id").reset_index(drop=True)
-                for lo in range(0, len(pdf), block_size):
-                    chunk = pdf.iloc[lo : lo + block_size]
-                    blob = _blob_bytes("OSMData", _encode_block(kind, chunk))
-                    yield pd.DataFrame(
-                        {
-                            "type_rank": [rank],
-                            "first_id": [int(chunk["id"].iloc[0])],
-                            "blob": [blob],
-                        }
-                    )
-
-        return enc
-
-    blob_pa_schema = pa.schema(
-        [("type_rank", pa.int32()), ("first_id", pa.int64()), ("blob", pa.binary())]
+    return write_blocks(
+        path, (nodes, ways, relations), encode, block_size, header=encode_header_block()
     )
-
-    def arrow_enc(rank: int, block_fn):
-        # rows arrive id-sorted within the partition (sortWithinPartitions);
-        # each Arrow batch is chunked into ≤block_size blocks with
-        # block-wide vectorized encode — no per-entity Python hot loops
-        def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                for lo in range(0, batch.num_rows, block_size):
-                    chunk = batch.slice(lo, block_size)
-                    if chunk.num_rows == 0:
-                        continue
-                    blob = _blob_bytes("OSMData", block_fn(chunk))
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([rank], pa.int32()),
-                            pa.array([chunk.column("id")[0].as_py()], pa.int64()),
-                            pa.array([blob], pa.binary()),
-                        ],
-                        schema=blob_pa_schema,
-                    )
-
-        return enc
-
-    parts = []
-    for kind, df in (("node", nodes), ("way", ways), ("relation", relations)):
-        if df is None:
-            continue
-        n_part = max(1, min(df.sparkSession.sparkContext.defaultParallelism, 64))
-        arranged = df.repartitionByRange(n_part, F.col("id")).sortWithinPartitions("id")
-        if kind == "node":
-            parts.append(arranged.mapInArrow(arrow_enc(0, _encode_dense_block_arrow), schema=blob_schema))
-        elif kind == "way":
-            parts.append(arranged.mapInArrow(arrow_enc(1, _encode_way_block_arrow), schema=blob_schema))
-        else:
-            parts.append(arranged.mapInArrow(arrow_enc(2, _encode_rel_block_arrow), schema=blob_schema))
-    if not parts:
-        raise ValueError("write_pbf: nodes, ways and relations are all None — nothing to write")
-    blobs = parts[0]
-    for p in parts[1:]:
-        blobs = blobs.unionByName(p)
-    return compose_blob_frame(blobs, path, header=encode_header_block())
 
 
 def compose_blob_frame(blobs, path: str, header: bytes = b"") -> int:
@@ -1272,45 +1325,21 @@ def compose_blob_frame(blobs, path: str, header: bytes = b"") -> int:
     ONE parallel job in which every partition writes its own part file,
     then the driver concatenates parts in partition order.
 
-    The frame must be (type, first_id)-ordered partition-by-partition —
-    which the sinks' kind-major union over range-partitioned,
-    partition-sorted frames already is — so no orderBy is needed.
-    Earlier shapes were strictly worse: ``collect()`` held the whole
-    file on the driver, and ``toLocalIterator`` ran one JOB per
-    partition (0.04s × 96 partitions of pure scheduling, and the encode
-    itself serialized). On an object store the part files are multipart
-    PUTs and the concat is the compose call; driver memory stays O(1).
+    The frame must already be ordered partition-by-partition (the text
+    sink in ``jobs/convert.py`` range-partitions its lines with an
+    orderBy).
     """
-    import shutil
-    import tempfile as _tf
 
-    from pyspark.sql import functions as F  # noqa: N812
-
-    out_dir = os.path.dirname(os.path.abspath(path)) or "."
-    tmpdir = _tf.mkdtemp(prefix=".blobparts_", dir=out_dir)
-
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dump(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        idx = TaskContext.get().partitionId()
         n = 0
-        with open(os.path.join(tmpdir, f"part-{idx:08d}"), "wb") as f:
-            for pdf in batches:
-                for b in pdf["blob"]:
-                    f.write(bytes(b))
-                    n += 1
-        yield pd.DataFrame({"n": [n]})
+        with open(os.path.join(tmpdir, f"part-{TaskContext.get().partitionId():08d}"), "wb") as f:
+            for batch in batches:
+                f.writelines(batch.column("blob").to_pylist())
+                n += batch.num_rows
+        yield pa.RecordBatch.from_pydict({"n": [n]})
 
-    try:
-        total = (
-            blobs.mapInPandas(dump, "n long").agg(F.sum("n")).collect()[0][0] or 0
-        )
-        with open(path, "wb") as outf:
-            if header:
-                outf.write(header)
-            for name in sorted(os.listdir(tmpdir)):
-                with open(os.path.join(tmpdir, name), "rb") as pf:
-                    shutil.copyfileobj(pf, outf)
-    finally:
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    return int(total)
+    with _part_files(path, header) as tmpdir:
+        counts = blobs.mapInArrow(dump, "n long").collect()
+    return sum(r.n for r in counts)

@@ -26,10 +26,12 @@ per-way). Records:
 
 Blocks are fully self-contained, so the Spark dataflow mirrors the PBF
 codec: a header-only offset scan indexes blocks, ``mapInArrow`` tasks
-seek + inflate + decode their own blocks in parallel, and the sink
-encodes independent blocks in executors, each partition writing a
-part file in ONE parallel job; the driver concatenates parts in
-partition order (multipart-compose; O(1) driver memory). The payload is a sequential
+seek + inflate + decode their own blocks in parallel, and the sink is
+the PBF one (``pbf.write_blocks``): rows bucketed by id range, one
+``mapInArrow`` per task encodes its buckets into byte-capped blocks and
+writes them as part files named by (type, bucket); the driver
+concatenates the parts in name order (multipart-compose; O(1) driver
+memory). The payload is a sequential
 varint/string stream (strings interleave the varints, so PBF's purely
 columnar decode doesn't apply directly); the decode is a two-pass
 hybrid: a lean structural walk records varint spans — whole ref runs
@@ -47,9 +49,7 @@ decode ~2.2M entities/s (both were ~0.3-0.7M/s scalar).
 
 from __future__ import annotations
 
-import os
 import struct
-import tempfile
 import zlib
 from typing import Iterator
 
@@ -61,14 +61,18 @@ import pandas as pd
 import pyarrow as pa
 
 from osm_lib_spark.sources.pbf import (
+    BLOCK_SIZE,
     ENTITY_SCHEMA,
+    TYPE_NAMES,
     _as_list,
     _entity_batch,
     _tags_list_array,
+    blob_index,
     np_decode_varints,
     np_encode_varints_with_lens,
     np_unzigzag,
     np_zigzag,
+    write_blocks,
 )
 
 VEX_BUFFER_SIZE = 1 << 20  # VEXBlock.java:25 — inflated blocks ≤ 1 MiB
@@ -637,16 +641,12 @@ def _encode_vex_rows_scalar(kind: str, frame: pd.DataFrame, max_bytes: int = 900
 def read_vex(spark, path: str, blobs_per_task: int = 16):
     """Distributed VEX read → unified entity DataFrame (blocks are the
     parallelism unit; tasks seek + inflate + decode their own blocks)."""
-    rows = scan_vex_blocks(path)
-    # Task count: ≥1 task per blobs_per_task blocks, capped near cluster
-    # parallelism for small files — per-task Python-worker round trips
-    # dominated the wall at 91 tiny tasks (0.8s no-op floor on local[32]).
-    dp = spark.sparkContext.defaultParallelism
-    n_part = max(1, min(len(rows), max(dp, len(rows) // blobs_per_task)))
-    idx = spark.createDataFrame(
-        rows,
+    idx = blob_index(
+        spark,
+        scan_vex_blocks(path),
         "path string, offset long, size long, kind string, n_entities long, seq long",
-    ).repartition(n_part, "seq")
+        blobs_per_task,
+    )
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # Arrow end-to-end: each block decodes straight into Arrow arrays
@@ -664,43 +664,11 @@ def read_vex(spark, path: str, blobs_per_task: int = 16):
 
 
 def write_vex(path: str, nodes, ways, relations):
-    """Distributed VEX sink: executors encode independent blocks
-    (delta state resets per block — VexOutput.beginBlock), the driver
-    concatenates framed bytes type-major in (type, first_id) order."""
-    from pyspark.sql import functions as F  # noqa: N812
+    """Distributed VEX sink (``pbf.write_blocks``): each id-sorted
+    bucket encodes into byte-capped blocks (``encode_vex_rows``; delta
+    state resets per block — VexOutput.beginBlock), written type-major
+    in (type, first_id) order. VEX has no file header."""
+    def encode(rank: int, batch: pa.RecordBatch) -> Iterator[bytes]:
+        return (blob for _, blob in encode_vex_rows(TYPE_NAMES[rank], batch.to_pandas()))
 
-    blob_schema = "type_rank int, first_id long, blob binary"
-
-    def encoder(kind: str):
-        rank = {"node": 0, "way": 1, "relation": 2}[kind]
-
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.sort_values("id").reset_index(drop=True)
-                for first_id, blob in encode_vex_rows(kind, pdf):
-                    yield pd.DataFrame(
-                        {"type_rank": [rank], "first_id": [first_id], "blob": [blob]}
-                    )
-
-        return enc
-
-    parts = []
-    for kind, df in (("node", nodes), ("way", ways), ("relation", relations)):
-        if df is None:
-            continue
-        n_part = max(1, min(df.sparkSession.sparkContext.defaultParallelism, 64))
-        arranged = df.repartitionByRange(n_part, F.col("id")).sortWithinPartitions("id")
-        parts.append(arranged.mapInPandas(encoder(kind), schema=blob_schema))
-    if not parts:
-        raise ValueError("write_vex: nodes, ways and relations are all None — nothing to write")
-    blobs = parts[0]
-    for p in parts[1:]:
-        blobs = blobs.unionByName(p)
-    # kind-major union over range-partitioned, partition-sorted frames is
-    # already (type, first_id)-ordered partition-by-partition — one
-    # parallel part-file job + driver compose (see compose_blob_frame).
-    from osm_lib_spark.sources.pbf import compose_blob_frame
-
-    return compose_blob_frame(blobs, path)
+    return write_blocks(path, (nodes, ways, relations), encode, BLOCK_SIZE)

@@ -1,4 +1,7 @@
-"""Span codec tests: parse + round-trip (RoundTripTest.java:91-107 analog)."""
+"""Span codec tests: parse + round-trip (RoundTripTest.java:91-107 analog);
+the PBF/VEX block sink on the sf-xs tables."""
+
+import os
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -172,3 +175,158 @@ def test_pbf_relation_encoder_rejects_unknown_member_type():
     assert _encode_rel_block_arrow(block("WAY"))
     with pytest.raises(ValueError, match="'AREA'"):
         _encode_rel_block_arrow(block("AREA"))
+
+
+# ---------------------------------------------------------------------------
+# the PBF/VEX block sink (pbf.write_blocks), on the sf-xs tables
+# ---------------------------------------------------------------------------
+
+# Small enough that the sf-xs buckets outnumber the sink's partitions, so
+# buckets share partitions and some partitions get no rows (asserted in
+# test_sink_block_size_exercises_collisions_and_empty_partitions).
+SINK_BLOCK_SIZE = 40
+
+
+def _xs_tables(docs_xs):
+    return parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs)
+
+
+def _canon_rows(entities) -> list:
+    """Order-free, type-tagged entity content as plain tuples."""
+    rows = []
+    for r in entities.collect():
+        rows.append((
+            r.entity_type,
+            r.id,
+            r.fixed_lat,
+            r.fixed_lon,
+            tuple((t.key, t.value) for t in r.tags or ()),
+            tuple(r.node_ids or ()),
+            tuple((m.type, m.member_id, m.role) for m in r.members or ()),
+        ))
+    return sorted(rows, key=lambda t: (t[0], t[1]))
+
+
+def _source_rows(tables) -> list:
+    from osm_lib_spark.sources.pbf import TYPE_COLUMNS, TYPE_NAMES
+
+    typed = [
+        t.select(F.lit(TYPE_NAMES[rank]).alias("entity_type"), *TYPE_COLUMNS[rank])
+        for rank, t in enumerate(tables)
+    ]
+    rows = typed[0]
+    for t in typed[1:]:
+        rows = rows.unionByName(t, allowMissingColumns=True)
+    return _canon_rows(rows)
+
+
+def _assert_type_major_ascending(blocks: list) -> None:
+    """``blocks``: (type_rank, ids) per block in file order."""
+    firsts = [(rank, ids[0]) for rank, ids in blocks]
+    assert firsts == sorted(firsts) and len(set(firsts)) == len(firsts)
+    flat = [(rank, i) for rank, ids in blocks for i in ids]
+    assert flat == sorted(flat) and len(set(flat)) == len(flat)
+
+
+def test_sink_block_size_exercises_collisions_and_empty_partitions(spark, docs_xs):
+    """The sink tests below run where buckets outnumber partitions, so
+    some partitions hold several buckets and some hold none. Bucket keys
+    follow write_blocks' id-range rule; partitions follow Spark's hash
+    partitioning (pmod of the Murmur3 ``hash``)."""
+    from osm_lib_spark.session import local_frame
+
+    dp = spark.sparkContext.defaultParallelism
+    keys, n_tasks = [], 0
+    for rank, t in enumerate(_xs_tables(docs_xs)):
+        ids = [r.id for r in t.select("id").collect()]
+        n_buckets = -(-len(ids) // SINK_BLOCK_SIZE)
+        step = -(-(max(ids) - min(ids) + 1) // n_buckets)
+        n_tasks += min(n_buckets, dp)
+        keys += sorted({(rank, (i - min(ids)) // step) for i in ids})
+    hit = local_frame(spark, keys, "type_rank int, bucket long").select(
+        F.pmod(F.hash("type_rank", "bucket"), F.lit(n_tasks)).alias("p")
+    ).distinct().count()
+    assert len(keys) > n_tasks > hit
+
+
+def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path):
+    from osm_lib_spark.sources.pbf import (
+        TYPE_NAMES,
+        _inflate_blob,
+        decode_block_arrow,
+        read_pbf,
+        scan_blobs,
+        write_pbf,
+    )
+
+    tables = _xs_tables(docs_xs)
+    path = str(tmp_path / "xs.pbf")
+    n_blocks = write_pbf(path, *tables, block_size=SINK_BLOCK_SIZE)
+    assert _canon_rows(read_pbf(spark, path)) == _source_rows(tables)
+
+    blocks = []
+    with open(path, "rb") as f:
+        for _, off, size, kind, _ in scan_blobs(path):
+            f.seek(off)
+            if kind == "OSMData":
+                (batch,) = decode_block_arrow(_inflate_blob(f.read(size)))
+                ids = batch.column("id").to_pylist()
+                assert 0 < len(ids) <= SINK_BLOCK_SIZE
+                blocks.append((TYPE_NAMES.index(batch.column("entity_type")[0].as_py()), ids))
+    assert len(blocks) == n_blocks
+    _assert_type_major_ascending(blocks)
+
+
+def test_vex_sink_roundtrip_small_buckets(spark, docs_xs, tmp_path, monkeypatch):
+    import zlib
+
+    from osm_lib_spark.sources import pbf
+    from osm_lib_spark.sources.vex import decode_vex_block_arrow, read_vex, scan_vex_blocks, write_vex
+
+    monkeypatch.setattr(pbf, "BLOCK_SIZE", SINK_BLOCK_SIZE)  # write_vex's bucket size
+    tables = _xs_tables(docs_xs)
+    path = str(tmp_path / "xs.vex")
+    n_blocks = write_vex(path, *tables)
+    assert _canon_rows(read_vex(spark, path)) == _source_rows(tables)
+
+    blocks = []
+    with open(path, "rb") as f:
+        for _, off, size, kind, n, _ in scan_vex_blocks(path):
+            f.seek(off)
+            batch = decode_vex_block_arrow(kind, n, zlib.decompress(f.read(size)))
+            blocks.append((pbf.TYPE_NAMES.index(kind), batch.column("id").to_pylist()))
+    assert len(blocks) == n_blocks
+    _assert_type_major_ascending(blocks)
+
+
+def test_sink_failure_leaves_no_part_files(spark, docs_xs, tmp_path):
+    import pytest
+
+    from osm_lib_spark.sources.pbf import write_blocks
+
+    def encode(rank, batch):
+        raise RuntimeError("encoder failed")
+
+    nodes, ways, _ = _xs_tables(docs_xs)
+    path = str(tmp_path / "bad.pbf")
+    with pytest.raises(Exception, match="encoder failed"):
+        write_blocks(path, (nodes, ways, None), encode, SINK_BLOCK_SIZE)
+    assert os.listdir(tmp_path) == []
+
+
+def test_dense_keys_vals_without_terminator_raises():
+    """A dense-node keys_vals run that ends before its 0 terminator is a
+    corrupt block: a clean ValueError, never an IndexError."""
+    import numpy as np
+    import pytest
+
+    from osm_lib_spark.sources.pbf import _kv_tags_array, _kv_tags_array_scalar
+
+    stab = np.array(["", "k", "v"], dtype=object)
+    for kv, n_nodes in (([1, 2], 1), ([1], 1), ([1, 2, 0, 1, 2], 2)):
+        with pytest.raises(ValueError, match="terminator"):
+            _kv_tags_array_scalar(np.array(kv, np.uint64), n_nodes, stab)
+    with pytest.raises(ValueError, match="terminator"):
+        _kv_tags_array(np.array([1, 2], np.uint64), 1, stab)
+    ok = _kv_tags_array_scalar(np.array([1, 2, 0, 0], np.uint64), 2, stab)
+    assert ok.to_pylist() == [[{"key": "k", "value": "v"}], []]

@@ -183,3 +183,104 @@ def test_new_operator_joins_are_hash_joins(spark, docs_xs):
     )
     plan = _explain_str(ngram_prefix_candidates(docs))
     assert not bad.search(plan)
+
+
+def _plans_during(spark, fn):
+    """``fn()``, and the physical plans of the SQL executions it ran."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n_before = store.executionsList().size()
+    out = fn()
+    execs = store.executionsList()
+    return out, [execs.apply(i).physicalPlanDescription() for i in range(n_before, execs.size())]
+
+
+def test_local_frames_broadcast_without_hints(spark, docs_xs):
+    """The kNN strip join and the residual IVF-PQ probe join carry no
+    broadcast hint: their driver-built side is a local_frame whose stats
+    let the planner broadcast it. Neither plans a sort-merge join or a
+    cartesian product."""
+    import re
+
+    import numpy as np
+
+    from osm_lib_spark.operators.knn import knn_kring
+    from osm_lib_spark.operators.similarity import ivf_pq_topk
+
+    bad = re.compile(r"SortMergeJoin|CartesianProduct|BroadcastNestedLoopJoin")
+    nodes = parse_nodes(docs_xs)
+    rng = np.random.default_rng(3)
+    emb = spark.createDataFrame(  # a LogicalRDD: no size stats on this side
+        [(i, rng.standard_normal(16).astype(np.float32).tolist(), i % 2) for i in range(40)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    # a threshold below the sf-xs node scan's estimate: only the small
+    # driver-built sides may broadcast
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(10 * 1024))
+    try:
+        rows, plans = _plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
+        top = ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True)
+        plan = _explain_str(top)
+        n_top = top.count()
+    finally:
+        spark.conf.set(key, saved)
+    assert len(rows) == 5
+    assert any("BroadcastHashJoin" in p for p in plans)
+    assert not any(bad.search(p) for p in plans)
+    assert set(re.findall(r"\b\w+Join\b", plan)) == {"BroadcastHashJoin"}
+    assert not bad.search(plan)
+    assert n_top == 9
+
+
+def test_driver_rows_go_through_local_frame():
+    """No engine module builds a DataFrame from driver rows except
+    session.local_frame, whose frames are LocalRelations."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "osm_lib_spark"
+    offenders, allowed = [], 0
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        exempt = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "local_frame" and path.name == "session.py"
+            for n in ast.walk(f)
+        }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "createDataFrame":
+                if id(n) in exempt:
+                    allowed += 1
+                else:
+                    offenders.append(f"{path.relative_to(root)}:{n.lineno}")
+    assert offenders == [] and allowed == 1
+
+
+def test_driver_frames_are_local_relations(spark, docs_xs, tmp_path):
+    """The driver-built frames plan as a LocalRelation, never a
+    LogicalRDD: the PIP polygon set, the PBF/VEX blob indexes under
+    read_pbf/read_vex and a kNN strip table."""
+    import numpy as np
+
+    from osm_lib_spark.operators.knn import _frontier_strips
+    from osm_lib_spark.operators.pip import polygons_df
+    from osm_lib_spark.sources.pbf import read_pbf, write_pbf
+    from osm_lib_spark.sources.vex import read_vex, write_vex
+
+    tables = (parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs))
+    write_pbf(str(tmp_path / "xs.pbf"), *tables)
+    write_vex(str(tmp_path / "xs.vex"), *tables)
+    ring = np.array([[10.0, 10.0], [10.0, 11.0], [11.0, 11.0], [10.0, 10.0]])
+    frames = {
+        "polygons_df": polygons_df(spark, {1: [ring]}),
+        "read_pbf": read_pbf(spark, str(tmp_path / "xs.pbf")),
+        "read_vex": read_vex(spark, str(tmp_path / "xs.vex")),
+        "knn strips": _frontier_strips(
+            spark, [dict(query_id=0, qlat=10.0, qlon=10.0, qx=2000, qy=2000, radius=4)]
+        ),
+    }
+    for name, df in frames.items():
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed, name
