@@ -40,10 +40,13 @@ DuckDB/numpy oracles agree bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.hashing import md5_int_col
+from osm_lib_spark.operators.graph import min_label_components
+from osm_lib_spark.session import collect_bounded, local_frame
 
 MINHASH_PRIME = (1 << 31) - 1  # Mersenne; a_i·h + b_i stays < 2^62
 # Defaults are TEST-scale. The LSH S-curve threshold is t ≈ (1/b)^(1/r)
@@ -58,6 +61,8 @@ NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
+MAX_COMPONENT_ITERATIONS = 50  # label-propagation rounds (Spark path only)
+PAIR_ROW_BYTES = 16  # (doc_a, doc_b): two longs
 
 
 def _perm_coeffs(num_perm: int = NUM_PERM, seed: int = 42) -> tuple[list[int], list[int]]:
@@ -238,9 +243,7 @@ def minhash_dup_pairs(
 
 
 def dup_components(
-    documents: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_iters: int = 50,
+    documents: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """(doc_id, component_id, keep): connected components over the
     verified MinHash duplicate graph — the keep-one-per-cluster step a
@@ -249,47 +252,91 @@ def dup_components(
     IS the survivor. Docs in no duplicate pair are their own singleton
     component (keep = 1).
 
-    Iterative min-label propagation to fixpoint: labels start at
-    doc_id; each round each doc takes the min of its own and its
-    neighbors' labels. One uniform-key shuffle join + partial-agg min
-    per round, localCheckpointed so the plan stays O(1) across rounds;
-    rounds needed = label-propagation diameter (LSH dup clusters are
-    near-cliques, so 2-3 in practice). The result is the unique
-    fixpoint — independent of round count or partitioning, which is
-    what lets the DuckDB oracle recompute it with a recursive CTE. At
-    extreme scale swap the step for the alternating large-star /
-    small-star formulation (same join shape) to bound rounds at
-    O(log n) on pathological chain graphs.
+    The result is the unique fixpoint of min-label propagation —
+    independent of how it is computed, which is what lets the DuckDB
+    oracle recompute it with a recursive CTE. Where it runs follows
+    the pair set's size, as in ``components_from_pairs``: pairs that fit
+    under ``spark.sql.autoBroadcastJoinThreshold`` are collected once
+    and solved on the driver by numpy hooking and pointer jumping;
+    larger ones run the distributed label-propagation loop, whose rounds
+    grow with the graph's diameter (LSH dup clusters are near-cliques,
+    so 2-3 in practice). A graph too large to collect AND too
+    long-chained for that loop wants the alternating large-star /
+    small-star formulation (same join shape, O(log n) rounds).
     """
+    # the pairs come from ``documents``, so both endpoints are documents
+    # already: skip components_from_pairs' semi-joins (two broadcast jobs)
     pairs = minhash_dup_pairs(documents, threshold).select("doc_a", "doc_b")
-    return components_from_pairs(documents, pairs, max_iters)
+    return _components(documents, pairs)
 
 
-def components_from_pairs(
-    documents: DataFrame, pairs: DataFrame, max_iters: int = 50
-) -> DataFrame:
-    """Label-propagation connected components over an arbitrary
-    (doc_a, doc_b) undirected pair table — the reusable core of
-    ``dup_components`` (any of the dedup pair generators can feed it).
+def components_from_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components over an arbitrary (doc_a, doc_b) undirected
+    pair table — the reusable core of ``dup_components`` (any of the
+    dedup pair generators can feed it). One output row per
+    ``documents`` row; pairs naming a doc outside ``documents`` are
+    dropped, so every component has exactly one ``keep = 1`` row.
+
+    Pairs that fit under ``spark.sql.autoBroadcastJoinThreshold``
+    (``session.collect_bounded``) are solved by
+    ``graph.min_label_components`` on the driver. Larger ones run
+    label propagation in Spark: one shuffle join + partial-agg min per
+    round, localCheckpointed so the plan stays O(1) across rounds,
+    raising ``ValueError`` if MAX_COMPONENT_ITERATIONS rounds do not
+    reach the fixpoint.
     """
+    ids = documents.select("doc_id")
+    # lazy semi-joins: they run inside the bounded collect's plan
+    pairs = pairs.join(ids, F.col("doc_a") == ids.doc_id, "left_semi").join(
+        ids, F.col("doc_b") == ids.doc_id, "left_semi"
+    )
+    return _components(documents, pairs)
+
+
+def _components(documents: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``components_from_pairs`` over pairs whose endpoints are all in
+    ``documents``."""
+    # lazy checkpoint: the loop reuses what the bounded collect materialized
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
+    table = collect_bounded(pairs, PAIR_ROW_BYTES)
+    if table is not None:
+        doc_id, comp = min_label_components(
+            table.column(0).to_numpy(zero_copy_only=False),
+            table.column(1).to_numpy(zero_copy_only=False),
+        )
+        labels = local_frame(
+            documents.sparkSession,
+            pa.table([doc_id, comp], names=["doc_id", "comp"]),
+            "doc_id long, comp long",
+        )
+    else:
+        labels = _propagate_labels(pairs)
+    return (
+        documents.join(labels, "doc_id", "left")
+        .select("doc_id", F.coalesce("comp", "doc_id").alias("component_id"))
+        .withColumn("keep", (F.col("doc_id") == F.col("component_id")).cast("long"))
+    )
+
+
+def _propagate_labels(pairs: DataFrame) -> DataFrame:
+    """(doc_id, comp) for the docs in some pair: min-label propagation
+    to fixpoint, one Spark round per step."""
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("src", "dst")
         .localCheckpoint(eager=True)
     )
     # Iterate ONLY over docs that appear in some pair: a doc with no
-    # edge has no neighbor, so its label can never change — joining the
-    # whole corpus into every round (the old shape) recomputed an
-    # invariant. Edge docs are the duplicate-graph vertices (≪ corpus
-    # at scale); the corpus joins exactly once at the end to emit the
-    # untouched singletons. The fixpoint is identical by construction.
-    edge_ids = edges.select(F.col("src").alias("doc_id")).distinct().localCheckpoint(
-        eager=True
+    # edge has no neighbor, so its label can never change. Edge docs are
+    # the duplicate-graph vertices (≪ corpus at scale); the corpus joins
+    # once, in _components, to label the untouched singletons.
+    labels = (
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.col("doc_id").alias("comp"))
+        .localCheckpoint(eager=True)
     )
-    labels = edge_ids.select("doc_id", F.col("doc_id").alias("comp")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iters):
+    for _ in range(MAX_COMPONENT_ITERATIONS):
         neigh = (
             edges.join(labels, edges.src == labels.doc_id)
             .groupBy(F.col("dst"))
@@ -307,14 +354,9 @@ def components_from_pairs(
         converged = stepped.where(F.col("_chg")).limit(1).count() == 0
         labels = stepped.drop("_chg")
         if converged:
-            break
-    singletons = documents.join(edge_ids, "doc_id", "left_anti").select(
-        "doc_id", F.col("doc_id").alias("comp")
-    )
-    return labels.unionByName(singletons).select(
-        "doc_id",
-        F.col("comp").alias("component_id"),
-        (F.col("doc_id") == F.col("comp")).cast("long").alias("keep"),
+            return labels
+    raise ValueError(
+        f"components did not converge in {MAX_COMPONENT_ITERATIONS} rounds"
     )
 
 

@@ -29,12 +29,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.tiles import bbox_tile_range
+from osm_lib_spark.operators.graph import upward_closure
 from osm_lib_spark.operators.indexes import build_way_tiles
-from osm_lib_spark.session import local_frame
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame
 
 MAX_CLOSURE_ITERATIONS = 50
 CLOSURE_ROW_BYTES = 16  # (relation_id, ancestor_id): two longs
@@ -42,16 +44,25 @@ CLOSURE_ROW_BYTES = 16  # (relation_id, ancestor_id): two longs
 
 def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
     """Transitive UPWARD closure of the relation-membership graph:
-    (relation_id, ancestor_id) for every relation that is reachable by
-    walking 'is member of' edges 0+ times (reflexive rows excluded),
-    returned with its exact row count.
+    (relation_id, ancestor_id) for every ancestor reachable from the
+    relation by walking 'is member of' edges ONE or more times, returned
+    with its exact row count. A relation is its own ancestor, a
+    (r, r) row, exactly when it lies on a membership cycle, a
+    self-membership included.
 
-    Computed ONCE per dataset by semi-naive iteration over the (small)
-    relation→relation edge set (the relationsByRelation index,
-    OSM.java:156-158); every bbox extract then resolves its closure
-    with a single equi-join instead of an iterative per-query loop.
-    Cycle-safe: the union is distinct, growth is monotone and bounded.
+    Computed ONCE per dataset over the (small) relation→relation edge
+    set (the relationsByRelation index, OSM.java:156-158); every bbox
+    extract then resolves its closure with a single equi-join instead of
+    an iterative per-query loop. When the edge set fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` it is collected once and
+    ``graph.upward_closure`` runs on the driver; the result is a
+    LocalRelation of exact size. Otherwise a semi-naive Spark loop runs
+    (one extension join, anti-join and checkpoint per round) and raises
+    ``ValueError`` if MAX_CLOSURE_ITERATIONS rounds do not reach the
+    fixpoint.
     """
+    # lazy checkpoint: the bounded collect materializes the edges, which
+    # the loop then reuses instead of re-exploding the relations
     edges = (
         relations.select(F.col("id").alias("relation_id"), F.explode("members").alias("m"))
         .where(F.col("m.type") == "RELATION")
@@ -59,9 +70,21 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
             F.col("m.member_id").alias("relation_id"),
             F.col("relation_id").alias("ancestor_id"),
         )
-    ).localCheckpoint(eager=True)
-    rows = edges.count()
+    ).localCheckpoint(eager=False)
+    table = collect_bounded(edges, CLOSURE_ROW_BYTES)
+    if table is not None:
+        child, ancestor = upward_closure(
+            table.column(0).to_numpy(zero_copy_only=False),
+            table.column(1).to_numpy(zero_copy_only=False),
+        )
+        closure = local_frame(
+            relations.sparkSession,
+            pa.table([child, ancestor], names=["relation_id", "ancestor_id"]),
+            "relation_id long, ancestor_id long",
+        )
+        return closure, len(child)
 
+    rows = edges.count()
     closure = edges
     frontier = edges
     for _ in range(MAX_CLOSURE_ITERATIONS):
@@ -77,11 +100,13 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
         ).localCheckpoint(eager=True)
         n_new = new.count()
         if not n_new:
-            break
+            return closure, rows
         rows += n_new
         closure = closure.unionByName(new).localCheckpoint(eager=True)
         frontier = new
-    return closure, rows
+    raise ValueError(
+        f"relation closure did not converge in {MAX_CLOSURE_ITERATIONS} rounds"
+    )
 
 
 @dataclass
@@ -243,11 +268,10 @@ def bbox_extract_batch(
     # per dataset, so unlike seen it does not grow with the batch, and
     # its exact size is known. Broadcast it when that fits under
     # spark.sql.autoBroadcastJoinThreshold, else hash-join: left to the
-    # planner, the checkpointed closure keeps its origin plan's estimate
-    # (17 GB for the 10-row sf-xs closure on Spark 4.1.2) and the join
-    # plans as a SortMergeJoin.
-    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if ctx.closure_rows * CLOSURE_ROW_BYTES <= threshold:
+    # planner, a closure from the Spark loop is checkpointed and keeps
+    # its origin plan's estimate (17 GB for the 10-row sf-xs closure on
+    # Spark 4.1.2), and the join plans as a SortMergeJoin.
+    if ctx.closure_rows * CLOSURE_ROW_BYTES <= broadcast_threshold(spark):
         closure = F.broadcast(ctx.rel_closure)
     else:
         closure = ctx.rel_closure.hint("SHUFFLE_HASH")

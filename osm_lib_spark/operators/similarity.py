@@ -31,12 +31,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_lib_spark.functions.hashing import cosine_fold_col, dot_fold_np
-from osm_lib_spark.session import local_frame
+from osm_lib_spark.functions.hashing import cosine_fold_col, dot_fold_np, norm_fold_np
+from osm_lib_spark.session import collect_bounded, local_frame
 
 ANN_SEED = 7
 # Defaults are TEST-scale. For random-hyperplane LSH the collision
@@ -193,6 +195,19 @@ IVF_NPROBE = 4
 IVF_STRIDE = 31  # centroid j = embedding of vec_id j*stride (16*31=496 fits all scales)
 
 
+def _nearest_np(mat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """Row index into ``cmat`` of each row's max-cosine centroid, the
+    FIRST max on ties: ``dot_fold_np``/``norm_fold_np`` reproduce the
+    Column fold bit-for-bit (same left-to-right float64 op order). The
+    one assignment kernel of the Arrow UDFs and of driver training."""
+    norm_e = norm_fold_np(mat)
+    cnorms = norm_fold_np(cmat)
+    scores = np.empty((len(cnorms), mat.shape[0]), dtype=np.float64)
+    for j in range(len(cnorms)):
+        scores[j] = dot_fold_np(mat, cmat[j]) / (norm_e * cnorms[j])
+    return np.argmax(scores, axis=0)
+
+
 def _assign_local(embeddings: DataFrame, cents: list) -> DataFrame:
     """(vec_id, embedding, list_id): row-local argmax-cosine assignment
     (ties → smaller list_id). Map-only — the old broadcast-crossJoin +
@@ -200,27 +215,18 @@ def _assign_local(embeddings: DataFrame, cents: list) -> DataFrame:
     at corpus scale that shuffle dominated the whole query.
 
     The kernel is a vectorized Arrow-batch argmax over the (nlist, dim)
-    centroid matrix: ``dot_fold_np``/``norm_fold_np`` reproduce the
-    Column fold bit-for-bit (same left-to-right float64 op order), and
-    ``np.argmax`` returns the FIRST max — with ``cents`` sorted by
-    list_id that is exactly the oracle's ccos DESC, list_id ASC
+    centroid matrix (``_nearest_np``): with ``cents`` sorted by list_id
+    its first max is exactly the oracle's ccos DESC, list_id ASC
     tie-break. Unrolled Column folds (16 centroids × 64-dim aggregate
     expressions per row) measured ~3× slower than this dense kernel.
     """
-    from osm_lib_spark.functions.hashing import dot_fold_np, norm_fold_np
-
     list_ids = np.array([lid for lid, _ in cents], dtype=np.int32)
     cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
-    cnorms = norm_fold_np(cmat)
 
     @F.pandas_udf(T.IntegerType())
     def assign(emb: pd.Series) -> pd.Series:
         mat = np.stack(emb.to_numpy()).astype(np.float64)
-        norm_e = norm_fold_np(mat)
-        scores = np.empty((len(cnorms), mat.shape[0]), dtype=np.float64)
-        for j in range(len(cnorms)):
-            scores[j] = dot_fold_np(mat, cmat[j]) / (norm_e * cnorms[j])
-        return pd.Series(list_ids[np.argmax(scores, axis=0)])
+        return pd.Series(list_ids[_nearest_np(mat, cmat)])
 
     return embeddings.select(
         "vec_id", "embedding", assign(F.col("embedding")).alias("list_id")
@@ -233,20 +239,13 @@ def _assign_residual(embeddings: DataFrame, cents: list) -> DataFrame:
     first-max/list_id-ASC tie-break as ``_assign_local``). Residual
     subtraction is exact element-wise double arithmetic, so the DuckDB
     oracle reproduces it bit-for-bit with list_zip subtraction."""
-    from osm_lib_spark.functions.hashing import dot_fold_np, norm_fold_np
-
     list_ids = np.array([lid for lid, _ in cents], dtype=np.int32)
     cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
-    cnorms = norm_fold_np(cmat)
 
     @F.pandas_udf("list_id int, residual array<double>")
     def assignr(emb: pd.Series) -> pd.DataFrame:
         mat = np.stack(emb.to_numpy()).astype(np.float64)
-        norm_e = norm_fold_np(mat)
-        scores = np.empty((len(cnorms), mat.shape[0]), dtype=np.float64)
-        for j in range(len(cnorms)):
-            scores[j] = dot_fold_np(mat, cmat[j]) / (norm_e * cnorms[j])
-        idx = np.argmax(scores, axis=0)
+        idx = _nearest_np(mat, cmat)
         res = mat - cmat[idx]
         return pd.DataFrame(
             {"list_id": list_ids[idx], "residual": [row.tolist() for row in res]}
@@ -272,8 +271,6 @@ def _probe_list_rows(
     kernels as everything else — ccos DESC, list_id ASC ordering matches
     the oracle bit-for-bit.
     """
-    from osm_lib_spark.functions.hashing import dot_fold_np, norm_fold_np
-
     q_rows = sorted(
         (int(r["vec_id"]), list(r["embedding"]))
         for r in embeddings.where(F.col("vec_id") < n_queries)
@@ -460,25 +457,32 @@ PQ_K = 16  # centroids per subspace codebook
 PQ_REFINE = 50  # ADC candidates per query re-ranked exactly
 
 
-def _pq_codes_udf(cb: np.ndarray):
-    """Vectorized PQ encoder: embedding → M subspace codes (argmin L2
-    against the (M, K, sub) codebook; ties → smaller code, matching the
-    oracle's ORDER BY dist, code)."""
+def _pq_codes_np(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """(N, M) int32 PQ codes: per subspace, argmin L2 against the
+    (M, K, sub) codebook, ties → smaller code (the oracle's ORDER BY
+    dist, code). The one encoder of the Arrow UDF and of driver
+    training."""
     from osm_lib_spark.functions.hashing import l2_fold_np
 
     m, kc, sub = cb.shape
+    out = np.empty((len(mat), m), dtype=np.int32)
+    for s in range(m):
+        xs = mat[:, s * sub : (s + 1) * sub]
+        dists = np.empty((kc, len(mat)), dtype=np.float64)
+        for j in range(kc):
+            dists[j] = l2_fold_np(xs, cb[s, j])
+        out[:, s] = np.argmin(dists, axis=0)
+    return out
+
+
+def _pq_codes_udf(cb: np.ndarray):
+    """Vectorized PQ encoder: embedding → M subspace codes
+    (``_pq_codes_np`` over each Arrow batch)."""
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def codes(emb: pd.Series) -> pd.Series:
         mat = np.stack(emb.to_numpy()).astype(np.float64)
-        out = np.empty((len(mat), m), dtype=np.int32)
-        for s in range(m):
-            xs = mat[:, s * sub : (s + 1) * sub]
-            dists = np.empty((kc, len(mat)), dtype=np.float64)
-            for j in range(kc):
-                dists[j] = l2_fold_np(xs, cb[s, j])
-            out[:, s] = np.argmin(dists, axis=0)
-        return pd.Series([row.tolist() for row in out])
+        return pd.Series([row.tolist() for row in _pq_codes_np(mat, cb)])
 
     return codes
 
@@ -695,44 +699,47 @@ def ivf_pq_topk(
     Both the IVF index (stride centroids) and the PQ codebooks (stride
     init + one quantized Lloyd step) are deterministically trainable,
     so the DuckDB oracle retrains the ENTIRE composed index from
-    scratch and must agree bit-for-bit.
+    scratch and must agree bit-for-bit. Residual training runs on the
+    driver when the corpus fits under
+    ``spark.sql.autoBroadcastJoinThreshold``, else as Spark jobs (see
+    ``_train_residual_ivf_pq``); the plain form always trains in Spark.
     """
-    from osm_lib_spark.functions.hashing import l2_fold_np
+    if residual:
+        cents, cb, coded = _train_residual_ivf_pq(embeddings, nlist, dim, m, kc)
+        return _query_residual_ivf_pq(
+            embeddings, cents, cb, coded, k, n_queries, nprobe, refine
+        )
 
     dim = _dim_of(embeddings, dim)
     sub = dim // m
-    spark = embeddings.sparkSession
     cents = _collect_cents(_stride_centroids(embeddings, nlist))
-    if not residual:
-        cb = _pq_train(embeddings, dim, m, kc)
-        coded = _assign_local(embeddings, cents).select(
-            "vec_id", "list_id", _pq_codes_udf(cb)(F.col("embedding")).alias("codes")
-        )
-        probes = _pq_query_luts(embeddings, cb, n_queries, m, sub)
-        plists = _probe_lists(embeddings, cents, n_queries, nprobe).select(
-            "query_id", "list_id"
-        )
-        # each vector lives in exactly one list and probes are distinct
-        # per (query, list), so the join yields each (query, vec) at
-        # most once
-        scored = (
-            coded.join(plists, "list_id")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .join(probes.select("query_id", "lut"), "query_id")
-            .withColumn("adc", _adc_expr(m))
-        )
-        return _pq_rerank_tail(embeddings, scored, probes, k, refine)
-
-    # residual path: train + query halves (shared with the persisted-
-    # index path below)
-    cents, cb, coded = _train_residual_ivf_pq(embeddings, cents, dim, m, kc)
-    return _query_residual_ivf_pq(
-        embeddings, cents, cb, coded, k, n_queries, nprobe, refine
+    cb = _pq_train(embeddings, dim, m, kc)
+    coded = _assign_local(embeddings, cents).select(
+        "vec_id", "list_id", _pq_codes_udf(cb)(F.col("embedding")).alias("codes")
     )
+    probes = _pq_query_luts(embeddings, cb, n_queries, m, sub)
+    plists = _probe_lists(embeddings, cents, n_queries, nprobe).select(
+        "query_id", "list_id"
+    )
+    # each vector lives in exactly one list and probes are distinct
+    # per (query, list), so the join yields each (query, vec) at
+    # most once
+    scored = (
+        coded.join(plists, "list_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .join(probes.select("query_id", "lut"), "query_id")
+        .withColumn("adc", _adc_expr(m))
+    )
+    return _pq_rerank_tail(embeddings, scored, probes, k, refine)
+
+
+# An embedding of unknown dim is sized as this many float32s by the
+# bounded collect of residual IVF-PQ training.
+TRAIN_DIM_BOUND = 1024
 
 
 def _train_residual_ivf_pq(
-    embeddings: DataFrame, stride_cents: list, dim: int, m: int, kc: int
+    embeddings: DataFrame, nlist: int, dim: int | None, m: int, kc: int
 ):
     """Train the residual IVF∘PQ index → (cents, cb, coded).
 
@@ -741,21 +748,107 @@ def _train_residual_ivf_pq(
     centroids actually center their lists; measured on the fixture:
     residual-over-stride was WORSE than plain, residual-over-kmeans is
     at-or-above parity, and real clustered embeddings gain far more),
-    then assignment + residual in ONE row-local Arrow kernel, PQ
-    trained/encoded on the residual frame. Deterministic end to end
-    (stride init + integer-quantized Lloyd means), so train-once and
-    retrain produce the identical index.
+    then assignment + residual, PQ trained/encoded on the residuals.
+    Deterministic end to end (stride init + integer-quantized Lloyd
+    means), so train-once and retrain produce the identical index.
+
+    Where it runs: (vec_id, embedding) rows that fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` (at 4·dim + 8 bytes a row,
+    dim taken as TRAIN_DIM_BOUND when the caller does not give it) are
+    collected once and trained on the driver with the same numpy
+    kernels as the Arrow UDFs, bit-identically; ``coded`` is then a
+    LocalRelation. A larger corpus trains as Spark jobs: stride
+    collects, a distributed Lloyd step, PQ sums.
     """
-    cents = _collect_cents(
-        _lloyd_step(_assign_local(embeddings, stride_cents)).select("list_id", "c_emb")
+    emb = embeddings.select("vec_id", "embedding").localCheckpoint(eager=False)
+    table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
+    if table is None:
+        dim = _dim_of(emb, dim)
+        stride = _collect_cents(_stride_centroids(emb, nlist))
+        cents = _collect_cents(
+            _lloyd_step(_assign_local(emb, stride)).select("list_id", "c_emb")
+        )
+        resid = _assign_residual(emb, cents)
+        resid_as_emb = resid.select("vec_id", F.col("residual").alias("embedding"))
+        cb = _pq_train(resid_as_emb, dim, m, kc)
+        coded = resid.select(
+            "vec_id", "list_id", _pq_codes_udf(cb)(F.col("residual")).alias("codes")
+        )
+        return cents, cb, coded
+
+    vec_id = table.column("vec_id").to_numpy()
+    rows = table.column("embedding").combine_chunks()
+    lengths = pc.list_value_length(rows).to_numpy(zero_copy_only=False)
+    if len(rows) == 0 or lengths.min() != lengths.max():
+        raise ValueError("residual IVF-PQ training needs non-empty, equal-length embeddings")
+    mat = rows.flatten().to_numpy().astype(np.float64).reshape(len(rows), -1)
+    dim = dim if dim is not None else mat.shape[1]
+
+    # coarse quantizer: stride init, one Lloyd step (empty lists drop out)
+    stride = _stride_rows(vec_id, mat, nlist)
+    if not stride:
+        raise ValueError("IVF training found no stride-sample rows")
+    idx = _nearest_np(mat, np.array([v for _, v in stride]))
+    cmat, members = _quantized_means(mat, idx, len(stride))
+    list_ids = np.array([lid for lid, _ in stride], dtype=np.int32)[members]
+    cents = [(int(lid), c.tolist()) for lid, c in zip(list_ids, cmat)]
+    idx = _nearest_np(mat, cmat)
+    resid = mat - cmat[idx]
+
+    # PQ codebooks on the residuals: stride init, one Lloyd step (a code
+    # with no members keeps its init value)
+    init_rows = _stride_rows(vec_id, resid, kc)
+    if not init_rows:
+        raise ValueError("PQ training found no stride-sample rows")
+    sub = dim // m
+    cb = np.array(
+        [[vec[s * sub : (s + 1) * sub] for _, vec in init_rows] for s in range(m)],
+        dtype=np.float64,
     )
-    resid = _assign_residual(embeddings, cents)
-    resid_as_emb = resid.select("vec_id", F.col("residual").alias("embedding"))
-    cb = _pq_train(resid_as_emb, dim, m, kc)
-    coded = resid.select(
-        "vec_id", "list_id", _pq_codes_udf(cb)(F.col("residual")).alias("codes")
+    codes = _pq_codes_np(resid, cb)
+    for s in range(m):
+        means, members = _quantized_means(resid[:, s * sub : (s + 1) * sub], codes[:, s], cb.shape[1])
+        cb[s, members] = means
+    codes = _pq_codes_np(resid, cb)
+    coded = local_frame(
+        embeddings.sparkSession,
+        pa.table(
+            [
+                vec_id,
+                list_ids[idx],
+                pa.ListArray.from_arrays(
+                    np.arange(0, codes.size + 1, m, dtype=np.int32), codes.ravel()
+                ),
+            ],
+            names=["vec_id", "list_id", "codes"],
+        ),
+        "vec_id long, list_id int, codes array<int>",
     )
     return cents, cb, coded
+
+
+def _stride_rows(vec_id: np.ndarray, mat: np.ndarray, n: int) -> list:
+    """``_collect_cents(_stride_centroids(...))`` over driver arrays:
+    [(list_id, vec)] for vec_id = list_id·IVF_STRIDE < n·IVF_STRIDE,
+    sorted."""
+    sel = (vec_id % IVF_STRIDE == 0) & (vec_id < n * IVF_STRIDE)
+    return sorted(
+        (int(v) // IVF_STRIDE, row.tolist()) for v, row in zip(vec_id[sel], mat[sel])
+    )
+
+
+def _quantized_means(x: np.ndarray, labels: np.ndarray, k: int):
+    """(means, members): ``_lloyd_step``'s integer-quantized per-label
+    means of the rows of ``x`` — floor(x·2²⁰ + 0.5) summed as int64,
+    then (sum/n)/2²⁰ — for the labels in 0..k-1 that have members
+    (``members`` is that boolean mask; ``means`` has one row each)."""
+    q = np.floor(x * float(_QUANT) + 0.5).astype(np.int64)
+    sums = np.zeros((k, x.shape[1]), dtype=np.int64)
+    np.add.at(sums, labels, q)
+    n = np.bincount(labels, minlength=k)
+    members = n > 0
+    means = sums[members].astype(np.float64) / n[members, None].astype(np.float64) / float(_QUANT)
+    return means, members
 
 
 def _query_residual_ivf_pq(
@@ -875,15 +968,18 @@ def build_ivf_pq_index(
     sample frame, then encode the FULL corpus with the frozen
     artifacts in one map-only pass. With train_on=None training and
     encoding both run over ``embeddings`` (exact small-scale build).
+
+    Training runs on the driver when the training frame fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` and as Spark jobs when it
+    does not (``_train_residual_ivf_pq``); both give the same bits.
     """
     import json as _json
     import os as _os
 
-    dim = _dim_of(embeddings, dim)
     spark = embeddings.sparkSession
     train_frame = train_on if train_on is not None else embeddings
-    stride = _collect_cents(_stride_centroids(train_frame, nlist))
-    cents, cb, coded = _train_residual_ivf_pq(train_frame, stride, dim, m, kc)
+    cents, cb, coded = _train_residual_ivf_pq(train_frame, nlist, dim, m, kc)
+    dim = dim if dim is not None else len(cents[0][1])
     if train_on is not None:
         coded = _encode_ivf_pq(embeddings, cents, cb)
     local_frame(

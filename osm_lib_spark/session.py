@@ -92,16 +92,45 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     ``spark.sql.autoBroadcastJoinThreshold`` on its own.
 
     ``rows`` are tuples in ``ddl`` column order (structs as tuples or
-    dicts).
+    dicts), or an Arrow table whose columns are in that order.
     """
     schema = DataType.fromDDL(ddl)
     arrow_schema = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
-        schema=arrow_schema,
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.rename_columns(arrow_schema.names).cast(arrow_schema)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
     return spark.createDataFrame(table, schema)
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (≤ 0: disabled)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def collect_bounded(df: DataFrame, row_bytes: int) -> pa.Table | None:
+    """``df`` as one Arrow table on the driver when it fits under
+    ``spark.sql.autoBroadcastJoinThreshold``, else ``None``.
+
+    The size rule is a row count: at most ``threshold // row_bytes``
+    rows. One job collects ``max_rows + 1`` rows, so an input over the
+    bound is never pulled whole; a threshold ≤ 0 runs nothing. The
+    graph fixpoints and residual IVF-PQ training choose between their
+    driver kernels and their Spark loops by it. A caller whose fallback
+    reuses ``df``
+    passes it lazily checkpointed, so the collect's job materializes it
+    for the fallback instead of computing it twice.
+    """
+    threshold = broadcast_threshold(df.sparkSession)
+    if threshold <= 0:
+        return None
+    max_rows = threshold // row_bytes
+    table = df.limit(max_rows + 1).toArrow()
+    return None if table.num_rows > max_rows else table
 
 
 def stop_spark() -> None:

@@ -96,6 +96,7 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
     boxes = [tuple(meta_xs["bboxes"]["dense"]), tuple(meta_xs["bboxes"]["wide"])]
     ctx = prepare_extract_context(rels)
     assert ctx.closure_rows == ctx.rel_closure.count() > 0
+    assert "LocalRelation" in ctx.rel_closure._jdf.queryExecution().analyzed().toString()
     # the lazy checkpoints plan their subtrees when the DAG is built;
     # the SQL status store keeps those plans
     store = spark._jsparkSession.sharedState().statusStore()

@@ -449,7 +449,9 @@ def test_components_from_pairs_chain(spark):
     """Transitive chains must collapse to one component with the min
     doc_id as canonical survivor: 1-2, 2-3 => {1,2,3}; 5-6 => {5,6};
     4 alone => singleton. A long chain (10..15 linked pairwise)
-    exercises multiple propagation rounds."""
+    exercises multiple propagation rounds. Both paths: the driver kernel
+    (pairs under spark.sql.autoBroadcastJoinThreshold) and the Spark
+    loop (threshold -1)."""
     from osm_lib_spark.operators.dedup import components_from_pairs
 
     docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 5, 6] + list(range(10, 16))], "doc_id long")
@@ -457,16 +459,23 @@ def test_components_from_pairs_chain(spark):
         [(1, 2), (2, 3), (5, 6)] + [(i, i + 1) for i in range(10, 15)],
         "doc_a long, doc_b long",
     )
-    got = {
-        r.doc_id: (r.component_id, r.keep)
-        for r in components_from_pairs(docs, pairs).collect()
-    }
-    assert got == {
-        1: (1, 1), 2: (1, 0), 3: (1, 0),
-        4: (4, 1),
-        5: (5, 1), 6: (5, 0),
-        **{i: (10, 1 if i == 10 else 0) for i in range(10, 16)},
-    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    for threshold in (saved, "-1"):
+        spark.conf.set(key, threshold)
+        try:
+            got = {
+                r.doc_id: (r.component_id, r.keep)
+                for r in components_from_pairs(docs, pairs).collect()
+            }
+        finally:
+            spark.conf.set(key, saved)
+        assert got == {
+            1: (1, 1), 2: (1, 0), 3: (1, 0),
+            4: (4, 1),
+            5: (5, 1), 6: (5, 0),
+            **{i: (10, 1 if i == 10 else 0) for i in range(10, 16)},
+        }, threshold
 
 
 def test_sample_stratified_nested_and_deterministic(spark):
