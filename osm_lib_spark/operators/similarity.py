@@ -6,25 +6,43 @@
   identical to the DuckDB oracle), per-query top-k window. The O(Q·N)
   correctness baseline.
 
-* ``ann_lsh_topk`` — the scale path: random-hyperplane LSH. Signatures
-  are sign-bits of plane dot products (same fold kernel), candidates
-  share a signature in ≥1 band, exact cosine reranks. Returns exactly
-  top-k among candidates — approximate overall (recall measured in
-  tests), deterministic given the seed.
+* ``ann_lsh_topk`` / ``embedding_dup_pairs`` — random-hyperplane LSH:
+  sign bits of plane dot products (same fold kernel) split into bands;
+  a candidate (or pair) shares a signature in ≥1 band and exact cosine
+  reranks (or filters) it. Band buckets are bounded by the hash
+  (uniform sign bits), unlike value-blocking keys whose hot blocks
+  degrade to all-pairs crosses. Deterministic given the seed; the
+  DuckDB oracle recomputes the banding from literal plane constants.
 
-* ``embedding_dup_pairs`` — near-duplicate pairs (cosine ≥ threshold)
-  blocked by the SAME random-hyperplane LSH bands as ``ann_lsh_topk``:
-  a pair is compared iff it collides in ≥1 band, then filtered by
-  exact cosine. Band buckets are bounded by the hash (uniform sign
-  bits), unlike value-blocking keys (label) whose hot blocks degrade
-  to all-pairs crosses. Deterministic given the seed, and the DuckDB
-  oracle recomputes the banding independently from literal plane
-  constants.
+* The index-based ANN operators — ``ivf_topk``, ``ivf_kmeans_topk``,
+  ``pq_topk``, ``ivf_pq_topk`` (plain and residual) and the persisted
+  ``build_ivf_pq_index`` / ``append_to_ivf_pq_index`` /
+  ``ivf_pq_topk_from_index`` — are parameter settings of one pipeline:
+
+  - one trainer, ``_train_index``: stride rows, then coarse Lloyd sums,
+    then PQ Lloyd sums, each over integer-quantized values so that any
+    split of the corpus adds up to the same bits. The passes run on the
+    driver when the corpus fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` (``collect_bounded``),
+    else as one mapInArrow job each whose per-task sums the driver adds
+    up — the broadcast-or-partition size rule.
+  - one encoder, ``_codes_batch``: coarse assignment, the optional
+    residual and the PQ codes of an Arrow batch in one numpy kernel,
+    on the driver or in a map-only mapInArrow.
+  - two query tails: ``_ivf_query`` (probe lists, exact-cosine rerank)
+    and ``_adc_topk`` (one ADC LUT per (query, probed list), code-only
+    scan, exact-L2 rerank).
+
+  Spark carries Arrow batches; the per-row math is numpy over the same
+  left-fold kernels as the oracle, so every trained index and ranking
+  is bit-reproducible.
 
 Scale notes: brute force distributes perfectly (map-only over
 candidates, broadcast queries, top-k via partial per-partition heaps in
 the window agg). The LSH bucket join shuffles on (band, signature) —
-uniform md5/hyperplane bits mean no skew; AQE handles stragglers.
+uniform md5/hyperplane bits mean no skew; AQE handles stragglers. The
+ANN scans never shuffle the corpus: probes and LUTs are broadcast
+LocalRelations, and the only wide exchange is the per-query window.
 """
 
 from __future__ import annotations
@@ -37,7 +55,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_lib_spark.functions.hashing import cosine_fold_col, dot_fold_np, norm_fold_np
+from osm_lib_spark.functions.hashing import (
+    cosine_fold_col,
+    dot_fold_np,
+    l2_fold_col,
+    l2_fold_np,
+    norm_fold_np,
+)
 from osm_lib_spark.session import collect_bounded, local_frame
 
 ANN_SEED = 7
@@ -199,7 +223,7 @@ def _nearest_np(mat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     """Row index into ``cmat`` of each row's max-cosine centroid, the
     FIRST max on ties: ``dot_fold_np``/``norm_fold_np`` reproduce the
     Column fold bit-for-bit (same left-to-right float64 op order). The
-    one assignment kernel of the Arrow UDFs and of driver training."""
+    one assignment kernel of training, encoding and ``_assign_local``."""
     norm_e = norm_fold_np(mat)
     cnorms = norm_fold_np(cmat)
     scores = np.empty((len(cnorms), mat.shape[0]), dtype=np.float64)
@@ -208,20 +232,25 @@ def _nearest_np(mat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     return np.argmax(scores, axis=0)
 
 
+def _centroid_arrays(cents: list):
+    """(list_ids, cmat) of a sorted [(list_id, vec)] centroid list:
+    int32 ids and an (nlist, dim) float64 matrix; (None, None) for the
+    one centroid-less list of ``pq_topk``."""
+    if not cents:
+        return None, None
+    return (
+        np.array([lid for lid, _ in cents], dtype=np.int32),
+        np.array([v for _, v in cents], dtype=np.float64),
+    )
+
+
 def _assign_local(embeddings: DataFrame, cents: list) -> DataFrame:
     """(vec_id, embedding, list_id): row-local argmax-cosine assignment
-    (ties → smaller list_id). Map-only — the old broadcast-crossJoin +
-    groupBy(vec_id) shuffled N·nlist rows carrying full embedding arrays;
-    at corpus scale that shuffle dominated the whole query.
-
-    The kernel is a vectorized Arrow-batch argmax over the (nlist, dim)
-    centroid matrix (``_nearest_np``): with ``cents`` sorted by list_id
-    its first max is exactly the oracle's ccos DESC, list_id ASC
-    tie-break. Unrolled Column folds (16 centroids × 64-dim aggregate
-    expressions per row) measured ~3× slower than this dense kernel.
-    """
-    list_ids = np.array([lid for lid, _ in cents], dtype=np.int32)
-    cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
+    (ties → smaller list_id), map-only, for the exact-cosine rerank that
+    needs the embedding next to its list. With ``cents`` sorted by
+    list_id, ``_nearest_np``'s first max is exactly the oracle's ccos
+    DESC, list_id ASC tie-break."""
+    list_ids, cmat = _centroid_arrays(cents)
 
     @F.pandas_udf(T.IntegerType())
     def assign(emb: pd.Series) -> pd.Series:
@@ -233,102 +262,53 @@ def _assign_local(embeddings: DataFrame, cents: list) -> DataFrame:
     )
 
 
-def _assign_residual(embeddings: DataFrame, cents: list) -> DataFrame:
-    """(vec_id, list_id, residual): row-local argmax-cosine assignment
-    PLUS the float64 residual x − c_assigned, in ONE Arrow kernel (same
-    first-max/list_id-ASC tie-break as ``_assign_local``). Residual
-    subtraction is exact element-wise double arithmetic, so the DuckDB
-    oracle reproduces it bit-for-bit with list_zip subtraction."""
-    list_ids = np.array([lid for lid, _ in cents], dtype=np.int32)
-    cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
-
-    @F.pandas_udf("list_id int, residual array<double>")
-    def assignr(emb: pd.Series) -> pd.DataFrame:
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        idx = _nearest_np(mat, cmat)
-        res = mat - cmat[idx]
-        return pd.DataFrame(
-            {"list_id": list_ids[idx], "residual": [row.tolist() for row in res]}
-        )
-
-    return embeddings.select("vec_id", assignr(F.col("embedding")).alias("ar")).select(
-        "vec_id",
-        F.col("ar.list_id").alias("list_id"),
-        F.col("ar.residual").alias("residual"),
-    )
-
-
-def _probe_list_rows(
-    embeddings: DataFrame, cents: list, n_queries: int, nprobe: int
-) -> tuple[list, list]:
-    """Driver-side probe selection: returns (q_rows, probe_pairs) with
-    q_rows = [(query_id, vec)] sorted and probe_pairs = [(query_id,
-    list_id, vec)] — the nprobe closest centroid lists per query.
-
-    Queries are the small side by contract (they broadcast everywhere
-    downstream), so collecting n_queries rows is a bounded control
-    collect. Scoring uses the same ``dot_fold_np``/``norm_fold_np``
-    kernels as everything else — ccos DESC, list_id ASC ordering matches
-    the oracle bit-for-bit.
-    """
-    q_rows = sorted(
+def _query_rows(embeddings: DataFrame, n_queries: int) -> list:
+    """[(query_id, vec)] of the vec_id < n_queries rows, sorted — a
+    bounded control collect, since queries are the small side by
+    contract."""
+    return sorted(
         (int(r["vec_id"]), list(r["embedding"]))
         for r in embeddings.where(F.col("vec_id") < n_queries)
         .select("vec_id", "embedding")
         .collect()
     )
-    cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
+
+
+def _probe_pairs(q_rows: list, cents: list, nprobe: int) -> list:
+    """[(query_id, list_id, vec)]: the ``nprobe`` closest centroid lists
+    of each query, ccos DESC, list_id ASC — the oracle's order, by the
+    same ``dot_fold_np``/``norm_fold_np`` kernels."""
+    list_ids, cmat = _centroid_arrays(cents)
     cnorms = norm_fold_np(cmat)
     out = []
     for qid, vec in q_rows:
         qv = np.asarray(vec, dtype=np.float64).reshape(1, -1)
         nq = float(norm_fold_np(qv)[0])
         scores = [
-            (float(dot_fold_np(qv, cmat[j])[0]) / (nq * float(cnorms[j])), cents[j][0])
+            (float(dot_fold_np(qv, cmat[j])[0]) / (nq * float(cnorms[j])), int(list_ids[j]))
             for j in range(len(cents))
         ]
         scores.sort(key=lambda t: (-t[0], t[1]))
-        for _, lid in scores[:nprobe]:
-            out.append((qid, lid, vec))
-    return q_rows, out
-
-
-def _probe_lists(
-    embeddings: DataFrame, cents: list, n_queries: int, nprobe: int
-) -> DataFrame:
-    """(query_id, q_emb, list_id) DataFrame over ``_probe_list_rows``."""
-    _, pairs = _probe_list_rows(embeddings, cents, n_queries, nprobe)
-    return local_frame(
-        embeddings.sparkSession,
-        [(qid, lid, [float(v) for v in vec]) for qid, lid, vec in pairs],
-        "query_id long, list_id int, q_emb array<double>",
-    )
-
-
-def _collect_cents(cent: DataFrame) -> list:
-    rows = cent.collect()
-    return sorted((int(r["list_id"]), list(r["c_emb"])) for r in rows)
-
-
-def _stride_centroids(embeddings: DataFrame, nlist: int) -> DataFrame:
-    return embeddings.where(
-        (F.col("vec_id") % IVF_STRIDE == 0) & (F.col("vec_id") < nlist * IVF_STRIDE)
-    ).select(
-        (F.col("vec_id") / IVF_STRIDE).cast("int").alias("list_id"),
-        F.col("embedding").alias("c_emb"),
-    )
+        out.extend((qid, lid, vec) for _, lid in scores[:nprobe])
+    return out
 
 
 def _ivf_query(
     embeddings: DataFrame, cents: list, k: int, n_queries: int, nprobe: int
 ) -> DataFrame:
-    """Shared IVF query path over a driver-side centroid list: row-local
-    assignment, row-local probe selection, then ONE broadcast hash join
-    (tiny probes side) — the corpus is never shuffled. Each vector lives
-    in exactly one list and probes are distinct per query, so no
-    dedup/distinct step is needed (or planned)."""
+    """Exact-cosine IVF query tail over a driver-side centroid list:
+    row-local assignment, driver-side probe selection, then ONE
+    broadcast hash join (tiny probes side) — the corpus is never
+    shuffled. Each vector lives in exactly one list and probes are
+    distinct per query, so no dedup/distinct step is needed (or
+    planned)."""
     assign = _assign_local(embeddings, cents)
-    probes = _probe_lists(embeddings, cents, n_queries, nprobe)
+    pairs = _probe_pairs(_query_rows(embeddings, n_queries), cents, nprobe)
+    probes = local_frame(
+        embeddings.sparkSession,
+        [(qid, lid, [float(v) for v in vec]) for qid, lid, vec in pairs],
+        "query_id long, list_id int, q_emb array<double>",
+    )
     cands = (
         assign.join(probes, "list_id")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -366,9 +346,9 @@ def ivf_topk(
     Centroid 'training' is a deterministic sample (vec_id = j·stride) so
     the numpy golden oracle reproduces the index bit-for-bit; a real
     deployment would k-means on a sample — the dataflow is identical.
-    Scale shape: the nlist centroids are collected once (bounded control
-    collect — the moral equivalent of a broadcast variable), assignment
-    and probe selection are row-local Column argmax over literal arrays
+    Scale shape: the nlist stride rows are one filtered collect (no pass
+    over the corpus), assignment is a row-local Arrow argmax over the
+    (nlist, dim) centroid matrix and probe selection runs on the driver
     (no join, no shuffle), and candidate selection broadcasts the tiny
     (n_queries·nprobe)-row probe table — the corpus never shuffles; the
     only wide exchange left is the per-query top-k window over the
@@ -376,54 +356,11 @@ def ivf_topk(
 
     Sizing at real scale: nlist should grow ~√N (16 is toy-sized for the
     test fixture; 100 TB of 1e9+ vectors wants nlist ≈ 2^15–2^17 trained
-    on a sample, at which point assignment stays map-only but scoring
-    all nlist centroids per row calls for a vectorized pandas_udf argmax
-    over a broadcast centroid matrix instead of unrolled Column folds —
-    same dataflow, denser kernel). nprobe trades recall for the touched
-    fraction nprobe/nlist.
+    on a sample, with the same map-only assignment kernel). nprobe
+    trades recall for the touched fraction nprobe/nlist.
     """
-    cents = _collect_cents(_stride_centroids(embeddings, nlist))
+    cents, _, _ = _train_index(embeddings, nlist, 0, 0, 0, False, None)
     return _ivf_query(embeddings, cents, k, n_queries, nprobe)
-
-
-_QUANT = 1 << 20  # centroid quantization: ~1e-6 resolution
-
-
-def _lloyd_step(assign: DataFrame) -> DataFrame:
-    """One k-means (Lloyd) centroid update, DETERMINISTIC at any
-    parallelism: per-dimension sums run over integer-quantized values
-    (round(x·2²⁰) as long), so the aggregation order cannot change the
-    result — float sums are order-dependent, integer sums are not.
-    Mean = (sum/n)/2²⁰ in fixed double op order, reproducible in SQL.
-    """
-    # floor(x·Q + 0.5): explicit half-up rounding — identical semantics
-    # in Spark and DuckDB (their round() tie-breaking conventions differ)
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * F.lit(float(_QUANT)) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
-    sums = (
-        assign.select("list_id", F.posexplode(q).alias("pos", "qv"))
-        .groupBy("list_id", "pos")
-        .agg(F.sum("qv").alias("s"), F.count("*").alias("n"))
-    )
-    comp = sums.select(
-        "list_id",
-        "pos",
-        (
-            F.col("s").cast("double") / F.col("n").cast("double") / F.lit(float(_QUANT))
-        ).alias("v"),
-    )
-    return (
-        comp.groupBy("list_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
-        .select(
-            "list_id",
-            F.transform(F.col("pv"), lambda x: x.getField("v")).alias("c_emb"),
-        )
-    )
 
 
 def ivf_kmeans_topk(
@@ -433,23 +370,19 @@ def ivf_kmeans_topk(
     nlist: int = IVF_NLIST,
     nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
-    """IVF ANN with a REAL k-means step: stride-sample init → row-local
-    argmax assignment → one deterministic Lloyd centroid update →
-    reassignment → nprobe probing → exact rerank. The quantized-integer
-    mean makes the trained index bit-reproducible across engines and
-    cluster sizes, so the DuckDB oracle recomputes the whole pipeline.
+    """IVF ANN with a REAL k-means step: stride-sample init → argmax
+    assignment → one deterministic Lloyd centroid update → reassignment
+    → nprobe probing → exact rerank. The quantized-integer mean makes
+    the trained index bit-reproducible across engines and cluster
+    sizes, so the DuckDB oracle recomputes the whole pipeline.
 
-    Shuffle budget: the only wide stages are the Lloyd sums (nlist·dim
-    long-integer groups — map-side combined, a few KB of shuffle data
-    regardless of N) and the final per-query top-k window. Assignment in
-    both rounds is map-only over literal centroid arrays.
+    The Lloyd step is one pass of ``_train_index``: on the driver when
+    the corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, else
+    one map-only job whose tasks return nlist·dim integer sums. The only
+    wide stage left is the final per-query top-k window.
     """
-    cents0 = _collect_cents(_stride_centroids(embeddings, nlist))
-    a0 = _assign_local(embeddings, cents0)
-    cents1 = _collect_cents(
-        _lloyd_step(a0).select("list_id", "c_emb")
-    )
-    return _ivf_query(embeddings, cents1, k, n_queries, nprobe)
+    cents, _, _ = _train_index(embeddings, nlist, 1, 0, 0, False, None)
+    return _ivf_query(embeddings, cents, k, n_queries, nprobe)
 
 
 PQ_M = 4  # subspaces (dim/M dims each)
@@ -460,10 +393,7 @@ PQ_REFINE = 50  # ADC candidates per query re-ranked exactly
 def _pq_codes_np(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
     """(N, M) int32 PQ codes: per subspace, argmin L2 against the
     (M, K, sub) codebook, ties → smaller code (the oracle's ORDER BY
-    dist, code). The one encoder of the Arrow UDF and of driver
-    training."""
-    from osm_lib_spark.functions.hashing import l2_fold_np
-
+    dist, code)."""
     m, kc, sub = cb.shape
     out = np.empty((len(mat), m), dtype=np.int32)
     for s in range(m):
@@ -475,128 +405,301 @@ def _pq_codes_np(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
     return out
 
 
-def _pq_codes_udf(cb: np.ndarray):
-    """Vectorized PQ encoder: embedding → M subspace codes
-    (``_pq_codes_np`` over each Arrow batch)."""
+_QUANT = 1 << 20  # centroid quantization: ~1e-6 resolution
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def codes(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        return pd.Series([row.tolist() for row in _pq_codes_np(mat, cb)])
+# An embedding of unknown dim is sized as this many float32s by the
+# bounded collect of index training.
+TRAIN_DIM_BOUND = 1024
 
-    return codes
+CODES_DDL = "vec_id long, list_id int, codes array<int>"
 
 
-def _pq_train(embeddings: DataFrame, dim: int, m: int, kc: int) -> np.ndarray:
-    """(M, K, dim/M) codebook: stride-sample init per subspace + ONE
-    deterministic quantized Lloyd update (same integer-mean trick as
-    ``_lloyd_step`` — the aggregation order cannot change the result, so
-    the SQL oracle retrains bit-identically). Empty clusters keep their
-    init centroid. The Lloyd sums are the only distributed stage:
-    M·K·sub integer groups, map-side combined."""
-    sub = dim // m
-    init_rows = _collect_cents(_stride_centroids(embeddings, kc))
-    if not init_rows:
-        raise ValueError("PQ training found no stride-sample rows")
-    # tiny corpora yield fewer stride rows than kc — degrade to what's
-    # available (codes just span a smaller codebook)
-    cb0 = np.array(
-        [[[float(v) for v in vec[s * sub : (s + 1) * sub]] for _, vec in init_rows] for s in range(m)],
-        dtype=np.float64,
+def _as_matrix(batch, dim: int | None = None):
+    """(vec_id, mat) of an Arrow (vec_id, embedding) batch or table:
+    int64 ids and an (n, dim) float64 matrix. The one batch→array step
+    of training and encoding, on the driver and in tasks alike. ``dim``
+    defaults to the first row's length; a null, empty or other-length
+    embedding raises ``ValueError``."""
+    rows = batch.column("embedding")
+    if isinstance(rows, pa.ChunkedArray):
+        rows = rows.combine_chunks()
+    lengths = pc.fill_null(pc.list_value_length(rows), -1).to_numpy()
+    if dim is None:
+        dim = int(lengths[0]) if len(lengths) else 0
+    if len(lengths) and (dim < 1 or (lengths != dim).any()):
+        raise ValueError("IVF/PQ needs non-null, non-empty embeddings of one length")
+    mat = rows.flatten().to_numpy().astype(np.float64).reshape(len(rows), dim)
+    return batch.column("vec_id").to_numpy(), mat
+
+
+def _stride_mask(vec_id, n: int):
+    """vec_id = j·IVF_STRIDE for some j < n, over a numpy array or a
+    Column alike."""
+    return (vec_id % IVF_STRIDE == 0) & (vec_id < n * IVF_STRIDE)
+
+
+def _stride_rows(vec_id: np.ndarray, mat: np.ndarray, n: int):
+    """(j, rows) of the stride sample j < n, j ascending: the
+    deterministic init of every quantizer."""
+    sel = np.flatnonzero(_stride_mask(vec_id, n))
+    sel = sel[np.argsort(vec_id[sel], kind="stable")]
+    return vec_id[sel] // IVF_STRIDE, mat[sel]
+
+
+def _quantized_sums(x: np.ndarray, labels: np.ndarray, k: int) -> np.ndarray:
+    """(k, d + 1) int64: for each label in 0..k-1, the sums of
+    floor(x·2²⁰ + 0.5) over its rows of ``x``, then its row count.
+    Integer sums do not depend on order, so partial sums over batches
+    and partitions add up to the same bits as one pass."""
+    out = np.zeros((k, x.shape[1] + 1), dtype=np.int64)
+    np.add.at(out[:, :-1], labels, np.floor(x * float(_QUANT) + 0.5).astype(np.int64))
+    out[:, -1] = np.bincount(labels, minlength=k)
+    return out
+
+
+def _quantized_means(sums: np.ndarray):
+    """(means, members) of added-up ``_quantized_sums``: (sum/n)/2²⁰ in
+    the SQL oracle's op order, one row per label with members
+    (``members`` is that mask)."""
+    n = sums[:, -1]
+    members = n > 0
+    means = sums[members, :-1].astype(np.float64) / n[members, None].astype(np.float64) / float(_QUANT)
+    return means, members
+
+
+def _coarse_np(mat: np.ndarray, cmat, residual: bool):
+    """(idx, x): each row's max-cosine centroid in ``cmat`` (None when
+    there is no coarse quantizer) and the vector PQ sees, x − c_idx with
+    ``residual`` and x itself otherwise. Residual subtraction is exact
+    element-wise double arithmetic, so the DuckDB oracle reproduces it
+    bit-for-bit."""
+    idx = None if cmat is None else _nearest_np(mat, cmat)
+    return idx, (mat - cmat[idx] if residual else mat)
+
+
+def _codes_batch(vec_id, mat, list_ids, cmat, cb, residual: bool) -> pa.RecordBatch:
+    """The one encoder: coarse assignment, the optional residual and the
+    PQ codes of a batch in one kernel → a ``CODES_DDL`` batch (list_id 0
+    for every row without a coarse quantizer)."""
+    idx, x = _coarse_np(mat, cmat, residual)
+    codes = _pq_codes_np(x, cb)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(vec_id, pa.int64()),
+            pa.array(np.zeros(len(mat), np.int32) if idx is None else list_ids[idx], pa.int32()),
+            pa.ListArray.from_arrays(
+                np.arange(0, codes.size + 1, cb.shape[0], dtype=np.int32), codes.ravel()
+            ),
+        ],
+        names=["vec_id", "list_id", "codes"],
     )
-    coded = embeddings.select(
-        "vec_id", "embedding", _pq_codes_udf(cb0)(F.col("embedding")).alias("codes")
-    )
-    subs = F.array(*[F.slice("embedding", s * sub + 1, sub) for s in range(m)])
-    zipped = coded.select(
-        F.posexplode(F.arrays_zip(F.col("codes").alias("code"), subs.alias("sv"))).alias("s", "z")
-    )
-    quant = F.transform(
-        F.col("z.sv"),
-        lambda x: F.floor(x.cast("double") * F.lit(float(_QUANT)) + F.lit(0.5)).cast("long"),
-    )
-    sums = (
-        zipped.select("s", F.col("z.code").alias("code"), F.posexplode(quant).alias("pos", "qv"))
-        .groupBy("s", "code", "pos")
-        .agg(F.sum("qv").alias("sm"), F.count("*").alias("n"))
-        .collect()
-    )
-    cb1 = cb0.copy()
-    for r in sums:
-        # same op order as _lloyd_step / the SQL oracle: (sum/n)/2^20
-        cb1[r["s"], r["code"], r["pos"]] = float(r["sm"]) / float(r["n"]) / float(_QUANT)
-    return cb1
 
 
-def _pq_query_luts(
-    embeddings: DataFrame, cb: np.ndarray, n_queries: int, m: int, sub: int
-) -> DataFrame:
-    """(query_id, q_emb, lut): per-query ADC lookup tables built
-    DRIVER-SIDE over the collected query vectors (bounded control
-    collect — queries are the small side by contract). lut[s][j] is the
-    L2 between the query's s-th subvector and codebook entry (s, j),
-    via the same ``l2_fold_np`` kernel the oracle's SQL fold mirrors."""
-    from osm_lib_spark.functions.hashing import l2_fold_np
+def _encode_frame(embeddings: DataFrame, list_ids, cmat, cb, residual: bool, dim: int) -> DataFrame:
+    """``CODES_DDL`` rows of ``embeddings`` against frozen index
+    artifacts: ``_codes_batch`` over each Arrow batch of one map-only
+    mapInArrow, so encoding scales with input splits alone."""
 
-    q_rows = sorted(
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in embeddings.where(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    probe_rows = []
-    for qid, vec in q_rows:
-        qv = np.asarray(vec, dtype=np.float64)
-        lut = [
-            [float(l2_fold_np(qv[s * sub : (s + 1) * sub].reshape(1, -1), cb[s, j])[0]) for j in range(cb.shape[1])]
-            for s in range(m)
-        ]
-        probe_rows.append((qid, [float(v) for v in vec], lut))
-    return local_frame(
-        embeddings.sparkSession,
-        probe_rows,
-        "query_id long, q_emb array<double>, lut array<array<double>>",
-    )
+    def encode(batches):
+        for b in batches:
+            yield _codes_batch(*_as_matrix(b, dim), list_ids, cmat, cb, residual)
+
+    return embeddings.select("vec_id", "embedding").mapInArrow(encode, CODES_DDL)
 
 
-def _adc_expr(m: int):
-    """ADC column: left-fold sum over subspaces of lut[s][codes[s]] —
-    the float addition order matches the oracle's list_reduce."""
-    adc = F.lit(0.0)
-    for s in range(m):
-        adc = adc + F.element_at(
-            F.element_at(F.col("lut"), s + 1), F.col("codes").getItem(s) + 1
-        )
-    return adc
+def _partition_sums(emb: DataFrame, kernel, dim: int) -> np.ndarray:
+    """Σ ``kernel(mat)`` over the rows of ``emb`` in one mapInArrow job:
+    each task adds up its batches' int64 arrays and the driver adds up
+    the tasks'."""
+    zero = kernel(np.zeros((0, dim)))
+
+    def task(batches):
+        total = zero.copy()
+        for b in batches:
+            total += kernel(_as_matrix(b, dim)[1])
+        yield pa.RecordBatch.from_arrays([pa.array([total.tobytes()], pa.binary())], names=["sums"])
+
+    total = zero.copy()
+    for r in emb.mapInArrow(task, "sums binary").collect():
+        total += np.frombuffer(r["sums"], dtype=np.int64).reshape(zero.shape)
+    return total
 
 
-def _pq_rerank_tail(
+def _train_index(
     embeddings: DataFrame,
-    scored: DataFrame,
-    qemb: DataFrame,
+    nlist: int,
+    lloyd: int,
+    m: int,
+    kc: int,
+    residual: bool,
+    dim: int | None,
+):
+    """The one IVF/PQ trainer → (cents, cb, coded).
+
+    * Coarse quantizer (``nlist`` > 0): the stride rows j < nlist, then
+      ``lloyd`` quantized Lloyd steps; a list with no members drops out.
+      ``cents`` is [(list_id, vec)] sorted by list_id. With ``nlist`` 0
+      there is one list, 0, with no centroid, and ``cents`` is empty.
+    * Product quantizer (``m`` > 0): per subspace, the stride rows
+      j < kc — residuals against their nearest centroid with
+      ``residual`` — then one quantized Lloyd step; a code with no
+      members keeps its init value. ``cb`` is (m, ≤kc, dim/m) and
+      ``coded`` the ``CODES_DDL`` frame of the corpus (both None when
+      ``m`` is 0).
+
+    Deterministic end to end (stride init + integer-quantized means), so
+    the DuckDB oracle retrains bit-identically. Where it runs: with no
+    Lloyd step and no PQ the stride rows are one filtered collect.
+    Otherwise (vec_id, embedding) rows that fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` (8 + 4·dim bytes a row, dim
+    taken as TRAIN_DIM_BOUND when the caller does not give it) are
+    collected once, every pass runs on the driver and ``coded`` is a
+    LocalRelation. A larger corpus is lazily checkpointed: the stride
+    rows are one filtered collect, each Lloyd pass is one mapInArrow
+    job returning per-task integer sums, and ``coded`` is a map-only
+    mapInArrow. Both give the same bits.
+    """
+    emb = embeddings.select("vec_id", "embedding")
+    n_stride = max(nlist, kc if m else 0)
+    table = None
+    if lloyd or m:
+        emb = emb.localCheckpoint(eager=False)
+        table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
+    if table is not None:
+        vec_id, mat = _as_matrix(table, dim)
+
+        def run(kernel):
+            return kernel(mat)
+    else:
+        stride = emb.where(_stride_mask(F.col("vec_id"), n_stride)).toArrow()
+        vec_id, mat = _as_matrix(stride, dim)
+
+        def run(kernel):
+            return _partition_sums(emb, kernel, mat.shape[1])
+
+    ids, rows = _stride_rows(vec_id, mat, n_stride)
+    dim = mat.shape[1]
+
+    list_ids = cmat = None
+    if nlist:
+        list_ids, cmat = ids[ids < nlist].astype(np.int32), rows[ids < nlist]
+        if not len(cmat):
+            raise ValueError("IVF training found no stride-sample rows")
+        for _ in range(lloyd):
+
+            def coarse_sums(x, c=cmat):
+                return _quantized_sums(x, _nearest_np(x, c), len(c))
+
+            cmat, members = _quantized_means(run(coarse_sums))
+            list_ids = list_ids[members]
+    cents = [] if cmat is None else [(int(lid), c.tolist()) for lid, c in zip(list_ids, cmat)]
+    if not m:
+        return cents, None, None
+
+    pq_cmat = cmat if residual else None
+    _, init = _coarse_np(rows[ids < kc], pq_cmat, residual)
+    if not len(init):
+        raise ValueError("PQ training found no stride-sample rows")
+    sub = dim // m
+    cb0 = np.stack([init[:, s * sub : (s + 1) * sub] for s in range(m)])
+
+    def pq_sums(x):
+        _, x = _coarse_np(x, pq_cmat, residual)
+        codes = _pq_codes_np(x, cb0)
+        return np.stack(
+            [_quantized_sums(x[:, s * sub : (s + 1) * sub], codes[:, s], len(init)) for s in range(m)]
+        )
+
+    sums = run(pq_sums)
+    cb = cb0.copy()
+    for s in range(m):
+        means, members = _quantized_means(sums[s])
+        cb[s, members] = means
+    if table is None:
+        coded = _encode_frame(emb, list_ids, cmat, cb, residual, dim)
+    else:
+        coded = local_frame(
+            embeddings.sparkSession,
+            pa.Table.from_batches([_codes_batch(vec_id, mat, list_ids, cmat, cb, residual)]),
+            CODES_DDL,
+        )
+    return cents, cb, coded
+
+
+def _adc_lut(qv: np.ndarray, cb: np.ndarray) -> list:
+    """The one ADC lookup table: lut[s][j] is the squared L2 between
+    subvector s of ``qv`` and codebook entry (s, j), by the same
+    ``l2_fold_np`` kernel the oracle's SQL fold mirrors."""
+    m, _, sub = cb.shape
+    return [l2_fold_np(cb[s], qv[s * sub : (s + 1) * sub]).tolist() for s in range(m)]
+
+
+def _adc_topk(
+    embeddings: DataFrame,
+    cents: list,
+    cb: np.ndarray,
+    coded: DataFrame,
     k: int,
+    n_queries: int,
+    nprobe: int,
     refine: int,
+    residual: bool,
+    prune_lists: bool = False,
 ) -> DataFrame:
-    """Shared PQ query tail: window-select the top ``refine`` ADC
-    candidates per query, broadcast-join the tiny shortlist back onto
-    the corpus for the exact-L2 rerank.
+    """The one ADC query: one LUT per (query, probed list) — from
+    q − c_list with ``residual``, else from q; every code is in list 0
+    when ``cents`` is empty — then a code-only scan of the probed lists
+    joined to the broadcast LUT rows, then the exact-L2 rerank of the
+    top ``refine`` ADC candidates per query.
 
-    ``scored`` must carry (query_id, vec_id, adc) ONLY — no embedding
-    bytes through the per-query window shuffle. Full vectors are read
-    again just for the ≤refine·Q finalists."""
-    from osm_lib_spark.functions.hashing import l2_fold_col
-
+    The scan carries (query_id, vec_id, adc) only — no embedding bytes
+    through the per-query window shuffle; full vectors are read again
+    just for the ≤refine·Q finalists. With ``prune_lists`` the probed
+    list_ids are also applied as a LITERAL filter: against a
+    ``list_id``-partitioned codes table this prunes unprobed partitions
+    at the SCAN (the persisted-index serving path), whereas the
+    broadcast join alone would read all codes."""
+    spark = embeddings.sparkSession
+    q_rows = _query_rows(embeddings, n_queries)
+    if cents:
+        pairs = _probe_pairs(q_rows, cents, nprobe)
+    else:
+        pairs = [(qid, 0, vec) for qid, vec in q_rows]
+    cmap = {lid: np.asarray(v, dtype=np.float64) for lid, v in cents}
+    lut_rows = []
+    for qid, lid, vec in pairs:
+        qv = np.asarray(vec, dtype=np.float64)
+        lut_rows.append((qid, lid, _adc_lut(qv - cmap[lid] if residual else qv, cb)))
+    probes = local_frame(spark, lut_rows, "query_id long, list_id int, lut array<array<double>>")
+    qemb = local_frame(
+        spark,
+        [(qid, [float(v) for v in vec]) for qid, vec in q_rows],
+        "query_id long, q_emb array<double>",
+    )
+    if prune_lists:
+        coded = coded.where(F.col("list_id").isin(sorted({lid for _, lid, _ in pairs})))
+    # ADC: left-fold sum over subspaces of lut[s][codes[s]] — the float
+    # addition order matches the oracle's list_reduce
+    adc = F.lit(0.0)
+    for s in range(cb.shape[0]):
+        adc = adc + F.element_at(F.element_at(F.col("lut"), s + 1), F.col("codes").getItem(s) + 1)
+    # each vector lives in exactly one list and probes are distinct per
+    # (query, list), so the join yields each (query, vec) at most once
+    scored = (
+        coded.join(probes, "list_id")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", adc.alias("adc"))
+    )
     w1 = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id").asc())
     shortlist = (
-        scored.select("query_id", "vec_id", "adc")
-        .withColumn("r1", F.row_number().over(w1))
+        scored.withColumn("r1", F.row_number().over(w1))
         .where(F.col("r1") <= refine)
         .select("query_id", "vec_id")
     )
     exact = (
         embeddings.select("vec_id", "embedding")
         .join(F.broadcast(shortlist), "vec_id")
-        .join(qemb.select("query_id", "q_emb"), "query_id")
+        .join(qemb, "query_id")
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -633,29 +736,15 @@ def pq_topk(
     broadcast (n_queries, M, K) LUT — no embedding bytes move for the
     scan phase; only the ``refine`` finalists per query read their full
     vectors. Codebook training is deterministically reproducible (see
-    ``_pq_train``), so the DuckDB oracle retrains from scratch and must
-    agree bit-for-bit; every ordering tie-breaks on vec_id.
+    ``_train_index``), so the DuckDB oracle retrains from scratch and
+    must agree bit-for-bit; every ordering tie-breaks on vec_id.
 
-    Sizing at real scale: M=8..16, K=256 (byte codes), trained on a
-    sample, with an IVF coarse stage in front — ``ivf_pq_topk`` IS that
-    composed standard pipeline; this operator is its inner full-corpus
-    PQ scan + rerank.
+    This is ``ivf_pq_topk`` with one list and no coarse centroid: every
+    code is in list 0 and every query probes it, so the scan is the
+    same broadcast hash join on list_id, over the whole corpus.
     """
-    dim = _dim_of(embeddings, dim)
-    sub = dim // m
-    cb = _pq_train(embeddings, dim, m, kc)
-    coded = embeddings.select(
-        "vec_id", _pq_codes_udf(cb)(F.col("embedding")).alias("codes")
-    )
-    probes = _pq_query_luts(embeddings, cb, n_queries, m, sub)
-    # Scan phase is CODE-ONLY (see _pq_rerank_tail): the N×Q candidate
-    # frame carries (query_id, vec_id, codes, adc), never the embedding.
-    scored = (
-        coded.crossJoin(probes.select("query_id", "lut"))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc", _adc_expr(m))
-    )
-    return _pq_rerank_tail(embeddings, scored, probes, k, refine)
+    _, cb, coded = _train_index(embeddings, 0, 0, m, kc, False, dim)
+    return _adc_topk(embeddings, [], cb, coded, k, n_queries, 1, refine, False)
 
 
 def ivf_pq_topk(
@@ -671,249 +760,38 @@ def ivf_pq_topk(
     residual: bool = False,
 ) -> DataFrame:
     """The standard IVF∘PQ pipeline ``pq_topk``'s docstring promises:
-    coarse IVF list assignment (map-only argmax over broadcast stride
-    centroids, as in ``ivf_topk``) in FRONT of the PQ ADC scan, so the
-    code scan touches only the ``nprobe/nlist`` probed fraction of the
-    corpus instead of all N codes — then the shared exact-L2 rerank of
-    the top ``refine`` ADC candidates per query.
+    coarse IVF list assignment (argmax over the stride centroids, as in
+    ``ivf_topk``) in FRONT of the PQ ADC scan, so the code scan touches
+    only the ``nprobe/nlist`` probed fraction of the corpus instead of
+    all N codes — then the shared exact-L2 rerank of the top ``refine``
+    ADC candidates per query.
 
     Plan shape at 100 TB: corpus never shuffles (assignment and PQ
-    encoding are row-local over broadcast centroids/codebooks); the
+    encoding are row-local over the frozen centroids/codebooks); the
     probe table (n_queries·nprobe rows) broadcast-joins on list_id; the
     only wide exchange is the per-query top-``refine`` window over
     code-only rows of the probed fraction. Memory per candidate row is
     M ints, a dim·8/M compression of the brute scan.
 
     With ``residual=True`` (the textbook FAISS IVFPQ and the gated
-    configuration) the PQ codebooks are trained on — and vectors are
-    encoded as — RESIDUALS against their assigned coarse centroid
-    (r = x − c_list), and each query builds one ADC LUT PER PROBED LIST
-    from (q − c_list). Residuals concentrate around the origin, so a
-    codebook of the same size quantizes them far more finely than raw
-    vectors — that, not just the pruned scan, is why IVF∘PQ is the
-    standard pipeline. Residual subtraction is float64 element-wise
-    (exact in both engines), so determinism is unaffected. The plan
-    shape is identical; the broadcast LUT table grows from Q to
-    Q·nprobe rows (still tiny).
+    configuration) the coarse quantizer gets one Lloyd step, and the PQ
+    codebooks are trained on — and vectors are encoded as — RESIDUALS
+    against their assigned coarse centroid (r = x − c_list), and each
+    query builds one ADC LUT PER PROBED LIST from (q − c_list).
+    Residuals only quantize finely when the centroids actually center
+    their lists (measured on the fixture: residual-over-stride was WORSE
+    than plain, residual-over-kmeans is at-or-above parity). Residuals
+    concentrate around the origin, so a codebook of the same size
+    quantizes them far more finely than raw vectors — that, not just
+    the pruned scan, is why IVF∘PQ is the standard pipeline.
 
-    Both the IVF index (stride centroids) and the PQ codebooks (stride
-    init + one quantized Lloyd step) are deterministically trainable,
-    so the DuckDB oracle retrains the ENTIRE composed index from
-    scratch and must agree bit-for-bit. Residual training runs on the
-    driver when the corpus fits under
-    ``spark.sql.autoBroadcastJoinThreshold``, else as Spark jobs (see
-    ``_train_residual_ivf_pq``); the plain form always trains in Spark.
+    Both forms train through ``_train_index`` — on the driver when the
+    corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, else as
+    one map-only job per Lloyd pass — and the DuckDB oracle retrains the
+    ENTIRE composed index from scratch and must agree bit-for-bit.
     """
-    if residual:
-        cents, cb, coded = _train_residual_ivf_pq(embeddings, nlist, dim, m, kc)
-        return _query_residual_ivf_pq(
-            embeddings, cents, cb, coded, k, n_queries, nprobe, refine
-        )
-
-    dim = _dim_of(embeddings, dim)
-    sub = dim // m
-    cents = _collect_cents(_stride_centroids(embeddings, nlist))
-    cb = _pq_train(embeddings, dim, m, kc)
-    coded = _assign_local(embeddings, cents).select(
-        "vec_id", "list_id", _pq_codes_udf(cb)(F.col("embedding")).alias("codes")
-    )
-    probes = _pq_query_luts(embeddings, cb, n_queries, m, sub)
-    plists = _probe_lists(embeddings, cents, n_queries, nprobe).select(
-        "query_id", "list_id"
-    )
-    # each vector lives in exactly one list and probes are distinct
-    # per (query, list), so the join yields each (query, vec) at
-    # most once
-    scored = (
-        coded.join(plists, "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(probes.select("query_id", "lut"), "query_id")
-        .withColumn("adc", _adc_expr(m))
-    )
-    return _pq_rerank_tail(embeddings, scored, probes, k, refine)
-
-
-# An embedding of unknown dim is sized as this many float32s by the
-# bounded collect of residual IVF-PQ training.
-TRAIN_DIM_BOUND = 1024
-
-
-def _train_residual_ivf_pq(
-    embeddings: DataFrame, nlist: int, dim: int | None, m: int, kc: int
-):
-    """Train the residual IVF∘PQ index → (cents, cb, coded).
-
-    Coarse quantizer is the Lloyd-REFINED centroid set (as in
-    ``ivf_kmeans_topk`` — residuals only quantize finely when the
-    centroids actually center their lists; measured on the fixture:
-    residual-over-stride was WORSE than plain, residual-over-kmeans is
-    at-or-above parity, and real clustered embeddings gain far more),
-    then assignment + residual, PQ trained/encoded on the residuals.
-    Deterministic end to end (stride init + integer-quantized Lloyd
-    means), so train-once and retrain produce the identical index.
-
-    Where it runs: (vec_id, embedding) rows that fit under
-    ``spark.sql.autoBroadcastJoinThreshold`` (at 4·dim + 8 bytes a row,
-    dim taken as TRAIN_DIM_BOUND when the caller does not give it) are
-    collected once and trained on the driver with the same numpy
-    kernels as the Arrow UDFs, bit-identically; ``coded`` is then a
-    LocalRelation. A larger corpus trains as Spark jobs: stride
-    collects, a distributed Lloyd step, PQ sums.
-    """
-    emb = embeddings.select("vec_id", "embedding").localCheckpoint(eager=False)
-    table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
-    if table is None:
-        dim = _dim_of(emb, dim)
-        stride = _collect_cents(_stride_centroids(emb, nlist))
-        cents = _collect_cents(
-            _lloyd_step(_assign_local(emb, stride)).select("list_id", "c_emb")
-        )
-        resid = _assign_residual(emb, cents)
-        resid_as_emb = resid.select("vec_id", F.col("residual").alias("embedding"))
-        cb = _pq_train(resid_as_emb, dim, m, kc)
-        coded = resid.select(
-            "vec_id", "list_id", _pq_codes_udf(cb)(F.col("residual")).alias("codes")
-        )
-        return cents, cb, coded
-
-    vec_id = table.column("vec_id").to_numpy()
-    rows = table.column("embedding").combine_chunks()
-    lengths = pc.list_value_length(rows).to_numpy(zero_copy_only=False)
-    if len(rows) == 0 or lengths.min() != lengths.max():
-        raise ValueError("residual IVF-PQ training needs non-empty, equal-length embeddings")
-    mat = rows.flatten().to_numpy().astype(np.float64).reshape(len(rows), -1)
-    dim = dim if dim is not None else mat.shape[1]
-
-    # coarse quantizer: stride init, one Lloyd step (empty lists drop out)
-    stride = _stride_rows(vec_id, mat, nlist)
-    if not stride:
-        raise ValueError("IVF training found no stride-sample rows")
-    idx = _nearest_np(mat, np.array([v for _, v in stride]))
-    cmat, members = _quantized_means(mat, idx, len(stride))
-    list_ids = np.array([lid for lid, _ in stride], dtype=np.int32)[members]
-    cents = [(int(lid), c.tolist()) for lid, c in zip(list_ids, cmat)]
-    idx = _nearest_np(mat, cmat)
-    resid = mat - cmat[idx]
-
-    # PQ codebooks on the residuals: stride init, one Lloyd step (a code
-    # with no members keeps its init value)
-    init_rows = _stride_rows(vec_id, resid, kc)
-    if not init_rows:
-        raise ValueError("PQ training found no stride-sample rows")
-    sub = dim // m
-    cb = np.array(
-        [[vec[s * sub : (s + 1) * sub] for _, vec in init_rows] for s in range(m)],
-        dtype=np.float64,
-    )
-    codes = _pq_codes_np(resid, cb)
-    for s in range(m):
-        means, members = _quantized_means(resid[:, s * sub : (s + 1) * sub], codes[:, s], cb.shape[1])
-        cb[s, members] = means
-    codes = _pq_codes_np(resid, cb)
-    coded = local_frame(
-        embeddings.sparkSession,
-        pa.table(
-            [
-                vec_id,
-                list_ids[idx],
-                pa.ListArray.from_arrays(
-                    np.arange(0, codes.size + 1, m, dtype=np.int32), codes.ravel()
-                ),
-            ],
-            names=["vec_id", "list_id", "codes"],
-        ),
-        "vec_id long, list_id int, codes array<int>",
-    )
-    return cents, cb, coded
-
-
-def _stride_rows(vec_id: np.ndarray, mat: np.ndarray, n: int) -> list:
-    """``_collect_cents(_stride_centroids(...))`` over driver arrays:
-    [(list_id, vec)] for vec_id = list_id·IVF_STRIDE < n·IVF_STRIDE,
-    sorted."""
-    sel = (vec_id % IVF_STRIDE == 0) & (vec_id < n * IVF_STRIDE)
-    return sorted(
-        (int(v) // IVF_STRIDE, row.tolist()) for v, row in zip(vec_id[sel], mat[sel])
-    )
-
-
-def _quantized_means(x: np.ndarray, labels: np.ndarray, k: int):
-    """(means, members): ``_lloyd_step``'s integer-quantized per-label
-    means of the rows of ``x`` — floor(x·2²⁰ + 0.5) summed as int64,
-    then (sum/n)/2²⁰ — for the labels in 0..k-1 that have members
-    (``members`` is that boolean mask; ``means`` has one row each)."""
-    q = np.floor(x * float(_QUANT) + 0.5).astype(np.int64)
-    sums = np.zeros((k, x.shape[1]), dtype=np.int64)
-    np.add.at(sums, labels, q)
-    n = np.bincount(labels, minlength=k)
-    members = n > 0
-    means = sums[members].astype(np.float64) / n[members, None].astype(np.float64) / float(_QUANT)
-    return means, members
-
-
-def _query_residual_ivf_pq(
-    embeddings: DataFrame,
-    cents: list,
-    cb: np.ndarray,
-    coded: DataFrame,
-    k: int,
-    n_queries: int,
-    nprobe: int,
-    refine: int,
-    prune_lists: bool = False,
-) -> DataFrame:
-    """Query half of residual IVF∘PQ: one ADC LUT per (query, probed
-    list) from (q − c_list), code-only scan of the probed lists, shared
-    exact-L2 rerank. With ``prune_lists`` the probed list_ids are also
-    applied as a LITERAL filter — against a ``list_id``-partitioned
-    codes table this prunes unprobed partitions at the SCAN (the
-    persisted-index serving path), whereas the broadcast join alone
-    would read all codes."""
-    from osm_lib_spark.functions.hashing import l2_fold_np
-
-    spark = embeddings.sparkSession
-    dim = len(cents[0][1])
-    m = cb.shape[0]
-    sub = dim // m
-    q_rows, pairs = _probe_list_rows(embeddings, cents, n_queries, nprobe)
-    cmap = {lid: np.asarray(v, dtype=np.float64) for lid, v in cents}
-    lut_rows = []
-    for qid, lid, vec in pairs:
-        qr = np.asarray(vec, dtype=np.float64) - cmap[lid]
-        lut = [
-            [float(l2_fold_np(qr[s * sub : (s + 1) * sub].reshape(1, -1), cb[s, j])[0]) for j in range(cb.shape[1])]
-            for s in range(m)
-        ]
-        lut_rows.append((qid, lid, lut))
-    probes_lut = local_frame(
-        spark, lut_rows, "query_id long, list_id int, lut array<array<double>>"
-    )
-    qemb = local_frame(
-        spark,
-        [(qid, [float(v) for v in vec]) for qid, vec in q_rows],
-        "query_id long, q_emb array<double>",
-    )
-    if prune_lists:
-        probed_lids = sorted({lid for _, lid, _ in pairs})
-        coded = coded.where(F.col("list_id").isin(probed_lids))
-    scored = (
-        coded.join(probes_lut, "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc", _adc_expr(m))
-    )
-    return _pq_rerank_tail(embeddings, scored, qemb, k, refine)
-
-
-def _encode_ivf_pq(embeddings: DataFrame, cents: list, cb: np.ndarray) -> DataFrame:
-    """Encode vectors against FROZEN index artifacts: row-local coarse
-    assignment + residual (one Arrow kernel) then PQ codes — map-only,
-    no shuffle, so encoding scales with input splits alone. Shared by
-    the build (codes pass), sample-trained builds, and incremental
-    appends."""
-    resid = _assign_residual(embeddings, cents)
-    return resid.select(
-        "vec_id", "list_id", _pq_codes_udf(cb)(F.col("residual")).alias("codes")
-    )
+    cents, cb, coded = _train_index(embeddings, nlist, int(residual), m, kc, residual, dim)
+    return _adc_topk(embeddings, cents, cb, coded, k, n_queries, nprobe, refine, residual)
 
 
 def _load_ivf_pq_index(spark, path: str):
@@ -969,19 +847,19 @@ def build_ivf_pq_index(
     artifacts in one map-only pass. With train_on=None training and
     encoding both run over ``embeddings`` (exact small-scale build).
 
-    Training runs on the driver when the training frame fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` and as Spark jobs when it
-    does not (``_train_residual_ivf_pq``); both give the same bits.
+    Training is ``_train_index``'s: on the driver when the training
+    frame fits under ``spark.sql.autoBroadcastJoinThreshold``, per
+    partition when it does not; both give the same bits.
     """
     import json as _json
     import os as _os
 
     spark = embeddings.sparkSession
     train_frame = train_on if train_on is not None else embeddings
-    cents, cb, coded = _train_residual_ivf_pq(train_frame, nlist, dim, m, kc)
-    dim = dim if dim is not None else len(cents[0][1])
+    cents, cb, coded = _train_index(train_frame, nlist, 1, m, kc, True, dim)
+    dim = len(cents[0][1])
     if train_on is not None:
-        coded = _encode_ivf_pq(embeddings, cents, cb)
+        coded = _encode_frame(embeddings, *_centroid_arrays(cents), cb, True, dim)
     local_frame(
         spark,
         [(int(lid), [float(x) for x in v]) for lid, v in cents],
@@ -1027,8 +905,8 @@ def ivf_pq_topk_from_index(
     coded = spark.read.parquet(_os.path.join(path, "codes")).select(
         "vec_id", F.col("list_id").cast("int").alias("list_id"), "codes"
     )
-    return _query_residual_ivf_pq(
-        embeddings, cents, cb, coded, k, n_queries, nprobe, refine, prune_lists=True
+    return _adc_topk(
+        embeddings, cents, cb, coded, k, n_queries, nprobe, refine, meta["residual"], prune_lists=True
     )
 
 
@@ -1051,13 +929,12 @@ def append_to_ivf_pq_index(new_embeddings: DataFrame, path: str) -> dict:
 
     spark = new_embeddings.sparkSession
     meta, cents, cb = _load_ivf_pq_index(spark, path)
-    if _dim_of(new_embeddings, None) != meta["dim"]:
-        raise ValueError(
-            f"embedding dim {_dim_of(new_embeddings, None)} != index dim {meta['dim']}"
-        )
-    _encode_ivf_pq(new_embeddings, cents, cb).write.mode("append").partitionBy(
-        "list_id"
-    ).parquet(_os.path.join(path, "codes"))
+    dim = _dim_of(new_embeddings, None)
+    if dim != meta["dim"]:
+        raise ValueError(f"embedding dim {dim} != index dim {meta['dim']}")
+    _encode_frame(new_embeddings, *_centroid_arrays(cents), cb, True, dim).write.mode(
+        "append"
+    ).partitionBy("list_id").parquet(_os.path.join(path, "codes"))
     return meta
 
 

@@ -79,6 +79,8 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
     result = 0
     shift = 0
     while True:
+        if pos >= len(buf):
+            raise ValueError("truncated varint")
         b = buf[pos]
         pos += 1
         result |= (b & 0x7F) << shift
@@ -152,7 +154,8 @@ def np_encode_varints(vals: np.ndarray) -> np.ndarray:
 def _fields(data: bytes) -> Iterator[tuple[int, int, object]]:
     """Walk a protobuf message: yields (field_no, wire_type, value).
 
-    wire 0 → int value; wire 2 → bytes; wire 1/5 → raw fixed bytes.
+    wire 0 → int value; wire 2 → bytes; wire 1/5 → raw fixed bytes. A
+    value that runs past the end of ``data`` raises ``ValueError``.
     """
     pos, n = 0, len(data)
     while pos < n:
@@ -160,19 +163,20 @@ def _fields(data: bytes) -> Iterator[tuple[int, int, object]]:
         fno, wt = key >> 3, key & 7
         if wt == 0:
             val, pos = _read_varint(data, pos)
-        elif wt == 2:
+            yield fno, wt, val
+            continue
+        if wt == 2:
             ln, pos = _read_varint(data, pos)
-            val = data[pos : pos + ln]
-            pos += ln
         elif wt == 5:
-            val = data[pos : pos + 4]
-            pos += 4
+            ln = 4
         elif wt == 1:
-            val = data[pos : pos + 8]
-            pos += 8
+            ln = 8
         else:  # pragma: no cover — groups are not used by PBF
             raise ValueError(f"unsupported wire type {wt}")
-        yield fno, wt, val
+        if pos + ln > n:
+            raise ValueError(f"field {fno} runs {pos + ln - n} bytes past its message")
+        yield fno, wt, data[pos : pos + ln]
+        pos += ln
 
 
 def _packed_u64(wt: int, val: object, out: list) -> None:
@@ -236,23 +240,36 @@ def scan_blobs(path: str) -> list[tuple[str, int, int, str, int]]:
     Reads each [len][BlobHeader], seeks past the datasize, and returns
     (path, payload_offset, payload_size, kind, seq) rows — the
     parallelism unit for the distributed read. I/O is O(#blobs · 32B).
+    A file cut inside a frame, a header or a payload raises
+    ``ValueError``.
     """
     rows = []
     seq = 0
+    size = os.path.getsize(path)
     with open(path, "rb") as f:
         while True:
             head = f.read(4)
-            if len(head) < 4:
+            if not head:
                 break
+            if len(head) < 4:
+                raise ValueError(f"{path}: truncated blob frame at byte {f.tell() - len(head)}")
             (hlen,) = struct.unpack(">I", head)
             header = f.read(hlen)
-            kind, datasize = "", 0
+            if len(header) < hlen:
+                raise ValueError(f"{path}: truncated BlobHeader at byte {f.tell() - len(header)}")
+            kind, datasize = None, None
             for fno, wt, val in _fields(header):
                 if fno == 1:
                     kind = val.decode("utf-8")
                 elif fno == 3:
                     datasize = val
+            if kind is None or datasize is None:
+                raise ValueError(f"{path}: BlobHeader without type or datasize")
             offset = f.tell()
+            if offset + datasize > size:
+                raise ValueError(
+                    f"{path}: {kind} blob at byte {offset} runs {offset + datasize - size} bytes past EOF"
+                )
             rows.append((path, offset, datasize, kind, seq))
             seq += 1
             f.seek(offset + datasize)
@@ -270,7 +287,10 @@ def _inflate_blob(data: bytes) -> bytes:
     if raw is not None:
         return raw
     if zdata is not None:
-        return zlib.decompress(zdata)
+        try:
+            return zlib.decompress(zdata)
+        except zlib.error as exc:
+            raise ValueError(f"corrupt zlib_data: {exc}") from None
     raise ValueError("blob has neither raw nor zlib_data")
 
 

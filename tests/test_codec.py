@@ -330,3 +330,44 @@ def test_dense_keys_vals_without_terminator_raises():
         _kv_tags_array(np.array([1, 2], np.uint64), 1, stab)
     ok = _kv_tags_array_scalar(np.array([1, 2, 0, 0], np.uint64), 2, stab)
     assert ok.to_pylist() == [[{"key": "k", "value": "v"}], []]
+
+
+def test_pbf_framing_fails_loudly(tmp_path):
+    """A header block cut inside its BlobHeader or its payload, a varint
+    or length-delimited field that runs past its message, and bad zlib
+    data each raise ValueError, never a bogus blob row, IndexError or
+    zlib.error."""
+    import struct
+
+    import pytest
+
+    from osm_lib_spark.sources.pbf import (
+        _enc_field_bytes,
+        _enc_field_varint,
+        _fields,
+        _inflate_blob,
+        _read_varint,
+        encode_header_block,
+        scan_blobs,
+    )
+
+    framed = encode_header_block()
+    (hlen,) = struct.unpack(">I", framed[:4])
+    whole = tmp_path / "whole.pbf"
+    whole.write_bytes(framed)
+    ((_, offset, size, kind, _),) = scan_blobs(str(whole))
+    assert (offset, size, kind) == (4 + hlen, len(framed) - 4 - hlen, "OSMHeader")
+    assert 12 < 4 + hlen < len(framed) - 1
+    for cut, what in ((2, "frame"), (6, "BlobHeader"), (12, "BlobHeader"), (len(framed) - 1, "EOF")):
+        path = tmp_path / f"cut{cut}.pbf"
+        path.write_bytes(framed[:cut])
+        with pytest.raises(ValueError, match=what):
+            scan_blobs(str(path))
+
+    with pytest.raises(ValueError, match="varint"):
+        _read_varint(b"\x80\x80", 0)
+    short = _enc_field_bytes(1, b"OSMHeader")[:-2]
+    with pytest.raises(ValueError, match="past its message"):
+        list(_fields(short))
+    with pytest.raises(ValueError, match="zlib"):
+        _inflate_blob(_enc_field_varint(2, 10) + _enc_field_bytes(3, b"not zlib data"))

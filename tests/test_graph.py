@@ -127,12 +127,20 @@ def test_components_contract_and_caps(spark):
 
 
 def test_ivf_pq_training_both_paths(spark, tmp_path):
-    """build_ivf_pq_index on a 500 × 64 clustered corpus (the perfbench
-    corpus shape): centroids, codebooks and codes are bit-equal whether
-    training runs on the driver or as Spark jobs. Stride rows 0 and 31
-    are equal, so coarse list 1 and PQ code 1 get no members: the list
-    is dropped and the code keeps its init value, on both paths."""
-    from osm_lib_spark.operators.similarity import build_ivf_pq_index
+    """Every index-based ANN operator returns the same rows whether its
+    index trains on the driver or per partition (threshold -1), on a
+    500 × 64 clustered corpus (the perfbench corpus shape), and
+    build_ivf_pq_index writes bit-equal centroids, codebooks and codes.
+    Stride rows 0 and 31 are equal, so coarse list 1 and PQ code 1 get
+    no members: the list is dropped and the code keeps its init value,
+    on both paths."""
+    from osm_lib_spark.operators.similarity import (
+        build_ivf_pq_index,
+        ivf_kmeans_topk,
+        ivf_pq_topk,
+        ivf_topk,
+        pq_topk,
+    )
 
     rng = np.random.default_rng(5)
     centers = rng.normal(size=(40, 64))
@@ -153,7 +161,34 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
             for part in ("centroids", "codebooks", "codes")
         }
 
+    operators = {
+        "ivf_topk": lambda: _rows(ivf_topk(emb)),
+        "ivf_kmeans_topk": lambda: _rows(ivf_kmeans_topk(emb)),
+        "pq_topk": lambda: _rows(pq_topk(emb)),
+        "ivf_pq_topk": lambda: _rows(ivf_pq_topk(emb)),
+        "ivf_pq_topk residual": lambda: _rows(ivf_pq_topk(emb, residual=True)),
+    }
+    for name, fn in operators.items():
+        kernel, loop = both_paths(spark, fn)
+        assert kernel == loop, name
+        assert len(kernel) == 100, name
+
     kernel, loop = both_paths(spark, build)
     assert kernel == loop
     assert [r[0] for r in kernel[1]["centroids"]] == [0, *range(2, 16)]
     assert len(kernel[1]["codes"]) == 500
+
+
+def test_ragged_embeddings_rejected_on_both_paths(spark):
+    """An embedding of another length fails IVF/PQ training with the
+    same message on both paths (from a task on the partition path)."""
+    from osm_lib_spark.operators.similarity import ivf_pq_topk
+
+    rng = np.random.default_rng(11)
+    ragged = spark.createDataFrame(
+        [(i, rng.standard_normal(8 if i == 7 else 16).astype(np.float32).tolist()) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    for value in (spark.conf.get(THRESHOLD), "-1"):
+        with threshold(spark, value), pytest.raises(Exception, match="embeddings of one length"):
+            ivf_pq_topk(ragged, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True)

@@ -196,16 +196,16 @@ def _plans_during(spark, fn):
 
 
 def test_local_frames_broadcast_without_hints(spark, docs_xs):
-    """The kNN strip join and the residual IVF-PQ probe join carry no
-    broadcast hint: their driver-built side is a local_frame whose stats
-    let the planner broadcast it. Neither plans a sort-merge join or a
-    cartesian product."""
+    """The kNN strip join and the residual IVF-PQ and PQ probe joins
+    carry no broadcast hint: their driver-built side is a local_frame
+    whose stats let the planner broadcast it. None plans a sort-merge
+    join, a nested-loop join or a cartesian product."""
     import re
 
     import numpy as np
 
     from osm_lib_spark.operators.knn import knn_kring
-    from osm_lib_spark.operators.similarity import ivf_pq_topk
+    from osm_lib_spark.operators.similarity import ivf_pq_topk, pq_topk
 
     bad = re.compile(r"SortMergeJoin|CartesianProduct|BroadcastNestedLoopJoin")
     nodes = parse_nodes(docs_xs)
@@ -221,17 +221,20 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs):
     spark.conf.set(key, str(10 * 1024))
     try:
         rows, plans = _plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
-        top = ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True)
-        plan = _explain_str(top)
-        n_top = top.count()
+        tops = [
+            ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True),
+            pq_topk(emb, k=3, n_queries=3, m=4, kc=4),
+        ]
+        scans = [(_explain_str(top), top.count()) for top in tops]
     finally:
         spark.conf.set(key, saved)
     assert len(rows) == 5
     assert any("BroadcastHashJoin" in p for p in plans)
     assert not any(bad.search(p) for p in plans)
-    assert set(re.findall(r"\b\w+Join\b", plan)) == {"BroadcastHashJoin"}
-    assert not bad.search(plan)
-    assert n_top == 9
+    for plan, n_top in scans:
+        assert set(re.findall(r"\b\w+Join\b", plan)) == {"BroadcastHashJoin"}
+        assert not bad.search(plan)
+        assert n_top == 9
 
 
 def test_driver_rows_go_through_local_frame():
