@@ -401,18 +401,15 @@ def q_vex_roundtrip_counts(spark, sf_dir):
 
 
 def q_pip(spark, sf_dir):
-    """BOTH point-in-polygon paths in one gate (50-slot merge rule):
-    'bc' = the broadcast path (closure-captured small polygon dict —
-    the fixture's three hand-shaped polygons incl. the hole), 'bk' =
-    the bucketed SCALE path (500 grid polygons as a DataFrame, exploded
-    to covering z12 tiles, tile equi-join, per-bucket ray cast — no
-    polygon list in any closure). Each path hash-matches its own
-    independently computed pandas golden."""
+    """Two polygon sets through ``points_in_polygons_bucketed`` in one
+    gate (50-slot merge rule): 'bc' = the fixture's three hand-shaped
+    polygons incl. the hole, 'bk' = 500 grid polygons (exploded to
+    covering z12 tiles, tile equi-join, per-bucket ray cast). Each set
+    hash-matches its own independently computed pandas golden."""
     import numpy as np
 
     from osm_lib_spark.operators.pip import (
         grid_polygons,
-        points_in_polygons,
         points_in_polygons_bucketed,
         polygons_df,
     )
@@ -425,7 +422,7 @@ def q_pip(spark, sf_dir):
         int(pid): [np.array(r, dtype=np.float64) for r in rings]
         for pid, rings in meta["polygons"].items()
     }
-    bc = points_in_polygons(nodes, polys).select(
+    bc = points_in_polygons_bucketed(nodes, polygons_df(spark, polys)).select(
         F.lit("bc").alias("src"), F.col("poly_id").cast("long").alias("poly_id"), "node_id"
     )
     centers = [(float(p[1]), float(p[2])) for p in meta["knn_points"][:2]]

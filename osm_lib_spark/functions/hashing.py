@@ -43,15 +43,6 @@ def md5_int_sql(expr: str, hex_chars: int = 8) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, {hex_chars})) AS BIGINT)"
 
 
-def md5_int_np(values, hex_chars: int = 8) -> np.ndarray:
-    """numpy/python twin (vector of str → int64)."""
-    return np.fromiter(
-        (int(hashlib.md5(str(v).encode()).hexdigest()[:hex_chars], 16) for v in values),
-        dtype=np.int64,
-        count=len(values),
-    )
-
-
 def md5_int_py(s: str, hex_chars: int = 8) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:hex_chars], 16)
 

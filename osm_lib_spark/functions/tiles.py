@@ -126,11 +126,6 @@ def tile_xy_udf(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
     )
 
 
-@F.pandas_udf(T.LongType())
-def hilbert_key_udf(xtile: pd.Series, ytile: pd.Series) -> pd.Series:
-    return pd.Series(np_hilbert_d(xtile.to_numpy(), ytile.to_numpy()))
-
-
 def hilbert_key_col(xtile: Column, ytile: Column, order: int = ZOOM) -> Column:
     """Hilbert xy→d as a PURE JVM-side Column expression (no Python).
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_lib_spark.functions.tags import TAG_SCHEMA
+from osm_lib_spark.functions.tags import add_or_replace_tag
 
 
 def enrich_tags(
@@ -34,23 +34,7 @@ def enrich_tags(
     joined = entities.join(
         F.broadcast(upd), entities[id_col] == upd._uid, "left"
     )
-    k = F.lit(key_tag)
-    tags = F.coalesce(F.col("tags"), F.array().cast(TAG_SCHEMA))
-    lowered = F.transform(tags, lambda t: F.lower(t["key"]))
-    first_idx = F.array_position(lowered, F.lower(k))
-    replaced = F.zip_with(
-        tags,
-        F.sequence(F.lit(1), F.size(tags)),
-        lambda t, i: F.when(
-            i == first_idx, F.struct(t["key"].alias("key"), F.col("_uval").alias("value"))
-        ).otherwise(t),
-    )
-    appended = F.concat(
-        tags, F.array(F.struct(k.alias("key"), F.col("_uval").alias("value")))
-    )
-    new_tags = (
-        F.when(F.col("_uval").isNull(), F.col("tags"))
-        .when(first_idx > 0, replaced)
-        .otherwise(appended)
+    new_tags = F.when(F.col("_uval").isNull(), F.col("tags")).otherwise(
+        add_or_replace_tag(F.col("tags"), key_tag, F.col("_uval"))
     )
     return joined.withColumn("tags", new_tags).drop("_uid", "_uval")

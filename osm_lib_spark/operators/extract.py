@@ -21,8 +21,10 @@ tests the discovered id (TileOSMSource.java:127).
 Scale design: the envelope filter reaches the way_tiles parquet scan
 (row-group skipping via the Hilbert-sorted layout); J1 deduplicates
 probe keys first so both join sides are key-unique (no skew); the
-closure table is built once per dataset, and its exact row count picks
-a broadcast or a hash-partitioned closure join.
+closure table and the member indexes are built once per dataset, as
+LocalRelations the planner broadcasts by their exact size when they
+fit under ``spark.sql.autoBroadcastJoinThreshold``, else as hinted
+hash-join sides.
 """
 
 from __future__ import annotations
@@ -39,16 +41,18 @@ from osm_lib_spark.operators.indexes import build_way_tiles
 from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame
 
 MAX_CLOSURE_ITERATIONS = 50
-CLOSURE_ROW_BYTES = 16  # (relation_id, ancestor_id): two longs
+# Spark's size estimate of a (long, long) row: 8 B row overhead + two
+# longs. The closure, its edges and the member indexes are all such
+# pairs, and a LocalRelation of n of them has stats of n * 24 B.
+PAIR_ROW_BYTES = 24
 
 
-def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
+def relation_closure_table(relations: DataFrame) -> DataFrame:
     """Transitive UPWARD closure of the relation-membership graph:
     (relation_id, ancestor_id) for every ancestor reachable from the
-    relation by walking 'is member of' edges ONE or more times, returned
-    with its exact row count. A relation is its own ancestor, a
-    (r, r) row, exactly when it lies on a membership cycle, a
-    self-membership included.
+    relation by walking 'is member of' edges ONE or more times. A
+    relation is its own ancestor, a (r, r) row, exactly when it lies on
+    a membership cycle, a self-membership included.
 
     Computed ONCE per dataset over the (small) relation→relation edge
     set (the relationsByRelation index, OSM.java:156-158); every bbox
@@ -56,10 +60,14 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
     an iterative per-query loop. When the edge set fits under
     ``spark.sql.autoBroadcastJoinThreshold`` it is collected once and
     ``graph.upward_closure`` runs on the driver; the result is a
-    LocalRelation of exact size. Otherwise a semi-naive Spark loop runs
-    (one extension join, anti-join and checkpoint per round) and raises
-    ``ValueError`` if MAX_CLOSURE_ITERATIONS rounds do not reach the
-    fixpoint.
+    LocalRelation of exact size, which the planner broadcasts while it
+    fits. Otherwise a semi-naive Spark loop runs (one extension join,
+    anti-join and checkpoint per round) and raises ``ValueError`` if
+    MAX_CLOSURE_ITERATIONS rounds do not reach the fixpoint. A closure
+    over the threshold carries a SHUFFLE_HASH hint: left to the planner,
+    the loop's checkpointed result keeps its origin plan's estimate
+    (17 GB for the 10-row sf-xs closure on Spark 4.1.2), and the
+    extract's closure join plans as a SortMergeJoin.
     """
     # lazy checkpoint: the bounded collect materializes the edges, which
     # the loop then reuses instead of re-exploding the relations
@@ -71,8 +79,10 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
             F.col("relation_id").alias("ancestor_id"),
         )
     ).localCheckpoint(eager=False)
-    table = collect_bounded(edges, CLOSURE_ROW_BYTES)
-    if table is not None:
+    table = collect_bounded(edges, PAIR_ROW_BYTES)
+    if table is None:
+        closure = _closure_loop(edges)
+    else:
         child, ancestor = upward_closure(
             table.column(0).to_numpy(zero_copy_only=False),
             table.column(1).to_numpy(zero_copy_only=False),
@@ -82,9 +92,13 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
             pa.table([child, ancestor], names=["relation_id", "ancestor_id"]),
             "relation_id long, ancestor_id long",
         )
-        return closure, len(child)
+        if len(child) * PAIR_ROW_BYTES <= broadcast_threshold(relations.sparkSession):
+            return closure
+    return closure.hint("SHUFFLE_HASH")
 
-    rows = edges.count()
+
+def _closure_loop(edges: DataFrame) -> DataFrame:
+    """Semi-naive fixpoint of ``edges`` in Spark, one round per hop."""
     closure = edges
     frontier = edges
     for _ in range(MAX_CLOSURE_ITERATIONS):
@@ -98,10 +112,8 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
         new = step.join(
             closure, ["relation_id", "ancestor_id"], "left_anti"
         ).localCheckpoint(eager=True)
-        n_new = new.count()
-        if not n_new:
-            return closure, rows
-        rows += n_new
+        if not new.count():
+            return closure
         closure = closure.unionByName(new).localCheckpoint(eager=True)
         frontier = new
     raise ValueError(
@@ -109,29 +121,41 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, int]:
     )
 
 
+def _member_index(index: DataFrame) -> DataFrame:
+    """A (member_id, relation_id) index, reused by every extract: a
+    LocalRelation when it fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` (one bounded collect; the
+    planner broadcasts it by its exact size), else the checkpoint with a
+    SHUFFLE_HASH hint. The collect's job materializes the checkpoint, so
+    an index over the threshold is not computed twice (at a threshold
+    ≤ 0 no collect runs, and the first extract materializes it)."""
+    index = index.localCheckpoint(eager=False)
+    table = collect_bounded(index, PAIR_ROW_BYTES)
+    if table is None:
+        return index.hint("SHUFFLE_HASH")
+    return local_frame(index.sparkSession, table, "member_id long, relation_id long")
+
+
 @dataclass
 class ExtractContext:
     """Cached per-dataset state shared by extracts: the node/way member
-    indexes, the transitive closure table and its exact row count. Build
-    once with ``prepare_extract_context``; each extract is then a pure
-    join DAG with no driver-side iteration."""
+    indexes and the transitive closure table. Build once with
+    ``prepare_extract_context``; each extract is then a pure join DAG
+    with no driver-side iteration."""
 
     rel_by_node: DataFrame
     rel_by_way: DataFrame
     rel_closure: DataFrame
-    closure_rows: int
 
 
 def prepare_extract_context(relations: DataFrame) -> ExtractContext:
     from osm_lib_spark.operators.indexes import rel_member_indexes
 
     idx = rel_member_indexes(relations)
-    closure, closure_rows = relation_closure_table(relations)
     return ExtractContext(
-        rel_by_node=idx["node"].localCheckpoint(eager=True),
-        rel_by_way=idx["way"].localCheckpoint(eager=True),
-        rel_closure=closure,
-        closure_rows=closure_rows,
+        rel_by_node=_member_index(idx["node"]),
+        rel_by_way=_member_index(idx["way"]),
+        rel_closure=relation_closure_table(relations),
     )
 
 
@@ -265,17 +289,10 @@ def bbox_extract_batch(
     # closure join (was computed twice).
     seen = rel_n.unionByName(rel_w).distinct().localCheckpoint(eager=False)
     # J5 (TileOSMSource.java:112-132 semantics): the closure table is
-    # per dataset, so unlike seen it does not grow with the batch, and
-    # its exact size is known. Broadcast it when that fits under
-    # spark.sql.autoBroadcastJoinThreshold, else hash-join: left to the
-    # planner, a closure from the Spark loop is checkpointed and keeps
-    # its origin plan's estimate (17 GB for the 10-row sf-xs closure on
-    # Spark 4.1.2), and the join plans as a SortMergeJoin.
-    if ctx.closure_rows * CLOSURE_ROW_BYTES <= broadcast_threshold(spark):
-        closure = F.broadcast(ctx.rel_closure)
-    else:
-        closure = ctx.rel_closure.hint("SHUFFLE_HASH")
-    ancestors = seen.join(closure, "relation_id").select(
+    # per dataset, so unlike seen it does not grow with the batch; it
+    # broadcasts by its exact size or carries its SHUFFLE_HASH hint
+    # (relation_closure_table).
+    ancestors = seen.join(ctx.rel_closure, "relation_id").select(
         "bbox_id", F.col("ancestor_id").alias("relation_id")
     )
     b_rels = seen.unionByName(ancestors).distinct()

@@ -17,14 +17,16 @@ Two strategies, both exact:
   probe regardless of frontier size — never a per-query Spark job, and
   never a broadcast-nested-loop over range predicates. Ring radii
   double per round, so a query that terminates at radius R has scanned
-  ≤ 4/3 · (2R+1)² tiles total (geometric series). Driver traffic is
-  size-gated: small serving batches collect their own ≤ k·Q top-k rows
-  per round (trivial), while batches past ``driver_collect_max_q``
-  keep every result slice persisted ON THE EXECUTORS — the driver
-  exchanges only Q control rows per round (stats up, satisfied ids
-  down) and the returned DataFrame is the union of the cached round
-  frames, so an offline Q=10⁶ batch never funnels k·Q result rows
-  through one process.
+  ≤ 4/3 · (2R+1)² tiles total (geometric series). Where the results
+  accumulate follows the size rule of every driver-or-cluster choice
+  in the engine (``session.collect_bounded``): while the k·Q result
+  rows fit under ``spark.sql.autoBroadcastJoinThreshold`` (~280k
+  queries at k=10 and the 64 MiB session default) each round collects
+  its own top-k rows on the driver; past it every result slice stays
+  persisted ON THE EXECUTORS — the driver exchanges only Q control
+  rows per round (stats up, satisfied ids down) and the returned
+  DataFrame is the union of the cached round frames, so an offline
+  Q=10⁶ batch never funnels k·Q result rows through one process.
 
 Exactness guard: a query stops expanding only when it has k hits AND
 its k-th distance is ≤ a proven LOWER bound on the distance to any
@@ -51,7 +53,7 @@ from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m
 from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y
-from osm_lib_spark.session import local_frame
+from osm_lib_spark.session import broadcast_threshold, local_frame
 
 import numpy as np
 
@@ -172,6 +174,9 @@ def _frontier_strips(spark, frontier: list[dict]) -> DataFrame:
 
 
 STRIP_SWITCH_ROWS = 8192  # strip rows above which a round joins on coarse cells
+# Spark's size estimate of a (query_id int, rank int, node_id long)
+# result row: 8 B row overhead + 16 B of columns
+RESULT_ROW_BYTES = 24
 
 
 def _coarse_cell_candidates(spark, probe: DataFrame, frontier: list[dict]) -> DataFrame:
@@ -285,11 +290,8 @@ def knn_kring(
     query_points: list[tuple[int, float, float]],
     k: int = 10,
     initial_ring: int | None = None,
-    max_ring: int = NTILES,
     tiled: DataFrame | None = None,
-    strip_switch: int = STRIP_SWITCH_ROWS,
     est_n_nodes: int | None = None,
-    driver_collect_max_q: int = 1024,
 ) -> DataFrame:
     """Exact kNN via batched iterative k-ring expansion.
 
@@ -304,7 +306,7 @@ def knn_kring(
     ``tiled`` supplied, ``nodes`` may be None (a serving layer reads
     only the persisted store).
 
-    Rounds whose strip table would exceed ``strip_switch`` rows
+    Rounds whose strip table would exceed ``STRIP_SWITCH_ROWS`` rows
     (Q·(2r+1) growth — thousands of queries with wide rings) switch to
     the coarse-cell ancestor equi-join (``_coarse_cell_candidates``):
     O(Q) broadcast rows regardless of radius, same exact results.
@@ -325,15 +327,17 @@ def knn_kring(
     ring distance bound. Callers that know the corpus size (benches,
     serving layers with table stats) should pass ``est_n_nodes``.
 
-    Result accumulation is size-gated by ``driver_collect_max_q``:
-    small serving batches (Q ≤ threshold) collect each round's top-k
-    directly — k·Q rows is trivial driver traffic there, and skipping
-    the executor-side bookkeeping saves ~2 stages per round (measured
-    q5 1.64s vs 2.6s at sf0.1). Larger batches keep every result slice
-    persisted ON THE EXECUTORS (driver sees only Q control rows each
-    way: stats up, satisfied ids down) and the returned DataFrame is
-    the union of the cached round frames — an offline Q=10⁶ batch
-    never funnels k·Q result rows through one process.
+    Result accumulation follows the engine's one size rule: while the
+    k·Q result rows (``RESULT_ROW_BYTES`` each) fit under
+    ``spark.sql.autoBroadcastJoinThreshold``, each round collects its
+    top-k directly and the result is a LocalRelation — skipping the
+    executor-side bookkeeping saves ~2 stages per round (measured q5
+    1.64s vs 2.6s at sf0.1). Past it (or at a threshold ≤ 0) every
+    result slice stays persisted ON THE EXECUTORS (the driver sees only
+    Q control rows each way: stats up, satisfied ids down) and the
+    returned DataFrame is the union of the cached round frames — an
+    offline Q=10⁶ batch never funnels k·Q result rows through one
+    process.
     """
     if nodes is None and tiled is None:
         raise ValueError("knn_kring needs nodes or a tiled store")
@@ -347,12 +351,13 @@ def knn_kring(
             initial_ring = min(max(int(math.ceil((span - 1.0) / 2.0)), 1), 64)
         else:
             initial_ring = 1
+    collect_mode = len(query_points) * k * RESULT_ROW_BYTES <= broadcast_threshold(spark)
     # Cache the ad-hoc tiled projection only for LARGE batches: a small
     # interactive batch runs 1-3 rounds, and materializing a full node
     # cache costs more than the rounds' re-derivation of the (cheap,
     # columnar) tile columns from the upstream table. Serving layers
     # pass a persisted ``tiled=`` store and skip this entirely.
-    own_cache = tiled is None and len(query_points) > driver_collect_max_q
+    own_cache = tiled is None and not collect_mode
     coords = tiled if tiled is not None else tiled_node_store(nodes)
     if own_cache:
         coords = coords.cache()
@@ -368,7 +373,6 @@ def knn_kring(
         )
         for qid, qlat, qlon in query_points
     ]
-    collect_mode = len(query_points) <= driver_collect_max_q
     parts: list[DataFrame] = []
     parts_rows: list[tuple[int, int, int]] = []
     round_frames: list[DataFrame] = []  # persisted per-round top-k (large-Q mode)
@@ -393,7 +397,7 @@ def knn_kring(
                     F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
                 )
             est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
-            if est_strip_rows > strip_switch:
+            if est_strip_rows > STRIP_SWITCH_ROWS:
                 cand = _coarse_cell_candidates(spark, probe, frontier)
             else:
                 strips = _frontier_strips(spark, frontier)
@@ -455,7 +459,7 @@ def knn_kring(
                     f["qlat"], f["qlon"], f["qx"], f["qy"], f["radius"]
                 )
                 covered_all = math.isinf(bound)
-                if covered_all or (n_rows >= k and kth <= bound) or f["radius"] >= max_ring:
+                if covered_all or (n_rows >= k and kth <= bound):
                     satisfied_ids.append(f["query_id"])
                 else:
                     # deficit-adaptive growth: each round costs a fixed
@@ -465,7 +469,7 @@ def knn_kring(
                     # untouched — termination is gated by the distance
                     # bound, never by the growth schedule.
                     growth = 2 if n_rows >= k else (4 if n_rows else 8)
-                    f["radius"] = min(f["radius"] * growth, max_ring)
+                    f["radius"] = min(f["radius"] * growth, NTILES)
                     next_frontier.append(f)
             if satisfied_ids and collect_mode:
                 for qid in satisfied_ids:
@@ -475,14 +479,10 @@ def knn_kring(
                     )
             elif satisfied_ids:
                 # slice this round's satisfied results out of the cached
-                # frame, executor-side. A literal isin filter below 8192
-                # ids (no broadcast-build latency), a broadcast semi-join
-                # above (the filter expression never carries 10⁶ literals).
-                if len(satisfied_ids) <= 8192:
-                    sliced = ranked.where(F.col("query_id").isin(satisfied_ids))
-                else:
-                    sat = local_frame(spark, [(int(q),) for q in satisfied_ids], "query_id int")
-                    sliced = ranked.join(sat, "query_id", "left_semi")
+                # frame, executor-side, by a semi-join on a local_frame of
+                # their ids (the planner broadcasts it by its exact size)
+                sat = local_frame(spark, [(int(q),) for q in satisfied_ids], "query_id int")
+                sliced = ranked.join(sat, "query_id", "left_semi")
                 parts.append(sliced.select("query_id", "rank", "node_id"))
             frontier = next_frontier
 

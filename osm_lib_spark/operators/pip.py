@@ -1,10 +1,13 @@
 """Point-in-polygon via ray casting in vectorized Arrow batches.
 
 Engine addition (no reference analog; BASELINE.json north_star mandates
-"ray-casting point-in-polygon in pandas batches"). The polygon set is
-small (broadcast via closure capture); points stream through a scalar
-pandas UDF in Arrow batches — numpy does V vector operations per batch
-for a V-vertex polygon, never per-row Python.
+"ray-casting point-in-polygon in pandas batches"). One operator,
+``points_in_polygons_bucketed``, serves every polygon set: polygons
+live in a DataFrame (``polygons_df`` builds one from a dict), each is
+exploded to its covering z12 tiles, points equi-join the polygon tiles
+on the tile key, and a pandas UDF decides membership per Arrow batch —
+numpy does V vector operations per polygon group for a V-vertex
+polygon, never per-row Python.
 
 The numpy kernel (ray_cast_contains) is shared with the pure-pandas
 oracle so engine and golden fixtures agree bit-for-bit; the kernel
@@ -13,14 +16,6 @@ itself is unit-tested against hand-computed cases in tests/test_geo.py.
 Multipolygon-with-holes convention: even-odd across all rings (a point
 is inside iff it is inside an odd number of rings), matching the
 multipolygon relation fixture (role=outer/inner members).
-
-Scale path: pre-filter points to the polygon's bbox tiles first (a
-prunable column predicate) so the UDF only sees candidate rows, then
-ray-cast. For polygon sets too large to broadcast, use
-``points_in_polygons_bucketed``: polygons live in a DataFrame, each is
-exploded to its covering z12 tiles, points equi-join polygon buckets
-on the tile key, and the shared ray-cast kernel decides membership per
-bucket — no closure-captured polygon list anywhere.
 """
 
 from __future__ import annotations
@@ -35,62 +30,16 @@ from pyspark.sql import types as T
 
 from osm_lib_spark.functions.geo import from_fixed
 from osm_lib_spark.functions.tiles import ZOOM, tile_x_col, tile_y_col
-from osm_lib_spark.session import local_frame
+from osm_lib_spark.session import collect_bounded, local_frame
 from osm_lib_spark.sources.oracle import ray_cast_contains
-
-
-def points_in_polygons(
-    nodes: DataFrame, polygons: dict[int, list[np.ndarray]]
-) -> DataFrame:
-    """→ (poly_id, node_id) for every node inside each polygon.
-
-    ``polygons``: poly_id → [ring, ...], each ring an (V, 2) float64
-    array of (lat, lon) vertices.
-    """
-    # serialize rings to plain lists for closure pickling (small)
-    poly_items = [
-        (int(pid), [np.asarray(r, dtype=np.float64) for r in rings])
-        for pid, rings in sorted(polygons.items())
-    ]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def containing_polys(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy(dtype=np.float64)
-        lo = lon.to_numpy(dtype=np.float64)
-        hits: list[list[int]] = [[] for _ in range(len(la))]
-        for pid, rings in poly_items:
-            inside = np.zeros(len(la), dtype=bool)
-            for ring in rings:
-                inside ^= ray_cast_contains(ring, la, lo)
-            for i in np.nonzero(inside)[0]:
-                hits[i].append(pid)
-        return pd.Series(hits)
-
-    # bbox prefilter: cheap column predicate cuts the UDF input to
-    # candidates only (pushdown-friendly); union of all polygon bboxes.
-    all_lat = np.concatenate([r[:, 0] for _, rings in poly_items for r in rings])
-    all_lon = np.concatenate([r[:, 1] for _, rings in poly_items for r in rings])
-    pts = nodes.select(
-        F.col("id").alias("node_id"),
-        from_fixed(F.col("fixed_lat")).alias("lat"),
-        from_fixed(F.col("fixed_lon")).alias("lon"),
-    ).where(
-        F.col("lat").between(float(all_lat.min()), float(all_lat.max()))
-        & F.col("lon").between(float(all_lon.min()), float(all_lon.max()))
-    )
-
-    return (
-        pts.withColumn("poly_ids", containing_polys(F.col("lat"), F.col("lon")))
-        .where(F.size("poly_ids") > 0)
-        .select(F.explode("poly_ids").alias("poly_id"), "node_id")
-    )
 
 
 def polygons_df(spark, polygons: dict[int, list[np.ndarray]]) -> DataFrame:
     """dict polygon set → DataFrame (poly_id, rings) — the input shape
-    of the bucketed scale path. rings is array<array<array<double>>>:
-    rings[r][v] = [lat, lon]. One row per polygon carries ALL its rings
-    so even-odd with holes evaluates per row after the tile join."""
+    of ``points_in_polygons_bucketed``. rings is
+    array<array<array<double>>>: rings[r][v] = [lat, lon]. One row per
+    polygon carries ALL its rings so even-odd with holes evaluates per
+    row after the tile join."""
     rows = [
         (
             int(pid),
@@ -104,63 +53,79 @@ def polygons_df(spark, polygons: dict[int, list[np.ndarray]]) -> DataFrame:
     return local_frame(spark, rows, "poly_id long, rings array<array<array<double>>>")
 
 
-@F.pandas_udf(T.BooleanType())
-def _pip_contains_udf(
-    poly_id: pd.Series, lat: pd.Series, lon: pd.Series, rings: pd.Series
+def _contains_by_polygon(
+    poly_id: pd.Series, lat: pd.Series, lon: pd.Series, rings_of
 ) -> pd.Series:
-    """Per-bucket ray cast: rows of one Arrow batch are grouped by
-    polygon and each group runs the SAME vectorized even-odd kernel the
-    pandas oracle uses (``ray_cast_contains``) — one kernel invocation
-    per (polygon, batch), never per row."""
+    """Per-bucket ray cast behind both UDFs: the rows of one Arrow batch
+    are grouped by polygon and each group runs the SAME vectorized
+    even-odd kernel the pandas oracle uses (``ray_cast_contains``) — one
+    kernel invocation per (polygon, ring, batch), never per row.
+    ``rings_of(i)`` gives the rings of row ``i``'s polygon as (V, 2)
+    float64 arrays."""
+    pid = poly_id.to_numpy()
     la = lat.to_numpy(dtype=np.float64)
     lo = lon.to_numpy(dtype=np.float64)
-    out = np.zeros(len(la), dtype=bool)
-    pid = poly_id.to_numpy()
+    out = np.zeros(len(pid), dtype=bool)
     order = np.argsort(pid, kind="stable")
-    sp = pid[order]
-    starts = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]]) if len(sp) else np.array([], dtype=int)
-    bounds = np.r_[starts, len(order)]
-    for a, b in zip(bounds[:-1], bounds[1:]):
-        ii = order[a:b]
-        inside = np.zeros(len(ii), dtype=bool)
-        for ring in rings.iloc[int(ii[0])]:
-            ring_arr = np.stack([np.asarray(v, dtype=np.float64) for v in ring])
-            inside ^= ray_cast_contains(ring_arr, la[ii], lo[ii])
-        out[ii] = inside
+    for ii in np.split(order, np.flatnonzero(np.diff(pid[order])) + 1):
+        if len(ii):
+            inside = np.zeros(len(ii), dtype=bool)
+            for ring in rings_of(int(ii[0])):
+                inside ^= ray_cast_contains(ring, la[ii], lo[ii])
+            out[ii] = inside
     return pd.Series(out)
 
 
-BROADCAST_TILE_ROWS = 500_000  # polygon-tile rows (~100 MB with rings) that still broadcast
+def _ring_arrays(rings) -> list[np.ndarray]:
+    """One polygon's ``rings`` value → its rings as (V, 2) float64 arrays."""
+    return [np.stack([np.asarray(v, dtype=np.float64) for v in ring]) for ring in rings]
+
+
+@F.pandas_udf(T.BooleanType())
+def _contains_rings_udf(
+    poly_id: pd.Series, lat: pd.Series, lon: pd.Series, rings: pd.Series
+) -> pd.Series:
+    """Membership with the rings riding each candidate row."""
+    return _contains_by_polygon(poly_id, lat, lon, lambda i: _ring_arrays(rings.iloc[i]))
+
+
+# Spark's size estimate of a polygon-tile row without its rings: 8 B row
+# overhead + poly_id long, xtile/ytile ints and four double bbox bounds
+TILE_ROW_BYTES = 56
+TILE_DDL = (
+    "poly_id long, xtile int, ytile int, "
+    "lat_min double, lat_max double, lon_min double, lon_max double"
+)
 
 
 def points_in_polygons_bucketed(
-    nodes: DataFrame,
-    polygons: DataFrame,
-    zoom: int = ZOOM,
-    broadcast_tile_rows: int = BROADCAST_TILE_ROWS,
+    nodes: DataFrame, polygons: DataFrame, zoom: int = ZOOM
 ) -> DataFrame:
-    """→ (poly_id, node_id): the SCALE path for polygon sets too large
-    to broadcast as a closure (the docstring promise at module top).
+    """→ (poly_id, node_id) for every node inside each polygon of
+    ``polygons`` (poly_id, rings), the ``polygons_df`` shape.
 
-    Plan shape (all declarative — Catalyst/AQE pick the join strategy
-    from stats, no forced broadcast):
+    Plan shape:
 
     1. per-polygon bbox from the rings column (pure Column fold);
     2. explode each polygon to its covering z``zoom`` tiles —
-       |P|·avg_covering_tiles rows, distributed, never collected;
+       |P|·avg_covering_tiles rows;
     3. points compute their own (xtile, ytile) and EQUI-join the
-       polygon-tile table on the tile key. The POLYGON side is always
-       the build side: a cheap polygon-side count picks broadcast-hash
-       when the tile table is ≤ ``broadcast_tile_rows`` (no point
-       shuffles at all) and a SHUFFLE_HASH hint on the polygon side
-       otherwise (both sides hash-exchange on uniform tile keys).
-       Without this the planner can invert the join at toy scale — a
-       polygon set without stats lets Catalyst broadcast the CORPUS
-       side; a stats-bearing polygon table (``polygons_df``'s
-       LocalRelation, Iceberg) gives the same decision for free;
-    4. the shared ray-cast kernel filters candidates per bucket inside
-       the post-join stage (no second shuffle — the rings ride the
-       build side of the join into the same codegen stage).
+       polygon-tile table on the tile key, the polygon side always the
+       build side. The size rule of every driver-or-cluster choice
+       picks how (``session.collect_bounded``): when the tile table
+       without rings fits under ``spark.sql.autoBroadcastJoinThreshold``
+       it is collected once into a LocalRelation the planner broadcasts
+       by its exact size (no point shuffles at all), and the ring
+       geometry ships ONCE PER EXECUTOR as a Spark broadcast variable —
+       at 1M nodes × 500 polygons the per-row rings payload through
+       Arrow was the dominant cost (measured 6.9s, PLANS §14). Over the
+       threshold the rings ride the polygon-tile rows under a
+       SHUFFLE_HASH hint (both sides hash-exchange on uniform tile
+       keys); left to the planner, a polygon side without stats can
+       invert the join and broadcast the corpus;
+    4. a Column predicate drops candidates outside the polygon's own
+       bbox in the join's codegen stage, then the shared ray-cast
+       kernel (``_contains_by_polygon``) decides the rest per bucket.
 
     Exactness: bbox-covering tiles ⊇ polygon tiles and a point outside
     every covering tile cannot be inside, so the join only ever prunes
@@ -173,8 +138,8 @@ def points_in_polygons_bucketed(
     still decides exactly. Skew: a huge polygon's candidates spread
     over its many covering tiles (per-tile buckets), so no single task
     sees the whole polygon's point load; very-high-vertex polygons pay
-    ring duplication per covering tile — clip rings per tile at that
-    scale.
+    ring duplication per covering tile on the rings-on-rows path —
+    clip rings per tile at that scale.
     """
     ntiles = 1 << zoom
 
@@ -222,9 +187,9 @@ def points_in_polygons_bucketed(
         .select(
             "poly_id",
             "rings",
-            *bbox_cols,
             "xtile",
             F.explode(F.sequence(F.col("y0"), F.col("y1"))).alias("ytile"),
+            *bbox_cols,
         )
     )
     pts = nodes.select(
@@ -238,74 +203,41 @@ def points_in_polygons_bucketed(
         clamp(tile_x_col(F.col("lon"), zoom)).alias("xtile"),
         clamp(tile_y_col(F.col("lat"), zoom)).alias("ytile"),
     )
-    if ptiles.count() <= broadcast_tile_rows:
-        # broadcast regime: the tile table broadcasts WITHOUT the rings
-        # column, and ring geometry ships ONCE PER EXECUTOR as a Spark
-        # broadcast variable instead of riding every candidate row —
-        # at 1M nodes × 500 polygons the per-row rings payload through
-        # Arrow was the dominant cost (measured 6.9s → see PLANS §14;
-        # the collect is bounded by the same threshold that justifies
-        # the broadcast)
+    tiles = collect_bounded(ptiles.drop("rings"), TILE_ROW_BYTES)
+    if tiles is None:
+        cand = pts.join(ptiles.hint("SHUFFLE_HASH"), ["xtile", "ytile"])
+        contains = _contains_rings_udf(
+            F.col("poly_id"), F.col("lat"), F.col("lon"), F.col("rings")
+        )
+    else:
         spark = polygons.sparkSession
-        ring_rows = polygons.select("poly_id", "rings").collect()
-        ring_map = {
-            int(r["poly_id"]): [
-                np.stack([np.asarray(v, dtype=np.float64) for v in ring])
-                for ring in r["rings"]
-            ]
-            for r in ring_rows
-        }
-        bc = spark.sparkContext.broadcast(ring_map)
+        bc = spark.sparkContext.broadcast(
+            {
+                int(r["poly_id"]): _ring_arrays(r["rings"])
+                for r in polygons.select("poly_id", "rings").collect()
+            }
+        )
 
         @F.pandas_udf(T.BooleanType())
         def contains_bc(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
             rings_by_pid = bc.value
-            la = lat.to_numpy(dtype=np.float64)
-            lo = lon.to_numpy(dtype=np.float64)
-            out = np.zeros(len(la), dtype=bool)
-            pid = poly_id.to_numpy()
-            order = np.argsort(pid, kind="stable")
-            sp = pid[order]
-            starts = (
-                np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]])
-                if len(sp)
-                else np.array([], dtype=int)
+            return _contains_by_polygon(
+                poly_id, lat, lon, lambda i: rings_by_pid[int(poly_id.iat[i])]
             )
-            bounds = np.r_[starts, len(order)]
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                ii = order[a:b]
-                inside = np.zeros(len(ii), dtype=bool)
-                for ring_arr in rings_by_pid[int(sp[a])]:
-                    inside ^= ray_cast_contains(ring_arr, la[ii], lo[ii])
-                out[ii] = inside
-            return pd.Series(out)
 
-        # polygon-bbox prefilter: a candidate in a covering tile can
-        # still be outside the polygon's own bbox (tiles are ~0.088° at
-        # z12, most grid polygons are 0.01-0.06° half-size). The bbox
-        # test is a plain Column predicate in the same codegen stage as
-        # the join, so rows it kills never cross into Python (guide §4:
-        # pass the UDF only the rows it can possibly keep). bbox ⊇
-        # polygon, so only true negatives are dropped — exactness holds.
-        in_bbox = (
-            F.col("lat").between(F.col("lat_min"), F.col("lat_max"))
-            & F.col("lon").between(F.col("lon_min"), F.col("lon_max"))
-        )
-        tile_cols = ["poly_id", "xtile", "ytile", "lat_min", "lat_max", "lon_min", "lon_max"]
-        cand = pts.join(F.broadcast(ptiles.select(tile_cols)), ["xtile", "ytile"]).where(
-            in_bbox
-        )
-        return cand.where(
-            contains_bc(F.col("poly_id"), F.col("lat"), F.col("lon"))
-        ).select("poly_id", "node_id")
-
-    cand = pts.join(ptiles.hint("SHUFFLE_HASH"), ["xtile", "ytile"]).where(
+        cand = pts.join(local_frame(spark, tiles, TILE_DDL), ["xtile", "ytile"])
+        contains = contains_bc(F.col("poly_id"), F.col("lat"), F.col("lon"))
+    # polygon-bbox prefilter: a candidate in a covering tile can still be
+    # outside the polygon's own bbox (tiles are ~0.088° at z12, most grid
+    # polygons are 0.01-0.06° half-size). The bbox test is a plain Column
+    # predicate in the same codegen stage as the join, so rows it kills
+    # never cross into Python. bbox ⊇ polygon, so only true negatives
+    # are dropped — exactness holds.
+    in_bbox = (
         F.col("lat").between(F.col("lat_min"), F.col("lat_max"))
         & F.col("lon").between(F.col("lon_min"), F.col("lon_max"))
     )
-    return cand.where(
-        _pip_contains_udf(F.col("poly_id"), F.col("lat"), F.col("lon"), F.col("rings"))
-    ).select("poly_id", "node_id")
+    return cand.where(in_bbox).where(contains).select("poly_id", "node_id")
 
 
 def grid_polygons(
@@ -363,48 +295,3 @@ def grid_polygons(
         polys[i + 1] = [np.asarray(r, dtype=np.float64) for r in rings]
     return polys
 
-
-def polygon_rings_from_relation(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame, relation_id: int
-) -> dict[int, list[np.ndarray]]:
-    """Resolve a type=multipolygon relation's member ways into rings.
-
-    Way→node resolution with order restored via posexplode + sort
-    (the J1 join, TileOSMSource.java:77-84): member ways' node_ids are
-    looked up and each way's coordinate sequence becomes one ring.
-    Returns {relation_id: [outer_ring, inner_ring, ...]} with rings in
-    member order (role=outer first by convention of the fixture).
-    """
-    members = (
-        relations.where(F.col("id") == relation_id)
-        .select(F.posexplode("members").alias("m_pos", "m"))
-        .where(F.col("m.type") == "WAY")
-        .select("m_pos", F.col("m.member_id").alias("way_id"), F.col("m.role").alias("role"))
-    )
-    way_pts = (
-        members.join(ways, members.way_id == ways.id, "inner")
-        .select("m_pos", "way_id", F.posexplode("node_ids").alias("n_pos", "ref_id"))
-        .join(
-            nodes.select(
-                F.col("id").alias("nid"),
-                from_fixed(F.col("fixed_lat")).alias("lat"),
-                from_fixed(F.col("fixed_lon")).alias("lon"),
-            ),
-            F.col("ref_id") == F.col("nid"),
-            "inner",
-        )
-        .groupBy("m_pos", "way_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("n_pos", "lat", "lon"))
-            ).alias("pts")
-        )
-        .orderBy("m_pos")
-        .collect()
-    )
-    rings = [
-        np.array([[p.lat, p.lon] for p in row.pts], dtype=np.float64)
-        for row in way_pts
-        if len(row.pts) >= 3
-    ]
-    return {relation_id: rings}

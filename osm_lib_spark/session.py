@@ -116,14 +116,32 @@ def collect_bounded(df: DataFrame, row_bytes: int) -> pa.Table | None:
     """``df`` as one Arrow table on the driver when it fits under
     ``spark.sql.autoBroadcastJoinThreshold``, else ``None``.
 
-    The size rule is a row count: at most ``threshold // row_bytes``
-    rows. One job collects ``max_rows + 1`` rows, so an input over the
-    bound is never pulled whole; a threshold ≤ 0 runs nothing. The
-    graph fixpoints and residual IVF-PQ training choose between their
-    driver kernels and their Spark loops by it. A caller whose fallback
-    reuses ``df``
-    passes it lazily checkpointed, so the collect's job materializes it
-    for the fallback instead of computing it twice.
+    This is the engine's one rule for every choice between a plan sized
+    for the driver and one sized for the cluster: data size in bytes
+    against the threshold. ``row_bytes`` is the caller's bytes per row;
+    a site whose collected table comes back as a ``local_frame`` for a
+    join passes Spark's own size estimate of the row (8 B of row
+    overhead plus the columns' default sizes), which is what the
+    LocalRelation's stats will say, so the planner broadcasts it
+    without a hint. At most ``threshold // row_bytes`` rows: one job
+    collects ``max_rows + 1`` rows, so an input over the bound is never
+    pulled whole; a threshold ≤ 0 runs nothing and forces every
+    over-threshold path. A caller whose fallback reuses ``df`` passes
+    it lazily checkpointed, so the collect's job materializes it for
+    the fallback instead of computing it twice.
+
+    The sites that measure their size with it, and their fallbacks:
+    ``extract.relation_closure_table`` (the semi-naive Spark loop, its
+    result under a SHUFFLE_HASH hint), ``extract._member_index`` (the
+    checkpoint under a SHUFFLE_HASH hint),
+    ``pip.points_in_polygons_bucketed`` (the polygon-tile table without
+    rings; the rings ride the tile rows under a SHUFFLE_HASH hint),
+    ``dedup.components_from_pairs`` (the label-propagation loop) and
+    ``similarity._train_index`` (one ``mapInArrow`` job per Lloyd
+    pass). Sites whose size is known without a collect compare it with
+    ``broadcast_threshold``: ``knn.knn_kring`` (k·Q result rows;
+    executor-side accumulation) and the driver-built closure in
+    ``relation_closure_table`` (a SHUFFLE_HASH hint).
     """
     threshold = broadcast_threshold(df.sparkSession)
     if threshold <= 0:

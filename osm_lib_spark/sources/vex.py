@@ -49,6 +49,7 @@ decode ~2.2M entities/s (both were ~0.3-0.7M/s scalar).
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 from typing import Iterator
@@ -167,14 +168,19 @@ class _Writer:
 
 def scan_vex_blocks(path: str) -> list[tuple[str, int, int, str, int, int]]:
     """Index block payload offsets without reading payloads:
-    (path, offset, deflated_size, kind, n_entities, seq)."""
+    (path, offset, deflated_size, kind, n_entities, seq). A file cut
+    inside a 12-byte block header or a block payload raises
+    ``ValueError``."""
     rows = []
     seq = 0
+    size = os.path.getsize(path)
     with open(path, "rb") as f:
         while True:
             head = f.read(12)
-            if len(head) < 12:
+            if not head:
                 break
+            if len(head) < 12:
+                raise ValueError(f"{path}: truncated VEX block header at byte {f.tell() - len(head)}")
             kind = _TYPES.get(head[:4])
             if kind is None:
                 raise ValueError(f"unrecognized VEX block type {head[:4]!r}")
@@ -182,6 +188,10 @@ def scan_vex_blocks(path: str) -> list[tuple[str, int, int, str, int, int]]:
             if not (0 <= n_bytes <= VEX_BUFFER_SIZE and 0 <= n_entities <= VEX_BUFFER_SIZE):
                 raise ValueError("impossible VEX block header — corrupted file")
             offset = f.tell()
+            if offset + n_bytes > size:
+                raise ValueError(
+                    f"{path}: {kind} block at byte {offset} runs {offset + n_bytes - size} bytes past EOF"
+                )
             rows.append((path, offset, n_bytes, kind, n_entities, seq))
             seq += 1
             f.seek(offset + n_bytes)
@@ -190,19 +200,35 @@ def scan_vex_blocks(path: str) -> list[tuple[str, int, int, str, int, int]]:
 
 def _uvarint_at(buf: bytes, pos: int) -> int:
     """Scalar varint value at a known-genuine start (navigation counts
-    only — bulk values decode vectorized)."""
-    b = buf[pos]
-    if b < 0x80:
-        return b
-    result = b & 0x7F
-    shift = 7
-    while True:
-        pos += 1
+    only — bulk values decode vectorized). A varint that runs past the
+    buffer raises ``ValueError``."""
+    try:
         b = buf[pos]
-        result |= (b & 0x7F) << shift
         if b < 0x80:
-            return result
-        shift += 7
+            return b
+        result = b & 0x7F
+        shift = 7
+        while True:
+            pos += 1
+            b = buf[pos]
+            result |= (b & 0x7F) << shift
+            if b < 0x80:
+                return result
+            shift += 7
+    except IndexError:
+        raise ValueError(f"truncated varint at byte {pos} of a {len(buf)}-byte VEX block") from None
+
+
+def _inflate_block(deflated: bytes) -> bytes:
+    """A block's deflated payload → its bytes; corrupt zlib data or a
+    block past the reader's 1 MiB buffer raises ``ValueError``."""
+    try:
+        payload = zlib.decompress(deflated)
+    except zlib.error as exc:
+        raise ValueError(f"corrupt VEX block zlib data: {exc}") from None
+    if len(payload) > VEX_BUFFER_SIZE:
+        raise ValueError("VEX block inflates past the 1 MiB cap")
+    return payload
 
 
 def _gather_varints(arr: np.ndarray, starts: list, ends: list) -> np.ndarray:
@@ -655,9 +681,7 @@ def read_vex(spark, path: str, blobs_per_task: int = 16):
             for r in batch.to_pylist():
                 with open(r["path"], "rb") as f:
                     f.seek(int(r["offset"]))
-                    payload = zlib.decompress(f.read(int(r["size"])))
-                if len(payload) > VEX_BUFFER_SIZE:
-                    raise ValueError("VEX block inflates past the 1 MiB cap")
+                    payload = _inflate_block(f.read(int(r["size"])))
                 yield decode_vex_block_arrow(r["kind"], int(r["n_entities"]), payload)
 
     return idx.mapInArrow(decode, schema=ENTITY_SCHEMA)

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -14,6 +15,19 @@ from osm_lib_spark.sources.generator import ensure_fixture  # noqa: E402
 def spark():
     s = get_spark("osm_lib_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@contextmanager
+def threshold(spark, value):
+    """Run the block with ``spark.sql.autoBroadcastJoinThreshold`` at
+    ``value``: ``"-1"`` forces every over-threshold path."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
 
 @pytest.fixture(scope="session")

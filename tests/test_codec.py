@@ -371,3 +371,46 @@ def test_pbf_framing_fails_loudly(tmp_path):
         list(_fields(short))
     with pytest.raises(ValueError, match="zlib"):
         _inflate_blob(_enc_field_varint(2, 10) + _enc_field_bytes(3, b"not zlib data"))
+
+
+def test_vex_framing_fails_loudly(spark, tmp_path):
+    """A VEX file cut inside a 12-byte block header or a block payload,
+    a varint that runs past its block and bad zlib data each raise
+    ValueError, never a silently shorter file, IndexError or
+    zlib.error."""
+    import pytest
+
+    from osm_lib_spark.sources.vex import (
+        _frame_block,
+        _inflate_block,
+        _uvarint_at,
+        read_vex,
+        scan_vex_blocks,
+    )
+
+    framed = _frame_block("node", 3, bytes(range(64)))
+    whole = tmp_path / "whole.vex"
+    whole.write_bytes(framed + framed)
+    rows = scan_vex_blocks(str(whole))
+    assert [(off, size, kind, n, seq) for _, off, size, kind, n, seq in rows] == [
+        (12, len(framed) - 12, "node", 3, 0),
+        (len(framed) + 12, len(framed) - 12, "node", 3, 1),
+    ]
+    for cut, what in ((4, "header"), (11, "header"), (len(framed) + 6, "header"), (len(framed) - 1, "EOF")):
+        path = tmp_path / f"cut{cut}.vex"
+        path.write_bytes((framed + framed)[:cut])
+        with pytest.raises(ValueError, match=what):
+            scan_vex_blocks(str(path))
+    with pytest.raises(ValueError, match="EOF"):
+        read_vex(spark, str(tmp_path / f"cut{len(framed) - 1}.vex"))
+
+    with pytest.raises(ValueError, match="varint"):
+        _uvarint_at(b"\x80\x80", 0)
+    with pytest.raises(ValueError, match="varint"):
+        _uvarint_at(b"\x01", 1)
+    assert _uvarint_at(b"\x80\x01", 0) == 128
+    with pytest.raises(ValueError, match="zlib"):
+        _inflate_block(b"not zlib data")
+    with pytest.raises(ValueError, match="zlib"):
+        _inflate_block(framed[12:-1])
+    assert _inflate_block(framed[12:]) == bytes(range(64))

@@ -7,10 +7,10 @@ import numpy as np
 import pytest
 
 from osm_lib_spark.operators.knn import knn_brute_force, knn_kring
-from osm_lib_spark.operators.pip import points_in_polygons
+from osm_lib_spark.operators.pip import grid_polygons, points_in_polygons_bucketed, polygons_df
 from osm_lib_spark.sources.oracle import ray_cast_contains
 from osm_lib_spark.sources.span_codec import parse_nodes
-from tests.conftest import assert_df_equal, golden
+from tests.conftest import assert_df_equal, golden, threshold
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +44,7 @@ def test_knn_brute_force_vs_golden(nodes_xs, fixture_xs, meta_xs):
     assert_df_equal(got, golden(fixture_xs, "knn"), sort_cols=["query_id", "rank"])
 
 
-def test_knn_kring_matches_brute_force(nodes_xs, meta_xs):
+def test_knn_kring_matches_brute_force(spark, nodes_xs, meta_xs):
     # ALL query points — includes the near-polar and open-ocean ones
     # whose ring bound degrades to 0 (conservative full expansion)
     pts = [tuple(p) for p in meta_xs["knn_points"]]
@@ -74,14 +74,15 @@ def test_knn_kring_matches_brute_force(nodes_xs, meta_xs):
     )
     pd.testing.assert_frame_equal(brute, ring_r0, check_dtype=False)
 
-    # executor-side accumulation path (forced: driver_collect_max_q=0)
-    # must be exactly equal too — same rounds, different result plumbing
-    ring_exec = (
-        knn_kring(nodes_xs, pts, k=10, driver_collect_max_q=0)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
+    # executor-side accumulation path (forced: threshold -1) must be
+    # exactly equal too — same rounds, different result plumbing
+    with threshold(spark, "-1"):
+        ring_exec = (
+            knn_kring(nodes_xs, pts, k=10)
+            .toPandas()
+            .sort_values(["query_id", "rank"])
+            .reset_index(drop=True)
+        )
     pd.testing.assert_frame_equal(brute, ring_exec, check_dtype=False)
 
 
@@ -177,42 +178,33 @@ def test_knn_kring_meridian_edge_case(spark):
     assert ring.iloc[0].node_id == 1  # the outside node won
 
 
-def test_pip_vs_golden(nodes_xs, fixture_xs, meta_xs):
+def test_pip_vs_golden(spark, nodes_xs, fixture_xs, meta_xs):
+    """The fixture's hand-shaped polygons (one with a hole) as a
+    polygons_df equal the pandas golden."""
     polys = {
         int(pid): [np.array(r, dtype=np.float64) for r in rings]
         for pid, rings in meta_xs["polygons"].items()
     }
-    got = points_in_polygons(nodes_xs, polys)
+    got = points_in_polygons_bucketed(nodes_xs, polygons_df(spark, polys))
     assert_df_equal(got, golden(fixture_xs, "pip"), sort_cols=["poly_id", "node_id"])
 
 
 def test_pip_bucketed_vs_golden_and_broadcast(nodes_xs, fixture_xs, meta_xs, spark):
-    """The bucketed scale path must equal the independent pandas golden
-    on the 500-grid-polygon set AND equal the broadcast path on the
-    fixture's hand-shaped polygons (same results, no closure capture)."""
-    from osm_lib_spark.operators.pip import (
-        grid_polygons,
-        points_in_polygons_bucketed,
-        polygons_df,
-    )
-
+    """The 500 grid polygons equal the independent pandas golden on both
+    sides of spark.sql.autoBroadcastJoinThreshold: the broadcast polygon
+    tile table with the rings in a broadcast variable, and (threshold
+    -1) the rings riding the tile rows into a shuffled hash join. Both
+    plans are tile equi-joins."""
     centers = [(float(p[1]), float(p[2])) for p in meta_xs["knn_points"][:2]]
     many = polygons_df(spark, grid_polygons(centers))
-    got = points_in_polygons_bucketed(nodes_xs, many)
-    assert_df_equal(got, golden(fixture_xs, "pip_many"), sort_cols=["poly_id", "node_id"])
-    # the plan is a tile equi-join, not a closure loop: the join keys
-    # appear in the physical plan and no polygon list rides the UDF
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "xtile" in plan and "ytile" in plan
-
-    # path equivalence on the broadcast fixture polygons
-    polys = {
-        int(pid): [np.array(r, dtype=np.float64) for r in rings]
-        for pid, rings in meta_xs["polygons"].items()
-    }
-    bc = points_in_polygons(nodes_xs, polys)
-    bk = points_in_polygons_bucketed(nodes_xs, polygons_df(spark, polys))
-    assert_df_equal(bk, bc.toPandas(), sort_cols=["poly_id", "node_id"])
+    expected = golden(fixture_xs, "pip_many")
+    session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for value, join in ((session, "BroadcastHashJoin"), ("-1", "ShuffledHashJoin")):
+        with threshold(spark, value):
+            got = points_in_polygons_bucketed(nodes_xs, many)
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert_df_equal(got, expected, sort_cols=["poly_id", "node_id"])
+        assert join in plan and "xtile" in plan and "ytile" in plan, value
 
 
 def test_pip_bucketed_rejects_antimeridian_wrap(spark):
@@ -268,19 +260,21 @@ def test_knn_kring_releases_caches_on_error(spark, monkeypatch):
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     before = persisted()
-    # driver_collect_max_q=0: executor-side mode, which caches coords
-    # and persists each round's top-k before the bound check raises
-    with pytest.raises(RuntimeError, match="round failed"):
-        knn_kring(nodes, [(0, 10.0, 20.0)], k=10, driver_collect_max_q=0)
+    # threshold -1: executor-side mode, which caches coords and
+    # persists each round's top-k before the bound check raises
+    with threshold(spark, "-1"), pytest.raises(RuntimeError, match="round failed"):
+        knn_kring(nodes, [(0, 10.0, 20.0)], k=10)
     assert persisted() <= before
 
 
-def test_knn_kring_coarse_cell_path_q100(nodes_xs, meta_xs):
-    """Large-Q path: ≥100 queries with strip_switch forced low so EVERY
+def test_knn_kring_coarse_cell_path_q100(nodes_xs, meta_xs, monkeypatch):
+    """Large-Q path: ≥100 queries with STRIP_SWITCH_ROWS forced low so EVERY
     round uses the coarse-cell ancestor equi-join — results must equal
     brute force exactly (the coarse cells cover a superset of each
     ring, so the termination bound stays valid)."""
     import pandas as pd
+
+    import osm_lib_spark.operators.knn as knn
 
     base = [tuple(p) for p in meta_xs["knn_points"]]
     # fan 100+ queries around the fixture's points (deterministic jitter)
@@ -297,12 +291,14 @@ def test_knn_kring_coarse_cell_path_q100(nodes_xs, meta_xs):
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
     )
-    ring = (
-        knn_kring(nodes_xs, pts, k=5, strip_switch=1)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
+    with monkeypatch.context() as m:
+        m.setattr(knn, "STRIP_SWITCH_ROWS", 1)
+        ring = (
+            knn_kring(nodes_xs, pts, k=5)
+            .toPandas()
+            .sort_values(["query_id", "rank"])
+            .reset_index(drop=True)
+        )
     pd.testing.assert_frame_equal(brute, ring, check_dtype=False)
     # and the default threshold (mixed strip/coarse rounds) agrees too
     ring_default = (

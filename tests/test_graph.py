@@ -3,24 +3,12 @@
 they replace for small inputs (threshold -1)."""
 
 import tempfile
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
 
 from osm_lib_spark.operators.graph import min_label_components, upward_closure
-
-THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
-
-
-@contextmanager
-def threshold(spark, value):
-    saved = spark.conf.get(THRESHOLD)
-    spark.conf.set(THRESHOLD, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(THRESHOLD, saved)
+from tests.conftest import threshold
 
 
 def both_paths(spark, fn):
@@ -77,8 +65,8 @@ def _rows(df):
 
 def test_relation_closure_both_paths(spark, docs_xs):
     """The sf-xs closure and a hand-built one (a depth-3 chain, a
-    2-cycle, a self-member) are row-equal on both paths, with the same
-    exact row count; the (r, r) rows come from cycles only."""
+    2-cycle, a self-member) are row-equal on both paths; the (r, r)
+    rows come from cycles only."""
     from osm_lib_spark.operators.extract import relation_closure_table
     from osm_lib_spark.sources.span_codec import parse_relations
 
@@ -97,9 +85,8 @@ def test_relation_closure_both_paths(spark, docs_xs):
         "id long, members array<struct<type: string, member_id: long, role: string>>",
     )
     for relations in (parse_relations(docs_xs), hand):
-        (k_df, k_rows), (l_df, l_rows) = both_paths(spark, lambda: relation_closure_table(relations))
-        assert _rows(k_df) == _rows(l_df)
-        assert k_rows == l_rows == len(_rows(k_df)) > 0
+        k_df, l_df = both_paths(spark, lambda: relation_closure_table(relations))
+        assert _rows(k_df) == _rows(l_df) != []
     assert _rows(k_df) == [
         (2, 1), (3, 1), (3, 2), (4, 1), (4, 2), (4, 3),
         (10, 10), (10, 11), (11, 10), (11, 11), (20, 20),
@@ -189,6 +176,6 @@ def test_ragged_embeddings_rejected_on_both_paths(spark):
         [(i, rng.standard_normal(8 if i == 7 else 16).astype(np.float32).tolist()) for i in range(40)],
         "vec_id long, embedding array<float>",
     )
-    for value in (spark.conf.get(THRESHOLD), "-1"):
+    for value in (spark.conf.get("spark.sql.autoBroadcastJoinThreshold"), "-1"):
         with threshold(spark, value), pytest.raises(Exception, match="embeddings of one length"):
             ivf_pq_topk(ragged, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.extract import (
-    CLOSURE_ROW_BYTES,
+    PAIR_ROW_BYTES,
     bbox_extract_batch,
     prepare_extract_context,
     ways_in_tile_range,
@@ -20,7 +20,7 @@ from osm_lib_spark.operators.extract import (
 from osm_lib_spark.operators.indexes import build_way_tiles, write_way_tiles_partitioned
 from osm_lib_spark.operators.raster import rasterize_nodes, vectorize_raster
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
-from tests.conftest import golden
+from tests.conftest import golden, threshold
 
 
 def _explain_str(df) -> str:
@@ -86,32 +86,30 @@ def test_parse_path_is_codegen(spark, docs_xs):
 
 def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
     """The bbox dimension table must broadcast (never shuffle), and the
-    closure join must follow the closure's exact size: a broadcast hash
-    join under spark.sql.autoBroadcastJoinThreshold, a shuffled hash
-    join with the threshold set below it — never a sort-merge join or a
-    cartesian product."""
+    per-dataset closure and member-index joins follow the size rule. At
+    the session threshold all three are LocalRelations without a hint,
+    and the planner broadcasts them. A context built under a threshold
+    below the closure's edge bytes hash-joins them under SHUFFLE_HASH
+    hints. Neither plan has a sort-merge join or a cartesian product."""
     import re
 
     nodes, ways, rels = parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs)
     boxes = [tuple(meta_xs["bboxes"]["dense"]), tuple(meta_xs["bboxes"]["wide"])]
-    ctx = prepare_extract_context(rels)
-    assert ctx.closure_rows == ctx.rel_closure.count() > 0
-    assert "LocalRelation" in ctx.rel_closure._jdf.queryExecution().analyzed().toString()
+    n_edges = (
+        rels.select(F.explode("members").alias("m")).where(F.col("m.type") == "RELATION").count()
+    )
     # the lazy checkpoints plan their subtrees when the DAG is built;
     # the SQL status store keeps those plans
     store = spark._jsparkSession.sharedState().statusStore()
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key)
-    for threshold, closure_join in (
-        (saved, "BroadcastHashJoin"),
-        (str(ctx.closure_rows * CLOSURE_ROW_BYTES - 1), "ShuffledHashJoin"),
+    session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for value, join in (
+        (session, "BroadcastHashJoin"),
+        (str(n_edges * PAIR_ROW_BYTES - 1), "ShuffledHashJoin"),
     ):
-        n_before = store.executionsList().size()
-        spark.conf.set(key, threshold)
-        try:
+        with threshold(spark, value):
+            ctx = prepare_extract_context(rels)
+            n_before = store.executionsList().size()
             plan = _explain_str(bbox_extract_batch(nodes, ways, rels, boxes, ctx=ctx))
-        finally:
-            spark.conf.set(key, saved)
         execs = store.executionsList()
         checkpoints = [
             execs.apply(i).physicalPlanDescription() for i in range(n_before, execs.size())
@@ -119,8 +117,12 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
         assert any("BroadcastNestedLoopJoin" in p for p in checkpoints)
         assert not any("CartesianProduct" in p for p in checkpoints)
         joins = set(re.findall(r"\b(BroadcastHashJoin|ShuffledHashJoin)\b", plan))
-        assert joins == {closure_join}
+        assert joins == {join}, value
         assert not re.search(r"SortMergeJoin|CartesianProduct", plan)
+        for frame in (ctx.rel_by_node, ctx.rel_by_way, ctx.rel_closure):
+            analyzed = frame._jdf.queryExecution().analyzed().toString()
+            local = "LocalRelation" in analyzed and "ResolvedHint" not in analyzed
+            assert local == (join == "BroadcastHashJoin"), analyzed
 
 
 def test_rasterize_matches_way_tiles_math(spark, docs_xs, fixture_xs):
@@ -288,3 +290,62 @@ def test_driver_frames_are_local_relations(spark, docs_xs, tmp_path):
     for name, df in frames.items():
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed, name
+
+
+# Every localCheckpoint, F.broadcast and .hint( call in osm_lib_spark/,
+# by (module, enclosing function, call) → number of calls.
+CHECKPOINT_AND_HINT_SITES = {
+    ("operators/dedup.py", "_components", "localCheckpoint"): 1,
+    ("operators/dedup.py", "_propagate_labels", "localCheckpoint"): 3,
+    ("operators/dedup.py", "_verify_pairs", "localCheckpoint"): 4,
+    ("operators/dedup.py", "minhash_signatures", "localCheckpoint"): 1,
+    ("operators/enrich.py", "enrich_tags", "broadcast"): 1,
+    ("operators/extract.py", "_closure_loop", "localCheckpoint"): 2,
+    ("operators/extract.py", "_member_index", "hint"): 1,
+    ("operators/extract.py", "_member_index", "localCheckpoint"): 1,
+    ("operators/extract.py", "bbox_extract_batch", "hint"): 1,
+    ("operators/extract.py", "bbox_extract_batch", "localCheckpoint"): 3,
+    ("operators/extract.py", "relation_closure_table", "hint"): 1,
+    ("operators/extract.py", "relation_closure_table", "localCheckpoint"): 1,
+    ("operators/knn.py", "knn_kring", "localCheckpoint"): 1,
+    ("operators/pip.py", "points_in_polygons_bucketed", "hint"): 1,
+    ("operators/similarity.py", "_adc_topk", "broadcast"): 1,
+    ("operators/similarity.py", "_train_index", "localCheckpoint"): 1,
+    ("operators/similarity.py", "cosine_topk", "broadcast"): 1,
+    ("streaming/replication.py", "apply_plan", "localCheckpoint"): 1,
+}
+
+
+def test_checkpoint_and_hint_sites_are_listed():
+    """The engine's checkpoint and join-hint calls are exactly the ones
+    in CHECKPOINT_AND_HINT_SITES: a new site fails this test until it is
+    listed there, and a removed one until it is struck, so their number
+    is tracked."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "osm_lib_spark"
+    sites: Counter = Counter()
+
+    class Sites(ast.NodeVisitor):
+        def __init__(self, module):
+            self.module, self.scope = module, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and (
+                f.attr in ("localCheckpoint", "hint")
+                or (f.attr == "broadcast" and isinstance(f.value, ast.Name) and f.value.id == "F")
+            ):
+                sites[(self.module, self.scope[-1], f.attr)] += 1
+            self.generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        Sites(path.relative_to(root).as_posix()).visit(ast.parse(path.read_text()))
+    assert dict(sites) == CHECKPOINT_AND_HINT_SITES
