@@ -62,7 +62,6 @@ NUM_BANDS = 8  # 4 rows per band
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
 MAX_COMPONENT_ITERATIONS = 50  # label-propagation rounds (Spark path only)
-PAIR_ROW_BYTES = 16  # (doc_a, doc_b): two longs
 
 
 def _perm_coeffs(num_perm: int = NUM_PERM, seed: int = 42) -> tuple[list[int], list[int]]:
@@ -298,7 +297,7 @@ def _components(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     ``documents``."""
     # lazy checkpoint: the loop reuses what the bounded collect materialized
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    table = collect_bounded(pairs, PAIR_ROW_BYTES)
+    table = collect_bounded(pairs)
     if table is not None:
         doc_id, comp = min_label_components(
             table.column(0).to_numpy(zero_copy_only=False),

@@ -38,13 +38,10 @@ from pyspark.sql import functions as F
 from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.graph import upward_closure
 from osm_lib_spark.operators.indexes import build_way_tiles
-from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 
 MAX_CLOSURE_ITERATIONS = 50
-# Spark's size estimate of a (long, long) row: 8 B row overhead + two
-# longs. The closure, its edges and the member indexes are all such
-# pairs, and a LocalRelation of n of them has stats of n * 24 B.
-PAIR_ROW_BYTES = 24
+CLOSURE_DDL = "relation_id long, ancestor_id long"
 
 
 def relation_closure_table(relations: DataFrame) -> DataFrame:
@@ -79,7 +76,7 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
             F.col("relation_id").alias("ancestor_id"),
         )
     ).localCheckpoint(eager=False)
-    table = collect_bounded(edges, PAIR_ROW_BYTES)
+    table = collect_bounded(edges)
     if table is None:
         closure = _closure_loop(edges)
     else:
@@ -87,12 +84,11 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
             table.column(0).to_numpy(zero_copy_only=False),
             table.column(1).to_numpy(zero_copy_only=False),
         )
+        spark = relations.sparkSession
         closure = local_frame(
-            relations.sparkSession,
-            pa.table([child, ancestor], names=["relation_id", "ancestor_id"]),
-            "relation_id long, ancestor_id long",
+            spark, pa.table([child, ancestor], names=["relation_id", "ancestor_id"]), CLOSURE_DDL
         )
-        if len(child) * PAIR_ROW_BYTES <= broadcast_threshold(relations.sparkSession):
+        if len(child) * row_bytes(spark, CLOSURE_DDL) <= broadcast_threshold(spark):
             return closure
     return closure.hint("SHUFFLE_HASH")
 
@@ -130,7 +126,7 @@ def _member_index(index: DataFrame) -> DataFrame:
     an index over the threshold is not computed twice (at a threshold
     ≤ 0 no collect runs, and the first extract materializes it)."""
     index = index.localCheckpoint(eager=False)
-    table = collect_bounded(index, PAIR_ROW_BYTES)
+    table = collect_bounded(index)
     if table is None:
         return index.hint("SHUFFLE_HASH")
     return local_frame(index.sparkSession, table, "member_id long, relation_id long")

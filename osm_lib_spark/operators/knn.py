@@ -20,9 +20,10 @@ Two strategies, both exact:
   ≤ 4/3 · (2R+1)² tiles total (geometric series). Where the results
   accumulate follows the size rule of every driver-or-cluster choice
   in the engine (``session.collect_bounded``): while the k·Q result
-  rows fit under ``spark.sql.autoBroadcastJoinThreshold`` (~280k
-  queries at k=10 and the 64 MiB session default) each round collects
-  its own top-k rows on the driver; past it every result slice stays
+  rows fit under ``spark.sql.autoBroadcastJoinThreshold`` (32 B a row
+  as Spark sizes it: ~210k queries at k=10 and the 64 MiB session
+  default) each round collects its own top-k rows on the driver as one
+  Arrow table; past it every result slice stays
   persisted ON THE EXECUTORS — the driver exchanges only Q control
   rows per round (stats up, satisfied ids down) and the returned
   DataFrame is the union of the cached round frames, so an offline
@@ -53,9 +54,11 @@ from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m
 from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y
-from osm_lib_spark.session import broadcast_threshold, local_frame
+from osm_lib_spark.session import broadcast_threshold, local_frame, row_bytes
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
 def _nodes_with_coords(nodes: DataFrame) -> DataFrame:
@@ -174,9 +177,10 @@ def _frontier_strips(spark, frontier: list[dict]) -> DataFrame:
 
 
 STRIP_SWITCH_ROWS = 8192  # strip rows above which a round joins on coarse cells
-# Spark's size estimate of a (query_id int, rank int, node_id long)
-# result row: 8 B row overhead + 16 B of columns
-RESULT_ROW_BYTES = 24
+# batches above this many queries cache an ad-hoc tiled projection
+CACHE_MIN_QUERIES = 1024
+# one round's top-k row as the driver collects it
+RANKED_DDL = "query_id int, rank int, node_id long, dist_m double"
 
 
 def _coarse_cell_candidates(spark, probe: DataFrame, frontier: list[dict]) -> DataFrame:
@@ -328,16 +332,18 @@ def knn_kring(
     serving layers with table stats) should pass ``est_n_nodes``.
 
     Result accumulation follows the engine's one size rule: while the
-    k·Q result rows (``RESULT_ROW_BYTES`` each) fit under
-    ``spark.sql.autoBroadcastJoinThreshold``, each round collects its
-    top-k directly and the result is a LocalRelation — skipping the
-    executor-side bookkeeping saves ~2 stages per round (measured q5
-    1.64s vs 2.6s at sf0.1). Past it (or at a threshold ≤ 0) every
+    k·Q result rows (``RANKED_DDL``, sized by ``session.row_bytes``)
+    fit under ``spark.sql.autoBroadcastJoinThreshold``, each round
+    collects its top-k as one Arrow table and the result is a
+    LocalRelation — skipping the executor-side bookkeeping saves ~2
+    stages per round (measured q5 1.64s vs 2.6s at sf0.1). Past it (or
+    at a threshold ≤ 0) every
     result slice stays persisted ON THE EXECUTORS (the driver sees only
     Q control rows each way: stats up, satisfied ids down) and the
     returned DataFrame is the union of the cached round frames — an
     offline Q=10⁶ batch never funnels k·Q result rows through one
-    process.
+    process. Either way, a batch of more than ``CACHE_MIN_QUERIES``
+    queries without a ``tiled`` store caches its own tiled projection.
     """
     if nodes is None and tiled is None:
         raise ValueError("knn_kring needs nodes or a tiled store")
@@ -351,13 +357,15 @@ def knn_kring(
             initial_ring = min(max(int(math.ceil((span - 1.0) / 2.0)), 1), 64)
         else:
             initial_ring = 1
-    collect_mode = len(query_points) * k * RESULT_ROW_BYTES <= broadcast_threshold(spark)
+    collect_mode = len(query_points) * k * row_bytes(spark, RANKED_DDL) <= broadcast_threshold(
+        spark
+    )
     # Cache the ad-hoc tiled projection only for LARGE batches: a small
     # interactive batch runs 1-3 rounds, and materializing a full node
     # cache costs more than the rounds' re-derivation of the (cheap,
     # columnar) tile columns from the upstream table. Serving layers
     # pass a persisted ``tiled=`` store and skip this entirely.
-    own_cache = tiled is None and not collect_mode
+    own_cache = tiled is None and len(query_points) > CACHE_MIN_QUERIES
     coords = tiled if tiled is not None else tiled_node_store(nodes)
     if own_cache:
         coords = coords.cache()
@@ -374,7 +382,7 @@ def knn_kring(
         for qid, qlat, qlon in query_points
     ]
     parts: list[DataFrame] = []
-    parts_rows: list[tuple[int, int, int]] = []
+    tables: list[pa.Table] = []  # satisfied top-k rows (small-Q mode)
     round_frames: list[DataFrame] = []  # persisted per-round top-k (large-Q mode)
 
     # the finally releases every persisted round frame (and the own
@@ -425,16 +433,19 @@ def knn_kring(
                     "dist_m",
                 )
             )
-            rows_by_query: dict[int, list] = {}
             if collect_mode:
                 # small batch: ONE job, the queries' own ≤ k·|frontier|-row
-                # top-k comes to the driver directly
-                for r in ranked.collect():
-                    rows_by_query.setdefault(r.query_id, []).append(r)
-                stats = {
-                    qid: (len(rs), max(r.dist_m for r in rs))
-                    for qid, rs in rows_by_query.items()
-                }
+                # top-k comes to the driver directly as one Arrow table
+                top = ranked.toArrow()
+                agg = top.group_by("query_id").aggregate(
+                    [("rank", "count"), ("dist_m", "max")]
+                )
+                stats = dict(
+                    zip(
+                        agg["query_id"].to_pylist(),
+                        zip(agg["rank_count"].to_pylist(), agg["dist_m_max"].to_pylist()),
+                    )
+                )
             else:
                 # large batch: the top-k PERSISTS executor-side and the
                 # stats aggregate is the one materializing action — the
@@ -472,11 +483,8 @@ def knn_kring(
                     f["radius"] = min(f["radius"] * growth, NTILES)
                     next_frontier.append(f)
             if satisfied_ids and collect_mode:
-                for qid in satisfied_ids:
-                    parts_rows.extend(
-                        (r.query_id, r.rank, r.node_id)
-                        for r in sorted(rows_by_query.get(qid, []), key=lambda r: r.rank)
-                    )
+                done = pc.is_in(top["query_id"], value_set=pa.array(satisfied_ids, pa.int32()))
+                tables.append(top.filter(done).select(["query_id", "rank", "node_id"]))
             elif satisfied_ids:
                 # slice this round's satisfied results out of the cached
                 # frame, executor-side, by a semi-join on a local_frame of
@@ -486,10 +494,9 @@ def knn_kring(
                 parts.append(sliced.select("query_id", "rank", "node_id"))
             frontier = next_frontier
 
-        if collect_mode:
-            return local_frame(spark, parts_rows, "query_id int, rank int, node_id long")
-        if not parts:
-            return local_frame(spark, [], "query_id int, rank int, node_id long")
+        if collect_mode or not parts:
+            rows = pa.concat_tables(tables) if tables else []
+            return local_frame(spark, rows, "query_id int, rank int, node_id long")
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

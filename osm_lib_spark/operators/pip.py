@@ -89,13 +89,39 @@ def _contains_rings_udf(
     return _contains_by_polygon(poly_id, lat, lon, lambda i: _ring_arrays(rings.iloc[i]))
 
 
-# Spark's size estimate of a polygon-tile row without its rings: 8 B row
-# overhead + poly_id long, xtile/ytile ints and four double bbox bounds
-TILE_ROW_BYTES = 56
 TILE_DDL = (
     "poly_id long, xtile int, ytile int, "
     "lat_min double, lat_max double, lon_min double, lon_max double"
 )
+
+
+def _driver_rings(polygons: DataFrame) -> dict[int, list[np.ndarray]] | None:
+    """poly_id → rings as (V, 2) float64 arrays, collected through
+    ``collect_bounded`` one row per ring VERTEX, so the ring payload is
+    measured by its size, not by its polygon count; ``None`` when the
+    vertices are over ``spark.sql.autoBroadcastJoinThreshold``."""
+    verts = polygons.select("poly_id", F.posexplode("rings").alias("ring", "vs")).select(
+        "poly_id", "ring", F.posexplode("vs").alias("vertex", "v")
+    )
+    table = collect_bounded(
+        verts.select(
+            "poly_id", "ring", "vertex", F.col("v")[0].alias("lat"), F.col("v")[1].alias("lon")
+        )
+    )
+    if table is None:
+        return None
+    if not table.num_rows:
+        return {}
+    pid, ring, vertex, lat, lon = (c.to_numpy(zero_copy_only=False) for c in table.columns)
+    order = np.lexsort((vertex, ring, pid))
+    pid, ring = pid[order], ring[order]
+    starts = np.flatnonzero((np.diff(pid) != 0) | (np.diff(ring) != 0)) + 1
+    rings_of: dict[int, list[np.ndarray]] = {}
+    for p, latlon in zip(
+        pid[np.r_[0, starts]], np.split(np.column_stack([lat[order], lon[order]]), starts)
+    ):
+        rings_of.setdefault(int(p), []).append(latlon)
+    return rings_of
 
 
 def points_in_polygons_bucketed(
@@ -113,13 +139,16 @@ def points_in_polygons_bucketed(
        polygon-tile table on the tile key, the polygon side always the
        build side. The size rule of every driver-or-cluster choice
        picks how (``session.collect_bounded``): when the tile table
-       without rings fits under ``spark.sql.autoBroadcastJoinThreshold``
-       it is collected once into a LocalRelation the planner broadcasts
-       by its exact size (no point shuffles at all), and the ring
-       geometry ships ONCE PER EXECUTOR as a Spark broadcast variable —
-       at 1M nodes × 500 polygons the per-row rings payload through
-       Arrow was the dominant cost (measured 6.9s, PLANS §14). Over the
-       threshold the rings ride the polygon-tile rows under a
+       without rings AND the ring vertices (``_driver_rings``, 40 B a
+       vertex) each fit under ``spark.sql.autoBroadcastJoinThreshold``,
+       the tile table is collected once into a LocalRelation the
+       planner broadcasts by its exact size (no point shuffles at all),
+       and the ring geometry ships ONCE PER EXECUTOR as a Spark
+       broadcast variable — at 1M nodes × 500 polygons the per-row
+       rings payload through Arrow was the dominant cost (measured
+       6.9s, PLANS §14). If either is over the threshold (a coastline
+       with 10⁶ vertices over a few tiles is over on its vertices
+       alone), the rings ride the polygon-tile rows under a
        SHUFFLE_HASH hint (both sides hash-exchange on uniform tile
        keys); left to the planner, a polygon side without stats can
        invert the join and broadcast the corpus;
@@ -203,27 +232,21 @@ def points_in_polygons_bucketed(
         clamp(tile_x_col(F.col("lon"), zoom)).alias("xtile"),
         clamp(tile_y_col(F.col("lat"), zoom)).alias("ytile"),
     )
-    tiles = collect_bounded(ptiles.drop("rings"), TILE_ROW_BYTES)
-    if tiles is None:
+    tiles = collect_bounded(ptiles.drop("rings"))
+    rings_of = None if tiles is None else _driver_rings(polygons)
+    if rings_of is None:
         cand = pts.join(ptiles.hint("SHUFFLE_HASH"), ["xtile", "ytile"])
         contains = _contains_rings_udf(
             F.col("poly_id"), F.col("lat"), F.col("lon"), F.col("rings")
         )
     else:
         spark = polygons.sparkSession
-        bc = spark.sparkContext.broadcast(
-            {
-                int(r["poly_id"]): _ring_arrays(r["rings"])
-                for r in polygons.select("poly_id", "rings").collect()
-            }
-        )
+        bc = spark.sparkContext.broadcast(rings_of)
 
         @F.pandas_udf(T.BooleanType())
         def contains_bc(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-            rings_by_pid = bc.value
-            return _contains_by_polygon(
-                poly_id, lat, lon, lambda i: rings_by_pid[int(poly_id.iat[i])]
-            )
+            by_pid = bc.value
+            return _contains_by_polygon(poly_id, lat, lon, lambda i: by_pid[int(poly_id.iat[i])])
 
         cand = pts.join(local_frame(spark, tiles, TILE_DDL), ["xtile", "ytile"])
         contains = contains_bc(F.col("poly_id"), F.col("lat"), F.col("lon"))

@@ -12,7 +12,7 @@ import os
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 
 def _default_driver_memory() -> str:
@@ -112,18 +112,30 @@ def broadcast_threshold(spark: SparkSession) -> int:
     return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
 
-def collect_bounded(df: DataFrame, row_bytes: int) -> pa.Table | None:
+def row_bytes(spark: SparkSession, schema: StructType | str) -> int:
+    """Spark's size estimate of one row of ``schema`` (a StructType or a
+    DDL string): 8 B of row overhead plus the columns' default sizes.
+    This is what the stats of a ``local_frame`` of n such rows say
+    (n · row_bytes), so it is the per-row size every site of the size
+    rule measures with. An array counts as ONE element: a caller whose
+    rows carry arrays passes its own width to ``collect_bounded``."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    jtype = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(schema.json())
+    return 8 + jtype.defaultSize()
+
+
+def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | None:
     """``df`` as one Arrow table on the driver when it fits under
     ``spark.sql.autoBroadcastJoinThreshold``, else ``None``.
 
     This is the engine's one rule for every choice between a plan sized
     for the driver and one sized for the cluster: data size in bytes
-    against the threshold. ``row_bytes`` is the caller's bytes per row;
-    a site whose collected table comes back as a ``local_frame`` for a
-    join passes Spark's own size estimate of the row (8 B of row
-    overhead plus the columns' default sizes), which is what the
-    LocalRelation's stats will say, so the planner broadcasts it
-    without a hint. At most ``threshold // row_bytes`` rows: one job
+    against the threshold. Rows are sized by ``row_bytes`` of
+    ``df.schema`` — what the LocalRelation's stats will say when the
+    table comes back as a ``local_frame`` for a join, so the planner
+    broadcasts it without a hint; ``row_size`` overrides it for rows
+    with arrays. At most ``threshold // row_size`` rows: one job
     collects ``max_rows + 1`` rows, so an input over the bound is never
     pulled whole; a threshold ≤ 0 runs nothing and forces every
     over-threshold path. A caller whose fallback reuses ``df`` passes
@@ -135,18 +147,20 @@ def collect_bounded(df: DataFrame, row_bytes: int) -> pa.Table | None:
     result under a SHUFFLE_HASH hint), ``extract._member_index`` (the
     checkpoint under a SHUFFLE_HASH hint),
     ``pip.points_in_polygons_bucketed`` (the polygon-tile table without
-    rings; the rings ride the tile rows under a SHUFFLE_HASH hint),
+    rings, then the ring vertices, one row each; if either is over, the
+    rings ride the tile rows under a SHUFFLE_HASH hint),
     ``dedup.components_from_pairs`` (the label-propagation loop) and
     ``similarity._train_index`` (one ``mapInArrow`` job per Lloyd
-    pass). Sites whose size is known without a collect compare it with
-    ``broadcast_threshold``: ``knn.knn_kring`` (k·Q result rows;
-    executor-side accumulation) and the driver-built closure in
-    ``relation_closure_table`` (a SHUFFLE_HASH hint).
+    pass). Sites whose size is known without a collect compare
+    ``row_bytes`` times their row count with ``broadcast_threshold``:
+    ``knn.knn_kring`` (k·Q result rows; executor-side accumulation) and
+    the driver-built closure in ``relation_closure_table`` (a
+    SHUFFLE_HASH hint).
     """
     threshold = broadcast_threshold(df.sparkSession)
     if threshold <= 0:
         return None
-    max_rows = threshold // row_bytes
+    max_rows = threshold // (row_size or row_bytes(df.sparkSession, df.schema))
     table = df.limit(max_rows + 1).toArrow()
     return None if table.num_rows > max_rows else table
 

@@ -207,6 +207,33 @@ def test_pip_bucketed_vs_golden_and_broadcast(nodes_xs, fixture_xs, meta_xs, spa
         assert join in plan and "xtile" in plan and "ytile" in plan, value
 
 
+def test_pip_high_vertex_polygon_measured_by_its_vertices(nodes_xs, meta_xs, spark):
+    """A 4,000-vertex ring with a hole over at most four tiles: its
+    tile rows fit under a 10 kB threshold, its 40 B-a-vertex rings do
+    not, so the rings ride the tile rows (ShuffledHashJoin) instead of
+    going to the driver. At the session threshold both fit and the tile
+    table is broadcast. Rows equal an even-odd numpy oracle on both."""
+    import pandas as pd
+
+    lat0, lon0 = float(meta_xs["knn_points"][0][1]), float(meta_xs["knn_points"][0][2])
+    t = np.linspace(0.0, 2.0 * np.pi, 4000, endpoint=False)
+    outer = np.column_stack([lat0 + 0.03 * np.sin(t), lon0 + 0.03 * np.cos(t)])
+    hole = np.column_stack([lat0 + 0.01 * np.sin(t[::40]), lon0 + 0.01 * np.cos(t[::40])])
+    poly = polygons_df(spark, {7: [outer, hole]})
+    pdf = nodes_xs.select("id", "fixed_lat", "fixed_lon").toPandas()
+    lat, lon = pdf["fixed_lat"].to_numpy() / 1e7, pdf["fixed_lon"].to_numpy() / 1e7
+    inside = ray_cast_contains(outer, lat, lon) ^ ray_cast_contains(hole, lat, lon)
+    expected = pd.DataFrame({"poly_id": 7, "node_id": pdf["id"][inside].to_numpy()})
+    assert 0 < len(expected) < len(pdf)
+    session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for value, join in ((session, "BroadcastHashJoin"), ("10000", "ShuffledHashJoin")):
+        with threshold(spark, value):
+            got = points_in_polygons_bucketed(nodes_xs, poly)
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert_df_equal(got, expected, sort_cols=["poly_id", "node_id"])
+        assert join in plan, value
+
+
 def test_pip_bucketed_rejects_antimeridian_wrap(spark):
     """A ring spanning >180° of longitude must raise (documented
     limitation, asserted lazily in the plan)."""

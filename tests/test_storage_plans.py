@@ -12,13 +12,14 @@ from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.extract import (
-    PAIR_ROW_BYTES,
+    CLOSURE_DDL,
     bbox_extract_batch,
     prepare_extract_context,
     ways_in_tile_range,
 )
 from osm_lib_spark.operators.indexes import build_way_tiles, write_way_tiles_partitioned
 from osm_lib_spark.operators.raster import rasterize_nodes, vectorize_raster
+from osm_lib_spark.session import row_bytes
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
 from tests.conftest import golden, threshold
 
@@ -104,7 +105,7 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
     session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for value, join in (
         (session, "BroadcastHashJoin"),
-        (str(n_edges * PAIR_ROW_BYTES - 1), "ShuffledHashJoin"),
+        (str(n_edges * row_bytes(spark, CLOSURE_DDL) - 1), "ShuffledHashJoin"),
     ):
         with threshold(spark, value):
             ctx = prepare_extract_context(rels)
@@ -290,6 +291,23 @@ def test_driver_frames_are_local_relations(spark, docs_xs, tmp_path):
     for name, df in frames.items():
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed, name
+
+
+def test_row_bytes_is_the_local_relation_estimate(spark):
+    """``session.row_bytes`` of each size-rule row shape equals the
+    per-row size in the stats of a local_frame of that shape, so a
+    collected table that fits under the threshold is broadcast by the
+    planner without a hint."""
+    from osm_lib_spark.operators.knn import RANKED_DDL
+    from osm_lib_spark.operators.pip import TILE_DDL
+    from osm_lib_spark.session import local_frame
+
+    assert row_bytes(spark, CLOSURE_DDL) == 24
+    for ddl in (CLOSURE_DDL, RANKED_DDL, TILE_DDL):
+        n_cols = len(ddl.split(","))
+        frame = local_frame(spark, [(0,) * n_cols] * 5, ddl)
+        size = frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert int(size) == 5 * row_bytes(spark, ddl), ddl
 
 
 # Every localCheckpoint, F.broadcast and .hint( call in osm_lib_spark/,
