@@ -40,6 +40,17 @@ def docs_xs(spark, fixture_xs):
     return spark.read.parquet(os.path.join(fixture_xs, "docs.parquet"))
 
 
+def entity_batch(kind: str, rows: list):
+    """``rows`` (dicts) as a RecordBatch of the ``kind`` entity columns,
+    the shape the PBF and VEX block encoders take."""
+    import pyarrow as pa
+
+    from osm_lib_spark.sources.pbf import _PA_SCHEMA, TYPE_COLUMNS, TYPE_NAMES
+
+    cols = TYPE_COLUMNS[TYPE_NAMES.index(kind)]
+    return pa.RecordBatch.from_pylist(rows, schema=pa.schema([_PA_SCHEMA.field(c) for c in cols]))
+
+
 def golden(fixture_dir: str, name: str) -> pd.DataFrame:
     return pd.read_parquet(os.path.join(fixture_dir, "golden", f"{name}.parquet"))
 

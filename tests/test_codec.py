@@ -25,7 +25,7 @@ from osm_lib_spark.sources.span_codec import (
     render_relation_text,
     render_way_text,
 )
-from tests.conftest import assert_df_equal, golden
+from tests.conftest import assert_df_equal, entity_batch, golden
 
 
 def test_parse_counts_match_golden(docs_xs, fixture_xs):
@@ -177,6 +177,92 @@ def test_pbf_relation_encoder_rejects_unknown_member_type():
         _encode_rel_block_arrow(block("AREA"))
 
 
+def test_pbf_string_table_code_past_end_raises():
+    """A string-table code past the end of its block's table is a corrupt
+    block: both decoders raise ValueError, never a numpy IndexError."""
+    import numpy as np
+    import pytest
+
+    from osm_lib_spark.sources.pbf import (
+        _enc_field_bytes,
+        _enc_field_varint,
+        _enc_packed,
+        decode_block_arrow,
+        decode_primitive_block,
+        np_zigzag,
+    )
+
+    table = _enc_field_bytes(1, _enc_field_bytes(1, b""))  # one entry: ""
+    seven = np_zigzag(np.array([7]))
+    dense = (
+        _enc_packed(1, seven)
+        + _enc_packed(8, seven)
+        + _enc_packed(9, seven)
+        + _enc_packed(10, np.array([7, 7, 0], np.uint64))
+    )
+    way = (
+        _enc_field_varint(1, 9)
+        + _enc_packed(2, np.array([7], np.uint64))
+        + _enc_packed(3, np.array([0], np.uint64))
+    )
+    for group in (_enc_field_bytes(2, dense), _enc_field_bytes(3, way)):
+        for decode in (decode_block_arrow, decode_primitive_block):
+            with pytest.raises(ValueError, match="past the end"):
+                decode(table + _enc_field_bytes(2, group))
+
+
+def test_pbf_way_block_without_refs_decodes():
+    """A way block in which no way has a ref decodes, each way with an
+    empty ref list."""
+    from osm_lib_spark.sources.pbf import _encode_block, _encode_way_block_arrow, decode_block_arrow
+
+    batch = entity_batch("way", [
+        {"id": 1, "node_ids": [], "tags": []},
+        {"id": 2, "node_ids": None, "tags": [{"key": "k", "value": "v"}]},
+    ])
+    for block in (_encode_way_block_arrow(batch), _encode_block("way", batch)):
+        (got,) = decode_block_arrow(block)
+        assert got.column("id").to_pylist() == [1, 2]
+        assert got.column("node_ids").to_pylist() == [[], []]
+
+
+def test_block_encoders_write_null_strings_as_empty():
+    """A null tag key, tag value or member role encodes as "" in every
+    PBF and VEX block encoder, as the scalar ``_StringTable`` does."""
+    from osm_lib_spark.sources.pbf import (
+        _encode_block,
+        _encode_dense_block_arrow,
+        _encode_rel_block_arrow,
+        _encode_way_block_arrow,
+        decode_block_arrow,
+    )
+    from osm_lib_spark.sources.vex import _inflate_block, decode_vex_block_arrow, encode_vex_rows
+
+    tags = [{"key": None, "value": "v"}, {"key": "k", "value": None}]
+    rows = {
+        "node": {"id": 1, "fixed_lat": 0, "fixed_lon": 0, "tags": tags},
+        "way": {"id": 2, "node_ids": [1], "tags": tags},
+        "relation": {"id": 3, "members": [{"type": "NODE", "member_id": 1, "role": None}], "tags": tags},
+    }
+    encoders = {
+        "node": _encode_dense_block_arrow,
+        "way": _encode_way_block_arrow,
+        "relation": _encode_rel_block_arrow,
+    }
+    for kind, row in rows.items():
+        batch = entity_batch(kind, [row])
+        ((_, blob),) = encode_vex_rows(kind, batch)
+        decoded = [
+            *decode_block_arrow(encoders[kind](batch)),
+            *decode_block_arrow(_encode_block(kind, batch)),
+            decode_vex_block_arrow(kind, 1, _inflate_block(blob[12:])),
+        ]
+        for got in decoded:
+            assert got.column("tags").to_pylist() == [[{"key": "", "value": "v"}, {"key": "k", "value": ""}]]
+            if kind == "relation":
+                assert got.column("members").to_pylist() == [[{"type": "NODE", "member_id": 1, "role": ""}]]
+
+
 # ---------------------------------------------------------------------------
 # the PBF/VEX block sink (pbf.write_blocks), on the sf-xs tables
 # ---------------------------------------------------------------------------
@@ -299,6 +385,29 @@ def test_vex_sink_roundtrip_small_buckets(spark, docs_xs, tmp_path, monkeypatch)
     _assert_type_major_ascending(blocks)
 
 
+def test_pbf_arrow_encoders_match_scalar_reference(docs_xs):
+    """The Arrow block encoders and the scalar reference ``_encode_block``
+    decode to equal rows on the sf-xs node, way and relation tables. The
+    bytes differ: the two order their string tables differently."""
+    from osm_lib_spark.sources.pbf import (
+        TYPE_COLUMNS,
+        TYPE_NAMES,
+        _encode_block,
+        _encode_dense_block_arrow,
+        _encode_rel_block_arrow,
+        _encode_way_block_arrow,
+        decode_block_arrow,
+    )
+
+    encoders = (_encode_dense_block_arrow, _encode_way_block_arrow, _encode_rel_block_arrow)
+    for rank, table in enumerate(_xs_tables(docs_xs)):
+        batch = table.select(*TYPE_COLUMNS[rank]).orderBy("id").toArrow().combine_chunks().to_batches()[0]
+        (arrow,) = decode_block_arrow(encoders[rank](batch))
+        (scalar,) = decode_block_arrow(_encode_block(TYPE_NAMES[rank], batch))
+        assert arrow.num_rows == batch.num_rows > 0
+        assert arrow.to_pylist() == scalar.to_pylist()
+
+
 def test_sink_failure_leaves_no_part_files(spark, docs_xs, tmp_path):
     import pytest
 
@@ -375,15 +484,17 @@ def test_pbf_framing_fails_loudly(tmp_path):
 
 def test_vex_framing_fails_loudly(spark, tmp_path):
     """A VEX file cut inside a 12-byte block header or a block payload,
-    a varint that runs past its block and bad zlib data each raise
-    ValueError, never a silently shorter file, IndexError or
-    zlib.error."""
+    a varint that runs past its block, a block payload that ends before
+    its header's entity count and bad zlib data each raise ValueError,
+    never a silently shorter file, IndexError or zlib.error."""
     import pytest
 
+    from osm_lib_spark.sources.pbf import _read_varint
     from osm_lib_spark.sources.vex import (
         _frame_block,
         _inflate_block,
-        _uvarint_at,
+        decode_vex_block_arrow,
+        encode_vex_rows,
         read_vex,
         scan_vex_blocks,
     )
@@ -405,12 +516,40 @@ def test_vex_framing_fails_loudly(spark, tmp_path):
         read_vex(spark, str(tmp_path / f"cut{len(framed) - 1}.vex"))
 
     with pytest.raises(ValueError, match="varint"):
-        _uvarint_at(b"\x80\x80", 0)
+        _read_varint(b"\x80\x80", 0)
     with pytest.raises(ValueError, match="varint"):
-        _uvarint_at(b"\x01", 1)
-    assert _uvarint_at(b"\x80\x01", 0) == 128
+        _read_varint(b"\x01", 1)
+    assert _read_varint(b"\x80\x01", 0) == (128, 2)
     with pytest.raises(ValueError, match="zlib"):
         _inflate_block(b"not zlib data")
     with pytest.raises(ValueError, match="zlib"):
         _inflate_block(framed[12:-1])
     assert _inflate_block(framed[12:]) == bytes(range(64))
+
+    # a header that overstates its block's entity count, or a payload one
+    # byte short (the last byte is a varint's, or a role string's)
+    blocks = {
+        "node": [
+            {"id": 1, "fixed_lat": 10, "fixed_lon": 20, "tags": [{"key": "k", "value": "v"}]},
+            {"id": 5, "fixed_lat": 11, "fixed_lon": 300, "tags": []},
+        ],
+        "way": [
+            {"id": 2, "node_ids": [1, 5], "tags": []},
+            {"id": 3, "node_ids": [5, 300], "tags": [{"key": "highway", "value": "x"}]},
+        ],
+        "relation": [
+            {"id": 4, "members": [{"type": "WAY", "member_id": 2, "role": "outer"}], "tags": []},
+        ],
+    }
+    for kind, rows in blocks.items():
+        ((_, blob),) = encode_vex_rows(kind, entity_batch(kind, rows))
+        payload = _inflate_block(blob[12:])
+        assert decode_vex_block_arrow(kind, len(rows), payload).num_rows == len(rows)
+        for n, cut in ((len(rows) + 1, payload), (len(rows), payload[:-1])):
+            with pytest.raises(ValueError):
+                decode_vex_block_arrow(kind, n, cut)
+    ((_, node_blob),) = encode_vex_rows("node", entity_batch("node", blocks["node"]))
+    overstated = tmp_path / "overstated.vex"
+    overstated.write_bytes(_frame_block("node", 3, _inflate_block(node_blob[12:])))
+    with pytest.raises(Exception, match="ends before its 3 entities"):
+        read_vex(spark, str(overstated)).collect()

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from osm_lib_spark.functions.delta import zigzag_decode, zigzag_encode
 from osm_lib_spark.functions.tags import parse_tags, render_tags
 from osm_lib_spark.functions.tiles import np_tile_x, np_tile_y, tile_x_col, tile_y_col
+from tests.conftest import entity_batch
 
 # tag keys/values under the codec's constraints: no ';' (pair separator),
 # keys also exclude '=' (first '=' splits), both non-empty-key, no
@@ -109,35 +110,33 @@ _pbf_id = st.integers(min_value=0, max_value=(1 << 62) - 1)
 def test_pbf_node_block_roundtrip_property(nodes):
     """Arbitrary unicode tags (incl. empty values), extreme ids and
     coordinates survive encode → decode bit-for-bit, on BOTH decode
-    paths (scalar dicts and vectorized Arrow)."""
-    import pandas as pd
-
+    paths (scalar dicts and vectorized Arrow); the Arrow encoder's block
+    decodes to the same rows as the scalar reference encoder's."""
     from osm_lib_spark.sources.pbf import (
         _encode_block,
+        _encode_dense_block_arrow,
         decode_block_arrow,
         decode_primitive_block,
     )
 
     nodes = sorted(nodes, key=lambda t: t[0])
-    frame = pd.DataFrame(
-        {
-            "id": [n[0] for n in nodes],
-            "fixed_lat": [n[1] for n in nodes],
-            "fixed_lon": [n[2] for n in nodes],
-            "tags": [[{"key": k, "value": v} for k, v in n[3]] for n in nodes],
-        }
-    )
-    block = _encode_block("node", frame)
+    batch = entity_batch("node", [
+        {"id": i, "fixed_lat": lat, "fixed_lon": lon, "tags": [{"key": k, "value": v} for k, v in tags]}
+        for i, lat, lon, tags in nodes
+    ])
+    block = _encode_block("node", batch)
     dec = decode_primitive_block(block)
     assert list(dec["node_id"][0]) == [n[0] for n in nodes]
     assert list(dec["node_lat"][0]) == [n[1] for n in nodes]
     assert list(dec["node_lon"][0]) == [n[2] for n in nodes]
     assert dec["node_tags"] == [[(k, v) for k, v in n[3]] for n in nodes]
-    (batch,) = decode_block_arrow(block)
-    rows = batch.to_pylist()
+    (ref,) = decode_block_arrow(block)
+    rows = ref.to_pylist()
     for row, n in zip(rows, nodes):
         assert row["id"] == n[0] and row["fixed_lat"] == n[1]
         assert row["tags"] == [{"key": k, "value": v} for k, v in n[3]]
+    (arrow,) = decode_block_arrow(_encode_dense_block_arrow(batch))
+    assert arrow.to_pylist() == rows
 
 
 # --- VEX block codec fuzz: entities → framed blocks → entities ----------
@@ -163,37 +162,29 @@ def test_vex_node_blocks_roundtrip_property(nodes, max_bytes):
     block-split sizes: the vectorized encoder must (a) agree with the
     scalar writer byte-for-byte and (b) roundtrip through the
     vectorized decoder exactly."""
-    import pandas as pd
+    import struct
+    import zlib
 
     from osm_lib_spark.sources.vex import (
         _encode_vex_rows_scalar,
-        decode_vex_block,
+        decode_vex_block_arrow,
         encode_vex_rows,
     )
 
     nodes = sorted(nodes, key=lambda t: t[0])
-    frame = pd.DataFrame(
-        {
-            "id": [n[0] for n in nodes],
-            "fixed_lat": [n[1] for n in nodes],
-            "fixed_lon": [n[2] for n in nodes],
-            "tags": [[{"key": k, "value": v} for k, v in n[3]] for n in nodes],
-            "node_ids": [None] * len(nodes),
-            "members": [None] * len(nodes),
-        }
-    )
-    vec = list(encode_vex_rows("node", frame, max_bytes=max_bytes))
-    ref = list(_encode_vex_rows_scalar("node", frame, max_bytes=max_bytes))
+    batch = entity_batch("node", [
+        {"id": i, "fixed_lat": lat, "fixed_lon": lon, "tags": [{"key": k, "value": v} for k, v in tags]}
+        for i, lat, lon, tags in nodes
+    ])
+    vec = list(encode_vex_rows("node", batch, max_bytes=max_bytes))
+    ref = list(_encode_vex_rows_scalar("node", batch, max_bytes=max_bytes))
     assert vec == ref
     back_ids, back_tags = [], []
-    import struct as _struct
-    import zlib as _zlib
-
     for _, blob in vec:
-        n_ent, n_b = _struct.unpack(">ii", blob[4:12])
-        df = decode_vex_block("node", n_ent, _zlib.decompress(blob[12 : 12 + n_b]))
-        back_ids += list(df["id"])
-        back_tags += [[(t["key"], t["value"]) for t in ts] for ts in df["tags"]]
+        n_ent, n_b = struct.unpack(">ii", blob[4:12])
+        rows = decode_vex_block_arrow("node", n_ent, zlib.decompress(blob[12 : 12 + n_b])).to_pylist()
+        back_ids += [r["id"] for r in rows]
+        back_tags += [[(t["key"], t["value"]) for t in r["tags"]] for r in rows]
     assert back_ids == [n[0] for n in nodes]
     assert back_tags == [list(n[3]) for n in nodes]
 
@@ -216,36 +207,28 @@ def test_vex_way_blocks_roundtrip_property(ways, max_bytes):
     """Way ref chains (which carry ACROSS entities within a block and
     reset at splits) roundtrip exactly at adversarial split sizes, and
     the vectorized encoder matches the scalar writer."""
-    import pandas as pd
+    import struct
+    import zlib
 
     from osm_lib_spark.sources.vex import (
         _encode_vex_rows_scalar,
-        decode_vex_block,
+        decode_vex_block_arrow,
         encode_vex_rows,
     )
 
     ways = sorted(ways, key=lambda t: t[0])
-    frame = pd.DataFrame(
-        {
-            "id": [w[0] for w in ways],
-            "fixed_lat": [None] * len(ways),
-            "fixed_lon": [None] * len(ways),
-            "tags": [[{"key": k, "value": v} for k, v in w[2]] for w in ways],
-            "node_ids": [list(w[1]) for w in ways],
-            "members": [None] * len(ways),
-        }
-    )
-    vec = list(encode_vex_rows("way", frame, max_bytes=max_bytes))
-    assert vec == list(_encode_vex_rows_scalar("way", frame, max_bytes=max_bytes))
-    import struct as _struct
-    import zlib as _zlib
-
+    batch = entity_batch("way", [
+        {"id": i, "node_ids": list(refs), "tags": [{"key": k, "value": v} for k, v in tags]}
+        for i, refs, tags in ways
+    ])
+    vec = list(encode_vex_rows("way", batch, max_bytes=max_bytes))
+    assert vec == list(_encode_vex_rows_scalar("way", batch, max_bytes=max_bytes))
     back_ids, back_refs = [], []
     for _, blob in vec:
-        n_ent, n_b = _struct.unpack(">ii", blob[4:12])
-        df = decode_vex_block("way", n_ent, _zlib.decompress(blob[12 : 12 + n_b]))
-        back_ids += list(df["id"])
-        back_refs += [list(r) for r in df["node_ids"]]
+        n_ent, n_b = struct.unpack(">ii", blob[4:12])
+        rows = decode_vex_block_arrow("way", n_ent, zlib.decompress(blob[12 : 12 + n_b])).to_pylist()
+        back_ids += [r["id"] for r in rows]
+        back_refs += [r["node_ids"] for r in rows]
     assert back_ids == [w[0] for w in ways]
     assert back_refs == [list(w[1]) for w in ways]
 

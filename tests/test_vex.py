@@ -10,12 +10,13 @@ import pytest
 
 from osm_lib_spark.sources.pbf import pbf_nodes, pbf_relations, pbf_ways, read_pbf
 from osm_lib_spark.sources.vex import (
-    decode_vex_block,
+    decode_vex_block_arrow,
     encode_vex_rows,
     read_vex,
     scan_vex_blocks,
     write_vex,
 )
+from tests.conftest import entity_batch
 
 BANGOR = "/root/reference/src/test/resources/bangor_maine.osm.pbf"
 
@@ -67,38 +68,27 @@ def test_vex_block_split_delta_reset():
     standalone (delta state resets per block) and concatenation must
     reproduce the input exactly — including the way-ref accumulator
     that carries across entities WITHIN a block only."""
-    rows = pd.DataFrame(
-        {
-            "id": [10, 25, 300, 301],
-            "tags": [
-                [{"key": "highway", "value": "residential"}],
-                [],
-                [{"key": "a", "value": "b"}, {"key": "c", "value": ""}],
-                [],
-            ],
-            "node_ids": [[100, 105, 90], [90, 200], [1, 2, 3], [3, 2, 1]],
-            "members": [None] * 4,
-            "fixed_lat": [None] * 4,
-            "fixed_lon": [None] * 4,
-        }
-    )
+    rows = entity_batch("way", [
+        {"id": 10, "tags": [{"key": "highway", "value": "residential"}], "node_ids": [100, 105, 90]},
+        {"id": 25, "tags": [], "node_ids": [90, 200]},
+        {"id": 300, "tags": [{"key": "a", "value": "b"}, {"key": "c", "value": ""}], "node_ids": [1, 2, 3]},
+        {"id": 301, "tags": [], "node_ids": [3, 2, 1]},
+    ])
     blocks = list(encode_vex_rows("way", rows, max_bytes=10))
     assert len(blocks) >= 2  # actually split
-    decoded = pd.concat(
-        [
-            decode_vex_block("way", _count_entities(blob), _inflate(blob))
-            for _, blob in blocks
-        ],
-        ignore_index=True,
-    )
-    assert list(decoded["id"]) == [10, 25, 300, 301]
-    assert [list(x) for x in decoded["node_ids"]] == [
+    decoded = [
+        row
+        for _, blob in blocks
+        for row in decode_vex_block_arrow("way", _count_entities(blob), _inflate(blob)).to_pylist()
+    ]
+    assert [r["id"] for r in decoded] == [10, 25, 300, 301]
+    assert [r["node_ids"] for r in decoded] == [
         [100, 105, 90],
         [90, 200],
         [1, 2, 3],
         [3, 2, 1],
     ]
-    assert decoded["tags"][0] == [{"key": "highway", "value": "residential"}]
+    assert decoded[0]["tags"] == [{"key": "highway", "value": "residential"}]
 
 
 def _count_entities(blob: bytes) -> int:
@@ -120,16 +110,10 @@ def test_vex_block_never_exceeds_inflated_cap():
     payload may exceed max_bytes + 0 (a block is flushed before the
     entity whose addition would cross it), except a block holding a
     single entity that alone is under the hard 1 MiB cap."""
-    rows = pd.DataFrame(
-        {
-            "id": list(range(1, 21)),
-            "tags": [[{"key": "k", "value": "v" * 30}]] * 20,
-            "node_ids": [None] * 20,
-            "members": [None] * 20,
-            "fixed_lat": list(range(100, 120)),
-            "fixed_lon": list(range(200, 220)),
-        }
-    )
+    rows = entity_batch("node", [
+        {"id": i, "tags": [{"key": "k", "value": "v" * 30}], "fixed_lat": 99 + i, "fixed_lon": 199 + i}
+        for i in range(1, 21)
+    ])
     blocks = list(encode_vex_rows("node", rows, max_bytes=80))
     assert len(blocks) > 1
     for _, blob in blocks:
@@ -139,31 +123,21 @@ def test_vex_block_never_exceeds_inflated_cap():
         if n > 1:
             assert len(payload) <= 80
     # concatenated decode reproduces every entity
-    decoded = pd.concat(
-        [
-            decode_vex_block("node", _count_entities(blob), _inflate(blob))
-            for _, blob in blocks
-        ],
-        ignore_index=True,
-    )
-    assert list(decoded["id"]) == list(range(1, 21))
-    assert list(decoded["fixed_lat"]) == list(range(100, 120))
+    decoded = [
+        row
+        for _, blob in blocks
+        for row in decode_vex_block_arrow("node", _count_entities(blob), _inflate(blob)).to_pylist()
+    ]
+    assert [r["id"] for r in decoded] == list(range(1, 21))
+    assert [r["fixed_lat"] for r in decoded] == list(range(100, 120))
 
 
 def test_vex_single_giant_entity_raises():
     """An entity that alone inflates past the 1 MiB reader buffer must
     be rejected (the reference's fixed-size inflate buffer would
     overflow)."""
-    giant = pd.DataFrame(
-        {
-            "id": [1],
-            "tags": [[{"key": "blob", "value": "x" * (2 << 20)}]],
-            "node_ids": [None],
-            "members": [None],
-            "fixed_lat": [0],
-            "fixed_lon": [0],
-        }
-    )
+    tags = [{"key": "blob", "value": "x" * (2 << 20)}]
+    giant = entity_batch("node", [{"id": 1, "tags": tags, "fixed_lat": 0, "fixed_lon": 0}])
     with pytest.raises(ValueError, match="VEX block buffer"):
         list(encode_vex_rows("node", giant))
 
@@ -191,32 +165,27 @@ def test_vectorized_encoder_bytes_identical_to_scalar():
 
     rng = np.random.default_rng(7)
     n = 500
-    nodes = pd.DataFrame(
+    nodes = entity_batch("node", [
         {
-            "id": np.cumsum(rng.integers(1, 1000, n)).astype(np.int64),
-            "fixed_lat": rng.integers(-900000000, 900000000, n).astype(np.int64),
-            "fixed_lon": rng.integers(-1800000000, 1800000000, n).astype(np.int64),
-            "tags": [
-                [{"key": "k%d" % (i % 5), "value": "v" * (i % 17)}] if i % 3 else []
-                for i in range(n)
-            ],
-            "node_ids": [None] * n,
-            "members": [None] * n,
+            "id": i,
+            "fixed_lat": lat,
+            "fixed_lon": lon,
+            "tags": [{"key": "k%d" % (j % 5), "value": "v" * (j % 17)}] if j % 3 else [],
         }
-    )
-    ways = pd.DataFrame(
+        for j, (i, lat, lon) in enumerate(zip(
+            np.cumsum(rng.integers(1, 1000, n)).tolist(),
+            rng.integers(-900000000, 900000000, n).tolist(),
+            rng.integers(-1800000000, 1800000000, n).tolist(),
+        ))
+    ])
+    ways = entity_batch("way", [
         {
-            "id": np.cumsum(rng.integers(1, 50, 80)).astype(np.int64),
-            "fixed_lat": [None] * 80,
-            "fixed_lon": [None] * 80,
-            "tags": [[{"key": "highway", "value": "x"}] for _ in range(80)],
-            "node_ids": [
-                list(rng.integers(1, 10**9, rng.integers(0, 30)).tolist())
-                for _ in range(80)
-            ],
-            "members": [None] * 80,
+            "id": i,
+            "tags": [{"key": "highway", "value": "x"}],
+            "node_ids": rng.integers(1, 10**9, rng.integers(0, 30)).tolist(),
         }
-    )
+        for i in np.cumsum(rng.integers(1, 50, 80)).tolist()
+    ])
     for kind, frame in (("node", nodes), ("way", ways)):
         for mb in (200, 1500, 900_000):
             vec = list(encode_vex_rows(kind, frame, max_bytes=mb))
