@@ -5,13 +5,20 @@ operator (scale-first):
 
 * exact         — one hash aggregate on md5(text); fully shuffled
                   partial+final agg, no skew (md5 keys are uniform).
-* minhash_lsh   — shingle → 60-bit md5 hashes → P permutations
-                  ((a_i·h + b_i) mod prime) folded with array_min, ALL
-                  in Column expressions (no Python); band keys explode
-                  → self-equi-join on (band, band_sig) → candidate
-                  pairs → exact-Jaccard verify. The band join is the
-                  only quadratic-risk step and it only pairs docs that
-                  collide in a band — the standard LSH bound.
+* minhash_lsh   — shingles (``shingles_col``, JVM-side) → 60-bit md5
+                  hashes → P permutations ((a_i·h + b_i) mod prime)
+                  folded with a min → band keys: ONE numpy kernel
+                  (``_bands``). Shingle rows that fit under
+                  ``spark.sql.autoBroadcastJoinThreshold`` are collected
+                  once and the whole pipeline (bands, candidate groups,
+                  exact-Jaccard verify, components) runs on the driver:
+                  at small sizes a Spark job costs more than its rows.
+                  Larger inputs run the kernel per Arrow batch
+                  (``mapInArrow``), then self-equi-join on (band,
+                  band_sig) → candidate pairs → exact-Jaccard verify.
+                  The band join is the only quadratic-risk step and it
+                  only pairs docs that collide in a band — the standard
+                  LSH bound.
 * simhash       — 60-bit sign-vote fingerprint in Column expressions;
                   near-dups = equal 15-hex-digit prefix bands (cheap
                   grouping analog of hamming-distance buckets).
@@ -27,11 +34,12 @@ operator (scale-first):
                   result set (the DuckDB oracle re-derives the naive
                   join independently and must hash-match).
 
-Pair verification (minhash + ngram) joins candidate pairs to each
-doc's SORTED SHINGLE-SET ARRAY (two uniform doc_id hash joins) and
-computes |A∩B| with ``array_intersect`` in codegen — join cardinality
-equals the candidate count, never candidates × postings, so one hot
-shingle can no longer multiply the verify stage.
+Pair verification in Spark (ngram, and minhash over the threshold)
+joins candidate pairs to each doc's SORTED SHINGLE-SET ARRAY (two
+uniform doc_id hash joins) and computes |A∩B| with ``array_intersect``
+in codegen — join cardinality equals the candidate count, never
+candidates × postings, so one hot shingle can no longer multiply the
+verify stage.
 
 All integer arithmetic is md5-prefix based (functions.hashing) so
 DuckDB/numpy oracles agree bit-for-bit.
@@ -39,12 +47,15 @@ DuckDB/numpy oracles agree bit-for-bit.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_lib_spark.functions.hashing import md5_int_col
+from osm_lib_spark.functions.hashing import md5_int_col, md5_int_py
 from osm_lib_spark.operators.graph import min_label_components
 from osm_lib_spark.session import collect_bounded, local_frame
 
@@ -62,6 +73,8 @@ NUM_BANDS = 8  # 4 rows per band
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
 MAX_COMPONENT_ITERATIONS = 50  # label-propagation rounds (Spark path only)
+BAND_DDL = "doc_id long, band int, band_sig string"  # the persisted index's bands/
+PAIR_DDL = "doc_a long, doc_b long, inter long, size_a long, size_b long"
 
 
 def _perm_coeffs(num_perm: int = NUM_PERM, seed: int = 42) -> tuple[list[int], list[int]]:
@@ -93,71 +106,91 @@ def exact_duplicates(documents: DataFrame, min_count: int = 2) -> DataFrame:
     )
 
 
-def minhash_signatures(documents: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """(doc_id, sig: array<long>) — all JVM-side; one pass over shingles.
+def _collect_shingles(documents: DataFrame):
+    """The (doc_id, shingle) rows, one per distinct shingle of each doc,
+    when they fit under the threshold (36 B a row by ``row_bytes``), as
+    (sorted doc ids, each row's index into them, shingles); else None.
+    A null text is one null shingle: ``shingles_col`` gives it [null]."""
+    rows = documents.select("doc_id", F.explode(shingles_col(F.col("text"))).alias("shingle"))
+    table = collect_bounded(rows)
+    if table is None:
+        return None
+    doc_ids, doc_index = np.unique(table.column(0).to_numpy(), return_inverse=True)
+    return doc_ids, doc_index, table.column(1).combine_chunks()
 
-    sig_i = min over shingles s of (a_i·h60(s) + b_i) mod prime, with
-    h60(s) reduced mod prime first so products fit in int64.
+
+def _bands(
+    doc_ids: np.ndarray, doc_index: np.ndarray, shingles: pa.Array, num_perm: int, num_bands: int
+) -> pa.Table:
+    """(doc_id, band, band_sig) rows of each doc, doc-major: the MinHash
+    kernel behind both paths. Row r of ``shingles`` belongs to doc
+    ``doc_ids[doc_index[r]]``.
+
+    sig_i = min over the doc's shingles s of (a_i·h + b_i) mod prime,
+    with h = md5_int_py(s, 15) mod prime, so every product fits in
+    int64. A band key is the band's slice of the signature joined by
+    ",". A doc with no non-null shingle (null text) has a null
+    signature, and its keys are "", as Spark's array_join of nulls.
     """
-    a, b = _perm_coeffs(num_perm)
-    a_arr = F.array(*[F.lit(x) for x in a])
-    b_arr = F.array(*[F.lit(x) for x in b])
-    sh = shingles_col(F.col("text"))
-    hashes = F.transform(sh, lambda s: md5_int_col(s, 15) % MINHASH_PRIME)
-    # Materialization barrier: without it CollapseProject inlines the
-    # md5 hash array into EVERY permutation lambda (num_perm× md5 per
-    # shingle) and later consumers inline the whole signature again —
-    # measured 50× slowdown. localCheckpoint cuts the logical plan so
-    # hashes are computed once per row.
-    hashed = documents.select("doc_id", hashes.alias("h")).localCheckpoint(eager=True)
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                F.col("h"),
-                lambda h: (F.element_at(a_arr, i + 1) * h + F.element_at(b_arr, i + 1))
-                % MINHASH_PRIME,
-            )
-        ),
+    valid = shingles.is_valid().to_numpy(zero_copy_only=False)
+    rows = doc_index[valid]
+    hashes = np.fromiter(
+        (md5_int_py(s, 15) for s in shingles.drop_null().to_pylist()), np.int64, len(rows)
+    ) % MINHASH_PRIME
+    order = np.argsort(rows, kind="stable")
+    rows, hashes = rows[order], hashes[order]
+    sig = np.full((len(doc_ids), num_perm), MINHASH_PRIME, np.int64)  # above every value
+    if len(rows):
+        starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+        for i, (a, b) in enumerate(zip(*_perm_coeffs(num_perm))):
+            sig[rows[starts], i] = np.minimum.reduceat((a * hashes + b) % MINHASH_PRIME, starts)
+    width = num_perm // num_bands
+    keys: list[str] = []
+    for row in sig.tolist():
+        if row[0] == MINHASH_PRIME:
+            keys += [""] * num_bands
+        else:
+            keys += [",".join(map(str, row[j * width : (j + 1) * width])) for j in range(num_bands)]
+    return pa.table(
+        [
+            pa.array(np.repeat(doc_ids, num_bands), pa.int64()),
+            pa.array(np.tile(np.arange(num_bands, dtype=np.int32), len(doc_ids))),
+            pa.array(keys, pa.string()),
+        ],
+        names=["doc_id", "band", "band_sig"],
     )
-    return hashed.select("doc_id", sig.alias("sig"))
 
 
 def _band_table(
     documents: DataFrame, num_perm: int = NUM_PERM, num_bands: int = NUM_BANDS
 ) -> DataFrame:
-    """(doc_id, band, band_sig): each doc's LSH band keys. Band key is
-    the band's signature slice rendered as a string (exact, no
-    second-level hashing). Banding happens INSIDE the same projection
-    as the signature (the transform references `sig` as a lambda
-    variable, so it is computed once per row — no second
-    materialization barrier needed; the only eager checkpoint is the
-    md5 hash array inside minhash_signatures)."""
-    rows = num_perm // num_bands
-    sigs = minhash_signatures(documents, num_perm)
-    band_of = lambda sig_col: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda bnd: F.array_join(
-            F.transform(
-                F.slice(sig_col, bnd * rows + 1, rows), lambda v: v.cast("string")
-            ),
-            ",",
-        ),
-    )
-    return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(F.array(F.col("sig")), band_of).getItem(0)
-        ).alias("band", "band_sig"),
-    )
+    """(doc_id, band, band_sig): each doc's LSH band keys
+    (``BAND_DDL``). Shingle rows that fit under the threshold are
+    banded on the driver and come back as a ``local_frame``; larger
+    inputs run the same kernel per Arrow batch (``_banded``)."""
+    found = _collect_shingles(documents)
+    if found is None:
+        return _banded(documents, num_perm, num_bands)
+    return local_frame(documents.sparkSession, _bands(*found, num_perm, num_bands), BAND_DDL)
 
 
-def minhash_candidate_pairs(
-    documents: DataFrame, num_perm: int = NUM_PERM, num_bands: int = NUM_BANDS
-) -> DataFrame:
-    """LSH banding: docs sharing any band signature → candidate pairs
+def _banded(documents: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
+    """``_band_table`` over the threshold: a map-only ``mapInArrow`` of
+    ``_bands`` over each batch of (doc_id, shingles) rows."""
+
+    def band(batches):
+        for batch in batches:
+            ids, lists = batch.column(0).to_numpy(zero_copy_only=False), batch.column(1)
+            doc_index = pc.list_parent_indices(lists).to_numpy()
+            yield from _bands(ids, doc_index, pc.list_flatten(lists), num_perm, num_bands).to_batches()
+
+    sh = documents.select("doc_id", shingles_col(F.col("text")).alias("shingles"))
+    return sh.mapInArrow(band, BAND_DDL)
+
+
+def _band_join(bands: DataFrame) -> DataFrame:
+    """LSH banding: docs sharing any band key → candidate pairs
     (doc_a < doc_b)."""
-    bands = _band_table(documents, num_perm, num_bands)
     left = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
     right = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
     # pure equi-join on (band, band_sig) — the doc_a < doc_b predicate is
@@ -169,6 +202,31 @@ def minhash_candidate_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
+
+
+def _driver_dup_pairs(doc_ids, doc_index, shingles, threshold: float) -> pa.Table:
+    """``minhash_dup_pairs`` of collected shingle rows: docs grouped by
+    band key in a dict, then each candidate pair's exact Jaccard on its
+    docs' shingle sets (a null shingle is one element, as in Spark's
+    array_intersect)."""
+    keys = _bands(doc_ids, doc_index, shingles, NUM_PERM, NUM_BANDS).column(2).to_pylist()
+    buckets: dict[tuple[int, str], list[int]] = {}
+    for j, key in enumerate(keys):
+        buckets.setdefault((j % NUM_BANDS, key), []).append(j // NUM_BANDS)
+    # doc indices are in doc_id order, so i < k means doc_a < doc_b
+    cands = sorted({p for docs in buckets.values() for p in combinations(docs, 2)})
+    sets: dict[int, set] = {d: set() for p in cands for d in p}
+    for d, s in zip(doc_index.tolist(), shingles.to_pylist()):
+        if d in sets:
+            sets[d].add(s)
+    kept = []
+    for i, k in cands:
+        a, b = sets[i], sets[k]
+        inter = len(a & b)
+        if inter >= threshold * (len(a) + len(b) - inter):
+            kept.append((doc_ids[i], doc_ids[k], inter, len(a), len(b)))
+    cols = np.array(kept, np.int64).reshape(-1, 5).T
+    return pa.table(list(cols), names=["doc_a", "doc_b", "inter", "size_a", "size_b"])
 
 
 def _shingle_sets(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
@@ -234,10 +292,21 @@ def minhash_dup_pairs(
     """Candidates verified by EXACT shingle Jaccard ≥ threshold.
 
     LSH only prunes, it never decides: every banded candidate pair is
-    re-checked against the true shingle sets (``_verify_pairs``).
-    Output: (doc_a, doc_b, inter, size_a, size_b), ints only.
+    re-checked against the true shingle sets. Output: (doc_a, doc_b,
+    inter, size_a, size_b), ints only. Shingle rows that fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` are collected once and the
+    whole pipeline runs on the driver; larger inputs run it in Spark.
     """
-    cands = minhash_candidate_pairs(documents)  # _verify_pairs checkpoints
+    found = _collect_shingles(documents)
+    if found is None:
+        return _spark_dup_pairs(documents, threshold)
+    return local_frame(documents.sparkSession, _driver_dup_pairs(*found, threshold), PAIR_DDL)
+
+
+def _spark_dup_pairs(documents: DataFrame, threshold: float) -> DataFrame:
+    """``minhash_dup_pairs`` over the threshold: the band self-join,
+    then ``_verify_pairs`` (which checkpoints the candidates)."""
+    cands = _band_join(_banded(documents, NUM_PERM, NUM_BANDS))
     return _verify_pairs(cands, _shingle_sets(documents), threshold)
 
 
@@ -254,19 +323,24 @@ def dup_components(
     The result is the unique fixpoint of min-label propagation —
     independent of how it is computed, which is what lets the DuckDB
     oracle recompute it with a recursive CTE. Where it runs follows
-    the pair set's size, as in ``components_from_pairs``: pairs that fit
-    under ``spark.sql.autoBroadcastJoinThreshold`` are collected once
-    and solved on the driver by numpy hooking and pointer jumping;
-    larger ones run the distributed label-propagation loop, whose rounds
+    the size rule twice. Shingle rows that fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` are collected once and
+    everything runs on the driver: band keys, verify and
+    ``graph.min_label_components``, so the call runs one Spark job.
+    Otherwise the pairs come from Spark and go through
+    ``_components`` (see ``components_from_pairs``), whose loop rounds
     grow with the graph's diameter (LSH dup clusters are near-cliques,
     so 2-3 in practice). A graph too large to collect AND too
     long-chained for that loop wants the alternating large-star /
     small-star formulation (same join shape, O(log n) rounds).
     """
-    # the pairs come from ``documents``, so both endpoints are documents
-    # already: skip components_from_pairs' semi-joins (two broadcast jobs)
-    pairs = minhash_dup_pairs(documents, threshold).select("doc_a", "doc_b")
-    return _components(documents, pairs)
+    found = _collect_shingles(documents)
+    if found is None:
+        # the pairs come from ``documents``, so both endpoints are documents
+        # already: skip components_from_pairs' semi-joins (two broadcast jobs)
+        return _components(documents, _spark_dup_pairs(documents, threshold))
+    pairs = _driver_dup_pairs(*found, threshold)
+    return _labelled(documents, _driver_labels(documents, pairs))
 
 
 def components_from_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -298,18 +372,25 @@ def _components(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     # lazy checkpoint: the loop reuses what the bounded collect materialized
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
     table = collect_bounded(pairs)
-    if table is not None:
-        doc_id, comp = min_label_components(
-            table.column(0).to_numpy(zero_copy_only=False),
-            table.column(1).to_numpy(zero_copy_only=False),
-        )
-        labels = local_frame(
-            documents.sparkSession,
-            pa.table([doc_id, comp], names=["doc_id", "comp"]),
-            "doc_id long, comp long",
-        )
-    else:
-        labels = _propagate_labels(pairs)
+    if table is None:
+        return _labelled(documents, _propagate_labels(pairs))
+    return _labelled(documents, _driver_labels(documents, table))
+
+
+def _driver_labels(documents: DataFrame, pairs: pa.Table) -> DataFrame:
+    """(doc_id, comp) of the docs in some (doc_a, doc_b) pair, by
+    ``graph.min_label_components``, as a ``local_frame``."""
+    doc_id, comp = min_label_components(
+        pairs.column(0).to_numpy(zero_copy_only=False),
+        pairs.column(1).to_numpy(zero_copy_only=False),
+    )
+    table = pa.table([doc_id, comp], names=["doc_id", "comp"])
+    return local_frame(documents.sparkSession, table, "doc_id long, comp long")
+
+
+def _labelled(documents: DataFrame, labels: DataFrame) -> DataFrame:
+    """``documents`` with their (doc_id, comp) labels; a doc without
+    one is its own component."""
     return (
         documents.join(labels, "doc_id", "left")
         .select("doc_id", F.coalesce("comp", "doc_id").alias("component_id"))

@@ -149,7 +149,9 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     ``pip.points_in_polygons_bucketed`` (the polygon-tile table without
     rings, then the ring vertices, one row each; if either is over, the
     rings ride the tile rows under a SHUFFLE_HASH hint),
-    ``dedup.components_from_pairs`` (the label-propagation loop) and
+    ``dedup.components_from_pairs`` (the label-propagation loop),
+    ``dedup._collect_shingles`` (one row per shingle; the MinHash band
+    kernel per Arrow batch, the band self-join and the Spark verify) and
     ``similarity._train_index`` (one ``mapInArrow`` job per Lloyd
     pass). Sites whose size is known without a collect compare
     ``row_bytes`` times their row count with ``broadcast_threshold``:

@@ -117,10 +117,13 @@ def np_decode_varints(buf: np.ndarray) -> np.ndarray:
 
     Varint boundaries are the bytes without the continuation bit; each
     byte contributes its 7-bit payload shifted by its offset within its
-    varint. One pass of numpy ops, no Python loop over values.
+    varint. One pass of numpy ops, no Python loop over values. A last
+    varint without its terminating byte raises ``ValueError``.
     """
     if len(buf) == 0:
         return np.zeros(0, dtype=np.uint64)
+    if buf[-1] & 0x80:
+        raise ValueError("packed varints end inside a varint")
     cont = (buf & 0x80) != 0
     ends = np.flatnonzero(~cont)
     starts = np.concatenate(([0], ends[:-1] + 1))

@@ -186,8 +186,9 @@ def _walk_tags(payload: bytes, pos: int, ntags: int, keys_out: list, vals_out: l
 
 def decode_vex_block_arrow(kind: str, n_entities: int, payload: bytes) -> pa.RecordBatch:
     """One inflated block → an Arrow RecordBatch in the unified entity
-    schema. A payload that ends before ``n_entities`` entities, or whose
-    varints or strings run past it, raises ``ValueError``.
+    schema. A payload that ends before ``n_entities`` entities or goes
+    on past them, or whose varints or strings run past it, raises
+    ``ValueError``.
 
     Vectorized two-pass decode (the sources/pbf.py ``_batch_packed``
     pattern adapted to an interleaved stream): a lean structural walk
@@ -204,14 +205,17 @@ def decode_vex_block_arrow(kind: str, n_entities: int, payload: bytes) -> pa.Rec
     """
     decode = {"node": _decode_nodes, "way": _decode_ways, "relation": _decode_relations}[kind]
     try:
-        return decode(n_entities, payload)
+        batch, end = decode(n_entities, payload)
     except IndexError:
         # the walk indexes the terminator list past its end only when the
         # payload has fewer entities than the header says
         raise ValueError(f"VEX {kind} block ends before its {n_entities} entities") from None
+    if end != len(payload):
+        raise ValueError(f"VEX {kind} block has {len(payload) - end} bytes past its {n_entities} entities")
+    return batch
 
 
-def _decode_nodes(n_entities: int, payload: bytes) -> pa.RecordBatch:
+def _decode_nodes(n_entities: int, payload: bytes) -> tuple[pa.RecordBatch, int]:
     arr = np.frombuffer(payload, dtype=np.uint8)
     ends_l = np.flatnonzero(arr < 0x80).tolist()
     id_s, id_e = [], []
@@ -244,10 +248,10 @@ def _decode_nodes(n_entities: int, payload: bytes) -> pa.RecordBatch:
         _tags_list_array(tag_counts, keys_f, vals_f),
         fixed_lat=np.cumsum(ll[0::2]).astype(np.int32),
         fixed_lon=np.cumsum(ll[1::2]).astype(np.int32),
-    )
+    ), pos
 
 
-def _decode_ways(n_entities: int, payload: bytes) -> pa.RecordBatch:
+def _decode_ways(n_entities: int, payload: bytes) -> tuple[pa.RecordBatch, int]:
     arr = np.frombuffer(payload, dtype=np.uint8)
     ends_l = np.flatnonzero(arr < 0x80).tolist()
     id_s, id_e = [], []
@@ -280,10 +284,10 @@ def _decode_ways(n_entities: int, payload: bytes) -> pa.RecordBatch:
         ids,
         _tags_list_array(tag_counts, keys_f, vals_f),
         node_ids=_list_array(run_n, pa.array(refs_abs, pa.int64())),
-    )
+    ), pos
 
 
-def _decode_relations(n_entities: int, payload: bytes) -> pa.RecordBatch:
+def _decode_relations(n_entities: int, payload: bytes) -> tuple[pa.RecordBatch, int]:
     id_deltas, keys_f, vals_f, tag_counts = [], [], [], []
     mids, mtypes, roles, mem_counts = [], [], [], []
     pos = 0
@@ -308,7 +312,7 @@ def _decode_relations(n_entities: int, payload: bytes) -> pa.RecordBatch:
     )
     return _entity_batch(
         "relation", ids, _tags_list_array(tag_counts, keys_f, vals_f), members=members
-    )
+    ), pos
 
 
 # ---------------------------------------------------------------------------

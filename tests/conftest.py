@@ -30,6 +30,15 @@ def threshold(spark, value):
         spark.conf.set(key, saved)
 
 
+def both_paths(spark, fn):
+    """(``fn()`` at the session threshold, ``fn()`` at threshold -1):
+    the driver-side result and the over-threshold one."""
+    kernel = fn()
+    with threshold(spark, "-1"):
+        loop = fn()
+    return kernel, loop
+
+
 @pytest.fixture(scope="session")
 def fixture_xs():
     return ensure_fixture("xs")

@@ -211,6 +211,31 @@ def test_pbf_string_table_code_past_end_raises():
                 decode(table + _enc_field_bytes(2, group))
 
 
+def test_packed_varint_without_terminator_raises():
+    """A packed field whose last varint has no terminating byte is a
+    corrupt block: ValueError from the varint decoder and from both
+    block decoders, never a numpy IndexError."""
+    import numpy as np
+    import pytest
+
+    from osm_lib_spark.sources.pbf import (
+        _enc_field_bytes,
+        decode_block_arrow,
+        decode_primitive_block,
+        np_decode_varints,
+    )
+
+    with pytest.raises(ValueError, match="varint"):
+        np_decode_varints(np.frombuffer(b"\x02\x80", np.uint8))
+    assert np_decode_varints(np.frombuffer(b"\x02\x80\x01", np.uint8)).tolist() == [2, 128]
+    table = _enc_field_bytes(1, _enc_field_bytes(1, b""))
+    dense = _enc_field_bytes(1, b"\x02\x80")  # DenseNodes ids
+    block = table + _enc_field_bytes(2, _enc_field_bytes(2, dense))
+    for decode in (decode_block_arrow, decode_primitive_block):
+        with pytest.raises(ValueError, match="varint"):
+            decode(block)
+
+
 def test_pbf_way_block_without_refs_decodes():
     """A way block in which no way has a ref decodes, each way with an
     empty ref list."""
@@ -485,8 +510,9 @@ def test_pbf_framing_fails_loudly(tmp_path):
 def test_vex_framing_fails_loudly(spark, tmp_path):
     """A VEX file cut inside a 12-byte block header or a block payload,
     a varint that runs past its block, a block payload that ends before
-    its header's entity count and bad zlib data each raise ValueError,
-    never a silently shorter file, IndexError or zlib.error."""
+    or goes on past its header's entity count and bad zlib data each
+    raise ValueError, never a silently shorter file, IndexError or
+    zlib.error."""
     import pytest
 
     from osm_lib_spark.sources.pbf import _read_varint
@@ -526,8 +552,9 @@ def test_vex_framing_fails_loudly(spark, tmp_path):
         _inflate_block(framed[12:-1])
     assert _inflate_block(framed[12:]) == bytes(range(64))
 
-    # a header that overstates its block's entity count, or a payload one
-    # byte short (the last byte is a varint's, or a role string's)
+    # a header that overstates or understates its block's entity count,
+    # or a payload one byte short (the last byte is a varint's, or a role
+    # string's)
     blocks = {
         "node": [
             {"id": 1, "fixed_lat": 10, "fixed_lon": 20, "tags": [{"key": "k", "value": "v"}]},
@@ -548,8 +575,14 @@ def test_vex_framing_fails_loudly(spark, tmp_path):
         for n, cut in ((len(rows) + 1, payload), (len(rows), payload[:-1])):
             with pytest.raises(ValueError):
                 decode_vex_block_arrow(kind, n, cut)
+        with pytest.raises(ValueError, match=f"bytes past its {len(rows) - 1} entities"):
+            decode_vex_block_arrow(kind, len(rows) - 1, payload)
     ((_, node_blob),) = encode_vex_rows("node", entity_batch("node", blocks["node"]))
     overstated = tmp_path / "overstated.vex"
     overstated.write_bytes(_frame_block("node", 3, _inflate_block(node_blob[12:])))
     with pytest.raises(Exception, match="ends before its 3 entities"):
         read_vex(spark, str(overstated)).collect()
+    understated = tmp_path / "understated.vex"
+    understated.write_bytes(_frame_block("node", 1, _inflate_block(node_blob[12:])))
+    with pytest.raises(Exception, match="bytes past its 1 entities"):
+        read_vex(spark, str(understated)).collect()

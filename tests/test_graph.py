@@ -8,15 +8,7 @@ import numpy as np
 import pytest
 
 from osm_lib_spark.operators.graph import min_label_components, upward_closure
-from tests.conftest import threshold
-
-
-def both_paths(spark, fn):
-    """(kernel result, Spark-loop result) of ``fn()``."""
-    kernel = fn()
-    with threshold(spark, "-1"):
-        loop = fn()
-    return kernel, loop
+from tests.conftest import both_paths, threshold
 
 
 def _brute_closure(child, parent):

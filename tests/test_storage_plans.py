@@ -316,13 +316,12 @@ CHECKPOINT_AND_HINT_SITES = {
     ("operators/dedup.py", "_components", "localCheckpoint"): 1,
     ("operators/dedup.py", "_propagate_labels", "localCheckpoint"): 3,
     ("operators/dedup.py", "_verify_pairs", "localCheckpoint"): 4,
-    ("operators/dedup.py", "minhash_signatures", "localCheckpoint"): 1,
     ("operators/enrich.py", "enrich_tags", "broadcast"): 1,
     ("operators/extract.py", "_closure_loop", "localCheckpoint"): 2,
     ("operators/extract.py", "_member_index", "hint"): 1,
     ("operators/extract.py", "_member_index", "localCheckpoint"): 1,
     ("operators/extract.py", "bbox_extract_batch", "hint"): 1,
-    ("operators/extract.py", "bbox_extract_batch", "localCheckpoint"): 3,
+    ("operators/extract.py", "bbox_extract_batch", "localCheckpoint"): 2,
     ("operators/extract.py", "relation_closure_table", "hint"): 1,
     ("operators/extract.py", "relation_closure_table", "localCheckpoint"): 1,
     ("operators/knn.py", "knn_kring", "localCheckpoint"): 1,

@@ -62,6 +62,41 @@ def test_minhash_finds_near_dups(tiny_docs):
     assert (1, 4) not in pairs and (2, 4) not in pairs
 
 
+def test_minhash_both_paths(spark, tiny_docs):
+    """The driver pipeline (shingle rows under the threshold) and the
+    Spark one (threshold -1) give the same band rows, pairs and
+    components, on tiny_docs and on blank and whitespace texts: null
+    texts pair with each other under band key "", "" and space-only
+    texts pair with each other but not with null ones, a tab splits
+    tokens and an NBSP does not."""
+    from osm_lib_spark.operators.dedup import _band_table, dup_components
+    from tests.conftest import both_paths
+
+    hand = spark.createDataFrame(
+        [
+            (1, None), (2, None), (3, ""), (4, "   "),
+            (5, "a\tb c d"), (6, "a b c d"), (7, "a\u00a0b c d"), (8, "a\u00a0b c d"),
+            (9, "\ta b c"), (10, "a b c\t"), (11, "a b c"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {}
+    for name, docs in (("tiny", tiny_docs), ("hand", hand)):
+        for fn in (_band_table, minhash_dup_pairs, dup_components):
+            assert "LocalRelation" in fn(docs)._jdf.queryExecution().analyzed().toString()
+            driver, cluster = both_paths(spark, lambda: sorted(map(tuple, fn(docs).collect())))
+            assert driver == cluster != [], (name, fn.__name__)
+            got[name, fn.__name__] = driver
+    keys = {(d, band): key for d, band, key in got["hand", "_band_table"]}
+    assert keys[1, 0] == keys[2, 0] == "" != keys[3, 0] == keys[4, 0]
+    assert got["hand", "minhash_dup_pairs"] == [
+        (1, 2, 1, 1, 1), (3, 4, 1, 1, 1), (5, 6, 2, 2, 2), (5, 11, 1, 2, 1),
+        (6, 11, 1, 2, 1), (7, 8, 1, 1, 1), (9, 11, 1, 2, 1), (10, 11, 1, 2, 1),
+    ]
+    assert [c for _, c, _ in got["hand", "dup_components"]] == [1, 1, 3, 3, 5, 5, 7, 7, 5, 5, 5]
+    assert (1, 2, 7, 7, 7) in got["tiny", "minhash_dup_pairs"]
+
+
 def test_ngram_jaccard_exact_values(tiny_docs):
     got = {
         (r.doc_a, r.doc_b): (r.inter, r.size_a, r.size_b)
