@@ -1458,7 +1458,6 @@ def oracle_sql() -> dict[str, str]:
         token_counts_sql,
     )
 
-    tg = os.path.join(FIXTURES, "testdata_golden")
     h15 = "CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)"
     fold_dot = (
         lambda a, b: "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "

@@ -5,14 +5,16 @@ operator (scale-first):
 
 * exact         — one hash aggregate on md5(text); fully shuffled
                   partial+final agg, no skew (md5 keys are uniform).
-* minhash_lsh   — shingles (``shingles_col``, JVM-side) → 60-bit md5
-                  hashes → P permutations ((a_i·h + b_i) mod prime)
-                  folded with a min → band keys: ONE numpy kernel
-                  (``_bands``). Shingle rows that fit under
-                  ``spark.sql.autoBroadcastJoinThreshold`` are collected
-                  once and the whole pipeline (bands, candidate groups,
-                  exact-Jaccard verify, components) runs on the driver:
-                  at small sizes a Spark job costs more than its rows.
+* minhash_lsh   — shingles (``shingles_col``) → 60-bit md5 hashes,
+                  both JVM-side → P permutations ((a_i·h + b_i) mod
+                  prime) folded with a min → band keys: ONE numpy
+                  kernel (``_bands``). When the shingle rows and the band
+                  buckets' candidate pairs fit under
+                  ``spark.sql.autoBroadcastJoinThreshold`` the rows are
+                  collected once and the whole pipeline (bands, candidate
+                  groups, exact-Jaccard verify, components) runs on the
+                  driver: at small sizes a Spark job costs more than its
+                  rows.
                   Larger inputs run the kernel per Arrow batch
                   (``mapInArrow``), then self-equi-join on (band,
                   band_sig) → candidate pairs → exact-Jaccard verify.
@@ -47,7 +49,7 @@ DuckDB/numpy oracles agree bit-for-bit.
 
 from __future__ import annotations
 
-from itertools import combinations
+from itertools import combinations, product
 
 import numpy as np
 import pyarrow as pa
@@ -55,9 +57,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_lib_spark.functions.hashing import md5_int_col, md5_int_py
+from osm_lib_spark.functions.hashing import md5_int_col
 from osm_lib_spark.operators.graph import min_label_components
-from osm_lib_spark.session import collect_bounded, local_frame
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 
 MINHASH_PRIME = (1 << 31) - 1  # Mersenne; a_i·h + b_i stays < 2^62
 # Defaults are TEST-scale. The LSH S-curve threshold is t ≈ (1/b)^(1/r)
@@ -86,13 +88,20 @@ def _perm_coeffs(num_perm: int = NUM_PERM, seed: int = 42) -> tuple[list[int], l
 
 
 def shingles_col(text, n: int = SHINGLE_N):
-    """Distinct word n-gram shingles of a text column (array<string>)."""
-    toks = F.split(F.trim(text), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")
-    )
-    return F.array_distinct(grams)
+    """Distinct word n-gram shingles of a text column (array<string>).
+
+    The tokens are bound once, as the lambda variable of a one-element
+    ``transform``: referenced inside the n-gram lambda as an expression,
+    split(trim(text)) ran once per shingle (4-5× the CPU, 824k shingle
+    rows at ``local[4]``: 13.9-21.1 vs 3.1-4.2 CPU-s)."""
+
+    def grams(toks):
+        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
+        return F.array_distinct(
+            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
+        )
+
+    return F.transform(F.array(F.split(F.trim(text), r"\s+")), grams)[0]
 
 
 def exact_duplicates(documents: DataFrame, min_count: int = 2) -> DataFrame:
@@ -106,37 +115,49 @@ def exact_duplicates(documents: DataFrame, min_count: int = 2) -> DataFrame:
     )
 
 
+def _shingle_hash(shingle):
+    """The 60-bit md5 hash MinHash permutes (``md5_int_col(s, 15)``),
+    computed in the JVM on both paths: per shingle in Python it cost
+    the driver ~2.5 µs, ~3.5 s of the driver path's 10-11 s wall at
+    1.57M shingle rows (``local[4]``)."""
+    return md5_int_col(shingle, 15)
+
+
 def _collect_shingles(documents: DataFrame):
-    """The (doc_id, shingle) rows, one per distinct shingle of each doc,
-    when they fit under the threshold (36 B a row by ``row_bytes``), as
-    (sorted doc ids, each row's index into them, shingles); else None.
-    A null text is one null shingle: ``shingles_col`` gives it [null]."""
-    rows = documents.select("doc_id", F.explode(shingles_col(F.col("text"))).alias("shingle"))
+    """The (doc_id, pos, shingle, hash) rows, one per distinct shingle of
+    each ``documents`` row, when they fit under the threshold (48 B a
+    row by ``row_bytes``), as (each documents row's doc_id, each
+    shingle's index into them, shingles, hashes); else None. Every row
+    has a shingle (a null text has one null shingle: ``shingles_col``
+    gives it [null]), so pos 0 starts each row and a repeated doc_id
+    stays two rows, as on the Spark path."""
+    rows = documents.select(
+        "doc_id", F.posexplode(shingles_col(F.col("text"))).alias("pos", "shingle")
+    ).withColumn("hash", _shingle_hash(F.col("shingle")))
     table = collect_bounded(rows)
     if table is None:
         return None
-    doc_ids, doc_index = np.unique(table.column(0).to_numpy(), return_inverse=True)
-    return doc_ids, doc_index, table.column(1).combine_chunks()
+    starts = table.column("pos").to_numpy() == 0
+    doc_ids = table.column("doc_id").to_numpy()[starts]
+    shingles, hashes = (table.column(c).combine_chunks() for c in ("shingle", "hash"))
+    return doc_ids, np.cumsum(starts) - 1, shingles, hashes
 
 
 def _bands(
-    doc_ids: np.ndarray, doc_index: np.ndarray, shingles: pa.Array, num_perm: int, num_bands: int
+    doc_ids: np.ndarray, doc_index: np.ndarray, hashes: pa.Array, num_perm: int, num_bands: int
 ) -> pa.Table:
     """(doc_id, band, band_sig) rows of each doc, doc-major: the MinHash
-    kernel behind both paths. Row r of ``shingles`` belongs to doc
-    ``doc_ids[doc_index[r]]``.
+    kernel behind both paths. Row r of ``hashes`` (``_shingle_hash`` of
+    a shingle) belongs to doc ``doc_ids[doc_index[r]]``.
 
-    sig_i = min over the doc's shingles s of (a_i·h + b_i) mod prime,
-    with h = md5_int_py(s, 15) mod prime, so every product fits in
+    sig_i = min over the doc's shingle hashes h of (a_i·h + b_i) mod
+    prime, with h taken mod prime first, so every product fits in
     int64. A band key is the band's slice of the signature joined by
     ",". A doc with no non-null shingle (null text) has a null
     signature, and its keys are "", as Spark's array_join of nulls.
     """
-    valid = shingles.is_valid().to_numpy(zero_copy_only=False)
-    rows = doc_index[valid]
-    hashes = np.fromiter(
-        (md5_int_py(s, 15) for s in shingles.drop_null().to_pylist()), np.int64, len(rows)
-    ) % MINHASH_PRIME
+    rows = doc_index[hashes.is_valid().to_numpy(zero_copy_only=False)]
+    hashes = hashes.drop_null().to_numpy() % MINHASH_PRIME
     order = np.argsort(rows, kind="stable")
     rows, hashes = rows[order], hashes[order]
     sig = np.full((len(doc_ids), num_perm), MINHASH_PRIME, np.int64)  # above every value
@@ -171,12 +192,14 @@ def _band_table(
     found = _collect_shingles(documents)
     if found is None:
         return _banded(documents, num_perm, num_bands)
-    return local_frame(documents.sparkSession, _bands(*found, num_perm, num_bands), BAND_DDL)
+    doc_ids, row_index, _, hashes = found
+    bands = _bands(doc_ids, row_index, hashes, num_perm, num_bands)
+    return local_frame(documents.sparkSession, bands, BAND_DDL)
 
 
 def _banded(documents: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
     """``_band_table`` over the threshold: a map-only ``mapInArrow`` of
-    ``_bands`` over each batch of (doc_id, shingles) rows."""
+    ``_bands`` over each batch of (doc_id, shingle hashes) rows."""
 
     def band(batches):
         for batch in batches:
@@ -184,8 +207,8 @@ def _banded(documents: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
             doc_index = pc.list_parent_indices(lists).to_numpy()
             yield from _bands(ids, doc_index, pc.list_flatten(lists), num_perm, num_bands).to_batches()
 
-    sh = documents.select("doc_id", shingles_col(F.col("text")).alias("shingles"))
-    return sh.mapInArrow(band, BAND_DDL)
+    hashes = F.transform(shingles_col(F.col("text")), _shingle_hash)
+    return documents.select("doc_id", hashes.alias("hashes")).mapInArrow(band, BAND_DDL)
 
 
 def _band_join(bands: DataFrame) -> DataFrame:
@@ -204,27 +227,48 @@ def _band_join(bands: DataFrame) -> DataFrame:
     )
 
 
-def _driver_dup_pairs(doc_ids, doc_index, shingles, threshold: float) -> pa.Table:
-    """``minhash_dup_pairs`` of collected shingle rows: docs grouped by
-    band key in a dict, then each candidate pair's exact Jaccard on its
-    docs' shingle sets (a null shingle is one element, as in Spark's
-    array_intersect)."""
-    keys = _bands(doc_ids, doc_index, shingles, NUM_PERM, NUM_BANDS).column(2).to_pylist()
+def _driver_dup_pairs(documents: DataFrame, threshold: float) -> pa.Table | None:
+    """``minhash_dup_pairs`` on the driver, or None when the shingle rows
+    or the candidate pairs are over the threshold. Rows are grouped by
+    band key; the candidates are bounded by Σ k(k−1)/2 over the band
+    buckets (k rows each) at ``row_bytes(PAIR_DDL)`` a pair, since
+    exact duplicates and blank texts share every band key. Then each
+    candidate doc pair's exact Jaccard on the shingle sets of every
+    row pair, as the Spark verify's doc_id joins give it (a null
+    shingle is one element, as in Spark's array_intersect)."""
+    found = _collect_shingles(documents)
+    if found is None:
+        return None
+    doc_ids, row_index, shingles, hashes = found
+    bands = _bands(doc_ids, row_index, hashes, NUM_PERM, NUM_BANDS)
+    sizes = bands.group_by(["band", "band_sig"]).aggregate([("doc_id", "count")]).column(2)
+    k = sizes.to_numpy().astype(np.int64)
+    spark = documents.sparkSession
+    if int((k * (k - 1) // 2).sum()) * row_bytes(spark, PAIR_DDL) > broadcast_threshold(spark):
+        return None
     buckets: dict[tuple[int, str], list[int]] = {}
-    for j, key in enumerate(keys):
+    for j, key in enumerate(bands.column(2).to_pylist()):
         buckets.setdefault((j % NUM_BANDS, key), []).append(j // NUM_BANDS)
-    # doc indices are in doc_id order, so i < k means doc_a < doc_b
-    cands = sorted({p for docs in buckets.values() for p in combinations(docs, 2)})
-    sets: dict[int, set] = {d: set() for p in cands for d in p}
-    for d, s in zip(doc_index.tolist(), shingles.to_pylist()):
-        if d in sets:
-            sets[d].add(s)
+    ids = doc_ids.tolist()
+    cands = sorted(
+        {(min(ids[r], ids[q]), max(ids[r], ids[q])) for rows in buckets.values()
+         for r, q in combinations(rows, 2) if ids[r] != ids[q]}
+    )
+    rows_of: dict[int, list[int]] = {}
+    for r, d in enumerate(ids):
+        rows_of.setdefault(d, []).append(r)
+    sets: dict[int, set] = {r: set() for p in cands for d in p for r in rows_of[d]}
+    need = np.zeros(len(ids), bool)
+    need[list(sets)] = True
+    take = np.flatnonzero(need[row_index])  # only the candidate rows' shingles become str
+    for r, s in zip(row_index[take].tolist(), shingles.take(take).to_pylist()):
+        sets[r].add(s)
     kept = []
-    for i, k in cands:
-        a, b = sets[i], sets[k]
-        inter = len(a & b)
-        if inter >= threshold * (len(a) + len(b) - inter):
-            kept.append((doc_ids[i], doc_ids[k], inter, len(a), len(b)))
+    for a, b in cands:
+        for set_a, set_b in product([sets[r] for r in rows_of[a]], [sets[r] for r in rows_of[b]]):
+            inter = len(set_a & set_b)
+            if inter >= threshold * (len(set_a) + len(set_b) - inter):
+                kept.append((a, b, inter, len(set_a), len(set_b)))
     cols = np.array(kept, np.int64).reshape(-1, 5).T
     return pa.table(list(cols), names=["doc_a", "doc_b", "inter", "size_a", "size_b"])
 
@@ -293,20 +337,23 @@ def minhash_dup_pairs(
 
     LSH only prunes, it never decides: every banded candidate pair is
     re-checked against the true shingle sets. Output: (doc_a, doc_b,
-    inter, size_a, size_b), ints only. Shingle rows that fit under
-    ``spark.sql.autoBroadcastJoinThreshold`` are collected once and the
-    whole pipeline runs on the driver; larger inputs run it in Spark.
+    inter, size_a, size_b), ints only. When the shingle rows and the
+    candidate pairs fit under ``spark.sql.autoBroadcastJoinThreshold``
+    the rows are collected once and the whole pipeline runs on the
+    driver; otherwise it runs in Spark.
     """
-    found = _collect_shingles(documents)
-    if found is None:
+    pairs = _driver_dup_pairs(documents, threshold)
+    if pairs is None:
         return _spark_dup_pairs(documents, threshold)
-    return local_frame(documents.sparkSession, _driver_dup_pairs(*found, threshold), PAIR_DDL)
+    return local_frame(documents.sparkSession, pairs, PAIR_DDL)
 
 
 def _spark_dup_pairs(documents: DataFrame, threshold: float) -> DataFrame:
     """``minhash_dup_pairs`` over the threshold: the band self-join,
     then ``_verify_pairs`` (which checkpoints the candidates)."""
-    cands = _band_join(_banded(documents, NUM_PERM, NUM_BANDS))
+    # lazy checkpoint: each side of the self-join ran the band kernel
+    bands = _banded(documents, NUM_PERM, NUM_BANDS).localCheckpoint(eager=False)
+    cands = _band_join(bands)
     return _verify_pairs(cands, _shingle_sets(documents), threshold)
 
 
@@ -323,10 +370,10 @@ def dup_components(
     The result is the unique fixpoint of min-label propagation —
     independent of how it is computed, which is what lets the DuckDB
     oracle recompute it with a recursive CTE. Where it runs follows
-    the size rule twice. Shingle rows that fit under
-    ``spark.sql.autoBroadcastJoinThreshold`` are collected once and
-    everything runs on the driver: band keys, verify and
-    ``graph.min_label_components``, so the call runs one Spark job.
+    the size rule. When the shingle rows and the candidate pairs fit
+    under ``spark.sql.autoBroadcastJoinThreshold`` the rows are
+    collected once and everything runs on the driver: band keys, verify
+    and ``graph.min_label_components``, so the call runs one Spark job.
     Otherwise the pairs come from Spark and go through
     ``_components`` (see ``components_from_pairs``), whose loop rounds
     grow with the graph's diameter (LSH dup clusters are near-cliques,
@@ -334,12 +381,11 @@ def dup_components(
     long-chained for that loop wants the alternating large-star /
     small-star formulation (same join shape, O(log n) rounds).
     """
-    found = _collect_shingles(documents)
-    if found is None:
+    pairs = _driver_dup_pairs(documents, threshold)
+    if pairs is None:
         # the pairs come from ``documents``, so both endpoints are documents
         # already: skip components_from_pairs' semi-joins (two broadcast jobs)
         return _components(documents, _spark_dup_pairs(documents, threshold))
-    pairs = _driver_dup_pairs(*found, threshold)
     return _labelled(documents, _driver_labels(documents, pairs))
 
 

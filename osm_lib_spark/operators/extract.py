@@ -236,10 +236,9 @@ def bbox_extract_batch(
     # re-executes once per consumer (plan audit r06: the BNLJ subtree
     # appeared 3× in the physical plan).
     # Measured on sf-s (local[4], 4 vCPU, seed-1 boxes, process-tree CPU-s, median of 5 warm
-    # calls a run), lazy checkpoints on b_ways, b_nodes and seen against none: 12-box batch
-    # 10 vs 14 jobs, 7.0/7.1/5.1 vs 10.6/10.6 CPU-s; 0.04° box 10 vs 15 jobs, 4.1/3.7/3.8 vs
-    # 5.3/5.8 CPU-s.
-    # Without only this one: 12 jobs each, batch 6.9/6.6 CPU-s, box 4.3/4.0 CPU-s.
+    # calls a run), the lazy checkpoints on b_ways and b_nodes against none: 12-box batch
+    # 10 vs 14 jobs, 4.7/4.8 vs 12.0 CPU-s; 0.04° box 10 vs 15 jobs, 3.8/4.0 vs 8.2 CPU-s.
+    # Without only this one: batch 11 jobs, 5.2/5.7 CPU-s; box 12 jobs, 5.1/4.6 CPU-s.
     b_ways = (
         ways_in_tile_range(way_tiles, envelope)
         .join(
@@ -265,7 +264,7 @@ def bbox_extract_batch(
     )
     # lazy checkpoint: b_nodes feeds BOTH the node output and the
     # node→relation join (same re-execution hazard as b_ways)
-    # Without only this one (measured as b_ways'): 12 jobs each, batch 9.0/7.4, box 4.5/4.7 CPU-s.
+    # Without only this one (measured as b_ways'): batch 14 jobs, 10.0 CPU-s; box 12, 5.6.
     # SHUFFLE_HASH: at scale neither side broadcasts (refs is the
     # exploded batch, nodes the corpus); hash-building the node side
     # beats sort-merge — it skips sorting both multi-million-row sides
@@ -287,10 +286,8 @@ def bbox_extract_batch(
     rel_w = ctx.rel_by_way.join(
         b_ways.withColumnRenamed("way_id", "member_id"), "member_id"
     ).select("bbox_id", "relation_id")
-    # No checkpoint, though seen feeds the direct relation output AND the
-    # closure join: one measured neutral (as b_ways', two runs: 10 jobs
-    # either way; batch 6.6/6.0 CPU-s with it, 5.9/6.7 without; box
-    # 5.6/4.6 with, 4.8/5.4 without).
+    # No checkpoint: one measured neutral (as b_ways': 10 jobs either way, batch 5.9/6.7 CPU-s
+    # without, 6.6/6.0 with; box 4.8/5.4 without, 5.6/4.6 with).
     seen = rel_n.unionByName(rel_w).distinct()
     # J5 (TileOSMSource.java:112-132 semantics): the closure table is
     # per dataset, so unlike seen it does not grow with the batch; it

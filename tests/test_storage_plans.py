@@ -315,6 +315,7 @@ def test_row_bytes_is_the_local_relation_estimate(spark):
 CHECKPOINT_AND_HINT_SITES = {
     ("operators/dedup.py", "_components", "localCheckpoint"): 1,
     ("operators/dedup.py", "_propagate_labels", "localCheckpoint"): 3,
+    ("operators/dedup.py", "_spark_dup_pairs", "localCheckpoint"): 1,
     ("operators/dedup.py", "_verify_pairs", "localCheckpoint"): 4,
     ("operators/enrich.py", "enrich_tags", "broadcast"): 1,
     ("operators/extract.py", "_closure_loop", "localCheckpoint"): 2,

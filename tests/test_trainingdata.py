@@ -1,8 +1,8 @@
 """Training-data operators: hand-checked unit tests + recall checks.
 
-These pin the ALGORITHM definitions on tiny inputs (the golden-parquet
-oracles in fixtures/testdata_golden validate the distributed execution
-of the same algorithms at sf0.01).
+These pin the ALGORITHM definitions on tiny inputs (the DuckDB oracles
+of jobs/check_correctness.py check the distributed execution of the
+same algorithms at sf0.01).
 """
 
 import hashlib
@@ -68,7 +68,10 @@ def test_minhash_both_paths(spark, tiny_docs):
     components, on tiny_docs and on blank and whitespace texts: null
     texts pair with each other under band key "", "" and space-only
     texts pair with each other but not with null ones, a tab splits
-    tokens and an NBSP does not."""
+    tokens and an NBSP does not; a doc_id on two rows stays two rows,
+    each with its own band keys and shingle set, and a candidate pair is
+    verified against every row of its two doc_ids (the union of doc 1's
+    rows would give (1, 2, 2, 4, 2))."""
     from osm_lib_spark.operators.dedup import _band_table, dup_components
     from tests.conftest import both_paths
 
@@ -80,8 +83,12 @@ def test_minhash_both_paths(spark, tiny_docs):
         ],
         "doc_id long, text string",
     )
+    repeat = spark.createDataFrame(
+        [(1, "a b c d"), (1, "x y z w"), (2, "a b c d"), (3, "x y z w")],
+        "doc_id long, text string",
+    )
     got = {}
-    for name, docs in (("tiny", tiny_docs), ("hand", hand)):
+    for name, docs in (("tiny", tiny_docs), ("hand", hand), ("repeat", repeat)):
         for fn in (_band_table, minhash_dup_pairs, dup_components):
             assert "LocalRelation" in fn(docs)._jdf.queryExecution().analyzed().toString()
             driver, cluster = both_paths(spark, lambda: sorted(map(tuple, fn(docs).collect())))
@@ -95,6 +102,34 @@ def test_minhash_both_paths(spark, tiny_docs):
     ]
     assert [c for _, c, _ in got["hand", "dup_components"]] == [1, 1, 3, 3, 5, 5, 7, 7, 5, 5, 5]
     assert (1, 2, 7, 7, 7) in got["tiny", "minhash_dup_pairs"]
+    assert len(got["repeat", "_band_table"]) == 4 * 8
+    assert got["repeat", "minhash_dup_pairs"] == [(1, 2, 2, 2, 2), (1, 3, 2, 2, 2)]
+    assert got["repeat", "dup_components"] == [(1, 1, 1), (1, 1, 1), (2, 1, 0), (3, 1, 0)]
+
+
+def test_minhash_candidate_bound_falls_back(spark):
+    """Shingle rows under the threshold whose band buckets hold more
+    candidate pairs than fit (blank and identical texts share every
+    band key) run the Spark pipeline, with the rows of threshold -1."""
+    from osm_lib_spark.operators.dedup import _collect_shingles, _driver_dup_pairs, dup_components
+    from tests.conftest import threshold
+
+    docs = spark.createDataFrame(
+        [(i, "" if i < 20 else "a b c d e") for i in range(40)], "doc_id long, text string"
+    )
+    # 80 shingle rows (3.2 kB) fit; Σ k(k−1)/2 = 2 · 8 · 190 pairs (146 kB) do not
+    with threshold(spark, "10000"):
+        assert _collect_shingles(docs) is not None and _driver_dup_pairs(docs, 0.5) is None
+        pairs = minhash_dup_pairs(docs)
+        assert "LocalRelation" not in pairs._jdf.queryExecution().analyzed().toString()
+        got = sorted(map(tuple, pairs.collect())), sorted(map(tuple, dup_components(docs).collect()))
+    with threshold(spark, "-1"):
+        want = sorted(map(tuple, minhash_dup_pairs(docs).collect())), sorted(
+            map(tuple, dup_components(docs).collect())
+        )
+    assert got == want
+    assert len(got[0]) == 2 * 190
+    assert {c for _, c, _ in got[1]} == {0, 20}
 
 
 def test_ngram_jaccard_exact_values(tiny_docs):
