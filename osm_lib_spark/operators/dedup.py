@@ -227,15 +227,17 @@ def _band_join(bands: DataFrame) -> DataFrame:
     )
 
 
-def _driver_dup_pairs(documents: DataFrame, threshold: float) -> pa.Table | None:
-    """``minhash_dup_pairs`` on the driver, or None when the shingle rows
-    or the candidate pairs are over the threshold. Rows are grouped by
-    band key; the candidates are bounded by Σ k(k−1)/2 over the band
-    buckets (k rows each) at ``row_bytes(PAIR_DDL)`` a pair, since
-    exact duplicates and blank texts share every band key. Then each
-    candidate doc pair's exact Jaccard on the shingle sets of every
-    row pair, as the Spark verify's doc_id joins give it (a null
-    shingle is one element, as in Spark's array_intersect)."""
+def _driver_dup_pairs(documents: DataFrame, threshold: float):
+    """``minhash_dup_pairs`` on the driver → (doc_ids, pairs): each
+    ``documents`` row's doc_id and the ``PAIR_DDL`` table; None when
+    the shingle rows or the candidate pairs are over the threshold.
+    Rows are grouped by band key; the candidates are bounded by
+    Σ k(k−1)/2 over the band buckets (k rows each) at
+    ``row_bytes(PAIR_DDL)`` a pair, since exact duplicates and blank
+    texts share every band key. Then each candidate doc pair's exact
+    Jaccard on the shingle sets of every row pair, as the Spark
+    verify's doc_id joins give it (a null shingle is one element, as
+    in Spark's array_intersect)."""
     found = _collect_shingles(documents)
     if found is None:
         return None
@@ -270,7 +272,7 @@ def _driver_dup_pairs(documents: DataFrame, threshold: float) -> pa.Table | None
             if inter >= threshold * (len(set_a) + len(set_b) - inter):
                 kept.append((a, b, inter, len(set_a), len(set_b)))
     cols = np.array(kept, np.int64).reshape(-1, 5).T
-    return pa.table(list(cols), names=["doc_a", "doc_b", "inter", "size_a", "size_b"])
+    return doc_ids, pa.table(list(cols), names=["doc_a", "doc_b", "inter", "size_a", "size_b"])
 
 
 def _shingle_sets(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
@@ -342,10 +344,10 @@ def minhash_dup_pairs(
     the rows are collected once and the whole pipeline runs on the
     driver; otherwise it runs in Spark.
     """
-    pairs = _driver_dup_pairs(documents, threshold)
-    if pairs is None:
+    found = _driver_dup_pairs(documents, threshold)
+    if found is None:
         return _spark_dup_pairs(documents, threshold)
-    return local_frame(documents.sparkSession, pairs, PAIR_DDL)
+    return local_frame(documents.sparkSession, found[1], PAIR_DDL)
 
 
 def _spark_dup_pairs(documents: DataFrame, threshold: float) -> DataFrame:
@@ -373,7 +375,8 @@ def dup_components(
     the size rule. When the shingle rows and the candidate pairs fit
     under ``spark.sql.autoBroadcastJoinThreshold`` the rows are
     collected once and everything runs on the driver: band keys, verify
-    and ``graph.min_label_components``, so the call runs one Spark job.
+    and ``graph.min_label_components``, so the call runs one Spark job
+    and returns a ``local_frame`` with one row per ``documents`` row.
     Otherwise the pairs come from Spark and go through
     ``_components`` (see ``components_from_pairs``), whose loop rounds
     grow with the graph's diameter (LSH dup clusters are near-cliques,
@@ -381,12 +384,21 @@ def dup_components(
     long-chained for that loop wants the alternating large-star /
     small-star formulation (same join shape, O(log n) rounds).
     """
-    pairs = _driver_dup_pairs(documents, threshold)
-    if pairs is None:
+    found = _driver_dup_pairs(documents, threshold)
+    if found is None:
         # the pairs come from ``documents``, so both endpoints are documents
         # already: skip components_from_pairs' semi-joins (two broadcast jobs)
         return _components(documents, _spark_dup_pairs(documents, threshold))
-    return _labelled(documents, _driver_labels(documents, pairs))
+    doc_ids, pairs = found
+    vertex, label = min_label_components(*(pairs.column(c).to_numpy() for c in ("doc_a", "doc_b")))
+    # a doc in no pair is its own component, as ``_labelled``'s left join gives it
+    comp = doc_ids.copy()
+    hit = np.isin(doc_ids, vertex)
+    comp[hit] = label[np.searchsorted(vertex, doc_ids[hit])]
+    table = pa.table(
+        [doc_ids, comp, (doc_ids == comp).astype(np.int64)], names=["doc_id", "component_id", "keep"]
+    )
+    return local_frame(documents.sparkSession, table, "doc_id long, component_id long, keep long")
 
 
 def components_from_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:

@@ -26,12 +26,15 @@
     ``spark.sql.autoBroadcastJoinThreshold`` (``collect_bounded``),
     else as one mapInArrow job each whose per-task sums the driver adds
     up — the broadcast-or-partition size rule.
-  - one encoder, ``_codes_batch``: coarse assignment, the optional
-    residual and the PQ codes of an Arrow batch in one numpy kernel,
-    on the driver or in a map-only mapInArrow.
+  - one encoder, ``_encode_np``: coarse assignment, the optional
+    residual and the PQ codes of a matrix in one numpy kernel, on the
+    driver or per Arrow batch in a map-only mapInArrow.
   - two query tails: ``_ivf_query`` (probe lists, exact-cosine rerank)
     and ``_adc_topk`` (one ADC LUT per (query, probed list), code-only
-    scan, exact-L2 rerank).
+    scan, exact-L2 rerank). When the trainer collected the corpus they
+    answer in numpy from that same matrix and return a LocalRelation
+    (the call runs one Spark job); otherwise they run as Spark joins
+    and per-query windows. Both give the same rows.
 
   Spark carries Arrow batches; the per-row math is numpy over the same
   left-fold kernels as the oracle, so every trained index and ranking
@@ -262,10 +265,14 @@ def _assign_local(embeddings: DataFrame, cents: list) -> DataFrame:
     )
 
 
-def _query_rows(embeddings: DataFrame, n_queries: int) -> list:
-    """[(query_id, vec)] of the vec_id < n_queries rows, sorted — a
-    bounded control collect, since queries are the small side by
-    contract."""
+def _query_rows(embeddings: DataFrame, n_queries: int, local) -> list:
+    """[(query_id, vec)] of the vec_id < n_queries rows: from the
+    trainer's collected ``local`` arrays when it has them, else a
+    bounded control collect (sorted), since queries are the small side
+    by contract."""
+    if local is not None:
+        vec_id, mat = local[:2]
+        return [(int(vec_id[j]), mat[j]) for j in np.flatnonzero(vec_id < n_queries)]
     return sorted(
         (int(r["vec_id"]), list(r["embedding"]))
         for r in embeddings.where(F.col("vec_id") < n_queries)
@@ -293,17 +300,82 @@ def _probe_pairs(q_rows: list, cents: list, nprobe: int) -> list:
     return out
 
 
+TOPK_DDL = "query_id long, rank long, neighbor_id long"
+
+
+def _ranked(qids: np.ndarray, ids: np.ndarray, k: int, *keys: np.ndarray):
+    """(query_id, rank, id) arrays of the first ``k`` candidate rows of
+    each query ordered by ``keys`` (the first one first), then by id:
+    the per-query ``row_number() <= k`` window of the Spark tails. numpy
+    sorts NaN last, as Spark's ascending order does. Candidates are a
+    multiset: a row the joins repeat is ranked twice, as in Spark."""
+    order = np.lexsort((ids, *keys[::-1], qids))
+    q = qids[order]
+    start = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(len(q)) - np.repeat(start, np.diff(np.r_[start, len(q)])) + 1
+    keep = rank <= k
+    return q[keep], rank[keep], ids[order][keep]
+
+
+def _matches(keys: np.ndarray, want: np.ndarray):
+    """(i, r): for each position i of ``want``, every row r with
+    ``keys[r] == want[i]`` — the equi-join of ``want`` against
+    ``keys`` as index pairs."""
+    order = np.argsort(keys, kind="stable")
+    lo = np.searchsorted(keys[order], want, "left")
+    n = np.searchsorted(keys[order], want, "right") - lo
+    return np.repeat(np.arange(len(want)), n), order[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
+
+
+def _scan_lists(local, pairs: list, score):
+    """(query_id, vec_id, score) arrays of the driver tails' candidates:
+    for each probe pair p, every row of its list but the query's own
+    (the Spark tails' ``vec_id != query_id``), scored by
+    ``score(p, rows)``."""
+    vec_id, lists = local[0], local[2]
+    parts = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
+    for p, (qid, lid, _) in enumerate(pairs):
+        rows = np.flatnonzero((lists == lid) & (vec_id != qid))
+        parts.append((np.full(len(rows), qid, np.int64), vec_id[rows], score(p, rows)))
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _topk_frame(spark, qids, rank, ids) -> DataFrame:
+    """A driver tail's (query_id, rank, neighbor_id) rows as a
+    ``local_frame``."""
+    cols = [pa.array(c, pa.int64()) for c in (qids, rank, ids)]
+    return local_frame(spark, pa.table(cols, names=["query_id", "rank", "neighbor_id"]), TOPK_DDL)
+
+
 def _ivf_query(
-    embeddings: DataFrame, cents: list, k: int, n_queries: int, nprobe: int
+    embeddings: DataFrame, cents: list, local, k: int, n_queries: int, nprobe: int
 ) -> DataFrame:
     """Exact-cosine IVF query tail over a driver-side centroid list:
-    row-local assignment, driver-side probe selection, then ONE
-    broadcast hash join (tiny probes side) — the corpus is never
-    shuffled. Each vector lives in exactly one list and probes are
-    distinct per query, so no dedup/distinct step is needed (or
-    planned)."""
+    driver-side probe selection, then every member of a probed list
+    other than the query itself, cos DESC, neighbor_id ASC.
+
+    With the trainer's ``local`` (vec_id, mat, lists) arrays this runs
+    in numpy; otherwise as row-local assignment and ONE broadcast hash
+    join (tiny probes side) — the corpus is never shuffled. Each vector
+    lives in exactly one list and probes are distinct per query, so no
+    dedup/distinct step is needed (or planned)."""
+    pairs = _probe_pairs(_query_rows(embeddings, n_queries, local), cents, nprobe)
+    if local is not None:
+        mat = local[1]
+        norms = norm_fold_np(mat)
+        qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), mat.shape[1])
+        qnorms = norm_fold_np(qv)
+
+        def cos_of(p, rows):
+            denom = qnorms[p] * norms[rows]
+            if not denom.all():  # where the Spark tail's ANSI division raises
+                raise ValueError("Division by zero: the cosine of a zero-norm embedding")
+            return dot_fold_np(mat[rows], qv[p]) / denom
+
+        qids, ids, cos = _scan_lists(local, pairs, cos_of)
+        # descending with NaN first, as Spark orders a descending double
+        return _topk_frame(embeddings.sparkSession, *_ranked(qids, ids, k, ~np.isnan(cos), -cos))
     assign = _assign_local(embeddings, cents)
-    pairs = _probe_pairs(_query_rows(embeddings, n_queries), cents, nprobe)
     probes = local_frame(
         embeddings.sparkSession,
         [(qid, lid, [float(v) for v in vec]) for qid, lid, vec in pairs],
@@ -346,7 +418,10 @@ def ivf_topk(
     Centroid 'training' is a deterministic sample (vec_id = j·stride) so
     the numpy golden oracle reproduces the index bit-for-bit; a real
     deployment would k-means on a sample — the dataflow is identical.
-    Scale shape: the nlist stride rows are one filtered collect (no pass
+    Where it runs follows the size rule: a corpus under
+    ``spark.sql.autoBroadcastJoinThreshold`` is one bounded collect and
+    the whole query runs in numpy on the driver (one Spark job).
+    Over it, the nlist stride rows are one filtered collect (no pass
     over the corpus), assignment is a row-local Arrow argmax over the
     (nlist, dim) centroid matrix and probe selection runs on the driver
     (no join, no shuffle), and candidate selection broadcasts the tiny
@@ -359,8 +434,8 @@ def ivf_topk(
     on a sample, with the same map-only assignment kernel). nprobe
     trades recall for the touched fraction nprobe/nlist.
     """
-    cents, _, _ = _train_index(embeddings, nlist, 0, 0, 0, False, None)
-    return _ivf_query(embeddings, cents, k, n_queries, nprobe)
+    cents, _, _, local = _train_index(embeddings, nlist, 0, 0, 0, False, None)
+    return _ivf_query(embeddings, cents, local, k, n_queries, nprobe)
 
 
 def ivf_kmeans_topk(
@@ -377,12 +452,13 @@ def ivf_kmeans_topk(
     sizes, so the DuckDB oracle recomputes the whole pipeline.
 
     The Lloyd step is one pass of ``_train_index``: on the driver when
-    the corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, else
-    one map-only job whose tasks return nlist·dim integer sums. The only
-    wide stage left is the final per-query top-k window.
+    the corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, and
+    then the query too, else one map-only job whose tasks return
+    nlist·dim integer sums; the only wide stage left is then the final
+    per-query top-k window.
     """
-    cents, _, _ = _train_index(embeddings, nlist, 1, 0, 0, False, None)
-    return _ivf_query(embeddings, cents, k, n_queries, nprobe)
+    cents, _, _, local = _train_index(embeddings, nlist, 1, 0, 0, False, None)
+    return _ivf_query(embeddings, cents, local, k, n_queries, nprobe)
 
 
 PQ_M = 4  # subspaces (dim/M dims each)
@@ -477,18 +553,24 @@ def _coarse_np(mat: np.ndarray, cmat, residual: bool):
     return idx, (mat - cmat[idx] if residual else mat)
 
 
-def _codes_batch(vec_id, mat, list_ids, cmat, cb, residual: bool) -> pa.RecordBatch:
-    """The one encoder: coarse assignment, the optional residual and the
-    PQ codes of a batch in one kernel → a ``CODES_DDL`` batch (list_id 0
-    for every row without a coarse quantizer)."""
+def _encode_np(mat: np.ndarray, list_ids, cmat, cb, residual: bool):
+    """The one encoder → (lists, codes): each row's coarse list_id (0
+    for every row without a coarse quantizer) and, with a codebook
+    ``cb``, its (n, m) PQ codes of the row or of its residual (None
+    without one)."""
     idx, x = _coarse_np(mat, cmat, residual)
-    codes = _pq_codes_np(x, cb)
+    lists = np.zeros(len(mat), np.int32) if idx is None else list_ids[idx]
+    return lists, None if cb is None else _pq_codes_np(x, cb)
+
+
+def _codes_batch(vec_id, lists, codes) -> pa.RecordBatch:
+    """``_encode_np``'s arrays as a ``CODES_DDL`` batch."""
     return pa.RecordBatch.from_arrays(
         [
             pa.array(vec_id, pa.int64()),
-            pa.array(np.zeros(len(mat), np.int32) if idx is None else list_ids[idx], pa.int32()),
+            pa.array(lists, pa.int32()),
             pa.ListArray.from_arrays(
-                np.arange(0, codes.size + 1, cb.shape[0], dtype=np.int32), codes.ravel()
+                np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32), codes.ravel()
             ),
         ],
         names=["vec_id", "list_id", "codes"],
@@ -502,7 +584,8 @@ def _encode_frame(embeddings: DataFrame, list_ids, cmat, cb, residual: bool, dim
 
     def encode(batches):
         for b in batches:
-            yield _codes_batch(*_as_matrix(b, dim), list_ids, cmat, cb, residual)
+            vec_id, mat = _as_matrix(b, dim)
+            yield _codes_batch(vec_id, *_encode_np(mat, list_ids, cmat, cb, residual))
 
     return embeddings.select("vec_id", "embedding").mapInArrow(encode, CODES_DDL)
 
@@ -534,7 +617,7 @@ def _train_index(
     residual: bool,
     dim: int | None,
 ):
-    """The one IVF/PQ trainer → (cents, cb, coded).
+    """The one IVF/PQ trainer → (cents, cb, coded, local).
 
     * Coarse quantizer (``nlist`` > 0): the stride rows j < nlist, then
       ``lloyd`` quantized Lloyd steps; a list with no members drops out.
@@ -543,28 +626,30 @@ def _train_index(
     * Product quantizer (``m`` > 0): per subspace, the stride rows
       j < kc — residuals against their nearest centroid with
       ``residual`` — then one quantized Lloyd step; a code with no
-      members keeps its init value. ``cb`` is (m, ≤kc, dim/m) and
-      ``coded`` the ``CODES_DDL`` frame of the corpus (both None when
-      ``m`` is 0).
+      members keeps its init value. ``cb`` is (m, ≤kc, dim/m) (None
+      when ``m`` is 0).
 
     Deterministic end to end (stride init + integer-quantized means), so
-    the DuckDB oracle retrains bit-identically. Where it runs: with no
-    Lloyd step and no PQ the stride rows are one filtered collect.
-    Otherwise (vec_id, embedding) rows that fit under
+    the DuckDB oracle retrains bit-identically. Where it runs follows
+    the size rule. (vec_id, embedding) rows that fit under
     ``spark.sql.autoBroadcastJoinThreshold`` (8 + 4·dim bytes a row, dim
     taken as TRAIN_DIM_BOUND when the caller does not give it) are
-    collected once, every pass runs on the driver and ``coded`` is a
-    LocalRelation. A larger corpus is lazily checkpointed: the stride
-    rows are one filtered collect, each Lloyd pass is one mapInArrow
-    job returning per-task integer sums, and ``coded`` is a map-only
-    mapInArrow. Both give the same bits.
+    collected once and every pass runs on the driver; ``coded`` is None
+    and ``local`` is (vec_id, mat, lists, codes): the collected ids and
+    (n, dim) float64 matrix, each row's list_id and its (n, m) PQ codes
+    (None without PQ), from which the query tails answer. A larger
+    corpus gives ``local`` None: the stride rows are one filtered
+    collect, each Lloyd pass is one mapInArrow job returning per-task
+    integer sums over the lazily checkpointed corpus, and ``coded`` is
+    the map-only mapInArrow of the ``CODES_DDL`` rows (None without
+    PQ). Both give the same bits.
     """
     emb = embeddings.select("vec_id", "embedding")
     n_stride = max(nlist, kc if m else 0)
-    table = None
     if lloyd or m:
+        # the passes reuse the rows the bounded collect's job materialized
         emb = emb.localCheckpoint(eager=False)
-        table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
+    table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
     if table is not None:
         vec_id, mat = _as_matrix(table, dim)
 
@@ -593,14 +678,22 @@ def _train_index(
             cmat, members = _quantized_means(run(coarse_sums))
             list_ids = list_ids[members]
     cents = [] if cmat is None else [(int(lid), c.tolist()) for lid, c in zip(list_ids, cmat)]
-    if not m:
-        return cents, None, None
+    cb = _train_codebook(rows[ids < kc], cmat, run, m, residual) if m else None
+    if table is not None:
+        return cents, cb, None, (vec_id, mat, *_encode_np(mat, list_ids, cmat, cb, residual))
+    coded = _encode_frame(emb, list_ids, cmat, cb, residual, dim) if m else None
+    return cents, cb, coded, None
 
+
+def _train_codebook(init_rows: np.ndarray, cmat, run, m: int, residual: bool) -> np.ndarray:
+    """``_train_index``'s product quantizer: (m, ≤kc, dim/m) codebooks
+    from the stride rows j < kc (``init_rows``) and one quantized Lloyd
+    step over ``run``."""
     pq_cmat = cmat if residual else None
-    _, init = _coarse_np(rows[ids < kc], pq_cmat, residual)
+    _, init = _coarse_np(init_rows, pq_cmat, residual)
     if not len(init):
         raise ValueError("PQ training found no stride-sample rows")
-    sub = dim // m
+    sub = init.shape[1] // m
     cb0 = np.stack([init[:, s * sub : (s + 1) * sub] for s in range(m)])
 
     def pq_sums(x):
@@ -615,15 +708,7 @@ def _train_index(
     for s in range(m):
         means, members = _quantized_means(sums[s])
         cb[s, members] = means
-    if table is None:
-        coded = _encode_frame(emb, list_ids, cmat, cb, residual, dim)
-    else:
-        coded = local_frame(
-            embeddings.sparkSession,
-            pa.Table.from_batches([_codes_batch(vec_id, mat, list_ids, cmat, cb, residual)]),
-            CODES_DDL,
-        )
-    return cents, cb, coded
+    return cb
 
 
 def _adc_lut(qv: np.ndarray, cb: np.ndarray) -> list:
@@ -638,7 +723,8 @@ def _adc_topk(
     embeddings: DataFrame,
     cents: list,
     cb: np.ndarray,
-    coded: DataFrame,
+    coded: DataFrame | None,
+    local,
     k: int,
     n_queries: int,
     nprobe: int,
@@ -650,9 +736,12 @@ def _adc_topk(
     q − c_list with ``residual``, else from q; every code is in list 0
     when ``cents`` is empty — then a code-only scan of the probed lists
     joined to the broadcast LUT rows, then the exact-L2 rerank of the
-    top ``refine`` ADC candidates per query.
+    top ``refine`` ADC candidates per query: ADC ASC, vec_id ASC, then
+    L2 ASC, neighbor_id ASC.
 
-    The scan carries (query_id, vec_id, adc) only — no embedding bytes
+    With the trainer's ``local`` (vec_id, mat, lists, codes) arrays the
+    scan and the rerank run in numpy on the driver. Otherwise the scan
+    carries (query_id, vec_id, adc) only — no embedding bytes
     through the per-query window shuffle; full vectors are read again
     just for the ≤refine·Q finalists. With ``prune_lists`` the probed
     list_ids are also applied as a LITERAL filter: against a
@@ -660,7 +749,7 @@ def _adc_topk(
     at the SCAN (the persisted-index serving path), whereas the
     broadcast join alone would read all codes."""
     spark = embeddings.sparkSession
-    q_rows = _query_rows(embeddings, n_queries)
+    q_rows = _query_rows(embeddings, n_queries, local)
     if cents:
         pairs = _probe_pairs(q_rows, cents, nprobe)
     else:
@@ -670,6 +759,27 @@ def _adc_topk(
     for qid, lid, vec in pairs:
         qv = np.asarray(vec, dtype=np.float64)
         lut_rows.append((qid, lid, _adc_lut(qv - cmap[lid] if residual else qv, cb)))
+    if local is not None:
+        vec_id, mat, _, codes = local
+        luts = np.array([lut for _, _, lut in lut_rows], dtype=np.float64)
+
+        def adc_of(p, rows):
+            # the Spark scan's left fold over subspaces, from 0.0
+            adc = np.zeros(len(rows))
+            for s in range(cb.shape[0]):
+                adc = adc + luts[p, s, codes[rows, s]]
+            return adc
+
+        qids, ids, adc = _scan_lists(local, pairs, adc_of)
+        short_q, _, short_id = _ranked(qids, ids, refine, adc)
+        # rerank: every row of each shortlisted vec_id against every
+        # query row of its query_id, as the Spark joins on vec_id and
+        # query_id pair them
+        i, rows = _matches(vec_id, short_id)
+        j, q_at = _matches(vec_id, short_q[i])
+        rows, qids = rows[j], short_q[i][j]
+        l2 = l2_fold_np(mat[rows], mat[q_at])
+        return _topk_frame(spark, *_ranked(qids, vec_id[rows], k, l2))
     probes = local_frame(spark, lut_rows, "query_id long, list_id int, lut array<array<double>>")
     qemb = local_frame(
         spark,
@@ -743,8 +853,8 @@ def pq_topk(
     code is in list 0 and every query probes it, so the scan is the
     same broadcast hash join on list_id, over the whole corpus.
     """
-    _, cb, coded = _train_index(embeddings, 0, 0, m, kc, False, dim)
-    return _adc_topk(embeddings, [], cb, coded, k, n_queries, 1, refine, False)
+    _, cb, coded, local = _train_index(embeddings, 0, 0, m, kc, False, dim)
+    return _adc_topk(embeddings, [], cb, coded, local, k, n_queries, 1, refine, False)
 
 
 def ivf_pq_topk(
@@ -788,10 +898,13 @@ def ivf_pq_topk(
     Both forms train through ``_train_index`` — on the driver when the
     corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, else as
     one map-only job per Lloyd pass — and the DuckDB oracle retrains the
-    ENTIRE composed index from scratch and must agree bit-for-bit.
+    ENTIRE composed index from scratch and must agree bit-for-bit. On
+    the driver the query answers in numpy from the collected corpus
+    too, so the call runs one Spark job; over the threshold the scan
+    and rerank are the Spark plan above.
     """
-    cents, cb, coded = _train_index(embeddings, nlist, int(residual), m, kc, residual, dim)
-    return _adc_topk(embeddings, cents, cb, coded, k, n_queries, nprobe, refine, residual)
+    cents, cb, coded, local = _train_index(embeddings, nlist, int(residual), m, kc, residual, dim)
+    return _adc_topk(embeddings, cents, cb, coded, local, k, n_queries, nprobe, refine, residual)
 
 
 def _load_ivf_pq_index(spark, path: str):
@@ -856,10 +969,13 @@ def build_ivf_pq_index(
 
     spark = embeddings.sparkSession
     train_frame = train_on if train_on is not None else embeddings
-    cents, cb, coded = _train_index(train_frame, nlist, 1, m, kc, True, dim)
+    cents, cb, coded, local = _train_index(train_frame, nlist, 1, m, kc, True, dim)
     dim = len(cents[0][1])
     if train_on is not None:
         coded = _encode_frame(embeddings, *_centroid_arrays(cents), cb, True, dim)
+    elif local is not None:
+        vec_id, _, lists, codes = local
+        coded = local_frame(spark, pa.Table.from_batches([_codes_batch(vec_id, lists, codes)]), CODES_DDL)
     local_frame(
         spark,
         [(int(lid), [float(x) for x in v]) for lid, v in cents],
@@ -906,7 +1022,7 @@ def ivf_pq_topk_from_index(
         "vec_id", F.col("list_id").cast("int").alias("list_id"), "codes"
     )
     return _adc_topk(
-        embeddings, cents, cb, coded, k, n_queries, nprobe, refine, meta["residual"], prune_lists=True
+        embeddings, cents, cb, coded, None, k, n_queries, nprobe, refine, meta["residual"], prune_lists=True
     )
 
 

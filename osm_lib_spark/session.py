@@ -151,9 +151,12 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     rings ride the tile rows under a SHUFFLE_HASH hint),
     ``dedup.components_from_pairs`` (the label-propagation loop),
     ``dedup._collect_shingles`` (one row per shingle; the MinHash band
-    kernel per Arrow batch, the band self-join and the Spark verify) and
-    ``similarity._train_index`` (one ``mapInArrow`` job per Lloyd
-    pass). Sites whose size is known without a collect compare
+    kernel per Arrow batch, the band self-join and the Spark verify;
+    under it ``dup_components`` returns its whole result as one
+    ``local_frame``) and ``similarity._train_index`` (one ``mapInArrow``
+    job per Lloyd pass, a stride-row collect for ``ivf_topk``, and the
+    ANN query tails as Spark joins and windows; under it both query
+    tails answer in numpy from the collected corpus). Sites whose size is known without a collect compare
     ``row_bytes`` times their row count with ``broadcast_threshold``:
     ``knn.knn_kring`` (k·Q result rows; executor-side accumulation) and
     the driver-built closure in ``relation_closure_table`` (a

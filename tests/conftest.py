@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 from contextlib import contextmanager
@@ -37,6 +38,22 @@ def both_paths(spark, fn):
     with threshold(spark, "-1"):
         loop = fn()
     return kernel, loop
+
+
+_job_groups = itertools.count()
+
+
+def spark_jobs(spark, fn):
+    """(``fn()``, the number of Spark jobs it ran), counted as the job
+    ids of a job group set around the call."""
+    sc = spark.sparkContext
+    group = f"spark_jobs_{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

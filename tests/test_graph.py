@@ -107,12 +107,21 @@ def test_components_contract_and_caps(spark):
 
 def test_ivf_pq_training_both_paths(spark, tmp_path):
     """Every index-based ANN operator returns the same rows whether its
-    index trains on the driver or per partition (threshold -1), on a
-    500 × 64 clustered corpus (the perfbench corpus shape), and
-    build_ivf_pq_index writes bit-equal centroids, codebooks and codes.
-    Stride rows 0 and 31 are equal, so coarse list 1 and PQ code 1 get
-    no members: the list is dropped and the code keeps its init value,
-    on both paths."""
+    index trains and its query runs on the driver or per partition
+    (threshold -1), and build_ivf_pq_index writes bit-equal centroids,
+    codebooks and codes. Three corpora:
+
+    * 500 × 64 clustered (the perfbench corpus shape). Stride rows 0 and
+      31 are equal, so coarse list 1 and PQ code 1 get no members: the
+      list is dropped and the code keeps its init value, on both paths.
+    * the same with a second row for query 3 and for corpus vec_id 250,
+      the latter a copy of query 3's vector: every join on vec_id or
+      query_id meets both rows, and 250 is query 3's nearest neighbor.
+    * 70 × 16 with queries 0-4 in a cluster of their own: with three
+      lists and one probe each of them has 4 candidates, fewer than k.
+    """
+    from collections import Counter
+
     from osm_lib_spark.operators.similarity import (
         build_ivf_pq_index,
         ivf_kmeans_topk,
@@ -127,10 +136,18 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
     vecs = centers[label] + rng.normal(0.0, 0.35, size=(500, 64))
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     vecs[31] = vecs[0]
-    emb = spark.createDataFrame(
-        [(i, vecs[i].astype(np.float32).tolist(), int(label[i])) for i in range(500)],
-        "vec_id long, embedding array<float>, label int",
+    rows = [(i, vecs[i].astype(np.float32).tolist(), int(label[i])) for i in range(500)]
+    ddl = "vec_id long, embedding array<float>, label int"
+    emb = spark.createDataFrame(rows, ddl)
+    repeated = spark.createDataFrame(
+        rows + [(3, (-vecs[5]).astype(np.float32).tolist(), 0), (250, rows[3][1], 0)], ddl
     )
+    apart = rng.normal(size=(3, 16)) * 4
+    small = [
+        (i, (apart[0 if i < 5 else 1 + i % 2] + rng.normal(0.0, 0.1, 16)).astype(np.float32).tolist(), 0)
+        for i in range(70)
+    ]
+    sparse = spark.createDataFrame(small, ddl)
 
     def build():
         path = tempfile.mkdtemp(dir=tmp_path)
@@ -140,17 +157,30 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
             for part in ("centroids", "codebooks", "codes")
         }
 
-    operators = {
-        "ivf_topk": lambda: _rows(ivf_topk(emb)),
-        "ivf_kmeans_topk": lambda: _rows(ivf_kmeans_topk(emb)),
-        "pq_topk": lambda: _rows(pq_topk(emb)),
-        "ivf_pq_topk": lambda: _rows(ivf_pq_topk(emb)),
-        "ivf_pq_topk residual": lambda: _rows(ivf_pq_topk(emb, residual=True)),
-    }
-    for name, fn in operators.items():
-        kernel, loop = both_paths(spark, fn)
-        assert kernel == loop, name
-        assert len(kernel) == 100, name
+    def operators(e, **ivf):
+        return {
+            "ivf_topk": lambda: _rows(ivf_topk(e, **ivf)),
+            "ivf_kmeans_topk": lambda: _rows(ivf_kmeans_topk(e, **ivf)),
+            "pq_topk": lambda: _rows(pq_topk(e)),
+            "ivf_pq_topk": lambda: _rows(ivf_pq_topk(e, **ivf)),
+            "ivf_pq_topk residual": lambda: _rows(ivf_pq_topk(e, residual=True, **ivf)),
+        }
+
+    for corpus, e, ivf in (
+        ("clustered", emb, {}),
+        ("repeated", repeated, {}),
+        ("sparse", sparse, {"nlist": 3, "nprobe": 1}),
+    ):
+        for name, fn in operators(e, **ivf).items():
+            kernel, loop = both_paths(spark, fn)
+            assert kernel == loop, (corpus, name)
+            per_query = Counter(q for q, _, _ in kernel)
+            if corpus == "clustered":
+                assert len(kernel) == 100, name
+            if corpus == "repeated":
+                assert (3, 1, 250) in kernel, name
+            if corpus == "sparse" and name != "pq_topk":
+                assert [per_query[q] for q in range(10)] == [4] * 5 + [10] * 5, name
 
     kernel, loop = both_paths(spark, build)
     assert kernel == loop
@@ -160,14 +190,30 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
 
 def test_ragged_embeddings_rejected_on_both_paths(spark):
     """An embedding of another length fails IVF/PQ training with the
-    same message on both paths (from a task on the partition path)."""
-    from osm_lib_spark.operators.similarity import ivf_pq_topk
+    same message on both paths (from a task on the partition path), and
+    a zero-norm embedding in a probed list fails the exact-cosine IVF
+    query on both (Spark's ANSI division by zero on the partition
+    path), not ranked as every query's nearest neighbor."""
+    from osm_lib_spark.operators.similarity import ivf_pq_topk, ivf_topk
 
     rng = np.random.default_rng(11)
     ragged = spark.createDataFrame(
         [(i, rng.standard_normal(8 if i == 7 else 16).astype(np.float32).tolist()) for i in range(40)],
         "vec_id long, embedding array<float>",
     )
+    vecs = rng.standard_normal((40, 8)).astype(np.float32)
+    vecs[20] = 0.0
+    zero = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(40)], "vec_id long, embedding array<float>"
+    )
+    cases = [
+        (
+            lambda: ivf_pq_topk(ragged, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True),
+            "embeddings of one length",
+        ),
+        (lambda: ivf_topk(zero, k=3, n_queries=3, nlist=2, nprobe=2).collect(), "Division by zero"),
+    ]
     for value in (spark.conf.get("spark.sql.autoBroadcastJoinThreshold"), "-1"):
-        with threshold(spark, value), pytest.raises(Exception, match="embeddings of one length"):
-            ivf_pq_topk(ragged, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True)
+        for call, message in cases:
+            with threshold(spark, value), pytest.raises(Exception, match=message):
+                call()

@@ -202,7 +202,10 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs):
     """The kNN strip join and the residual IVF-PQ and PQ probe joins
     carry no broadcast hint: their driver-built side is a local_frame
     whose stats let the planner broadcast it. None plans a sort-merge
-    join, a nested-loop join or a cartesian product."""
+    join, a nested-loop join or a cartesian product. The corpus (200
+    rows of 16 floats, 72 B a row at its given dim: 14.4 kB) is over
+    the 10 KiB threshold, so the ANN queries take the Spark scan, not
+    the driver tail; their LUT and probe frames are under it."""
     import re
 
     import numpy as np
@@ -214,7 +217,7 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs):
     nodes = parse_nodes(docs_xs)
     rng = np.random.default_rng(3)
     emb = spark.createDataFrame(  # a LogicalRDD: no size stats on this side
-        [(i, rng.standard_normal(16).astype(np.float32).tolist(), i % 2) for i in range(40)],
+        [(i, rng.standard_normal(16).astype(np.float32).tolist(), i % 2) for i in range(200)],
         "vec_id long, embedding array<float>, label int",
     )
     # a threshold below the sf-xs node scan's estimate: only the small
@@ -225,8 +228,8 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs):
     try:
         rows, plans = _plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
         tops = [
-            ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True),
-            pq_topk(emb, k=3, n_queries=3, m=4, kc=4),
+            ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, dim=16, residual=True),
+            pq_topk(emb, k=3, n_queries=3, m=4, kc=4, dim=16),
         ]
         scans = [(_explain_str(top), top.count()) for top in tops]
     finally:
