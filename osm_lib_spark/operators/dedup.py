@@ -390,14 +390,7 @@ def dup_components(
         # already: skip components_from_pairs' semi-joins (two broadcast jobs)
         return _components(documents, _spark_dup_pairs(documents, threshold))
     doc_ids, pairs = found
-    vertex, label = min_label_components(*(pairs.column(c).to_numpy() for c in ("doc_a", "doc_b")))
-    # a doc in no pair is its own component, as ``_labelled``'s left join gives it
-    comp = doc_ids.copy()
-    hit = np.isin(doc_ids, vertex)
-    comp[hit] = label[np.searchsorted(vertex, doc_ids[hit])]
-    table = pa.table(
-        [doc_ids, comp, (doc_ids == comp).astype(np.int64)], names=["doc_id", "component_id", "keep"]
-    )
+    table = _driver_labels(pairs.column("doc_a").to_numpy(), pairs.column("doc_b").to_numpy(), doc_ids)
     return local_frame(documents.sparkSession, table, "doc_id long, component_id long, keep long")
 
 
@@ -432,23 +425,29 @@ def _components(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     table = collect_bounded(pairs)
     if table is None:
         return _labelled(documents, _propagate_labels(pairs))
-    return _labelled(documents, _driver_labels(documents, table))
+    a, b = (table.column(c).to_numpy(zero_copy_only=False) for c in ("doc_a", "doc_b"))
+    labels = _driver_labels(a, b, np.union1d(a, b)).select(["doc_id", "component_id"])
+    return _labelled(documents, local_frame(documents.sparkSession, labels, "doc_id long, comp long"))
 
 
-def _driver_labels(documents: DataFrame, pairs: pa.Table) -> DataFrame:
-    """(doc_id, comp) of the docs in some (doc_a, doc_b) pair, by
-    ``graph.min_label_components``, as a ``local_frame``."""
-    doc_id, comp = min_label_components(
-        pairs.column(0).to_numpy(zero_copy_only=False),
-        pairs.column(1).to_numpy(zero_copy_only=False),
+def _driver_labels(a: np.ndarray, b: np.ndarray, doc_ids: np.ndarray) -> pa.Table:
+    """(doc_id, component_id, keep) of each of ``doc_ids`` under the
+    undirected (a, b) pairs, by ``graph.min_label_components``: a doc
+    in no pair is its own component, and keep = 1 iff the doc is its
+    component's min id."""
+    vertex, label = min_label_components(a, b)
+    comp = doc_ids.copy()
+    hit = np.isin(doc_ids, vertex)
+    comp[hit] = label[np.searchsorted(vertex, doc_ids[hit])]
+    return pa.table(
+        [doc_ids, comp, (doc_ids == comp).astype(np.int64)], names=["doc_id", "component_id", "keep"]
     )
-    table = pa.table([doc_id, comp], names=["doc_id", "comp"])
-    return local_frame(documents.sparkSession, table, "doc_id long, comp long")
 
 
 def _labelled(documents: DataFrame, labels: DataFrame) -> DataFrame:
-    """``documents`` with their (doc_id, comp) labels; a doc without
-    one is its own component."""
+    """``documents`` with the (doc_id, comp) labels of the docs in some
+    pair, by the rule of ``_driver_labels``: a doc without one is its
+    own component."""
     return (
         documents.join(labels, "doc_id", "left")
         .select("doc_id", F.coalesce("comp", "doc_id").alias("component_id"))

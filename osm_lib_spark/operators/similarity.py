@@ -31,10 +31,12 @@
     driver or per Arrow batch in a map-only mapInArrow.
   - two query tails: ``_ivf_query`` (probe lists, exact-cosine rerank)
     and ``_adc_topk`` (one ADC LUT per (query, probed list), code-only
-    scan, exact-L2 rerank). When the trainer collected the corpus they
-    answer in numpy from that same matrix and return a LocalRelation
-    (the call runs one Spark job); otherwise they run as Spark joins
-    and per-query windows. Both give the same rows.
+    scan, exact-L2 rerank). When the trainer collected the corpus and
+    the candidates of the probed lists fit under the threshold too
+    (``_driver_tail``), they answer in numpy from that same matrix and
+    return a LocalRelation (the call runs one Spark job); otherwise
+    they run as Spark joins and per-query windows. Both give the same
+    rows.
 
   Spark carries Arrow batches; the per-row math is numpy over the same
   left-fold kernels as the oracle, so every trained index and ranking
@@ -65,7 +67,7 @@ from osm_lib_spark.functions.hashing import (
     l2_fold_np,
     norm_fold_np,
 )
-from osm_lib_spark.session import collect_bounded, local_frame
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 
 ANN_SEED = 7
 # Defaults are TEST-scale. For random-hyperplane LSH the collision
@@ -284,23 +286,24 @@ def _query_rows(embeddings: DataFrame, n_queries: int, local) -> list:
 def _probe_pairs(q_rows: list, cents: list, nprobe: int) -> list:
     """[(query_id, list_id, vec)]: the ``nprobe`` closest centroid lists
     of each query, ccos DESC, list_id ASC — the oracle's order, by the
-    same ``dot_fold_np``/``norm_fold_np`` kernels."""
+    same ``dot_fold_np``/``norm_fold_np`` kernels, over all queries at
+    once (each row folds alone, so the bits are the per-query ones)."""
     list_ids, cmat = _centroid_arrays(cents)
-    cnorms = norm_fold_np(cmat)
+    if not q_rows:
+        return []
+    qmat = np.array([vec for _, vec in q_rows], dtype=np.float64)
+    denom = norm_fold_np(qmat)[:, None] * norm_fold_np(cmat)
+    if not denom.all():
+        raise ZeroDivisionError("float division by zero: the cosine of a zero-norm vector")
+    ccos = np.stack([dot_fold_np(qmat, c) for c in cmat], axis=1) / denom
     out = []
-    for qid, vec in q_rows:
-        qv = np.asarray(vec, dtype=np.float64).reshape(1, -1)
-        nq = float(norm_fold_np(qv)[0])
-        scores = [
-            (float(dot_fold_np(qv, cmat[j])[0]) / (nq * float(cnorms[j])), int(list_ids[j]))
-            for j in range(len(cents))
-        ]
-        scores.sort(key=lambda t: (-t[0], t[1]))
-        out.extend((qid, lid, vec) for _, lid in scores[:nprobe])
+    for (qid, vec), row in zip(q_rows, ccos):
+        out.extend((qid, int(list_ids[j]), vec) for j in np.lexsort((list_ids, -row))[:nprobe])
     return out
 
 
 TOPK_DDL = "query_id long, rank long, neighbor_id long"
+CANDIDATE_DDL = "query_id long, vec_id long, score double"
 
 
 def _ranked(qids: np.ndarray, ids: np.ndarray, k: int, *keys: np.ndarray):
@@ -333,11 +336,29 @@ def _scan_lists(local, pairs: list, score):
     (the Spark tails' ``vec_id != query_id``), scored by
     ``score(p, rows)``."""
     vec_id, lists = local[0], local[2]
+    order = np.argsort(lists, kind="stable")
+    by_list = lists[order]
     parts = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
     for p, (qid, lid, _) in enumerate(pairs):
-        rows = np.flatnonzero((lists == lid) & (vec_id != qid))
+        rows = order[np.searchsorted(by_list, lid, "left") : np.searchsorted(by_list, lid, "right")]
+        rows = rows[vec_id[rows] != qid]
         parts.append((np.full(len(rows), qid, np.int64), vec_id[rows], score(p, rows)))
     return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _driver_tail(spark, local, pairs: list) -> bool:
+    """Whether a query tail answers in numpy: the trainer collected the
+    corpus (``local``) and the candidates ``_scan_lists`` would hold at
+    once, every row of each probed list at ``row_bytes(CANDIDATE_DDL)``,
+    fit under ``spark.sql.autoBroadcastJoinThreshold`` too. A corpus
+    that fits can still give n_queries·N candidates (``pq_topk`` probes
+    list 0, the whole corpus, for every query); those go to the Spark
+    tail, whose windows can spill."""
+    if local is None:
+        return False
+    lids = np.array([lid for _, lid, _ in pairs], dtype=np.int64)
+    sizes = np.bincount(local[2], minlength=int(lids.max(initial=-1)) + 1)
+    return int(sizes[lids].sum()) * row_bytes(spark, CANDIDATE_DDL) <= broadcast_threshold(spark)
 
 
 def _topk_frame(spark, qids, rank, ids) -> DataFrame:
@@ -354,13 +375,14 @@ def _ivf_query(
     driver-side probe selection, then every member of a probed list
     other than the query itself, cos DESC, neighbor_id ASC.
 
-    With the trainer's ``local`` (vec_id, mat, lists) arrays this runs
-    in numpy; otherwise as row-local assignment and ONE broadcast hash
+    With the trainer's ``local`` (vec_id, mat, lists) arrays and
+    candidates that fit (``_driver_tail``) this runs in numpy;
+    otherwise as row-local assignment and ONE broadcast hash
     join (tiny probes side) — the corpus is never shuffled. Each vector
     lives in exactly one list and probes are distinct per query, so no
     dedup/distinct step is needed (or planned)."""
     pairs = _probe_pairs(_query_rows(embeddings, n_queries, local), cents, nprobe)
-    if local is not None:
+    if _driver_tail(embeddings.sparkSession, local, pairs):
         mat = local[1]
         norms = norm_fold_np(mat)
         qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), mat.shape[1])
@@ -420,7 +442,10 @@ def ivf_topk(
     deployment would k-means on a sample — the dataflow is identical.
     Where it runs follows the size rule: a corpus under
     ``spark.sql.autoBroadcastJoinThreshold`` is one bounded collect and
-    the whole query runs in numpy on the driver (one Spark job).
+    the whole query runs in numpy on the driver (one Spark job) when
+    its candidates fit too. Over it, that collect's job is spent and
+    the stride collect below runs after it: one job more than the
+    stride collect alone.
     Over it, the nlist stride rows are one filtered collect (no pass
     over the corpus), assignment is a row-local Arrow argmax over the
     (nlist, dim) centroid matrix and probe selection runs on the driver
@@ -453,9 +478,9 @@ def ivf_kmeans_topk(
 
     The Lloyd step is one pass of ``_train_index``: on the driver when
     the corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, and
-    then the query too, else one map-only job whose tasks return
-    nlist·dim integer sums; the only wide stage left is then the final
-    per-query top-k window.
+    then the query too when its candidates fit, else one map-only job
+    whose tasks return nlist·dim integer sums; the only wide stage left
+    is then the final per-query top-k window.
     """
     cents, _, _, local = _train_index(embeddings, nlist, 1, 0, 0, False, None)
     return _ivf_query(embeddings, cents, local, k, n_queries, nprobe)
@@ -577,6 +602,13 @@ def _codes_batch(vec_id, lists, codes) -> pa.RecordBatch:
     )
 
 
+def _local_codes(spark, local) -> DataFrame:
+    """The ``CODES_DDL`` rows of the trainer's collected ``local``
+    arrays as a ``local_frame``."""
+    vec_id, _, lists, codes = local
+    return local_frame(spark, pa.Table.from_batches([_codes_batch(vec_id, lists, codes)]), CODES_DDL)
+
+
 def _encode_frame(embeddings: DataFrame, list_ids, cmat, cb, residual: bool, dim: int) -> DataFrame:
     """``CODES_DDL`` rows of ``embeddings`` against frozen index
     artifacts: ``_codes_batch`` over each Arrow batch of one map-only
@@ -637,7 +669,8 @@ def _train_index(
     collected once and every pass runs on the driver; ``coded`` is None
     and ``local`` is (vec_id, mat, lists, codes): the collected ids and
     (n, dim) float64 matrix, each row's list_id and its (n, m) PQ codes
-    (None without PQ), from which the query tails answer. A larger
+    (None without PQ), from which the query tails answer when their
+    candidates fit as well (``_driver_tail``). A larger
     corpus gives ``local`` None: the stride rows are one filtered
     collect, each Lloyd pass is one mapInArrow job returning per-task
     integer sums over the lazily checkpointed corpus, and ``coded`` is
@@ -711,12 +744,20 @@ def _train_codebook(init_rows: np.ndarray, cmat, run, m: int, residual: bool) ->
     return cb
 
 
-def _adc_lut(qv: np.ndarray, cb: np.ndarray) -> list:
-    """The one ADC lookup table: lut[s][j] is the squared L2 between
-    subvector s of ``qv`` and codebook entry (s, j), by the same
-    ``l2_fold_np`` kernel the oracle's SQL fold mirrors."""
-    m, _, sub = cb.shape
-    return [l2_fold_np(cb[s], qv[s * sub : (s + 1) * sub]).tolist() for s in range(m)]
+def _adc_luts(qv: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """The ADC lookup tables, one per row of ``qv``: lut[p, s, j] is the
+    squared L2 between subvector s of qv[p] and codebook entry (s, j),
+    by the same ``l2_fold_np`` kernel the oracle's SQL fold mirrors
+    (one fold per (p, j) row)."""
+    m, kc, sub = cb.shape
+    n = len(qv)
+    return np.stack(
+        [
+            l2_fold_np(np.tile(cb[s], (n, 1)), np.repeat(qv[:, s * sub : (s + 1) * sub], kc, axis=0)).reshape(n, kc)
+            for s in range(m)
+        ],
+        axis=1,
+    )
 
 
 def _adc_topk(
@@ -739,8 +780,9 @@ def _adc_topk(
     top ``refine`` ADC candidates per query: ADC ASC, vec_id ASC, then
     L2 ASC, neighbor_id ASC.
 
-    With the trainer's ``local`` (vec_id, mat, lists, codes) arrays the
-    scan and the rerank run in numpy on the driver. Otherwise the scan
+    With the trainer's ``local`` (vec_id, mat, lists, codes) arrays and
+    candidates that fit (``_driver_tail``) the scan and the rerank run
+    in numpy on the driver. Otherwise the scan
     carries (query_id, vec_id, adc) only — no embedding bytes
     through the per-query window shuffle; full vectors are read again
     just for the ≤refine·Q finalists. With ``prune_lists`` the probed
@@ -754,14 +796,13 @@ def _adc_topk(
         pairs = _probe_pairs(q_rows, cents, nprobe)
     else:
         pairs = [(qid, 0, vec) for qid, vec in q_rows]
-    cmap = {lid: np.asarray(v, dtype=np.float64) for lid, v in cents}
-    lut_rows = []
-    for qid, lid, vec in pairs:
-        qv = np.asarray(vec, dtype=np.float64)
-        lut_rows.append((qid, lid, _adc_lut(qv - cmap[lid] if residual else qv, cb)))
-    if local is not None:
+    qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), cb.shape[0] * cb.shape[2])
+    if residual:
+        cmap = {lid: np.asarray(v, dtype=np.float64) for lid, v in cents}
+        qv = qv - np.array([cmap[lid] for _, lid, _ in pairs]).reshape(qv.shape)
+    luts = _adc_luts(qv, cb)
+    if _driver_tail(spark, local, pairs):
         vec_id, mat, _, codes = local
-        luts = np.array([lut for _, _, lut in lut_rows], dtype=np.float64)
 
         def adc_of(p, rows):
             # the Spark scan's left fold over subspaces, from 0.0
@@ -780,6 +821,9 @@ def _adc_topk(
         rows, qids = rows[j], short_q[i][j]
         l2 = l2_fold_np(mat[rows], mat[q_at])
         return _topk_frame(spark, *_ranked(qids, vec_id[rows], k, l2))
+    if coded is None:  # the trainer collected the corpus, but not its candidates
+        coded = _local_codes(spark, local)
+    lut_rows = [(qid, lid, lut) for (qid, lid, _), lut in zip(pairs, luts.tolist())]
     probes = local_frame(spark, lut_rows, "query_id long, list_id int, lut array<array<double>>")
     qemb = local_frame(
         spark,
@@ -900,8 +944,8 @@ def ivf_pq_topk(
     one map-only job per Lloyd pass — and the DuckDB oracle retrains the
     ENTIRE composed index from scratch and must agree bit-for-bit. On
     the driver the query answers in numpy from the collected corpus
-    too, so the call runs one Spark job; over the threshold the scan
-    and rerank are the Spark plan above.
+    too when its candidates fit as well, so the call runs one Spark
+    job; otherwise the scan and rerank are the Spark plan above.
     """
     cents, cb, coded, local = _train_index(embeddings, nlist, int(residual), m, kc, residual, dim)
     return _adc_topk(embeddings, cents, cb, coded, local, k, n_queries, nprobe, refine, residual)
@@ -974,8 +1018,7 @@ def build_ivf_pq_index(
     if train_on is not None:
         coded = _encode_frame(embeddings, *_centroid_arrays(cents), cb, True, dim)
     elif local is not None:
-        vec_id, _, lists, codes = local
-        coded = local_frame(spark, pa.Table.from_batches([_codes_batch(vec_id, lists, codes)]), CODES_DDL)
+        coded = _local_codes(spark, local)
     local_frame(
         spark,
         [(int(lid), [float(x) for x in v]) for lid, v in cents],

@@ -156,11 +156,14 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     ``local_frame``) and ``similarity._train_index`` (one ``mapInArrow``
     job per Lloyd pass, a stride-row collect for ``ivf_topk``, and the
     ANN query tails as Spark joins and windows; under it both query
-    tails answer in numpy from the collected corpus). Sites whose size is known without a collect compare
-    ``row_bytes`` times their row count with ``broadcast_threshold``:
-    ``knn.knn_kring`` (k·Q result rows; executor-side accumulation) and
-    the driver-built closure in ``relation_closure_table`` (a
-    SHUFFLE_HASH hint).
+    tails answer in numpy from the collected corpus when their
+    candidates fit too). Sites whose size is known without a collect
+    compare ``row_bytes`` times their row count with
+    ``broadcast_threshold``: ``knn.knn_kring`` (k·Q result rows;
+    executor-side accumulation), the driver-built closure in
+    ``relation_closure_table`` (a SHUFFLE_HASH hint) and
+    ``similarity._driver_tail`` (the rows of the probed lists, one per
+    candidate; the Spark query tails).
     """
     threshold = broadcast_threshold(df.sparkSession)
     if threshold <= 0:

@@ -188,6 +188,43 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
     assert len(kernel[1]["codes"]) == 500
 
 
+def test_ann_candidate_bound_falls_back(spark):
+    """A corpus under the threshold whose probed lists hold more
+    candidates than fit runs the Spark query tail, with the rows of
+    threshold -1: with one list, every query scans the whole corpus."""
+    from osm_lib_spark.operators.similarity import (
+        ivf_kmeans_topk,
+        ivf_pq_topk,
+        ivf_topk,
+        pq_topk,
+    )
+
+    rng = np.random.default_rng(3)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(16).astype(np.float32).tolist()) for i in range(200)],
+        "vec_id long, embedding array<float>",
+    ).cache()
+    one_list = {"n_queries": 150, "nlist": 1, "nprobe": 1}
+    operators = {
+        "ivf_topk": lambda: ivf_topk(emb, **one_list),
+        "ivf_kmeans_topk": lambda: ivf_kmeans_topk(emb, **one_list),
+        "pq_topk": lambda: pq_topk(emb, n_queries=150),
+        "ivf_pq_topk": lambda: ivf_pq_topk(emb, **one_list),
+        "ivf_pq_topk residual": lambda: ivf_pq_topk(emb, residual=True, **one_list),
+    }
+    for name, fn in operators.items():
+        # 200 rows at 4104 B (dim unknown: 1024 floats) = 821 kB fit;
+        # 150 queries × 200 candidates × 32 B = 960 kB do not
+        with threshold(spark, "900000"):
+            got = fn()
+            assert "Window" in got._jdf.queryExecution().analyzed().toString(), name
+            got = _rows(got)
+        with threshold(spark, "-1"):
+            assert got == _rows(fn()), name
+        assert len(got) == 1500, name
+    emb.unpersist()
+
+
 def test_ragged_embeddings_rejected_on_both_paths(spark):
     """An embedding of another length fails IVF/PQ training with the
     same message on both paths (from a task on the partition path), and
