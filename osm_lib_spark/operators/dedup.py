@@ -74,6 +74,7 @@ NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
+NULL_DOC_ID = "MinHash dedup needs a non-null doc_id on every documents row"
 MAX_COMPONENT_ITERATIONS = 50  # label-propagation rounds (Spark path only)
 BAND_DDL = "doc_id long, band int, band_sig string"  # the persisted index's bands/
 PAIR_DDL = "doc_a long, doc_b long, inter long, size_a long, size_b long"
@@ -130,13 +131,16 @@ def _collect_shingles(documents: DataFrame):
     shingle's index into them, shingles, hashes); else None. Every row
     has a shingle (a null text has one null shingle: ``shingles_col``
     gives it [null]), so pos 0 starts each row and a repeated doc_id
-    stays two rows, as on the Spark path."""
+    stays two rows, as on the Spark path. A null doc_id raises
+    ``ValueError``: MinHash keys every row by it."""
     rows = documents.select(
         "doc_id", F.posexplode(shingles_col(F.col("text"))).alias("pos", "shingle")
     ).withColumn("hash", _shingle_hash(F.col("shingle")))
     table = collect_bounded(rows)
     if table is None:
         return None
+    if table.column("doc_id").null_count:
+        raise ValueError(NULL_DOC_ID)
     starts = table.column("pos").to_numpy() == 0
     doc_ids = table.column("doc_id").to_numpy()[starts]
     shingles, hashes = (table.column(c).combine_chunks() for c in ("shingle", "hash"))
@@ -199,7 +203,12 @@ def _band_table(
 
 def _banded(documents: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
     """``_band_table`` over the threshold: a map-only ``mapInArrow`` of
-    ``_bands`` over each batch of (doc_id, shingle hashes) rows."""
+    ``_bands`` over each batch of (doc_id, shingle hashes) rows. A null
+    doc_id raises ``ValueError`` here, before any task runs the kernel
+    (one job over ``doc_id``; in a task it would surface wrapped in a
+    Java exception)."""
+    if not documents.where(F.col("doc_id").isNull()).isEmpty():
+        raise ValueError(NULL_DOC_ID)
 
     def band(batches):
         for batch in batches:

@@ -1,9 +1,20 @@
 """Bounding-box tile extract — the flagship query.
 
 Re-expresses the reference's `GET /minLat,minLon,maxLat,maxLon.pbf`
-pipeline (TileOSMSource.java:49-143) as ONE DataFrame DAG over a batch
-of boxes; a single extract is a batch of one, as the reference's
-concurrent server (VanillaExtract.java:102-148) runs one pipeline per box:
+pipeline (TileOSMSource.java:49-143) over a batch of boxes; a single
+extract is a batch of one, as the reference's concurrent server
+(VanillaExtract.java:102-148) runs one pipeline per box.
+
+Where it runs follows the engine's size rule (``session.collect_bounded``).
+When the context's member indexes and closure fit under
+``spark.sql.autoBroadcastJoinThreshold`` (``ExtractContext.arrays``) and
+so do the batch's way refs and (bbox, ref) candidates, the batch
+resolves on the driver, as osm-lib answers from in-memory indexes:
+two bounded collects (the refs of the ways in the envelope, then which
+of them exist as nodes), the rest in numpy, and one LocalRelation of
+per-(box, type) id lists out, exploded
+(``_driver_batch``; 6 Spark jobs with a per-box count against the
+chain's 10). Otherwise it runs as ONE DataFrame DAG:
 
     bboxes → z12 tile ranges (y-inverted, TileOSMSource.java:43-45)
            → envelope filter + bbox × way_tiles range join  (S5, J2)
@@ -31,20 +42,26 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.tiles import bbox_tile_range
-from osm_lib_spark.operators.graph import upward_closure
+from osm_lib_spark.operators.graph import lookup, upward_closure
 from osm_lib_spark.operators.indexes import build_way_tiles
 from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 
 MAX_CLOSURE_ITERATIONS = 50
 CLOSURE_DDL = "relation_id long, ancestor_id long"
+EXTRACT_DDL = "bbox_id int, entity_type string, id long"
+
+# (key, value) int64 arrays sorted by key: a driver-side index
+Index = tuple[np.ndarray, np.ndarray]
 
 
-def relation_closure_table(relations: DataFrame) -> DataFrame:
+def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | None]:
     """Transitive UPWARD closure of the relation-membership graph:
     (relation_id, ancestor_id) for every ancestor reachable from the
     relation by walking 'is member of' edges ONE or more times. A
@@ -65,6 +82,10 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
     the loop's checkpointed result keeps its origin plan's estimate
     (17 GB for the 10-row sf-xs closure on Spark 4.1.2), and the
     extract's closure join plans as a SortMergeJoin.
+
+    Returns (the closure frame, its (relation_id, ancestor_id) arrays
+    sorted by relation_id when the driver built it and it fits under
+    the threshold, else None).
     """
     # lazy checkpoint: the bounded collect materializes the edges, which
     # the loop then reuses instead of re-exploding the relations
@@ -89,8 +110,8 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
             spark, pa.table([child, ancestor], names=["relation_id", "ancestor_id"]), CLOSURE_DDL
         )
         if len(child) * row_bytes(spark, CLOSURE_DDL) <= broadcast_threshold(spark):
-            return closure
-    return closure.hint("SHUFFLE_HASH")
+            return closure, (child, ancestor)
+    return closure.hint("SHUFFLE_HASH"), None
 
 
 def _closure_loop(edges: DataFrame) -> DataFrame:
@@ -117,42 +138,54 @@ def _closure_loop(edges: DataFrame) -> DataFrame:
     )
 
 
-def _member_index(index: DataFrame) -> DataFrame:
+def _member_index(index: DataFrame) -> tuple[DataFrame, Index | None]:
     """A (member_id, relation_id) index, reused by every extract: a
     LocalRelation when it fits under
     ``spark.sql.autoBroadcastJoinThreshold`` (one bounded collect; the
     planner broadcasts it by its exact size), else the checkpoint with a
     SHUFFLE_HASH hint. The collect's job materializes the checkpoint, so
     an index over the threshold is not computed twice (at a threshold
-    ≤ 0 no collect runs, and the first extract materializes it)."""
+    ≤ 0 no collect runs, and the first extract materializes it).
+    Returns (the frame, the collected arrays sorted by member_id, or
+    None over the threshold or with a null relation_id, which int64
+    arrays cannot hold; a null member_id joins nothing and is left out)."""
     index = index.localCheckpoint(eager=False)
     table = collect_bounded(index)
     if table is None:
-        return index.hint("SHUFFLE_HASH")
-    return local_frame(index.sparkSession, table, "member_id long, relation_id long")
+        return index.hint("SHUFFLE_HASH"), None
+    frame = local_frame(index.sparkSession, table, "member_id long, relation_id long")
+    if table.column("relation_id").null_count:
+        return frame, None
+    table = table.filter(table.column("member_id").is_valid())
+    member, relation = (table.column(c).to_numpy() for c in ("member_id", "relation_id"))
+    order = np.argsort(member, kind="stable")
+    return frame, (member[order], relation[order])
 
 
 @dataclass
 class ExtractContext:
     """Cached per-dataset state shared by extracts: the node/way member
     indexes and the transitive closure table. Build once with
-    ``prepare_extract_context``; each extract is then a pure join DAG
-    with no driver-side iteration."""
+    ``prepare_extract_context``. ``arrays`` holds the same three as
+    int64 (key, value) arrays sorted by key, when all three fit under
+    ``spark.sql.autoBroadcastJoinThreshold``; the driver-side extract
+    (``_driver_batch``) resolves from them, the Spark chain from the
+    frames."""
 
     rel_by_node: DataFrame
     rel_by_way: DataFrame
     rel_closure: DataFrame
+    arrays: tuple[Index, Index, Index] | None = None
 
 
 def prepare_extract_context(relations: DataFrame) -> ExtractContext:
     from osm_lib_spark.operators.indexes import rel_member_indexes
 
     idx = rel_member_indexes(relations)
-    return ExtractContext(
-        rel_by_node=_member_index(idx["node"]),
-        rel_by_way=_member_index(idx["way"]),
-        rel_closure=relation_closure_table(relations),
-    )
+    (by_node, node_arrays), (by_way, way_arrays) = (_member_index(idx[k]) for k in ("node", "way"))
+    closure, closure_arrays = relation_closure_table(relations)
+    arrays = (node_arrays, way_arrays, closure_arrays)
+    return ExtractContext(by_node, by_way, closure, None if any(a is None for a in arrays) else arrays)
 
 
 @dataclass
@@ -193,6 +226,114 @@ def ways_in_tile_range(way_tiles: DataFrame, tile_range: tuple[int, int, int, in
     )
 
 
+def _driver_batch(
+    nodes: DataFrame,
+    ways: DataFrame,
+    tiled: DataFrame,
+    ranges: list[tuple[int, int, int, int]],
+    arrays: tuple[Index, Index, Index],
+) -> DataFrame | None:
+    """``bbox_extract_batch`` resolved on the driver, the way osm-lib
+    answers a tile extract from in-memory indexes (TileOSMSource.java:49-143):
+    two bounded collects, then numpy over ``ExtractContext.arrays``.
+    Returns the ``EXTRACT_DDL`` rows exploded from one ``local_frame``,
+    or None when a collect or the batch's way rows and (bbox, ref)
+    candidates are over ``spark.sql.autoBroadcastJoinThreshold``.
+
+    The first collect is the refs of the ways in the envelope's
+    way_tiles rows (``tiled``), one (way_id, xtile, ytile, pos, ref_id)
+    row each, so its bound counts refs exactly (the planner broadcasts
+    ``tiled`` into ``ways`` while it fits): a way row starts at pos 0,
+    or is one row with a null pos when it has no refs. Way ids
+    are keys: a tiled way with no ``ways`` row drops out here, where the
+    Spark chain emits it. The second is which of those refs exist in
+    ``nodes`` (orphan refs drop out, TileOSMSource.java:80-82).
+    """
+    spark = nodes.sparkSession
+    refs = (
+        ways.select(F.col("id").alias("way_id"), "node_ids")
+        .join(tiled.select("way_id", "xtile", "ytile"), "way_id")
+        .select("way_id", "xtile", "ytile", F.posexplode_outer("node_ids").alias("pos", "ref_id"))
+    )
+    table = collect_bounded(refs)
+    if table is None:
+        return None
+    way_id, xtile, ytile = (table.column(c).to_numpy() for c in ("way_id", "xtile", "ytile"))
+    starts = pc.fill_null(table.column("pos"), 0).to_numpy() == 0
+    has_ref = table.column("ref_id").is_valid().to_numpy()
+    ref_way = way_id[has_ref]
+    order = np.argsort(ref_way, kind="stable")
+    ref_way, ref_id = ref_way[order], table.column("ref_id").drop_null().to_numpy()[order]
+
+    # S5 + J2: each way row whose tile lies in a box, with the box's id
+    rows = np.flatnonzero(starts)
+    rows = rows[np.argsort(xtile[rows], kind="stable")]
+    xs = xtile[rows]
+    bound = broadcast_threshold(spark) // row_bytes(spark, EXTRACT_DDL)
+    hits, n_rows = [], 0
+    for x0, y0, x1, y1 in ranges:
+        cand = rows[np.searchsorted(xs, x0, "left") : np.searchsorted(xs, x1, "right")]
+        hit = way_id[cand[(ytile[cand] >= y0) & (ytile[cand] <= y1)]]
+        # the box's result rows before the ref dedup: its way rows and their refs
+        n_rows += len(hit) + int(
+            (np.searchsorted(ref_way, hit, "right") - np.searchsorted(ref_way, hit, "left")).sum()
+        )
+        if n_rows > bound:
+            return None
+        hits.append(hit)
+    b_way = np.repeat(np.arange(len(ranges), dtype=np.int32), [len(h) for h in hits])
+    w_id = np.concatenate(hits).astype(np.int64)
+
+    # J1: refs → distinct (bbox_id, ref), those with a node row kept
+    b_w, w = _distinct(b_way, w_id)
+    at, ref = lookup(w, ref_way, ref_id)
+    b_ref, ref = _distinct(b_w[at], ref)
+    if len(ref):
+        probe = local_frame(spark, pa.table([np.unique(ref)], names=["ref_id"]), "ref_id long")
+        found = collect_bounded(
+            nodes.select(F.col("id").alias("ref_id")).join(probe, "ref_id", "left_semi")
+        )
+        if found is None:
+            return None
+        keep = np.isin(ref, found.column(0).drop_null().to_numpy())
+        b_ref, ref = b_ref[keep], ref[keep]
+
+    # J3/J4 then J5: relations by node and by way, then their ancestors
+    (node_key, node_rel), (way_key, way_rel), (child, ancestor) = arrays
+    at_n, rel_n = lookup(ref, node_key, node_rel)
+    at_w, rel_w = lookup(w, way_key, way_rel)
+    b_seen, seen = _distinct(np.r_[b_ref[at_n], b_w[at_w]], np.r_[rel_n, rel_w])
+    at_a, anc = lookup(seen, child, ancestor)
+    b_rel, rel = _distinct(np.r_[b_seen, b_seen[at_a]], np.r_[seen, anc])
+
+    # one row per (bbox_id, entity_type) holding its ids, exploded: a
+    # LocalRelation of 3·B rows ships to the tasks faster than one row per
+    # id (12-box sf-s batch, 230k ids, + groupBy count: ~1 against ~2.5 CPU-s)
+    box = np.arange(len(ranges), dtype=np.int32)
+    groups = pa.concat_tables(
+        pa.table(
+            [
+                box,
+                pa.array([entity_type] * len(box)),
+                pa.ListArray.from_arrays(np.searchsorted(b, np.r_[box, len(box)]).astype(np.int32), ids),
+            ],
+            names=["bbox_id", "entity_type", "ids"],
+        )
+        for entity_type, b, ids in (("node", b_ref, ref), ("way", b_way, w_id), ("relation", b_rel, rel))
+    )
+    grouped = local_frame(spark, groups, "bbox_id int, entity_type string, ids array<long>")
+    return grouped.select("bbox_id", "entity_type", F.explode("ids").alias("id"))
+
+
+def _distinct(bbox_id: np.ndarray, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The distinct (bbox_id, id) pairs, sorted."""
+    order = np.lexsort((ids, bbox_id))
+    bbox_id, ids = bbox_id[order], ids[order]
+    new = np.ones(len(ids), bool)
+    new[1:] = (bbox_id[1:] != bbox_id[:-1]) | (ids[1:] != ids[:-1])
+    return bbox_id[new], ids[new]
+
+
 def bbox_extract_batch(
     nodes: DataFrame,
     ways: DataFrame,
@@ -201,14 +342,16 @@ def bbox_extract_batch(
     way_tiles: DataFrame | None = None,
     ctx: ExtractContext | None = None,
 ) -> DataFrame:
-    """Many extracts as ONE DataFrame DAG → (bbox_id, entity_type, id).
+    """Many extracts at once → (bbox_id, entity_type, id).
 
     The batch analog of the reference's concurrent extract server
-    (VanillaExtract.java:102-148): instead of one join chain per bbox,
-    the bbox set becomes a dimension table joined against way_tiles
-    with range predicates, and every downstream join carries bbox_id as
-    part of the key. A batch of B extracts costs one set of shuffles
-    (not B sets). ``way_tiles`` may be a pre-built (ideally
+    (VanillaExtract.java:102-148). On the driver when the context and
+    the batch fit under the threshold (``_driver_batch``); else ONE
+    DataFrame DAG: instead of one join chain per bbox, the bbox set
+    becomes a dimension table joined against way_tiles with range
+    predicates, and every downstream join carries bbox_id as part of
+    the key, so a batch of B extracts costs one set of shuffles (not B
+    sets). ``way_tiles`` may be a pre-built (ideally
     Hilbert-partitioned) index table, else it is derived on the fly;
     ``ctx`` (``prepare_extract_context``) is reusable across calls.
     """
@@ -221,6 +364,10 @@ def bbox_extract_batch(
     ranges = [bbox_tile_range(*b) for b in bboxes]
     min_xs, min_ys, max_xs, max_ys = zip(*ranges)
     envelope = (min(min_xs), min(min_ys), max(max_xs), max(max_ys))
+    if ctx.arrays is not None:
+        found = _driver_batch(nodes, ways, ways_in_tile_range(way_tiles, envelope), ranges, ctx.arrays)
+        if found is not None:
+            return found
     # A local_frame is a LocalRelation of exactly known size
     # (28 B/box), so the planner itself broadcasts it into the range join
     # while it fits under spark.sql.autoBroadcastJoinThreshold.

@@ -8,6 +8,10 @@ it is collected once and the fixpoint runs here, on the driver, the
 way osm-lib builds its relation indexes in memory (OSM.java:156-158);
 the Spark loops stay as the path for larger inputs.
 
+``lookup`` is the equi-join over a sorted int64 index that
+``upward_closure`` and the driver-side bbox extract
+(``extract._driver_batch``) run.
+
 Both kernels first map ids to dense indices with ``np.unique`` (sorted,
 so index order is id order), which lets a pair be one int64 key
 ``i * n + j`` for any id range below ~3·10⁹ distinct vertices.
@@ -23,6 +27,17 @@ def _dense(*cols: np.ndarray) -> tuple[np.ndarray, list[np.ndarray]]:
     ids, inv = np.unique(np.concatenate(cols).astype(np.int64), return_inverse=True)
     bounds = np.cumsum([0] + [len(c) for c in cols])
     return ids, [inv[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
+
+
+def lookup(keys: np.ndarray, index_keys: np.ndarray, index_vals: np.ndarray):
+    """The equi-join of ``keys`` with the index (``index_keys`` sorted,
+    ``index_vals``): (the position in ``keys``, the value) of every
+    match, in ``keys`` order."""
+    lo = np.searchsorted(index_keys, keys, "left")
+    cnt = np.searchsorted(index_keys, keys, "right") - lo
+    # the index rows of each key, flattened
+    starts = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    return np.repeat(np.arange(len(keys)), cnt), index_vals[starts + np.arange(cnt.sum())]
 
 
 def upward_closure(child: np.ndarray, parent: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -42,12 +57,9 @@ def upward_closure(child: np.ndarray, parent: np.ndarray) -> tuple[np.ndarray, n
     closure = frontier = edges
     while frontier.size:
         f_child, f_anc = np.divmod(frontier, n)
-        lo = np.searchsorted(e_child, f_anc, "left")
-        cnt = np.searchsorted(e_child, f_anc, "right") - lo
-        # the edges out of each frontier ancestor, flattened
-        starts = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
-        hop = e_parent[starts + np.arange(cnt.sum())]
-        step = np.unique(np.repeat(f_child, cnt) * n + hop)
+        # the edges out of each frontier ancestor
+        rows, hop = lookup(f_anc, e_child, e_parent)
+        step = np.unique(f_child[rows] * n + hop)
         frontier = np.setdiff1d(step, closure, assume_unique=True)
         closure = np.union1d(closure, frontier)
     return ids[closure // n], ids[closure % n]

@@ -3,10 +3,13 @@ Spark job costs ~0.7 CPU-s here whatever its rows, so for a small input
 the job count sets an operator's cost: a change that adds jobs back to
 one of these calls fails this test, not only a later benchmark."""
 
+import json
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
-from tests.conftest import spark_jobs
+from tests.conftest import spark_jobs, threshold
 
 
 def _budget(spark, fn):
@@ -14,18 +17,22 @@ def _budget(spark, fn):
     return spark_jobs(spark, fn)[1]
 
 
-def test_driver_path_job_budgets(spark, docs_xs):
+def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
     """Each index ANN operator with its collect runs ≤ 2 jobs (the
     bounded collect of the corpus; the query answers in numpy; 5-8
-    jobs when the query ran as Spark joins), MinHash components with a
+    jobs when the query ran as Spark joins), ``ivf_topk`` over the
+    corpus switch ≤ 5, MinHash components with a
     digest ≤ 3 (the shingle collect, then the aggregate's two jobs over
-    the result's LocalRelation; a join to ``documents`` adds one) and
+    the result's LocalRelation; a join to ``documents`` adds one),
     ``prepare_extract_context`` ≤ 3 (the member indexes' bounded
-    collects)."""
+    collects) and ``bbox_extract_batch`` with a per-box count ≤ 6 (its
+    two bounded collects, two jobs each, then the aggregate's two; the
+    Spark chain ran 10)."""
     from osm_lib_spark.operators.dedup import dup_components
-    from osm_lib_spark.operators.extract import prepare_extract_context
+    from osm_lib_spark.operators.extract import bbox_extract_batch, prepare_extract_context
+    from osm_lib_spark.operators.indexes import build_way_tiles
     from osm_lib_spark.operators.similarity import ivf_kmeans_topk, ivf_pq_topk, ivf_topk, pq_topk
-    from osm_lib_spark.sources.span_codec import parse_relations
+    from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
 
     rng = np.random.default_rng(2)
     emb = spark.createDataFrame(
@@ -41,6 +48,11 @@ def test_driver_path_job_budgets(spark, docs_xs):
     }
     jobs = {name: _budget(spark, fn) for name, fn in operators.items()}
     assert all(n <= 2 for n in jobs.values()), jobs
+    # over the corpus switch (200 rows at 4104 B, no dim given, > 10 KiB)
+    # one job brings back the bounded rows and the stride rows together:
+    # 5 jobs, as the stride collect alone ran before the driver tails
+    with threshold(spark, "10240"):
+        assert _budget(spark, operators["ivf_topk"]) <= 5
 
     dup = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(
@@ -51,5 +63,17 @@ def test_driver_path_job_budgets(spark, docs_xs):
 
     relations = parse_relations(docs_xs).cache()
     assert _budget(spark, lambda: prepare_extract_context(relations)) <= 3
-    for frame in (emb, docs, relations):
+
+    nodes, ways = parse_nodes(docs_xs).cache(), parse_ways(docs_xs).cache()
+    way_tiles = build_way_tiles(ways, nodes).cache()
+    ctx = prepare_extract_context(relations)
+    with open(os.path.join(fixture_xs, "meta.json")) as f:
+        boxes = [tuple(b) for b in json.load(f)["bboxes"].values()]
+
+    def batch():
+        out = bbox_extract_batch(nodes, ways, relations, boxes, way_tiles=way_tiles, ctx=ctx)
+        return out.groupBy("bbox_id", "entity_type").count().collect()
+
+    assert _budget(spark, batch) <= 6
+    for frame in (emb, docs, relations, nodes, ways, way_tiles):
         frame.unpersist()

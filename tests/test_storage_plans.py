@@ -86,12 +86,15 @@ def test_parse_path_is_codegen(spark, docs_xs):
 
 
 def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
-    """The bbox dimension table must broadcast (never shuffle), and the
-    per-dataset closure and member-index joins follow the size rule. At
-    the session threshold all three are LocalRelations without a hint,
-    and the planner broadcasts them. A context built under a threshold
-    below the closure's edge bytes hash-joins them under SHUFFLE_HASH
-    hints. Neither plan has a sort-merge join or a cartesian product."""
+    """At the session threshold the batch resolves on the driver: its
+    result is a plan over LocalRelations only. The Spark chain, run
+    where the context fits but the call's way refs do not, must
+    broadcast the bbox dimension table (never shuffle it), and its
+    per-dataset closure and member-index joins follow the size rule:
+    LocalRelations without a hint that the planner broadcasts while
+    they fit, and under a threshold below the closure's edge bytes
+    hash joins under SHUFFLE_HASH hints. Neither plan has a sort-merge
+    join or a cartesian product."""
     import re
 
     nodes, ways, rels = parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs)
@@ -99,16 +102,22 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
     n_edges = (
         rels.select(F.explode("members").alias("m")).where(F.col("m.type") == "RELATION").count()
     )
+    session_ctx = prepare_extract_context(rels)
+    driver = bbox_extract_batch(nodes, ways, rels, boxes, ctx=session_ctx)
+    leaves = driver._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert {leaves.apply(i).nodeName() for i in range(leaves.size())} == {"LocalRelation"}
+    # the largest context table (24 B rows) fits; the call's way refs do not
+    context_bytes = max(len(keys) for keys, _ in session_ctx.arrays) * row_bytes(spark, CLOSURE_DDL)
     # the lazy checkpoints plan their subtrees when the DAG is built;
     # the SQL status store keeps those plans
     store = spark._jsparkSession.sharedState().statusStore()
-    session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for value, join in (
-        (session, "BroadcastHashJoin"),
+        (str(context_bytes), "BroadcastHashJoin"),
         (str(n_edges * row_bytes(spark, CLOSURE_DDL) - 1), "ShuffledHashJoin"),
     ):
         with threshold(spark, value):
             ctx = prepare_extract_context(rels)
+            assert (ctx.arrays is not None) == (join == "BroadcastHashJoin")
             n_before = store.executionsList().size()
             plan = _explain_str(bbox_extract_batch(nodes, ways, rels, boxes, ctx=ctx))
         execs = store.executionsList()

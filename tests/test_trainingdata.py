@@ -107,6 +107,26 @@ def test_minhash_both_paths(spark, tiny_docs):
     assert got["repeat", "dup_components"] == [(1, 1, 1), (1, 1, 1), (2, 1, 0), (3, 1, 0)]
 
 
+def test_minhash_null_doc_id_rejected(spark):
+    """A documents row with a null doc_id raises ValueError before the
+    band kernel on both paths (the kernel raised a pyarrow ArrowInvalid
+    from its task)."""
+    from osm_lib_spark.operators.dedup import dup_components
+    from tests.conftest import threshold
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (None, "a b c d"), (3, "x y z w"), (None, "x y z w"),
+         (5, "p q r s"), (6, "p q r s"), (7, "u v w")],
+        "doc_id long, text string",
+    )
+    message = "MinHash dedup needs a non-null doc_id"
+    for fn in (minhash_dup_pairs, dup_components):
+        with pytest.raises(ValueError, match=message):
+            fn(docs)
+        with threshold(spark, "-1"), pytest.raises(ValueError, match=message):
+            fn(docs).collect()
+
+
 def test_minhash_candidate_bound_falls_back(spark):
     """Shingle rows under the threshold whose band buckets hold more
     candidate pairs than fit (blank and identical texts share every
