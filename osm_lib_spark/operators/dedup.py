@@ -204,11 +204,8 @@ def _band_table(
 def _banded(documents: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
     """``_band_table`` over the threshold: a map-only ``mapInArrow`` of
     ``_bands`` over each batch of (doc_id, shingle hashes) rows. A null
-    doc_id raises ``ValueError`` here, before any task runs the kernel
-    (one job over ``doc_id``; in a task it would surface wrapped in a
-    Java exception)."""
-    if not documents.where(F.col("doc_id").isNull()).isEmpty():
-        raise ValueError(NULL_DOC_ID)
+    doc_id fails the task in the projection that feeds the kernel, with
+    ``NULL_DOC_ID`` in the message Spark raises (no job of its own)."""
 
     def band(batches):
         for batch in batches:
@@ -217,7 +214,8 @@ def _banded(documents: DataFrame, num_perm: int, num_bands: int) -> DataFrame:
             yield from _bands(ids, doc_index, pc.list_flatten(lists), num_perm, num_bands).to_batches()
 
     hashes = F.transform(shingles_col(F.col("text")), _shingle_hash)
-    return documents.select("doc_id", hashes.alias("hashes")).mapInArrow(band, BAND_DDL)
+    doc_id = F.when(F.col("doc_id").isNull(), F.raise_error(F.lit(NULL_DOC_ID))).otherwise(F.col("doc_id"))
+    return documents.select(doc_id.alias("doc_id"), hashes.alias("hashes")).mapInArrow(band, BAND_DDL)
 
 
 def _band_join(bands: DataFrame) -> DataFrame:

@@ -8,9 +8,10 @@ extract is a batch of one, as the reference's concurrent server
 Where it runs follows the engine's size rule (``session.collect_bounded``).
 When the context's member indexes and closure fit under
 ``spark.sql.autoBroadcastJoinThreshold`` (``ExtractContext.arrays``) and
-so do the batch's way refs and (bbox, ref) candidates, the batch
-resolves on the driver, as osm-lib answers from in-memory indexes:
-two bounded collects (the refs of the ways in the envelope, then which
+so do the batch's way refs (each counted at its rows in every frame the
+driver path builds) and its result rows, the batch resolves on the
+driver, as osm-lib answers from in-memory indexes:
+two collects (the refs of the ways in the envelope, bounded, then which
 of them exist as nodes), the rest in numpy, and one LocalRelation of
 per-(box, type) id lists out, exploded
 (``_driver_batch``; 6 Spark jobs with a per-box count against the
@@ -84,8 +85,8 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | Non
     extract's closure join plans as a SortMergeJoin.
 
     Returns (the closure frame, its (relation_id, ancestor_id) arrays
-    sorted by relation_id when the driver built it and it fits under
-    the threshold, else None).
+    sorted by relation_id when the driver built it from edges without a
+    null id and it fits under the threshold, else None).
     """
     # lazy checkpoint: the bounded collect materializes the edges, which
     # the loop then reuses instead of re-exploding the relations
@@ -110,7 +111,9 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | Non
             spark, pa.table([child, ancestor], names=["relation_id", "ancestor_id"]), CLOSURE_DDL
         )
         if len(child) * row_bytes(spark, CLOSURE_DDL) <= broadcast_threshold(spark):
-            return closure, (child, ancestor)
+            # int64 arrays hold a null id as int64 min: the driver extract gets none
+            nulls = table.column(0).null_count or table.column(1).null_count
+            return closure, None if nulls else (child, ancestor)
     return closure.hint("SHUFFLE_HASH"), None
 
 
@@ -235,15 +238,18 @@ def _driver_batch(
 ) -> DataFrame | None:
     """``bbox_extract_batch`` resolved on the driver, the way osm-lib
     answers a tile extract from in-memory indexes (TileOSMSource.java:49-143):
-    two bounded collects, then numpy over ``ExtractContext.arrays``.
+    two collects, the first bounded, then numpy over ``ExtractContext.arrays``.
     Returns the ``EXTRACT_DDL`` rows exploded from one ``local_frame``,
-    or None when a collect or the batch's way rows and (bbox, ref)
-    candidates are over ``spark.sql.autoBroadcastJoinThreshold``.
+    or None when the first collect or the result rows are over
+    ``spark.sql.autoBroadcastJoinThreshold``: the way rows and distinct
+    refs are counted box by box as they are found, and the relation rows
+    are added once the closure is joined.
 
     The first collect is the refs of the ways in the envelope's
     way_tiles rows (``tiled``), one (way_id, xtile, ytile, pos, ref_id)
     row each, so its bound counts refs exactly (the planner broadcasts
-    ``tiled`` into ``ways`` while it fits): a way row starts at pos 0,
+    ``tiled`` into ``ways`` while it fits). Over that bound the collect's
+    two jobs are spent and the chain runs. A way row starts at pos 0,
     or is one row with a null pos when it has no refs. Way ids
     are keys: a tiled way with no ``ways`` row drops out here, where the
     Spark chain emits it. The second is which of those refs exist in
@@ -255,7 +261,12 @@ def _driver_batch(
         .join(tiled.select("way_id", "xtile", "ytile"), "way_id")
         .select("way_id", "xtile", "ytile", F.posexplode_outer("node_ids").alias("pos", "ref_id"))
     )
-    table = collect_bounded(refs)
+    # a ref is a row of each frame the driver path builds: this collect,
+    # the node probe, its answer and the result (108 B); counted at this
+    # collect's 36 B alone, the path tied the chain's CPU from 60% of that
+    # bound and took 1.3-1.5x its wall (sf-m, one box, local[4])
+    per_ref = sum(row_bytes(spark, ddl) for ddl in (refs.schema, "ref_id long", "ref_id long", EXTRACT_DDL))
+    table = collect_bounded(refs, per_ref)
     if table is None:
         return None
     way_id, xtile, ytile = (table.column(c).to_numpy() for c in ("way_id", "xtile", "ytile"))
@@ -265,51 +276,49 @@ def _driver_batch(
     order = np.argsort(ref_way, kind="stable")
     ref_way, ref_id = ref_way[order], table.column("ref_id").drop_null().to_numpy()[order]
 
-    # S5 + J2: each way row whose tile lies in a box, with the box's id
+    # S5 + J2, then J1: each box's way rows (its way_tiles rows in the box)
+    # and the distinct refs of those ways, the result rows counted box by
+    # box so that no more than the bound is ever materialized
     rows = np.flatnonzero(starts)
     rows = rows[np.argsort(xtile[rows], kind="stable")]
     xs = xtile[rows]
     bound = broadcast_threshold(spark) // row_bytes(spark, EXTRACT_DDL)
-    hits, n_rows = [], 0
+    hits, box_refs, n_rows = [], [], 0
     for x0, y0, x1, y1 in ranges:
         cand = rows[np.searchsorted(xs, x0, "left") : np.searchsorted(xs, x1, "right")]
         hit = way_id[cand[(ytile[cand] >= y0) & (ytile[cand] <= y1)]]
-        # the box's result rows before the ref dedup: its way rows and their refs
-        n_rows += len(hit) + int(
-            (np.searchsorted(ref_way, hit, "right") - np.searchsorted(ref_way, hit, "left")).sum()
-        )
+        refs_in_box = np.unique(lookup(np.unique(hit), ref_way, ref_id)[1])
+        n_rows += len(hit) + len(refs_in_box)
         if n_rows > bound:
             return None
         hits.append(hit)
-    b_way = np.repeat(np.arange(len(ranges), dtype=np.int32), [len(h) for h in hits])
-    w_id = np.concatenate(hits).astype(np.int64)
+        box_refs.append(refs_in_box)
+    box = np.arange(len(ranges), dtype=np.int32)
+    b_way, w_id = np.repeat(box, [len(h) for h in hits]), np.concatenate(hits)
+    b_ref, ref = np.repeat(box, [len(r) for r in box_refs]), np.concatenate(box_refs)
 
-    # J1: refs → distinct (bbox_id, ref), those with a node row kept
-    b_w, w = _distinct(b_way, w_id)
-    at, ref = lookup(w, ref_way, ref_id)
-    b_ref, ref = _distinct(b_w[at], ref)
+    # J1's node semi-join: orphan refs drop out. The answer is at most the
+    # distinct refs, which the collect above already bounded.
     if len(ref):
         probe = local_frame(spark, pa.table([np.unique(ref)], names=["ref_id"]), "ref_id long")
-        found = collect_bounded(
-            nodes.select(F.col("id").alias("ref_id")).join(probe, "ref_id", "left_semi")
-        )
-        if found is None:
-            return None
+        found = nodes.select(F.col("id").alias("ref_id")).join(probe, "ref_id", "left_semi").toArrow()
         keep = np.isin(ref, found.column(0).drop_null().to_numpy())
         b_ref, ref = b_ref[keep], ref[keep]
 
     # J3/J4 then J5: relations by node and by way, then their ancestors
     (node_key, node_rel), (way_key, way_rel), (child, ancestor) = arrays
+    b_w, w = _distinct(b_way, w_id)
     at_n, rel_n = lookup(ref, node_key, node_rel)
     at_w, rel_w = lookup(w, way_key, way_rel)
     b_seen, seen = _distinct(np.r_[b_ref[at_n], b_w[at_w]], np.r_[rel_n, rel_w])
     at_a, anc = lookup(seen, child, ancestor)
     b_rel, rel = _distinct(np.r_[b_seen, b_seen[at_a]], np.r_[seen, anc])
+    if len(ref) + len(w_id) + len(rel) > bound:
+        return None
 
     # one row per (bbox_id, entity_type) holding its ids, exploded: a
     # LocalRelation of 3·B rows ships to the tasks faster than one row per
     # id (12-box sf-s batch, 230k ids, + groupBy count: ~1 against ~2.5 CPU-s)
-    box = np.arange(len(ranges), dtype=np.int32)
     groups = pa.concat_tables(
         pa.table(
             [

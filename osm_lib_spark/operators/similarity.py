@@ -23,7 +23,7 @@
     then PQ Lloyd sums, each over integer-quantized values so that any
     split of the corpus adds up to the same bits. The passes run on the
     driver when the corpus fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` (``_collect_corpus``),
+    ``spark.sql.autoBroadcastJoinThreshold`` (``collect_bounded``),
     else as one mapInArrow job each whose per-task sums the driver adds
     up — the broadcast-or-partition size rule.
   - one encoder, ``_encode_np``: coarse assignment, the optional
@@ -67,7 +67,7 @@ from osm_lib_spark.functions.hashing import (
     l2_fold_np,
     norm_fold_np,
 )
-from osm_lib_spark.session import broadcast_threshold, local_frame, row_bytes
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 
 ANN_SEED = 7
 # Defaults are TEST-scale. For random-hyperplane LSH the collision
@@ -443,9 +443,11 @@ def ivf_topk(
     Where it runs follows the size rule: a corpus under
     ``spark.sql.autoBroadcastJoinThreshold`` is one bounded collect and
     the whole query runs in numpy on the driver (one Spark job) when
-    its candidates fit too. Over it, the nlist stride rows come back
-    from that same job (``_collect_corpus``; no pass over the corpus
-    of its own), assignment is a row-local Arrow argmax over the
+    its candidates fit too. Over it, that collect's job is spent and
+    the stride collect below runs after it: one job more than the
+    stride collect alone.
+    Over it, the nlist stride rows are one filtered collect (no pass
+    over the corpus), assignment is a row-local Arrow argmax over the
     (nlist, dim) centroid matrix and probe selection runs on the driver
     (no join, no shuffle), and candidate selection broadcasts the tiny
     (n_queries·nprobe)-row probe table — the corpus never shuffles; the
@@ -668,11 +670,10 @@ def _train_index(
     and ``local`` is (vec_id, mat, lists, codes): the collected ids and
     (n, dim) float64 matrix, each row's list_id and its (n, m) PQ codes
     (None without PQ), from which the query tails answer when their
-    candidates fit as well (``_driver_tail``). A larger corpus gives
-    ``local`` None: the stride rows come back from the same one-job
-    collect (``_collect_corpus``), each Lloyd pass is one mapInArrow
-    job returning per-task integer sums over the lazily checkpointed
-    corpus, and ``coded`` is
+    candidates fit as well (``_driver_tail``). A larger
+    corpus gives ``local`` None: the stride rows are one filtered
+    collect, each Lloyd pass is one mapInArrow job returning per-task
+    integer sums over the lazily checkpointed corpus, and ``coded`` is
     the map-only mapInArrow of the ``CODES_DDL`` rows (None without
     PQ). Both give the same bits.
     """
@@ -681,13 +682,14 @@ def _train_index(
     if lloyd or m:
         # the passes reuse the rows the bounded collect's job materialized
         emb = emb.localCheckpoint(eager=False)
-    table, stride = _collect_corpus(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND), n_stride)
+    table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
     if table is not None:
         vec_id, mat = _as_matrix(table, dim)
 
         def run(kernel):
             return kernel(mat)
     else:
+        stride = emb.where(_stride_mask(F.col("vec_id"), n_stride)).toArrow()
         vec_id, mat = _as_matrix(stride, dim)
 
         def run(kernel):
@@ -714,30 +716,6 @@ def _train_index(
         return cents, cb, None, (vec_id, mat, *_encode_np(mat, list_ids, cmat, cb, residual))
     coded = _encode_frame(emb, list_ids, cmat, cb, residual, dim) if m else None
     return cents, cb, coded, None
-
-
-def _collect_corpus(emb: DataFrame, row_size: int, n_stride: int):
-    """(the corpus as one Arrow table when it fits under the threshold,
-    else None; its stride rows j < ``n_stride``) from ONE Spark job.
-    ``collect_bounded``'s rule, with the stride rows ordered first (a
-    per-task top-k, then a merge), so a corpus over the bound still
-    brings back every stride row with its bounded rows; a threshold
-    ≤ 0 collects the stride rows alone."""
-    stride = _stride_mask(F.col("vec_id"), n_stride)
-    threshold = broadcast_threshold(emb.sparkSession)
-    if threshold <= 0:
-        return None, emb.where(stride).toArrow()
-    max_rows = threshold // row_size
-    tagged = (
-        emb.withColumn("stride", stride)
-        .orderBy(F.col("stride").desc())
-        .limit(max_rows + 1 + n_stride)
-        .toArrow()
-    )
-    rows = tagged.drop_columns("stride")
-    if tagged.num_rows <= max_rows:
-        return rows, None
-    return None, rows.filter(tagged.column("stride"))
 
 
 def _train_codebook(init_rows: np.ndarray, cmat, run, m: int, residual: bool) -> np.ndarray:

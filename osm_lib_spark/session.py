@@ -148,9 +148,9 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     checkpoint under a SHUFFLE_HASH hint; the context keeps the
     collected member indexes and closure as arrays only when all three
     fit), ``extract._driver_batch`` (the refs of the ways in the batch's
-    envelope, one row each, then which of them exist as nodes; the
-    Spark chain of ``bbox_extract_batch``, also when the batch's
-    (bbox, ref) candidates are over),
+    envelope, one row each at the bytes of its rows in every frame the
+    path builds; the Spark chain of ``bbox_extract_batch``, also when
+    the batch's result rows are over),
     ``pip.points_in_polygons_bucketed`` (the polygon-tile table without
     rings, then the ring vertices, one row each; if either is over, the
     rings ride the tile rows under a SHUFFLE_HASH hint),
@@ -158,9 +158,8 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     ``dedup._collect_shingles`` (one row per shingle; the MinHash band
     kernel per Arrow batch, the band self-join and the Spark verify;
     under it ``dup_components`` returns its whole result as one
-    ``local_frame``) and ``similarity._collect_corpus`` (its rule with
-    the stride rows ordered first, so one job also brings them back
-    over the bound; then one ``mapInArrow`` job per Lloyd pass and the
+    ``local_frame``) and ``similarity._train_index`` (one ``mapInArrow``
+    job per Lloyd pass, a stride-row collect for ``ivf_topk``, and the
     ANN query tails as Spark joins and windows; under it both query
     tails answer in numpy from the collected corpus when their
     candidates fit too). Sites whose size is known without a collect

@@ -112,9 +112,12 @@ def test_driver_path_equals_spark_chain(spark, docs_xs, meta_xs):
     assert [i for b, t, i in rows if b == 0 and t == "relation"] == [1, 2, 3, 4, 10, 11, 30]
     assert [i for b, t, i in rows if b == 1 and t == "relation"] == [30]
     assert not [r for r in rows if r[0] == 2]
-    # a relation id that did not parse has no int64 form: the Spark chain runs
-    null_id = spark.createDataFrame([(None, [("NODE", 1, "")])], hand[2].schema)
-    assert prepare_extract_context(hand[2].unionByName(null_id)).arrays is None
+    # an id that did not parse has no int64 form: the Spark chain runs, for a
+    # null relation id with a node member or a relation member, and for a
+    # null relation member id
+    for members, rel_id in (([("NODE", 1, "")], None), ([("RELATION", 1, "")], None), ([("RELATION", None, "")], 5)):
+        null_id = spark.createDataFrame([(rel_id, members)], hand[2].schema)
+        assert prepare_extract_context(hand[2].unionByName(null_id)).arrays is None
 
     with threshold(spark, "10000"):
         ctx = prepare_extract_context(xs[2])

@@ -21,12 +21,12 @@ def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
     """Each index ANN operator with its collect runs ≤ 2 jobs (the
     bounded collect of the corpus; the query answers in numpy; 5-8
     jobs when the query ran as Spark joins), ``ivf_topk`` over the
-    corpus switch ≤ 5, MinHash components with a
+    corpus switch ≤ 6, MinHash components with a
     digest ≤ 3 (the shingle collect, then the aggregate's two jobs over
     the result's LocalRelation; a join to ``documents`` adds one),
     ``prepare_extract_context`` ≤ 3 (the member indexes' bounded
     collects) and ``bbox_extract_batch`` with a per-box count ≤ 6 (its
-    two bounded collects, two jobs each, then the aggregate's two; the
+    two collects, two jobs each, then the aggregate's two; the
     Spark chain ran 10)."""
     from osm_lib_spark.operators.dedup import dup_components
     from osm_lib_spark.operators.extract import bbox_extract_batch, prepare_extract_context
@@ -49,10 +49,9 @@ def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
     jobs = {name: _budget(spark, fn) for name, fn in operators.items()}
     assert all(n <= 2 for n in jobs.values()), jobs
     # over the corpus switch (200 rows at 4104 B, no dim given, > 10 KiB)
-    # one job brings back the bounded rows and the stride rows together:
-    # 5 jobs, as the stride collect alone ran before the driver tails
+    # the bounded collect's job is spent, then the stride rows are collected
     with threshold(spark, "10240"):
-        assert _budget(spark, operators["ivf_topk"]) <= 5
+        assert _budget(spark, operators["ivf_topk"]) <= 6
 
     dup = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(

@@ -108,9 +108,13 @@ def test_minhash_both_paths(spark, tiny_docs):
 
 
 def test_minhash_null_doc_id_rejected(spark):
-    """A documents row with a null doc_id raises ValueError before the
-    band kernel on both paths (the kernel raised a pyarrow ArrowInvalid
-    from its task)."""
+    """A documents row with a null doc_id fails before the band kernel
+    with the same message on both paths (the kernel raised a pyarrow
+    ArrowInvalid from its task): a ValueError on the driver, and the
+    error Spark raises from the task's projection over the threshold."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
+
     from osm_lib_spark.operators.dedup import dup_components
     from tests.conftest import threshold
 
@@ -123,7 +127,7 @@ def test_minhash_null_doc_id_rejected(spark):
     for fn in (minhash_dup_pairs, dup_components):
         with pytest.raises(ValueError, match=message):
             fn(docs)
-        with threshold(spark, "-1"), pytest.raises(ValueError, match=message):
+        with threshold(spark, "-1"), pytest.raises((Py4JJavaError, SparkRuntimeException), match=message):
             fn(docs).collect()
 
 
