@@ -84,9 +84,12 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | Non
     (17 GB for the 10-row sf-xs closure on Spark 4.1.2), and the
     extract's closure join plans as a SortMergeJoin.
 
+    Edges with a null id take the loop too: a null joins nothing there,
+    where int64 arrays would hold it as int64 min and chain through it.
+
     Returns (the closure frame, its (relation_id, ancestor_id) arrays
-    sorted by relation_id when the driver built it from edges without a
-    null id and it fits under the threshold, else None).
+    sorted by relation_id when the driver built it and it fits under the
+    threshold, else None).
     """
     # lazy checkpoint: the bounded collect materializes the edges, which
     # the loop then reuses instead of re-exploding the relations
@@ -99,7 +102,7 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | Non
         )
     ).localCheckpoint(eager=False)
     table = collect_bounded(edges)
-    if table is None:
+    if table is None or table.column(0).null_count or table.column(1).null_count:
         closure = _closure_loop(edges)
     else:
         child, ancestor = upward_closure(
@@ -111,9 +114,7 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | Non
             spark, pa.table([child, ancestor], names=["relation_id", "ancestor_id"]), CLOSURE_DDL
         )
         if len(child) * row_bytes(spark, CLOSURE_DDL) <= broadcast_threshold(spark):
-            # int64 arrays hold a null id as int64 min: the driver extract gets none
-            nulls = table.column(0).null_count or table.column(1).null_count
-            return closure, None if nulls else (child, ancestor)
+            return closure, (child, ancestor)
     return closure.hint("SHUFFLE_HASH"), None
 
 
@@ -129,9 +130,9 @@ def _closure_loop(edges: DataFrame) -> DataFrame:
             .select("f.relation_id", "e.ancestor_id")
             .distinct()
         )
-        new = step.join(
-            closure, ["relation_id", "ancestor_id"], "left_anti"
-        ).localCheckpoint(eager=True)
+        # null-safe: a path from a null id is found once, not every round
+        same = [F.col(f"s.{c}").eqNullSafe(F.col(f"c.{c}")) for c in ("relation_id", "ancestor_id")]
+        new = step.alias("s").join(closure.alias("c"), same, "left_anti").localCheckpoint(eager=True)
         if not new.count():
             return closure
         closure = closure.unionByName(new).localCheckpoint(eager=True)

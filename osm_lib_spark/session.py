@@ -158,11 +158,14 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     ``dedup._collect_shingles`` (one row per shingle; the MinHash band
     kernel per Arrow batch, the band self-join and the Spark verify;
     under it ``dup_components`` returns its whole result as one
-    ``local_frame``) and ``similarity._train_index`` (one ``mapInArrow``
+    ``local_frame``), ``similarity._train_index`` (one ``mapInArrow``
     job per Lloyd pass, a stride-row collect for ``ivf_topk``, and the
     ANN query tails as Spark joins and windows; under it both query
     tails answer in numpy from the collected corpus when their
-    candidates fit too). Sites whose size is known without a collect
+    candidates fit too) and ``pbf.write_blocks`` (one row per entity,
+    and the collected table's Arrow bytes against the threshold too, as
+    its tags and refs are arrays; the aggregate, the shuffle into
+    id-range buckets and one ``mapInArrow`` encode per task). Sites whose size is known without a collect
     compare ``row_bytes`` times their row count with
     ``broadcast_threshold``: ``knn.knn_kring`` (k·Q result rows;
     executor-side accumulation), the driver-built closure in

@@ -41,16 +41,18 @@ Spark-first dataflow:
   assemble via zero-terminator arithmetic, and entity columns are
   built as Arrow arrays directly (never pandas object dicts).
 * WRITE (``write_blocks``, shared with the VEX sink): rows are bucketed
-  by id range into ~``block_size``-row buckets, with tasks sized by
-  block count (a Python task costs a fixed ~0.08 CPU-s), and ONE
-  ``mapInArrow`` per task encodes its buckets into part files named by
-  (type, bucket); PBF blocks share no state (delta coding and string
-  tables reset per block). Blocks encode in block-wide numpy passes
+  by id range into ~``block_size``-row buckets. Under the broadcast
+  threshold one bounded collect brings them to the driver, which
+  encodes the buckets in order; over it tasks are sized by block count
+  (a Python task costs a fixed ~0.08 CPU-s), and ONE ``mapInArrow`` per
+  task encodes its buckets into part files named by (type, bucket);
+  PBF blocks share no state (delta coding and string tables reset per
+  block). Blocks encode in block-wide numpy passes
   over the Arrow columns: string-table codes via one sorted-unique,
   keys_vals by vectorized scatter, refs as per-entity delta chains
   whose varints are sliced into per-entity byte spans. The driver
   concatenates the parts in name order — multipart PUT + compose on an
-  object store, O(1) driver memory.
+  object store, O(1) driver memory on the cluster path.
 
 Each wire-format rule is written once here: ``sources/vex.py`` calls
 the scalar varint codec (``_enc_varint`` / ``_read_varint``) and the
@@ -953,12 +955,19 @@ BLOCK_SIZE = 8000  # PBFOutput.java:128 — ≤8k entities per block
 def blob_index(spark, rows: list, ddl: str, blobs_per_task: int):
     """A blob/block index (rows with a ``seq`` column) as a ``local_frame``
     on ≤ max(defaultParallelism, rows / blobs_per_task) tasks — measured
-    0.8s of task round trips at 91 tiny tasks on local[32] vs 0.3s at 32."""
+    0.8s of task round trips at 91 tiny tasks on local[32] vs 0.3s at 32.
+    A ``LocalRelation`` already scans as min(rows, defaultParallelism)
+    slices of consecutive blobs, so up to ``blobs_per_task`` ×
+    defaultParallelism blobs it is returned as it is: a
+    ``repartition`` there adds a shuffle job and nothing else (the sf-s
+    round trips' reads 3 → 2 jobs with a grouped digest)."""
     from osm_lib_spark.session import local_frame
 
-    dp = spark.sparkContext.defaultParallelism
-    n_part = max(1, min(len(rows), max(dp, len(rows) // blobs_per_task)))
-    return local_frame(spark, rows, ddl).repartition(n_part, "seq")
+    frame = local_frame(spark, rows, ddl)
+    n_part = len(rows) // blobs_per_task
+    if n_part <= spark.sparkContext.defaultParallelism:
+        return frame
+    return frame.repartition(n_part, "seq")
 
 
 def read_pbf(spark, path: str, blobs_per_task: int = 16):
@@ -1040,22 +1049,58 @@ def _part_files(path: str, header: bytes):
         shutil.rmtree(tmpdir, ignore_errors=True)
 
 
+def _bucket_step(n: int, lo: int, hi: int, block_size: int) -> int:
+    """The id width of one type's buckets: its [lo, hi] id range cut into
+    ceil(n / block_size) equal ranges; a row's bucket is (id - lo) // step."""
+    return -(-(hi - lo + 1) // -(-n // block_size))
+
+
+def _driver_buckets(table: pa.Table, block_size: int) -> Iterator[tuple[int, pa.Table]]:
+    """(type_rank, rows) of each non-empty bucket of ``table`` in file
+    order, id-sorted: the buckets of ``write_blocks``' cluster path, cut
+    on the driver from ``table`` sorted by (type_rank, id)."""
+    table = table.sort_by([("type_rank", "ascending"), ("id", "ascending")])
+    ranks = table.column("type_rank").to_numpy()
+    ids = table.column("id").to_numpy()
+    edges = np.searchsorted(ranks, np.arange(len(TYPE_NAMES) + 1))
+    for rank, (a, b) in enumerate(zip(edges[:-1], edges[1:])):
+        if a == b:
+            continue
+        lo, hi = int(ids[a]), int(ids[b - 1])
+        step = _bucket_step(b - a, lo, hi, block_size)
+        cuts = a + np.searchsorted(ids[a:b], list(range(lo + step, hi + 1, step)))
+        for start, end in zip([a, *cuts], [*cuts, b]):
+            if start < end:
+                yield rank, table.slice(start, end - start)
+
+
 def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b"") -> int:
     """The block sink of ``write_pbf`` and ``write_vex``: write ``tables``
     = (nodes, ways, relations), any of them None, type-major in id order
     and return the number of blocks. ``encode(type_rank, batch)`` yields
     the framed blocks of one id-sorted batch of ``TYPE_COLUMNS[type_rank]``.
 
-    One aggregate over the union gives each type's row count and id
-    range; rows are bucketed by id range into ~``block_size``-row
-    buckets, and each type gets clamp(ceil(rows / block_size), 1,
-    defaultParallelism) tasks, as a Python task has a fixed cost. ONE
+    Rows are bucketed by id range into ~``block_size``-row buckets
+    (``_bucket_step`` of each type's row count and id range), and each
+    bucket is encoded in (type, bucket) order. Where that runs follows
+    the engine's size rule (``session.collect_bounded``): when the union
+    fits under ``spark.sql.autoBroadcastJoinThreshold``, both by its rows
+    at ``row_bytes`` and by the collected table's Arrow bytes (an array
+    counts as one element in ``row_bytes``), that one collect is the
+    only job and the driver sorts, buckets and encodes it
+    (``_driver_buckets``). Otherwise one aggregate gives each type's row
+    count and id range, each type gets clamp(ceil(rows / block_size), 1,
+    defaultParallelism) tasks, as a Python task has a fixed cost, and ONE
     ``mapInArrow`` per task writes each bucket as a part file named by
     (type_rank, bucket), so the file does not depend on which task a
-    bucket hashed to. With AQE that is 4 jobs.
+    bucket hashed to: 4 jobs with AQE, after the spent collect when the
+    rows or bytes are over. Both paths cut the same buckets and hand them
+    to the same ``encode``, so they write the same bytes.
     """
     from pyspark.sql import functions as F  # noqa: N812
     from pyspark.sql.types import ArrayType
+
+    from osm_lib_spark.session import broadcast_threshold, collect_bounded
 
     typed = [df.select(F.lit(rank).alias("type_rank"), *TYPE_COLUMNS[rank])
              for rank, df in enumerate(tables) if df is not None]
@@ -1070,18 +1115,6 @@ def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b""
         if isinstance(f.dataType, ArrayType) else f.name
         for f in rows.schema.fields
     ))
-    stats = rows.groupBy("type_rank").agg(
-        F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"), F.max("id").alias("hi")
-    ).collect()
-    dp = rows.sparkSession.sparkContext.defaultParallelism
-    n_tasks, bucket = 0, F.lit(None)
-    for r in stats:
-        n_buckets = -(-r.n // block_size)
-        step = -(-(r.hi - r.lo + 1) // n_buckets)
-        n_tasks += min(n_buckets, dp)
-        bucket = F.when(
-            F.col("type_rank") == r.type_rank, F.expr(f"(id - ({r.lo})) div {step}")
-        ).otherwise(bucket)
 
     def write_part(key: tuple, pending: list) -> int:
         batch = pa.Table.from_batches(pending).select(TYPE_COLUMNS[key[0]]).combine_chunks()
@@ -1089,6 +1122,25 @@ def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b""
         with open(os.path.join(tmpdir, "%d-%012d" % key), "wb") as f:
             f.writelines(blobs)
         return len(blobs)
+
+    table = collect_bounded(rows)
+    if table is not None and table.nbytes <= broadcast_threshold(rows.sparkSession):
+        with _part_files(path, header) as tmpdir:
+            return sum(write_part((rank, i), bucket.to_batches())
+                       for i, (rank, bucket) in enumerate(_driver_buckets(table, block_size)))
+
+    stats = rows.groupBy("type_rank").agg(
+        F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"), F.max("id").alias("hi")
+    ).collect()
+    dp = rows.sparkSession.sparkContext.defaultParallelism
+    n_tasks, bucket = 0, F.lit(None)
+    for r in stats:
+        n_buckets = -(-r.n // block_size)
+        step = _bucket_step(r.n, r.lo, r.hi, block_size)
+        n_tasks += min(n_buckets, dp)
+        bucket = F.when(
+            F.col("type_rank") == r.type_rank, F.expr(f"(id - ({r.lo})) div {step}")
+        ).otherwise(bucket)
 
     def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # rows arrive sorted by (type_rank, bucket, id): cut each batch at

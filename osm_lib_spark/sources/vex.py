@@ -27,11 +27,11 @@ per-way). Records:
 Blocks are fully self-contained, so the Spark dataflow mirrors the PBF
 codec: a header-only offset scan indexes blocks, ``mapInArrow`` tasks
 seek + inflate + decode their own blocks in parallel, and the sink is
-the PBF one (``pbf.write_blocks``): rows bucketed by id range, one
-``mapInArrow`` per task encodes its buckets into byte-capped blocks and
-writes them as part files named by (type, bucket); the driver
-concatenates the parts in name order (multipart-compose; O(1) driver
-memory). The varints, zigzag deltas, list columns and member columns go
+the PBF one (``pbf.write_blocks``): rows bucketed by id range, each
+bucket encoded into byte-capped blocks, on the driver when the tables
+fit under the broadcast threshold, else by one ``mapInArrow`` per task
+that writes them as part files named by (type, bucket); the driver
+concatenates the parts in name order (multipart-compose). The varints, zigzag deltas, list columns and member columns go
 through ``sources/pbf.py``'s codec and Arrow column kernels.
 
 The payload is a sequential varint/string stream (strings interleave

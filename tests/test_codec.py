@@ -25,7 +25,7 @@ from osm_lib_spark.sources.span_codec import (
     render_relation_text,
     render_way_text,
 )
-from tests.conftest import assert_df_equal, entity_batch, golden
+from tests.conftest import assert_df_equal, both_paths, entity_batch, golden, spark_jobs, threshold
 
 
 def test_parse_counts_match_golden(docs_xs, fixture_xs):
@@ -360,6 +360,23 @@ def test_sink_block_size_exercises_collisions_and_empty_partitions(spark, docs_x
     assert len(keys) > n_tasks > hit
 
 
+def _sink_both_paths(spark, tmp_path, ext: str, write) -> tuple[str, int]:
+    """``write(path)`` at the session threshold (the driver encodes) and
+    at -1 (the aggregate, shuffle and ``mapInArrow`` path): the two files
+    are byte-equal and count the same blocks. Returns (the driver path's
+    file, its block count)."""
+    files = iter(str(tmp_path / f"{side}.{ext}") for side in ("driver", "cluster"))
+
+    def run():
+        path = next(files)
+        return path, write(path)
+
+    (path, n_blocks), (cluster, n_cluster) = both_paths(spark, run)
+    with open(path, "rb") as a, open(cluster, "rb") as b:
+        assert a.read() == b.read() and n_blocks == n_cluster
+    return path, n_blocks
+
+
 def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path):
     from osm_lib_spark.sources.pbf import (
         TYPE_NAMES,
@@ -371,8 +388,9 @@ def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path):
     )
 
     tables = _xs_tables(docs_xs)
-    path = str(tmp_path / "xs.pbf")
-    n_blocks = write_pbf(path, *tables, block_size=SINK_BLOCK_SIZE)
+    path, n_blocks = _sink_both_paths(
+        spark, tmp_path, "pbf", lambda p: write_pbf(p, *tables, block_size=SINK_BLOCK_SIZE)
+    )
     assert _canon_rows(read_pbf(spark, path)) == _source_rows(tables)
 
     blocks = []
@@ -391,13 +409,12 @@ def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path):
 def test_vex_sink_roundtrip_small_buckets(spark, docs_xs, tmp_path, monkeypatch):
     import zlib
 
-    from osm_lib_spark.sources import pbf
+    from osm_lib_spark.sources import pbf, vex
     from osm_lib_spark.sources.vex import decode_vex_block_arrow, read_vex, scan_vex_blocks, write_vex
 
-    monkeypatch.setattr(pbf, "BLOCK_SIZE", SINK_BLOCK_SIZE)  # write_vex's bucket size
+    monkeypatch.setattr(vex, "BLOCK_SIZE", SINK_BLOCK_SIZE)  # write_vex's bucket size
     tables = _xs_tables(docs_xs)
-    path = str(tmp_path / "xs.vex")
-    n_blocks = write_vex(path, *tables)
+    path, n_blocks = _sink_both_paths(spark, tmp_path, "vex", lambda p: write_vex(p, *tables))
     assert _canon_rows(read_vex(spark, path)) == _source_rows(tables)
 
     blocks = []
@@ -408,6 +425,29 @@ def test_vex_sink_roundtrip_small_buckets(spark, docs_xs, tmp_path, monkeypatch)
             blocks.append((pbf.TYPE_NAMES.index(kind), batch.column("id").to_pylist()))
     assert len(blocks) == n_blocks
     _assert_type_major_ascending(blocks)
+
+
+def test_sink_bounds_collected_bytes(spark, tmp_path):
+    """Ways whose rows fit the sink's collect bound (``row_bytes`` counts
+    an array as one element: 20 rows of ~68 B) but whose Arrow bytes do
+    not (20 × 500 refs, ~80 kB, against a 20 kB threshold) take the
+    cluster path after the collect, and write the cluster path's bytes."""
+    from osm_lib_spark.sources.pbf import write_pbf
+
+    ways = spark.createDataFrame(
+        [(i, list(range(1000 * i, 1000 * i + 500)), []) for i in range(20)],
+        "id long, node_ids array<long>, tags array<struct<key: string, value: string>>",
+    ).cache()
+    write = {side: str(tmp_path / f"{side}.pbf") for side in ("fits", "bytes over", "cluster")}
+    _, fits = spark_jobs(spark, lambda: write_pbf(write["fits"], None, ways, None))
+    with threshold(spark, "20000"):
+        _, over = spark_jobs(spark, lambda: write_pbf(write["bytes over"], None, ways, None))
+    with threshold(spark, "-1"):
+        write_pbf(write["cluster"], None, ways, None)
+    ways.unpersist()
+    assert fits == 1 < over
+    with open(write["bytes over"], "rb") as a, open(write["cluster"], "rb") as b:
+        assert a.read() == b.read()
 
 
 def test_pbf_arrow_encoders_match_scalar_reference(docs_xs):
@@ -442,10 +482,13 @@ def test_sink_failure_leaves_no_part_files(spark, docs_xs, tmp_path):
         raise RuntimeError("encoder failed")
 
     nodes, ways, _ = _xs_tables(docs_xs)
-    path = str(tmp_path / "bad.pbf")
-    with pytest.raises(Exception, match="encoder failed"):
-        write_blocks(path, (nodes, ways, None), encode, SINK_BLOCK_SIZE)
-    assert os.listdir(tmp_path) == []
+
+    def fails():
+        with pytest.raises(Exception, match="encoder failed"):
+            write_blocks(str(tmp_path / "bad.pbf"), (nodes, ways, None), encode, SINK_BLOCK_SIZE)
+        return os.listdir(tmp_path)
+
+    assert both_paths(spark, fails) == ([], [])
 
 
 def test_dense_keys_vals_without_terminator_raises():

@@ -56,9 +56,9 @@ def _rows(df):
 
 
 def test_relation_closure_both_paths(spark, docs_xs):
-    """The sf-xs closure and a hand-built one (a depth-3 chain, a
-    2-cycle, a self-member) are row-equal on both paths; the (r, r)
-    rows come from cycles only."""
+    """The sf-xs closure, a hand-built one (a depth-3 chain, a 2-cycle,
+    a self-member) and a two-row probe with null ids are row-equal on
+    both paths; the (r, r) rows come from cycles only."""
     from osm_lib_spark.operators.extract import relation_closure_table
     from osm_lib_spark.sources.span_codec import parse_relations
 
@@ -83,6 +83,17 @@ def test_relation_closure_both_paths(spark, docs_xs):
         (2, 1), (3, 1), (3, 2), (4, 1), (4, 2), (4, 3),
         (10, 10), (10, 11), (11, 10), (11, 11), (20, 20),
     ]
+    # a null id joins nothing on either path, also below a 1 ⇄ 2 cycle
+    null_probes = (
+        ([(1, [member(None)]), (None, [member(1)])], [(1, None), (None, 1), (None, None)]),
+        ([(1, [member(None), member(2)]), (2, [member(1)])],
+         [(None, 1), (None, 2), (1, 1), (1, 2), (2, 1), (2, 2)]),
+    )
+    for rows, expected in null_probes:
+        null_ids = spark.createDataFrame(rows, hand.schema)
+        k_df, l_df = both_paths(spark, lambda: relation_closure_table(null_ids)[0])
+        k_rows, l_rows = (sorted(map(tuple, df.collect()), key=repr) for df in (k_df, l_df))
+        assert k_rows == l_rows == sorted(expected, key=repr)
 
 
 def test_components_contract_and_caps(spark):

@@ -76,3 +76,23 @@ def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
     assert _budget(spark, batch) <= 6
     for frame in (emb, docs, relations, nodes, ways, way_tiles):
         frame.unpersist()
+
+
+def test_codec_job_budgets(spark, docs_xs, tmp_path):
+    """On the sf-xs tables ``write_pbf`` and ``write_vex`` run 1 job each
+    (the sink's bounded collect; the driver encodes; the aggregate,
+    shuffle and ``mapInArrow`` path ran 4), and ``read_pbf``/``read_vex``
+    with a grouped digest 2 each (the aggregate's two jobs over the
+    blob-index ``LocalRelation``; its ``repartition`` added a third)."""
+    from osm_lib_spark.sources.pbf import read_pbf, write_pbf
+    from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
+    from osm_lib_spark.sources.vex import read_vex, write_vex
+
+    tables = [fn(docs_xs).cache() for fn in (parse_nodes, parse_ways, parse_relations)]
+    digest = F.bit_xor(F.xxhash64("id", "fixed_lat", "fixed_lon", "tags", "node_ids", "members"))
+    for fmt, write, read in (("pbf", write_pbf, read_pbf), ("vex", write_vex, read_vex)):
+        path = str(tmp_path / f"xs.{fmt}")
+        assert _budget(spark, lambda: write(path, *tables)) <= 1, fmt
+        assert _budget(spark, lambda: read(spark, path).groupBy("entity_type").agg(digest).collect()) <= 2, fmt
+    for frame in tables:
+        frame.unpersist()

@@ -110,7 +110,6 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
     context_bytes = max(len(keys) for keys, _ in session_ctx.arrays) * row_bytes(spark, CLOSURE_DDL)
     # the lazy checkpoints plan their subtrees when the DAG is built;
     # the SQL status store keeps those plans
-    store = spark._jsparkSession.sharedState().statusStore()
     for value, join in (
         (str(context_bytes), "BroadcastHashJoin"),
         (str(n_edges * row_bytes(spark, CLOSURE_DDL) - 1), "ShuffledHashJoin"),
@@ -118,12 +117,9 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
         with threshold(spark, value):
             ctx = prepare_extract_context(rels)
             assert (ctx.arrays is not None) == (join == "BroadcastHashJoin")
-            n_before = store.executionsList().size()
-            plan = _explain_str(bbox_extract_batch(nodes, ways, rels, boxes, ctx=ctx))
-        execs = store.executionsList()
-        checkpoints = [
-            execs.apply(i).physicalPlanDescription() for i in range(n_before, execs.size())
-        ]
+            plan, checkpoints = _plans_during(
+                spark, lambda: _explain_str(bbox_extract_batch(nodes, ways, rels, boxes, ctx=ctx))
+            )
         assert any("BroadcastNestedLoopJoin" in p for p in checkpoints)
         assert not any("CartesianProduct" in p for p in checkpoints)
         joins = set(re.findall(r"\b(BroadcastHashJoin|ShuffledHashJoin)\b", plan))
@@ -199,12 +195,20 @@ def test_new_operator_joins_are_hash_joins(spark, docs_xs):
 
 
 def _plans_during(spark, fn):
-    """``fn()``, and the physical plans of the SQL executions it ran."""
+    """``fn()``, and the physical plans of the SQL executions it ran, by
+    execution id: the store keeps only the last
+    ``spark.sql.ui.retainedExecutions`` (1000), so once a session has run
+    more, list positions no longer mark the executions of ``fn``."""
     store = spark._jsparkSession.sharedState().statusStore()
-    n_before = store.executionsList().size()
+
+    def last_id() -> int:
+        execs = store.executionsList()  # ascending execution ids
+        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+    first = last_id() + 1
     out = fn()
-    execs = store.executionsList()
-    return out, [execs.apply(i).physicalPlanDescription() for i in range(n_before, execs.size())]
+    found = (store.execution(i) for i in range(first, last_id() + 1))
+    return out, [e.get().physicalPlanDescription() for e in found if e.isDefined()]
 
 
 def test_local_frames_broadcast_without_hints(spark, docs_xs):
