@@ -34,7 +34,8 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
 
 
 def np_haversine_m(lat1, lon1, lat2, lon2) -> np.ndarray:
-    """numpy twin of haversine_m for the pure-pandas oracle."""
+    """numpy twin of haversine_m: the pure-pandas oracle's distance, and
+    the one the kNN driver rounds rank by."""
     p1 = np.radians(np.asarray(lat1, dtype=np.float64))
     p2 = np.radians(np.asarray(lat2, dtype=np.float64))
     dphi = np.radians(np.asarray(lat2, dtype=np.float64) - np.asarray(lat1, dtype=np.float64))

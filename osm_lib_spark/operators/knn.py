@@ -9,25 +9,36 @@ Two strategies, both exact:
   (codegen), per-query top-k via window. O(Q·N) — the correctness
   baseline and fine when Q is small.
 
-* ``knn_kring`` — the scale path: ONE DataFrame DAG per expansion
-  round over the whole *frontier* of unsatisfied queries (the same
-  frontier discipline as the relation closure in operators/extract).
-  Each round broadcasts a (query_id, xtile-strip) table and hash-joins
-  it against the tile-keyed node store, so per-node cost is one hash
-  probe regardless of frontier size — never a per-query Spark job, and
-  never a broadcast-nested-loop over range predicates. Ring radii
-  double per round, so a query that terminates at radius R has scanned
-  ≤ 4/3 · (2R+1)² tiles total (geometric series). Where the results
-  accumulate follows the size rule of every driver-or-cluster choice
-  in the engine (``session.collect_bounded``): while the k·Q result
-  rows fit under ``spark.sql.autoBroadcastJoinThreshold`` (32 B a row
-  as Spark sizes it: ~210k queries at k=10 and the 64 MiB session
-  default) each round collects its own top-k rows on the driver as one
-  Arrow table; past it every result slice stays
-  persisted ON THE EXECUTORS — the driver exchanges only Q control
-  rows per round (stats up, satisfied ids down) and the returned
-  DataFrame is the union of the cached round frames, so an offline
-  Q=10⁶ batch never funnels k·Q result rows through one process.
+* ``knn_kring`` — the scale path: ONE round per ring expansion over
+  the whole *frontier* of unsatisfied queries (the same frontier
+  discipline as the relation closure in operators/extract) — never a
+  per-query Spark job. Ring radii double per round, so a query that
+  terminates at radius R has scanned ≤ 4/3 · (2R+1)² tiles total
+  (geometric series). Where a round runs and where its results
+  accumulate follow the size rule of every driver-or-cluster choice in
+  the engine (``session.collect_bounded``), in three modes:
+
+  1. *Driver rounds* — while the k·Q result rows fit under
+     ``spark.sql.autoBroadcastJoinThreshold`` (32 B a row as Spark
+     sizes it: ~210k queries at k=10 and the 64 MiB session default)
+     and the round's candidate nodes fit too (40 B a tiled-store row:
+     1.68M), a strip round is one bounded collect of the store rows in
+     the OR of the frontier's ring windows, and numpy ranks each ring
+     (``_driver_round``). The result is a LocalRelation.
+  2. *Spark rounds, driver accumulation* — the first round whose
+     candidates are over (that collect is spent), every later round of
+     the call, and the coarse-cell rounds: each round broadcasts a
+     (query_id, xtile-strip) table (or coarse cells) and hash-joins it
+     against the tile-keyed node store, so per-node cost is one hash
+     probe regardless of frontier size and never a broadcast-nested-
+     loop over range predicates; a window ranks each query, and the
+     round's top-k rows come to the driver as one Arrow table.
+  3. *Executor accumulation* — past the results' bound every result
+     slice stays persisted ON THE EXECUTORS: the driver exchanges only
+     Q control rows per round (stats up, satisfied ids down) and the
+     returned DataFrame is the union of the cached round frames, so an
+     offline Q=10⁶ batch never funnels k·Q result rows through one
+     process.
 
 Exactness guard: a query stops expanding only when it has k hits AND
 its k-th distance is ≤ a proven LOWER bound on the distance to any
@@ -52,9 +63,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m
+from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m, np_haversine_m
 from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y
-from osm_lib_spark.session import broadcast_threshold, local_frame, row_bytes
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 
 import numpy as np
 import pyarrow as pa
@@ -69,13 +80,14 @@ def _nodes_with_coords(nodes: DataFrame) -> DataFrame:
     )
 
 
-def _topk(joined: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k by (distance, node_id) — rank ties broken by id."""
+def _ranked(cand: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, node_id, dist_m) candidates by
+    (distance, node_id), ranked from 1: ties broken by id."""
     w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("node_id").asc())
     return (
-        joined.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "node_id")
+        .select("query_id", F.col("rank").cast("int").alias("rank"), "node_id", "dist_m")
     )
 
 
@@ -98,7 +110,7 @@ def knn_brute_force(
             "dist_m"
         ),
     )
-    return _topk(joined, k)
+    return _ranked(joined, k).drop("dist_m")
 
 
 def _min_dist_beyond_ring(qlat: float, qlon: float, qx: int, qy: int, radius: int) -> float:
@@ -121,8 +133,6 @@ def _min_dist_beyond_ring(qlat: float, qlon: float, qx: int, qy: int, radius: in
     Returns ``inf`` when the ring covers the whole grid (nothing is
     outside), letting the caller terminate even with < k total nodes.
     """
-    from osm_lib_spark.functions.geo import np_haversine_m
-
     x_covered = 2 * radius + 1 >= NTILES
     y_top_open = qy - radius > 0
     y_bot_open = qy + radius < NTILES - 1
@@ -174,6 +184,85 @@ def _frontier_strips(spark, frontier: list[dict]) -> DataFrame:
     return local_frame(
         spark, rows, "query_id int, xtile int, ymin int, ymax int, qlat double, qlon double"
     )
+
+
+def _strip_candidates(spark, probe: DataFrame, frontier: list[dict]) -> DataFrame:
+    """(query_id, node_id, dist_m) of every node in each frontier
+    query's ring: the tile-keyed store hash-joins the broadcast strip
+    table on xtile, then keeps the strip's y-range."""
+    return (
+        probe.join(_frontier_strips(spark, frontier), "xtile")
+        .where(F.col("ytile").between(F.col("ymin"), F.col("ymax")))
+        .select(
+            "query_id",
+            "node_id",
+            haversine_m(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")).alias(
+                "dist_m"
+            ),
+        )
+    )
+
+
+def _ring_window(f: dict) -> tuple[int, int, int]:
+    """A frontier query's ring as (x0, y0, y1): its tiles have
+    pmod(xtile - x0, NTILES) ≤ 2·radius (wrap-aware, as in
+    ``_coarse_cell_candidates``) and y0 ≤ ytile ≤ y1."""
+    r = f["radius"]
+    return f["qx"] - r, max(f["qy"] - r, 0), min(f["qy"] + r, NTILES - 1)
+
+
+def _driver_round(
+    probe: DataFrame, frontier: list[dict], k: int
+) -> tuple[pa.Table, dict[int, tuple[int, float]]] | None:
+    """One strip round on the driver: the store rows in the OR of the
+    frontier's ring windows come back in one bounded collect (40 B a
+    row, ``session.collect_bounded``), and numpy ranks each query's ring
+    by (distance, node_id) with the oracle's haversine. → (the round's
+    top table, as ``_ranked`` gives it, and per-query (rows, k-th
+    distance) stats), or ``None`` when the candidates are over the
+    bound. The predicate is one SQL string: a Column built per window
+    costs a py4j call per literal."""
+    windows = []
+    for f in frontier:
+        x0, y0, y1 = _ring_window(f)
+        w = f"ytile BETWEEN {y0} AND {y1}"
+        if 2 * f["radius"] + 1 < NTILES:
+            w += f" AND pmod(xtile - ({x0}), {NTILES}) <= {2 * f['radius']}"
+        windows.append(f"({w})")
+    table = collect_bounded(
+        probe.where(F.expr(" OR ".join(sorted(set(windows))))).select(
+            "node_id", "lat", "lon", "xtile", "ytile"
+        )
+    )
+    if table is None:
+        return None
+    node_id, lat, lon, xtile, ytile = (c.to_numpy() for c in table.columns)
+    # a ring's rows are one slice of the candidates sorted by ytile
+    by_y = np.argsort(ytile, kind="stable")
+    ys = ytile[by_y]
+    qids, ranks, picks, dists, stats = [], [], [], [], {}
+    for f in frontier:
+        x0, y0, y1 = _ring_window(f)
+        ii = by_y[np.searchsorted(ys, y0, "left") : np.searchsorted(ys, y1, "right")]
+        if 2 * f["radius"] + 1 < NTILES:
+            ii = ii[(xtile[ii].astype(np.int64) - x0) % NTILES <= 2 * f["radius"]]
+        dist = np_haversine_m(f["qlat"], f["qlon"], lat[ii], lon[ii])
+        top = np.lexsort((node_id[ii], dist))[:k]
+        if len(top):
+            stats[f["query_id"]] = (len(top), float(dist[top[-1]]))
+        qids.append(np.full(len(top), f["query_id"], dtype=np.int32))
+        ranks.append(np.arange(1, len(top) + 1, dtype=np.int32))
+        picks.append(ii[top])
+        dists.append(dist[top])
+    top = pa.table(
+        {
+            "query_id": np.concatenate(qids),
+            "rank": np.concatenate(ranks),
+            "node_id": node_id[np.concatenate(picks)],
+            "dist_m": np.concatenate(dists),
+        }
+    )
+    return top, stats
 
 
 STRIP_SWITCH_ROWS = 8192  # strip rows above which a round joins on coarse cells
@@ -300,8 +389,9 @@ def knn_kring(
     """Exact kNN via batched iterative k-ring expansion.
 
     One Spark job per expansion ROUND (not per query): all unsatisfied
-    queries join the tile-keyed store together through a broadcast
-    strip table; satisfied queries leave the frontier. Results match
+    queries share one bounded collect of their ring windows, or one
+    join of the tile-keyed store with a broadcast strip table;
+    satisfied queries leave the frontier. Results match
     ``knn_brute_force`` exactly (asserted in tests and oracle-gated as
     ``osm_knn_kring`` against an independent SQL brute force).
 
@@ -331,19 +421,18 @@ def knn_kring(
     ring distance bound. Callers that know the corpus size (benches,
     serving layers with table stats) should pass ``est_n_nodes``.
 
-    Result accumulation follows the engine's one size rule: while the
-    k·Q result rows (``RANKED_DDL``, sized by ``session.row_bytes``)
-    fit under ``spark.sql.autoBroadcastJoinThreshold``, each round
-    collects its top-k as one Arrow table and the result is a
-    LocalRelation — skipping the executor-side bookkeeping saves ~2
-    stages per round (measured q5 1.64s vs 2.6s at sf0.1). Past it (or
-    at a threshold ≤ 0) every
-    result slice stays persisted ON THE EXECUTORS (the driver sees only
-    Q control rows each way: stats up, satisfied ids down) and the
-    returned DataFrame is the union of the cached round frames — an
-    offline Q=10⁶ batch never funnels k·Q result rows through one
-    process. Either way, a batch of more than ``CACHE_MIN_QUERIES``
-    queries without a ``tiled`` store caches its own tiled projection.
+    Rounds and results follow the engine's one size rule (the three
+    modes of the module docstring): while the k·Q result rows
+    (``RANKED_DDL``, sized by ``session.row_bytes``) fit under
+    ``spark.sql.autoBroadcastJoinThreshold``, each strip round collects
+    its candidate nodes and ranks them in numpy, one job a round, until
+    a round's candidates are over; from then on each round ranks in
+    Spark and collects its top-k as one Arrow table. The result is a
+    LocalRelation either way. Past the results' bound (or at a
+    threshold ≤ 0) every result slice stays persisted ON THE EXECUTORS
+    and the returned DataFrame is the union of the cached round frames.
+    Either way, a batch of more than ``CACHE_MIN_QUERIES`` queries
+    without a ``tiled`` store caches its own tiled projection.
     """
     if nodes is None and tiled is None:
         raise ValueError("knn_kring needs nodes or a tiled store")
@@ -381,6 +470,7 @@ def knn_kring(
         )
         for qid, qlat, qlon in query_points
     ]
+    driver_rounds = collect_mode
     parts: list[DataFrame] = []
     tables: list[pa.Table] = []  # satisfied top-k rows (small-Q mode)
     round_frames: list[DataFrame] = []  # persisted per-round top-k (large-Q mode)
@@ -405,62 +495,48 @@ def knn_kring(
                     F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
                 )
             est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
-            if est_strip_rows > STRIP_SWITCH_ROWS:
-                cand = _coarse_cell_candidates(spark, probe, frontier)
+            found = None
+            if driver_rounds and est_strip_rows <= STRIP_SWITCH_ROWS:
+                # over the bound this round's collect is spent and every
+                # later round runs in Spark: at most one spent collect a call
+                found = _driver_round(probe, frontier, k)
+                driver_rounds = found is not None
+            if found is not None:
+                top, stats = found
             else:
-                strips = _frontier_strips(spark, frontier)
-                cand = (
-                    probe.join(strips, "xtile")
-                    .where(F.col("ytile").between(F.col("ymin"), F.col("ymax")))
-                    .select(
-                        "query_id",
-                        "node_id",
-                        haversine_m(
-                            F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")
-                        ).alias("dist_m"),
+                if est_strip_rows > STRIP_SWITCH_ROWS:
+                    cand = _coarse_cell_candidates(spark, probe, frontier)
+                else:
+                    cand = _strip_candidates(spark, probe, frontier)
+                ranked = _ranked(cand, k)
+                if collect_mode:
+                    # the queries' own ≤ k·|frontier|-row top-k comes
+                    # to the driver directly as one Arrow table
+                    top = ranked.toArrow()
+                    agg = top.group_by("query_id").aggregate(
+                        [("rank", "count"), ("dist_m", "max")]
                     )
-                )
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("dist_m").asc(), F.col("node_id").asc()
-            )
-            ranked = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    F.col("rank").cast("int").alias("rank"),
-                    "node_id",
-                    "dist_m",
-                )
-            )
-            if collect_mode:
-                # small batch: ONE job, the queries' own ≤ k·|frontier|-row
-                # top-k comes to the driver directly as one Arrow table
-                top = ranked.toArrow()
-                agg = top.group_by("query_id").aggregate(
-                    [("rank", "count"), ("dist_m", "max")]
-                )
-                stats = dict(
-                    zip(
-                        agg["query_id"].to_pylist(),
-                        zip(agg["rank_count"].to_pylist(), agg["dist_m_max"].to_pylist()),
+                    stats = dict(
+                        zip(
+                            agg["query_id"].to_pylist(),
+                            zip(agg["rank_count"].to_pylist(), agg["dist_m_max"].to_pylist()),
+                        )
                     )
-                )
-            else:
-                # large batch: the top-k PERSISTS executor-side and the
-                # stats aggregate is the one materializing action — the
-                # round still costs ONE job, and the driver collects ONLY
-                # per-query (count, k-th distance) control rows. Frames
-                # stay persisted (k·Q rows per round; eviction merely
-                # recomputes deterministically from lineage).
-                ranked = ranked.persist()
-                round_frames.append(ranked)
-                stats = {
-                    r["query_id"]: (int(r["n"]), float(r["kth"]))
-                    for r in ranked.groupBy("query_id")
-                    .agg(F.count("*").alias("n"), F.max("dist_m").alias("kth"))
-                    .collect()
-                }
+                else:
+                    # large batch: the top-k PERSISTS executor-side and the
+                    # stats aggregate is the one materializing action: the
+                    # driver collects ONLY per-query (count, k-th distance)
+                    # control rows. Frames
+                    # stay persisted (k·Q rows per round; eviction merely
+                    # recomputes deterministically from lineage).
+                    ranked = ranked.persist()
+                    round_frames.append(ranked)
+                    stats = {
+                        r["query_id"]: (int(r["n"]), float(r["kth"]))
+                        for r in ranked.groupBy("query_id")
+                        .agg(F.count("*").alias("n"), F.max("dist_m").alias("kth"))
+                        .collect()
+                    }
 
             next_frontier = []
             satisfied_ids: list[int] = []
@@ -495,7 +571,7 @@ def knn_kring(
             frontier = next_frontier
 
         if collect_mode or not parts:
-            rows = pa.concat_tables(tables) if tables else []
+            rows = pa.concat_tables(tables, promote_options="default") if tables else []
             return local_frame(spark, rows, "query_id int, rank int, node_id long")
         out = parts[0]
         for p in parts[1:]:

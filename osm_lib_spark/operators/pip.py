@@ -1,13 +1,17 @@
-"""Point-in-polygon via ray casting in vectorized Arrow batches.
+"""Point-in-polygon via vectorized ray casting.
 
 Engine addition (no reference analog; BASELINE.json north_star mandates
 "ray-casting point-in-polygon in pandas batches"). One operator,
 ``points_in_polygons_bucketed``, serves every polygon set: polygons
-live in a DataFrame (``polygons_df`` builds one from a dict), each is
-exploded to its covering z12 tiles, points equi-join the polygon tiles
-on the tile key, and a pandas UDF decides membership per Arrow batch —
-numpy does V vector operations per polygon group for a V-vertex
-polygon, never per-row Python.
+live in a DataFrame (``polygons_df`` builds one from a dict), and each
+covers the z12 tiles of its bbox. When the polygons, the nodes in
+their tiles and the (polygon, node) pairs in their bboxes fit under
+``spark.sql.autoBroadcastJoinThreshold``, those nodes come to the
+driver in one bounded collect and numpy decides; otherwise points
+equi-join the polygon tiles on the tile key and a pandas UDF decides
+membership per Arrow batch. Either way numpy does V
+vector operations per polygon group for a V-vertex polygon, never
+per-row Python.
 
 The numpy kernel (ray_cast_contains) is shared with the pure-pandas
 oracle so engine and golden fixtures agree bit-for-bit; the kernel
@@ -24,14 +28,23 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osm_lib_spark.functions.geo import from_fixed
-from osm_lib_spark.functions.tiles import ZOOM, tile_x_col, tile_y_col
-from osm_lib_spark.session import collect_bounded, local_frame
+from osm_lib_spark.functions.tiles import ZOOM, np_tile_x, np_tile_y, tile_x_col, tile_y_col
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
 from osm_lib_spark.sources.oracle import ray_cast_contains
+
+
+POLYGON_DDL = "poly_id long, rings array<array<array<double>>>"
+RESULT_DDL = "poly_id long, node_id long"
+_WRAP_MESSAGE = (
+    "points_in_polygons_bucketed: polygon {} spans >180 deg of longitude"
+    " — split it at the antimeridian"
+)
 
 
 def polygons_df(spark, polygons: dict[int, list[np.ndarray]]) -> DataFrame:
@@ -50,7 +63,7 @@ def polygons_df(spark, polygons: dict[int, list[np.ndarray]]) -> DataFrame:
         )
         for pid, rings in sorted(polygons.items())
     ]
-    return local_frame(spark, rows, "poly_id long, rings array<array<array<double>>>")
+    return local_frame(spark, rows, POLYGON_DDL)
 
 
 def _contains_by_polygon(
@@ -77,8 +90,12 @@ def _contains_by_polygon(
 
 
 def _ring_arrays(rings) -> list[np.ndarray]:
-    """One polygon's ``rings`` value → its rings as (V, 2) float64 arrays."""
-    return [np.stack([np.asarray(v, dtype=np.float64) for v in ring]) for ring in rings]
+    """One polygon's ``rings`` value (collected lists, or the arrays of
+    an Arrow batch) → its rings as (V, 2) float64 arrays."""
+    return [
+        np.array([np.asarray(v, dtype=np.float64) for v in ring]).reshape(-1, 2)
+        for ring in ([] if rings is None else rings)
+    ]
 
 
 @F.pandas_udf(T.BooleanType())
@@ -95,81 +112,153 @@ TILE_DDL = (
 )
 
 
-def _driver_rings(polygons: DataFrame) -> dict[int, list[np.ndarray]] | None:
-    """poly_id → rings as (V, 2) float64 arrays, collected through
-    ``collect_bounded`` one row per ring VERTEX, so the ring payload is
-    measured by its size, not by its polygon count; ``None`` when the
-    vertices are over ``spark.sql.autoBroadcastJoinThreshold``."""
-    verts = polygons.select("poly_id", F.posexplode("rings").alias("ring", "vs")).select(
-        "poly_id", "ring", F.posexplode("vs").alias("vertex", "v")
+def _driver_polygons(polygons: DataFrame) -> tuple[list, dict[int, list[np.ndarray]]] | None:
+    """(the collected (poly_id, rings) rows, poly_id → rings as (V, 2)
+    float64 arrays), or ``None`` when the polygons are over
+    ``spark.sql.autoBroadcastJoinThreshold``: at most ``threshold //
+    row_bytes`` rows, and their ring vertices (16 B each) under the
+    threshold too, as ``row_bytes`` counts an array as one element.
+    Over a LocalRelation (``polygons_df``) the limited collect runs no
+    job: the optimizer folds the limit into the relation."""
+    spark = polygons.sparkSession
+    threshold = broadcast_threshold(spark)
+    if threshold <= 0:
+        return None
+    frame = polygons.select("poly_id", "rings")
+    max_rows = threshold // row_bytes(spark, frame.schema)
+    rows = frame.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        return None
+    rings_of = {int(pid): _ring_arrays(rings) for pid, rings in rows}
+    if sum(ring.nbytes for rings in rings_of.values() for ring in rings) > threshold:
+        return None
+    return rows, rings_of
+
+
+def _polygon_bounds(rings_of: dict[int, list[np.ndarray]], zoom: int) -> dict[str, np.ndarray]:
+    """Per polygon with vertices: its poly_id, bbox (lat_min, lat_max,
+    lon_min, lon_max) and covering z``zoom`` tile ranges (x0, x1, y0,
+    y1), as arrays. Raises ``ValueError`` for a ring spanning >180° of
+    longitude. The y ranges are widened by 1e-9° of latitude, so
+    numpy's and the JVM's last-bit differences in the y formula cannot
+    drop a tile that the nodes' Column tiles hold; the bbox test
+    decides exactly."""
+    ntiles = 1 << zoom
+    pids, boxes = [], []
+    for pid, rings in rings_of.items():
+        v = np.concatenate(rings) if rings else np.empty((0, 2))
+        if not len(v):  # no vertices: no bbox, no covering tile
+            continue
+        (lat_min, lon_min), (lat_max, lon_max) = v.min(axis=0), v.max(axis=0)
+        if lon_max - lon_min > 180.0:
+            raise ValueError(_WRAP_MESSAGE.format(pid))
+        pids.append(pid)
+        boxes.append((lat_min, lat_max, lon_min, lon_max))
+    lat_min, lat_max, lon_min, lon_max = np.array(boxes, dtype=np.float64).reshape(-1, 4).T
+
+    def tile(values, fn):
+        with np.errstate(invalid="ignore"):
+            return np.clip(fn(values, zoom), 0, ntiles - 1).astype(np.int64)
+
+    return {
+        "poly_id": np.array(pids, dtype=np.int64),
+        "lat_min": lat_min,
+        "lat_max": lat_max,
+        "lon_min": lon_min,
+        "lon_max": lon_max,
+        "x0": tile(lon_min, np_tile_x),
+        "x1": tile(lon_max, np_tile_x),
+        "y0": tile(np.clip(lat_max + 1e-9, -89.0, 89.0), np_tile_y),
+        "y1": tile(np.clip(lat_min - 1e-9, -89.0, 89.0), np_tile_y),
+    }
+
+
+def _covering_tiles(bounds: dict[str, np.ndarray], max_rows: int) -> pa.Table | None:
+    """One ``TILE_DDL`` row per (polygon, covering tile), with the
+    polygon's bbox; ``None`` past ``max_rows`` rows, counted before any
+    row is built."""
+    per_row = bounds["y1"] - bounds["y0"] + 1
+    counts = (bounds["x1"] - bounds["x0"] + 1) * per_row
+    if counts.sum() > max_rows:
+        return None
+    poly = np.repeat(np.arange(len(counts)), counts)
+    j = np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
+    return pa.table(
+        {
+            "poly_id": bounds["poly_id"][poly],
+            "xtile": (bounds["x0"][poly] + j // per_row[poly]).astype(np.int32),
+            "ytile": (bounds["y0"][poly] + j % per_row[poly]).astype(np.int32),
+            **{c: bounds[c][poly] for c in ("lat_min", "lat_max", "lon_min", "lon_max")},
+        }
     )
-    table = collect_bounded(
-        verts.select(
-            "poly_id", "ring", "vertex", F.col("v")[0].alias("lat"), F.col("v")[1].alias("lon")
+
+
+def _driver_pip(
+    pts: DataFrame, rings_of: dict[int, list[np.ndarray]], bounds: dict[str, np.ndarray], zoom: int
+) -> DataFrame | None:
+    """The point-in-polygon answer from one bounded collect of the
+    (node_id, lat, lon) rows in the polygons' covering tiles (32 B a
+    row, ``session.collect_bounded``), decided per polygon in numpy by
+    its bbox and ``_contains_by_polygon``: a ``local_frame`` of
+    (poly_id, node_id), or ``None`` when the candidates are over the
+    bound, or the (polygon, candidate) pairs in the polygons' bboxes
+    are: they bound the answer, which like every driver-built frame
+    must fit under the threshold (24 B a row; a 4.8M-row answer built
+    on the driver cost 19-22 CPU-s where the broadcast-rings form took
+    15-17). The tile predicate is one SQL ``IN`` list over the tile keys,
+    which Spark plans as an ``InSet``: its code does not grow with the
+    polygons (a Column ``isin`` costs a py4j call per key). Past one
+    grid row's worth of covering tiles (4096 at z12) the tiles'
+    envelope stands in for it."""
+    spark = pts.sparkSession
+    if not len(bounds["poly_id"]):
+        return local_frame(spark, [], RESULT_DDL)
+    ntiles = 1 << zoom
+    tiles = _covering_tiles(bounds, ntiles)
+    if tiles is not None:
+        keys = np.unique(
+            tiles.column("xtile").to_numpy().astype(np.int64) * ntiles
+            + tiles.column("ytile").to_numpy()
         )
-    )
+        in_tiles = f"xtile * {ntiles} + ytile IN ({','.join(map(str, keys))})"
+    else:
+        in_tiles = (
+            f"xtile BETWEEN {bounds['x0'].min()} AND {bounds['x1'].max()}"
+            f" AND ytile BETWEEN {bounds['y0'].min()} AND {bounds['y1'].max()}"
+        )
+    table = collect_bounded(pts.where(F.expr(in_tiles)).select("node_id", "lat", "lon"))
     if table is None:
         return None
-    if not table.num_rows:
-        return {}
-    pid, ring, vertex, lat, lon = (c.to_numpy(zero_copy_only=False) for c in table.columns)
-    order = np.lexsort((vertex, ring, pid))
-    pid, ring = pid[order], ring[order]
-    starts = np.flatnonzero((np.diff(pid) != 0) | (np.diff(ring) != 0)) + 1
-    rings_of: dict[int, list[np.ndarray]] = {}
-    for p, latlon in zip(
-        pid[np.r_[0, starts]], np.split(np.column_stack([lat[order], lon[order]]), starts)
-    ):
-        rings_of.setdefault(int(p), []).append(latlon)
-    return rings_of
+    node_id, lat, lon = (c.to_numpy() for c in table.columns)
+    # each polygon's latitude band is one slice of the candidates sorted
+    # by latitude; its longitude range is then tested on that slice only
+    by_lat = np.argsort(lat, kind="stable")
+    starts = np.searchsorted(lat[by_lat], bounds["lat_min"], side="left")
+    ends = np.searchsorted(lat[by_lat], bounds["lat_max"], side="right")
+    pids, idx = [], []
+    for pid, a, b, lo0, lo1 in zip(bounds["poly_id"], starts, ends, bounds["lon_min"], bounds["lon_max"]):
+        ii = by_lat[a:b]
+        ii = ii[(lon[ii] >= lo0) & (lon[ii] <= lo1)]
+        pids.append(np.full(len(ii), pid))
+        idx.append(ii)
+    pid, ii = np.concatenate(pids), np.concatenate(idx)
+    if len(pid) * row_bytes(spark, RESULT_DDL) > broadcast_threshold(spark):
+        return None
+    inside = _contains_by_polygon(
+        pd.Series(pid), pd.Series(lat[ii]), pd.Series(lon[ii]), lambda i: rings_of[int(pid[i])]
+    ).to_numpy()
+    return local_frame(
+        spark,
+        pa.table({"poly_id": pid[inside], "node_id": node_id[ii[inside]]}),
+        RESULT_DDL,
+    )
 
 
-def points_in_polygons_bucketed(
-    nodes: DataFrame, polygons: DataFrame, zoom: int = ZOOM
-) -> DataFrame:
-    """→ (poly_id, node_id) for every node inside each polygon of
-    ``polygons`` (poly_id, rings), the ``polygons_df`` shape.
-
-    Plan shape:
-
-    1. per-polygon bbox from the rings column (pure Column fold);
-    2. explode each polygon to its covering z``zoom`` tiles —
-       |P|·avg_covering_tiles rows;
-    3. points compute their own (xtile, ytile) and EQUI-join the
-       polygon-tile table on the tile key, the polygon side always the
-       build side. The size rule of every driver-or-cluster choice
-       picks how (``session.collect_bounded``): when the tile table
-       without rings AND the ring vertices (``_driver_rings``, 40 B a
-       vertex) each fit under ``spark.sql.autoBroadcastJoinThreshold``,
-       the tile table is collected once into a LocalRelation the
-       planner broadcasts by its exact size (no point shuffles at all),
-       and the ring geometry ships ONCE PER EXECUTOR as a Spark
-       broadcast variable — at 1M nodes × 500 polygons the per-row
-       rings payload through Arrow was the dominant cost (measured
-       6.9s, PLANS §14). If either is over the threshold (a coastline
-       with 10⁶ vertices over a few tiles is over on its vertices
-       alone), the rings ride the polygon-tile rows under a
-       SHUFFLE_HASH hint (both sides hash-exchange on uniform tile
-       keys); left to the planner, a polygon side without stats can
-       invert the join and broadcast the corpus;
-    4. a Column predicate drops candidates outside the polygon's own
-       bbox in the join's codegen stage, then the shared ray-cast
-       kernel (``_contains_by_polygon``) decides the rest per bucket.
-
-    Exactness: bbox-covering tiles ⊇ polygon tiles and a point outside
-    every covering tile cannot be inside, so the join only ever prunes
-    true negatives; the kernel decides the rest. Each point has exactly
-    one tile and a polygon covers a tile at most once → no dup pairs.
-
-    Limits (documented, asserted): polygons crossing the antimeridian
-    are not supported (split them into two rings); latitudes beyond the
-    Web-Mercator range clamp onto the edge tile rows, where the kernel
-    still decides exactly. Skew: a huge polygon's candidates spread
-    over its many covering tiles (per-tile buckets), so no single task
-    sees the whole polygon's point load; very-high-vertex polygons pay
-    ring duplication per covering tile on the rings-on-rows path —
-    clip rings per tile at that scale.
-    """
+def _rings_on_rows(pts: DataFrame, polygons: DataFrame, zoom: int):
+    """(candidates, membership Column) with the rings riding the
+    polygon-tile rows into a SHUFFLE_HASH join: both sides
+    hash-exchange on uniform tile keys; left to the planner, a polygon
+    side without stats can invert the join and broadcast the corpus."""
     ntiles = 1 << zoom
 
     def clamp(c):
@@ -190,11 +279,7 @@ def points_in_polygons_bucketed(
         F.when(
             F.col("lon_max") - F.col("lon_min") > 180.0,
             F.raise_error(
-                F.concat(
-                    F.lit("points_in_polygons_bucketed: polygon "),
-                    F.col("poly_id").cast("string"),
-                    F.lit(" spans >180 deg of longitude — split it at the antimeridian"),
-                )
+                F.format_string(_WRAP_MESSAGE.replace("{}", "%s"), F.col("poly_id"))
             ).cast("boolean"),
         ).otherwise(F.lit(True))
     )
@@ -221,6 +306,75 @@ def points_in_polygons_bucketed(
             *bbox_cols,
         )
     )
+    return (
+        pts.join(ptiles.hint("SHUFFLE_HASH"), ["xtile", "ytile"]),
+        _contains_rings_udf(F.col("poly_id"), F.col("lat"), F.col("lon"), F.col("rings")),
+    )
+
+
+def points_in_polygons_bucketed(
+    nodes: DataFrame, polygons: DataFrame, zoom: int = ZOOM
+) -> DataFrame:
+    """→ (poly_id, node_id) for every node inside each polygon of
+    ``polygons`` (poly_id, rings), the ``polygons_df`` shape.
+
+    Plan shape:
+
+    1. per-polygon bbox from the rings (min/max over all vertices);
+    2. each polygon's covering z``zoom`` tiles, from its bbox;
+    3. where it runs follows the size rule of every driver-or-cluster
+       choice in the engine (``session.collect_bounded``), the first
+       form that fits:
+
+       * the driver: the polygons fit under
+         ``spark.sql.autoBroadcastJoinThreshold`` (``_driver_polygons``:
+         rows, and their ring vertices at 16 B each), and so do the
+         nodes in their covering tiles (32 B a row) and the (polygon,
+         node) pairs in the polygons' bboxes (24 B, ``_driver_pip``):
+         one bounded collect brings those nodes to the driver, numpy
+         keeps each polygon's bbox and the shared ray-cast kernel
+         decides the rest; the result is a LocalRelation. Over a
+         ``polygons_df`` frame the polygons come without a job, so the
+         call runs one;
+       * broadcast rings: the polygons fit, their candidate nodes or
+         pairs do not (that collect is spent) and the polygon-tile
+         rows built on the driver (``TILE_DDL``) do: points compute
+         their own (xtile, ytile) and equi-join a ``local_frame`` of the
+         tile rows, which the planner broadcasts by its exact size (no
+         point shuffles), and the rings ship once per executor as a
+         Spark broadcast variable. Just over the candidate bound this
+         form took 49-53 CPU-s where rings on rows took 127-150
+         (ROADMAP forks table);
+       * rings on rows (``_rings_on_rows``): the rings ride the
+         polygon-tile rows into a SHUFFLE_HASH join. When the polygons
+         fit and only their tile rows do not, the polygon side is a
+         ``local_frame`` of the rows already collected;
+    4. on the Spark side, a Column predicate drops candidates outside
+       the polygon's own bbox in the join's codegen stage, then the
+       ray-cast kernel (``_contains_by_polygon``) decides the rest per
+       Arrow batch.
+
+    Exactness: bbox-covering tiles ⊇ polygon tiles and a point outside
+    every covering tile cannot be inside, so the tiles only ever prune
+    true negatives; the kernel decides the rest. Each point has exactly
+    one tile and a polygon covers a tile at most once → no dup pairs.
+
+    Limits (documented, asserted): polygons crossing the antimeridian
+    are not supported (split them into two rings); the driver path
+    raises ``ValueError`` at the call, the Spark side the same message
+    at the action. Latitudes beyond the Web-Mercator range clamp onto
+    the edge tile rows, where the kernel still decides exactly. Skew:
+    a huge polygon's candidates spread over its many covering tiles
+    (per-tile buckets), so no single task sees the whole polygon's
+    point load; very-high-vertex polygons pay ring duplication per
+    covering tile on the Spark side — clip rings per tile at that
+    scale.
+    """
+    ntiles = 1 << zoom
+
+    def clamp(c):
+        return F.greatest(F.least(c, F.lit(ntiles - 1)), F.lit(0))
+
     pts = nodes.select(
         F.col("id").alias("node_id"),
         from_fixed(F.col("fixed_lat")).alias("lat"),
@@ -232,24 +386,32 @@ def points_in_polygons_bucketed(
         clamp(tile_x_col(F.col("lon"), zoom)).alias("xtile"),
         clamp(tile_y_col(F.col("lat"), zoom)).alias("ytile"),
     )
-    tiles = collect_bounded(ptiles.drop("rings"))
-    rings_of = None if tiles is None else _driver_rings(polygons)
-    if rings_of is None:
-        cand = pts.join(ptiles.hint("SHUFFLE_HASH"), ["xtile", "ytile"])
-        contains = _contains_rings_udf(
-            F.col("poly_id"), F.col("lat"), F.col("lon"), F.col("rings")
-        )
-    else:
-        spark = polygons.sparkSession
-        bc = spark.sparkContext.broadcast(rings_of)
+    spark = polygons.sparkSession
+    cand = None
+    collected = _driver_polygons(polygons)
+    if collected is not None:
+        rows, rings_of = collected
+        bounds = _polygon_bounds(rings_of, zoom)
+        out = _driver_pip(pts, rings_of, bounds, zoom)
+        if out is not None:
+            return out
+        tiles = _covering_tiles(bounds, broadcast_threshold(spark) // row_bytes(spark, TILE_DDL))
+        if tiles is None:
+            polygons = local_frame(spark, rows, POLYGON_DDL)
+        else:
+            bc = spark.sparkContext.broadcast(rings_of)
 
-        @F.pandas_udf(T.BooleanType())
-        def contains_bc(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-            by_pid = bc.value
-            return _contains_by_polygon(poly_id, lat, lon, lambda i: by_pid[int(poly_id.iat[i])])
+            @F.pandas_udf(T.BooleanType())
+            def contains_bc(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
+                by_pid = bc.value
+                return _contains_by_polygon(
+                    poly_id, lat, lon, lambda i: by_pid[int(poly_id.iat[i])]
+                )
 
-        cand = pts.join(local_frame(spark, tiles, TILE_DDL), ["xtile", "ytile"])
-        contains = contains_bc(F.col("poly_id"), F.col("lat"), F.col("lon"))
+            cand = pts.join(local_frame(spark, tiles, TILE_DDL), ["xtile", "ytile"])
+            contains = contains_bc(F.col("poly_id"), F.col("lat"), F.col("lon"))
+    if cand is None:
+        cand, contains = _rings_on_rows(pts, polygons, zoom)
     # polygon-bbox prefilter: a candidate in a covering tile can still be
     # outside the polygon's own bbox (tiles are ~0.088° at z12, most grid
     # polygons are 0.01-0.06° half-size). The bbox test is a plain Column

@@ -6,11 +6,15 @@ import os
 import numpy as np
 import pytest
 
-from osm_lib_spark.operators.knn import knn_brute_force, knn_kring
+import osm_lib_spark.operators.knn as knn
+from osm_lib_spark.operators.knn import RANKED_DDL, knn_brute_force, knn_kring
 from osm_lib_spark.operators.pip import grid_polygons, points_in_polygons_bucketed, polygons_df
+from osm_lib_spark.session import row_bytes
 from osm_lib_spark.sources.oracle import ray_cast_contains
 from osm_lib_spark.sources.span_codec import parse_nodes
-from tests.conftest import assert_df_equal, golden, threshold
+from tests.conftest import assert_df_equal, both_paths, golden, spark_jobs, threshold
+
+NODE_DDL = "id long, fixed_lat int, fixed_lon int, tags array<struct<key:string,value:string>>"
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +26,28 @@ def meta_xs(fixture_xs):
 @pytest.fixture(scope="module")
 def nodes_xs(docs_xs):
     return parse_nodes(docs_xs).cache()
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+KNN_ROUND = "osm_lib_spark.operators.knn._driver_round"
+PIP_ANSWER = "osm_lib_spark.operators.pip._driver_pip"
+
+
+def _three_paths(spark, monkeypatch, step, fn):
+    """Sorted rows of ``fn()`` on the driver path (session threshold),
+    on the Spark form under the threshold (the driver ``step`` reporting
+    its candidates over the bound) and at threshold -1: for kNN the
+    driver rounds, Spark rounds with the results collected and executor
+    accumulation; for PIP the driver's numpy, broadcast rings and rings
+    on rows."""
+    driver, at_minus_one = both_paths(spark, lambda: _rows(fn()))
+    with monkeypatch.context() as m:
+        m.setattr(step, lambda *a: None)
+        over = _rows(fn())
+    return driver, over, at_minus_one
 
 
 def test_ray_cast_hand_computed():
@@ -44,46 +70,27 @@ def test_knn_brute_force_vs_golden(nodes_xs, fixture_xs, meta_xs):
     assert_df_equal(got, golden(fixture_xs, "knn"), sort_cols=["query_id", "rank"])
 
 
-def test_knn_kring_matches_brute_force(spark, nodes_xs, meta_xs):
+def test_knn_kring_matches_brute_force(spark, nodes_xs, meta_xs, monkeypatch):
+    """k-ring rows equal brute force on all three paths, with the
+    density-derived initial ring too, and over the candidate bound: at a
+    threshold the k·Q results fit under and the first round's candidate
+    rows do not, one driver round is tried (its collect spent) and every
+    later round runs in Spark."""
     # ALL query points — includes the near-polar and open-ocean ones
     # whose ring bound degrades to 0 (conservative full expansion)
     pts = [tuple(p) for p in meta_xs["knn_points"]]
-    brute = (
-        knn_brute_force(nodes_xs, pts, k=10)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    ring = (
-        knn_kring(nodes_xs, pts, k=10)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(brute, ring, check_dtype=False)
-
+    brute = _rows(knn_brute_force(nodes_xs, pts, k=10))
+    for rows in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes_xs, pts, k=10)):
+        assert rows == brute
     # density-derived initial ring (est_n_nodes) must be EXACTLY equal
     # too — the start radius only moves rounds, never the bound
-    ring_r0 = (
-        knn_kring(nodes_xs, pts, k=10, est_n_nodes=nodes_xs.count())
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(brute, ring_r0, check_dtype=False)
+    assert _rows(knn_kring(nodes_xs, pts, k=10, est_n_nodes=nodes_xs.count())) == brute
 
-    # executor-side accumulation path (forced: threshold -1) must be
-    # exactly equal too — same rounds, different result plumbing
-    with threshold(spark, "-1"):
-        ring_exec = (
-            knn_kring(nodes_xs, pts, k=10)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(brute, ring_exec, check_dtype=False)
+    tried, real = [], knn._driver_round
+    monkeypatch.setattr(knn, "_driver_round", lambda *a: tried.append(real(*a)) or tried[-1])
+    with threshold(spark, str(len(pts) * 10 * row_bytes(spark, RANKED_DDL))):
+        assert _rows(knn_kring(nodes_xs, pts, k=10)) == brute
+    assert tried == [None]
 
 
 def test_ring_bound_is_lower_bound_high_lat():
@@ -116,7 +123,7 @@ def test_ring_bound_is_lower_bound_high_lat():
                 assert (d >= bound - 1e-6).all(), (qlat, qlon, radius)
 
 
-def test_knn_kring_meridian_edge_case(spark):
+def test_knn_kring_meridian_edge_case(spark, monkeypatch):
     """Adversarial layout exploiting the OLD (overstated) east/west
     bound: at lat 60 / radius 200 tiles, the same-latitude haversine to
     the boundary meridian exceeds the true cross-track minimum by ~9km.
@@ -160,61 +167,70 @@ def test_knn_kring_meridian_edge_case(spark):
     assert int(np_tile_x(np.array([out_lon]))[0]) < qx - radius  # 1-NN is outside
 
     nodes = spark.createDataFrame(
-        [(rid, int(la * 1e7), int(lo * 1e7), []) for rid, la, lo in rows],
-        "id long, fixed_lat int, fixed_lon int, tags array<struct<key:string,value:string>>",
+        [(rid, int(la * 1e7), int(lo * 1e7), []) for rid, la, lo in rows], NODE_DDL
     )
     pts = [(0, qlat, qlon)]
-    brute = knn_brute_force(nodes, pts, k=10).toPandas().sort_values("rank")
-    ring = (
-        knn_kring(nodes, pts, k=10, initial_ring=radius)
-        .toPandas()
-        .sort_values("rank")
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(
-        brute.reset_index(drop=True), ring.reset_index(drop=True), check_dtype=False
-    )
-    assert ring.iloc[0].node_id == 1  # the outside node won
+    brute = _rows(knn_brute_force(nodes, pts, k=10))
+    paths = _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=10, initial_ring=radius))
+    for ring in paths:
+        assert ring == brute
+        assert ring[0][2] == 1  # the outside node won
 
 
-def test_pip_vs_golden(spark, nodes_xs, fixture_xs, meta_xs):
+def _golden_rows(fixture_dir, name):
+    return sorted(tuple(map(int, r)) for r in golden(fixture_dir, name)[["poly_id", "node_id"]].to_numpy())
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_vs_golden(spark, nodes_xs, fixture_xs, meta_xs, monkeypatch):
     """The fixture's hand-shaped polygons (one with a hole) as a
-    polygons_df equal the pandas golden."""
+    polygons_df equal the pandas golden on every path."""
     polys = {
         int(pid): [np.array(r, dtype=np.float64) for r in rings]
         for pid, rings in meta_xs["polygons"].items()
     }
-    got = points_in_polygons_bucketed(nodes_xs, polygons_df(spark, polys))
-    assert_df_equal(got, golden(fixture_xs, "pip"), sort_cols=["poly_id", "node_id"])
+    frame = polygons_df(spark, polys)
+    expected = _golden_rows(fixture_xs, "pip")
+    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, frame)):
+        assert rows == expected
 
 
-def test_pip_bucketed_vs_golden_and_broadcast(nodes_xs, fixture_xs, meta_xs, spark):
-    """The 500 grid polygons equal the independent pandas golden on both
-    sides of spark.sql.autoBroadcastJoinThreshold: the broadcast polygon
-    tile table with the rings in a broadcast variable, and (threshold
-    -1) the rings riding the tile rows into a shuffled hash join. Both
-    plans are tile equi-joins."""
+def test_pip_bucketed_vs_golden_and_broadcast(nodes_xs, fixture_xs, meta_xs, spark, monkeypatch):
+    """The 500 grid polygons equal the independent pandas golden on
+    every path. At the session threshold the answer is a LocalRelation
+    built on the driver; with the candidates over, the driver-built
+    tile table is broadcast into a hash join on the tile key. At a
+    threshold the polygons' vertices fit under and their candidate nodes
+    and tile rows do not (44 kB, 82 kB and 220 kB on sf-xs), and at -1,
+    the rings ride the polygon-tile rows into a shuffled hash join."""
     centers = [(float(p[1]), float(p[2])) for p in meta_xs["knn_points"][:2]]
-    many = polygons_df(spark, grid_polygons(centers))
-    expected = golden(fixture_xs, "pip_many")
-    session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    for value, join in ((session, "BroadcastHashJoin"), ("-1", "ShuffledHashJoin")):
+    polys = grid_polygons(centers)
+    many = polygons_df(spark, polys)
+    expected = _golden_rows(fixture_xs, "pip_many")
+    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, many)):
+        assert rows == expected
+    plan = _plan(points_in_polygons_bucketed(nodes_xs, many))
+    assert "LocalTableScan" in plan and "Join" not in plan
+    with monkeypatch.context() as m:
+        m.setattr(PIP_ANSWER, lambda *a: None)
+        plan = _plan(points_in_polygons_bucketed(nodes_xs, many))
+    assert "BroadcastHashJoin" in plan and "xtile" in plan and "ytile" in plan
+    vertices = str(16 * sum(len(ring) for rings in polys.values() for ring in rings))
+    for value in (vertices, "-1"):
         with threshold(spark, value):
-            got = points_in_polygons_bucketed(nodes_xs, many)
-            plan = got._jdf.queryExecution().executedPlan().toString()
-            assert_df_equal(got, expected, sort_cols=["poly_id", "node_id"])
-        assert join in plan and "xtile" in plan and "ytile" in plan, value
+            plan = _plan(points_in_polygons_bucketed(nodes_xs, many))
+        assert "ShuffledHashJoin" in plan and "xtile" in plan and "ytile" in plan, value
 
 
-def test_pip_high_vertex_polygon_measured_by_its_vertices(nodes_xs, meta_xs, spark):
-    """A 4,000-vertex ring with a hole over at most four tiles: its
-    tile rows fit under a 10 kB threshold, its 40 B-a-vertex rings do
-    not, so the rings ride the tile rows (ShuffledHashJoin) instead of
-    going to the driver. At the session threshold both fit and the tile
-    table is broadcast. Rows equal an even-odd numpy oracle on both."""
-    import pandas as pd
-
+def test_pip_high_vertex_polygon_measured_by_its_vertices(nodes_xs, meta_xs, spark, monkeypatch):
+    """A 4,000-vertex ring with a hole over at most four tiles: its one
+    row fits under a 10 kB threshold, its 4,100 vertices at 16 B do not,
+    so the rings ride the tile rows (ShuffledHashJoin) instead of going
+    to the driver. At the session threshold the driver answers. Rows
+    equal an even-odd numpy oracle on every path."""
     lat0, lon0 = float(meta_xs["knn_points"][0][1]), float(meta_xs["knn_points"][0][2])
     t = np.linspace(0.0, 2.0 * np.pi, 4000, endpoint=False)
     outer = np.column_stack([lat0 + 0.03 * np.sin(t), lon0 + 0.03 * np.cos(t)])
@@ -223,49 +239,77 @@ def test_pip_high_vertex_polygon_measured_by_its_vertices(nodes_xs, meta_xs, spa
     pdf = nodes_xs.select("id", "fixed_lat", "fixed_lon").toPandas()
     lat, lon = pdf["fixed_lat"].to_numpy() / 1e7, pdf["fixed_lon"].to_numpy() / 1e7
     inside = ray_cast_contains(outer, lat, lon) ^ ray_cast_contains(hole, lat, lon)
-    expected = pd.DataFrame({"poly_id": 7, "node_id": pdf["id"][inside].to_numpy()})
+    expected = sorted((7, int(i)) for i in pdf["id"][inside])
     assert 0 < len(expected) < len(pdf)
-    session = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    for value, join in ((session, "BroadcastHashJoin"), ("10000", "ShuffledHashJoin")):
-        with threshold(spark, value):
-            got = points_in_polygons_bucketed(nodes_xs, poly)
-            plan = got._jdf.queryExecution().executedPlan().toString()
-            assert_df_equal(got, expected, sort_cols=["poly_id", "node_id"])
-        assert join in plan, value
+    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, poly)):
+        assert rows == expected
+    assert "Join" not in _plan(points_in_polygons_bucketed(nodes_xs, poly))
+    with threshold(spark, "10000"):
+        got = points_in_polygons_bucketed(nodes_xs, poly)
+        assert "ShuffledHashJoin" in _plan(got) and _rows(got) == expected
 
 
 def test_pip_bucketed_rejects_antimeridian_wrap(spark):
-    """A ring spanning >180° of longitude must raise (documented
-    limitation, asserted lazily in the plan)."""
-    import pytest as _pytest
+    """A ring spanning >180° of longitude raises with the same message
+    on both paths: a ValueError at the call on the driver, Spark's error
+    at the action over the threshold (documented limitation)."""
+    import re
 
-    from osm_lib_spark.operators.pip import points_in_polygons_bucketed, polygons_df
-
-    nodes = spark.createDataFrame(
-        [(1, 0, 0, [])],
-        "id long, fixed_lat int, fixed_lon int, tags array<struct<key:string,value:string>>",
-    )
+    nodes = spark.createDataFrame([(1, 0, 0, [])], NODE_DDL)
     bad = polygons_df(
         spark, {1: [np.array([[0.0, -179.0], [0.0, 179.0], [1.0, 179.0]])]}
     )
-    with _pytest.raises(Exception, match="antimeridian"):
+    message = re.escape(
+        "points_in_polygons_bucketed: polygon 1 spans >180 deg of longitude"
+        " — split it at the antimeridian"
+    )
+    with pytest.raises(ValueError, match=message):
+        points_in_polygons_bucketed(nodes, bad)
+    with threshold(spark, "-1"), pytest.raises(Exception, match=message):
         points_in_polygons_bucketed(nodes, bad).collect()
 
 
-def test_knn_kring_fewer_than_k_nodes(spark):
+def test_pip_empty_set_and_polygon_without_candidates(spark, nodes_xs, meta_xs, monkeypatch):
+    """No polygons, and a polygon in the fixture's empty box (no node in
+    its covering tiles), give no rows on every path; on the driver the
+    empty set runs no Spark job at all."""
+    lat0, lon0, lat1, lon1 = meta_xs["bboxes"]["empty"]
+    empty = polygons_df(spark, {})
+    lonely = polygons_df(spark, {3: [np.array([[lat0, lon0], [lat0, lon1], [lat1, lon1]])]})
+    for polygons in (empty, lonely):
+        for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, polygons)):
+            assert rows == []
+    assert spark_jobs(spark, lambda: points_in_polygons_bucketed(nodes_xs, empty).collect()) == ([], 0)
+
+
+def test_knn_kring_fewer_than_k_nodes(spark, monkeypatch):
     """k exceeds the world's node count: expansion must cover the grid
     and terminate with all nodes ranked (covered_all path)."""
     nodes = spark.createDataFrame(
-        [(1, 100000000, 200000000, []), (2, -300000000, 1500000000, []), (3, 0, 0, [])],
-        "id long, fixed_lat int, fixed_lon int, tags array<struct<key:string,value:string>>",
+        [(1, 100000000, 200000000, []), (2, -300000000, 1500000000, []), (3, 0, 0, [])], NODE_DDL
     )
-    out = knn_kring(nodes, [(0, 10.0, 20.0)], k=10).toPandas()
-    assert len(out) == 3
-    assert sorted(out["rank"]) == [1, 2, 3]
-    brute = knn_brute_force(nodes, [(0, 10.0, 20.0)], k=10).toPandas()
-    assert list(out.sort_values("rank")["node_id"]) == list(
-        brute.sort_values("rank")["node_id"]
-    )
+    brute = _rows(knn_brute_force(nodes, [(0, 10.0, 20.0)], k=10))
+    assert [r[1] for r in brute] == [1, 2, 3]
+    for rows in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, [(0, 10.0, 20.0)], k=10)):
+        assert rows == brute
+
+
+def test_knn_kring_ring_wraps_x(spark, monkeypatch):
+    """Queries by the antimeridian: their rings wrap xtile, and the
+    nearest nodes lie across it. Rows equal brute force on all three
+    paths."""
+    rows = [
+        (i + 1, int(la * 1e7), int(lo * 1e7), [])
+        for i, (la, lo) in enumerate(
+            [(10.0 + 0.01 * i, lo) for i in range(8) for lo in (179.97, -179.98, -179.9, 179.5)]
+        )
+    ]
+    nodes = spark.createDataFrame(rows, NODE_DDL)
+    pts = [(0, 10.02, 179.995), (1, 10.05, -179.995)]
+    brute = _rows(knn_brute_force(nodes, pts, k=5))
+    assert {r[2] for r in brute} & {r[0] for r in rows if r[2] < 0}  # hits across the wrap
+    for ring in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=5)):
+        assert ring == brute
 
 
 def test_knn_kring_releases_caches_on_error(spark, monkeypatch):

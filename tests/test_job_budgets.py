@@ -78,6 +78,38 @@ def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
         frame.unpersist()
 
 
+def test_knn_and_pip_job_budgets(spark, docs_xs, fixture_xs, monkeypatch):
+    """A 5-point ``knn_kring`` over a cached ``tiled_node_store`` with its
+    collect runs ≤ 1 job per round (the round's bounded collect of its
+    candidate nodes; the result is a LocalRelation, collected without a
+    job; a Spark round with its window ran 3), and a 10-polygon
+    ``points_in_polygons_bucketed`` over a ``polygons_df`` with a count
+    ≤ 3 (the candidate collect, then the count's two over the result's
+    LocalRelation; the polygons come without a job; the broadcast-rings
+    form ran 5)."""
+    import osm_lib_spark.operators.knn as knn
+    from osm_lib_spark.operators.pip import grid_polygons, points_in_polygons_bucketed, polygons_df
+    from osm_lib_spark.sources.span_codec import parse_nodes
+
+    with open(os.path.join(fixture_xs, "meta.json")) as f:
+        meta = json.load(f)
+    nodes = parse_nodes(docs_xs).cache()
+    store = knn.tiled_node_store(nodes).cache()
+    pts = [tuple(p) for p in meta["knn_points"][:5]]
+    rounds, real = [], knn._driver_round
+    monkeypatch.setattr(knn, "_driver_round", lambda *a: rounds.append(1) or real(*a))
+    jobs = _budget(spark, lambda: knn.knn_kring(None, pts, k=10, tiled=store).collect())
+    per_call = len(rounds) // 2
+    assert per_call >= 1 and len(rounds) == 2 * per_call
+    assert jobs <= per_call, (jobs, per_call)
+
+    centers = [(float(p[1]), float(p[2])) for p in meta["knn_points"][:2]]
+    polys = polygons_df(spark, dict(list(grid_polygons(centers, n_per=5).items())[:10]))
+    assert _budget(spark, lambda: points_in_polygons_bucketed(nodes, polys).count()) <= 3
+    for frame in (store, nodes):
+        frame.unpersist()
+
+
 def test_codec_job_budgets(spark, docs_xs, tmp_path):
     """On the sf-xs tables ``write_pbf`` and ``write_vex`` run 1 job each
     (the sink's bounded collect; the driver encodes; the aggregate,

@@ -211,18 +211,21 @@ def _plans_during(spark, fn):
     return out, [e.get().physicalPlanDescription() for e in found if e.isDefined()]
 
 
-def test_local_frames_broadcast_without_hints(spark, docs_xs):
+def test_local_frames_broadcast_without_hints(spark, docs_xs, monkeypatch):
     """The kNN strip join and the residual IVF-PQ and PQ probe joins
     carry no broadcast hint: their driver-built side is a local_frame
     whose stats let the planner broadcast it. None plans a sort-merge
-    join, a nested-loop join or a cartesian product. The corpus (200
-    rows of 16 floats, 72 B a row at its given dim: 14.4 kB) is over
-    the 10 KiB threshold, so the ANN queries take the Spark scan, not
-    the driver tail; their LUT and probe frames are under it."""
+    join, a nested-loop join or a cartesian product. At the 10 KiB
+    threshold the kNN query's candidate nodes (40 B a row) are over, so
+    its one driver round is spent and its rounds run as strip joins.
+    The corpus (200 rows of 16 floats, 72 B a row at its given dim:
+    14.4 kB) is over it too, so the ANN queries take the Spark scan,
+    not the driver tail; their LUT and probe frames are under it."""
     import re
 
     import numpy as np
 
+    import osm_lib_spark.operators.knn as knn
     from osm_lib_spark.operators.knn import knn_kring
     from osm_lib_spark.operators.similarity import ivf_pq_topk, pq_topk
 
@@ -238,6 +241,8 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs):
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     spark.conf.set(key, str(10 * 1024))
+    tried, real = [], knn._driver_round
+    monkeypatch.setattr(knn, "_driver_round", lambda *a: tried.append(real(*a)) or tried[-1])
     try:
         rows, plans = _plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
         tops = [
@@ -247,7 +252,7 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs):
         scans = [(_explain_str(top), top.count()) for top in tops]
     finally:
         spark.conf.set(key, saved)
-    assert len(rows) == 5
+    assert len(rows) == 5 and tried == [None]
     assert any("BroadcastHashJoin" in p for p in plans)
     assert not any(bad.search(p) for p in plans)
     for plan, n_top in scans:
@@ -342,7 +347,7 @@ CHECKPOINT_AND_HINT_SITES = {
     ("operators/extract.py", "relation_closure_table", "hint"): 1,
     ("operators/extract.py", "relation_closure_table", "localCheckpoint"): 1,
     ("operators/knn.py", "knn_kring", "localCheckpoint"): 1,
-    ("operators/pip.py", "points_in_polygons_bucketed", "hint"): 1,
+    ("operators/pip.py", "_rings_on_rows", "hint"): 1,
     ("operators/similarity.py", "_adc_topk", "broadcast"): 1,
     ("operators/similarity.py", "_train_index", "localCheckpoint"): 1,
     ("operators/similarity.py", "cosine_topk", "broadcast"): 1,
