@@ -23,8 +23,12 @@ Two strategies, both exact:
      sizes it: ~210k queries at k=10 and the 64 MiB session default)
      and the round's candidate nodes fit too (40 B a tiled-store row:
      1.68M), a strip round is one bounded collect of the store rows in
-     the OR of the frontier's ring windows, and numpy ranks each ring
-     (``_driver_round``). The result is a LocalRelation.
+     the frontier's rings, and numpy ranks each ring
+     (``_driver_round``). The filter is the OR of the rings' windows
+     while there are at most ``RING_WINDOWS_MAX``, else an InSet of
+     their tile keys while there are at most ``RING_KEYS_MAX``; past
+     both, that round runs in Spark with nothing spent
+     (``_ring_predicate``). The result is a LocalRelation.
   2. *Spark rounds, driver accumulation* — the first round whose
      candidates are over (that collect is spent), every later round of
      the call, and the coarse-cell rounds: each round broadcasts a
@@ -211,29 +215,54 @@ def _ring_window(f: dict) -> tuple[int, int, int]:
     return f["qx"] - r, max(f["qy"] - r, 0), min(f["qy"] + r, NTILES - 1)
 
 
-def _driver_round(
-    probe: DataFrame, frontier: list[dict], k: int
-) -> tuple[pa.Table, dict[int, tuple[int, float]]] | None:
-    """One strip round on the driver: the store rows in the OR of the
-    frontier's ring windows come back in one bounded collect (40 B a
-    row, ``session.collect_bounded``), and numpy ranks each query's ring
-    by (distance, node_id) with the oracle's haversine. → (the round's
-    top table, as ``_ranked`` gives it, and per-query (rows, k-th
-    distance) stats), or ``None`` when the candidates are over the
-    bound. The predicate is one SQL string: a Column built per window
-    costs a py4j call per literal."""
-    windows = []
+# a driver round's predicate: the OR of the ring windows while they
+# are few (on sf-m nodes 32 windows cost what an InSet does, 64 fell
+# out of whole-stage codegen and cost 12x), else an InSet of the rings'
+# tile keys while they are at most this many (parsing the list costs
+# ~0.06 ms a key); past both the round runs in Spark
+RING_WINDOWS_MAX = 32
+RING_KEYS_MAX = 16384
+
+
+def _ring_predicate(frontier: list[dict]) -> str | None:
+    """The SQL predicate that keeps exactly the store rows in the
+    frontier's rings, or ``None`` when neither form is cheap. One SQL
+    string: a Column built per window or key costs a py4j call per
+    literal."""
+    windows = set()
     for f in frontier:
         x0, y0, y1 = _ring_window(f)
         w = f"ytile BETWEEN {y0} AND {y1}"
         if 2 * f["radius"] + 1 < NTILES:
             w += f" AND pmod(xtile - ({x0}), {NTILES}) <= {2 * f['radius']}"
-        windows.append(f"({w})")
-    table = collect_bounded(
-        probe.where(F.expr(" OR ".join(sorted(set(windows))))).select(
-            "node_id", "lat", "lon", "xtile", "ytile"
+        windows.add(f"({w})")
+    if len(windows) <= RING_WINDOWS_MAX:
+        return " OR ".join(sorted(windows))
+    spans = [(_ring_window(f), min(2 * f["radius"] + 1, NTILES)) for f in frontier]
+    if sum(width * (y1 - y0 + 1) for (_, y0, y1), width in spans) > RING_KEYS_MAX:
+        return None
+    keys = np.unique(
+        np.concatenate(
+            [
+                (((x0 + np.arange(width)) % NTILES)[:, None] * NTILES + np.arange(y0, y1 + 1)).ravel()
+                for (x0, y0, y1), width in spans
+            ]
         )
     )
+    return f"xtile * {NTILES} + ytile IN ({','.join(map(str, keys))})"
+
+
+def _driver_round(
+    probe: DataFrame, frontier: list[dict], k: int
+) -> tuple[pa.Table, dict[int, tuple[int, float]]] | None:
+    """One strip round on the driver: the store rows in the frontier's
+    rings (``probe`` filtered by ``_ring_predicate``) come back in one
+    bounded collect (40 B a row, ``session.collect_bounded``), and numpy
+    ranks each query's ring by (distance, node_id) with the oracle's
+    haversine. → (the round's top table, as ``_ranked`` gives it, and
+    per-query (rows, k-th distance) stats), or ``None`` when the
+    candidates are over the bound."""
+    table = collect_bounded(probe.select("node_id", "lat", "lon", "xtile", "ytile"))
     if table is None:
         return None
     node_id, lat, lon, xtile, ytile = (c.to_numpy() for c in table.columns)
@@ -495,11 +524,13 @@ def knn_kring(
                     F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
                 )
             est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
-            found = None
+            found = predicate = None
             if driver_rounds and est_strip_rows <= STRIP_SWITCH_ROWS:
+                predicate = _ring_predicate(frontier)
+            if predicate is not None:
                 # over the bound this round's collect is spent and every
                 # later round runs in Spark: at most one spent collect a call
-                found = _driver_round(probe, frontier, k)
+                found = _driver_round(probe.where(F.expr(predicate)), frontier, k)
                 driver_rounds = found is not None
             if found is not None:
                 top, stats = found

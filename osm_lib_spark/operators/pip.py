@@ -7,7 +7,9 @@ live in a DataFrame (``polygons_df`` builds one from a dict), and each
 covers the z12 tiles of its bbox. When the polygons, the nodes in
 their tiles and the (polygon, node) pairs in their bboxes fit under
 ``spark.sql.autoBroadcastJoinThreshold``, those nodes come to the
-driver in one bounded collect and numpy decides; otherwise points
+driver in one bounded collect and numpy decides (on sf-m nodes this
+beat the Spark form at every polygon set and share of the bound
+timed, ROADMAP forks table); otherwise points
 equi-join the polygon tiles on the tile key and a pandas UDF decides
 membership per Arrow batch. Either way numpy does V
 vector operations per polygon group for a V-vertex polygon, never
@@ -41,6 +43,7 @@ from osm_lib_spark.sources.oracle import ray_cast_contains
 
 POLYGON_DDL = "poly_id long, rings array<array<array<double>>>"
 RESULT_DDL = "poly_id long, node_id long"
+ANSWER_DDL = "poly_id long, node_ids array<long>"
 _WRAP_MESSAGE = (
     "points_in_polygons_bucketed: polygon {} spans >180 deg of longitude"
     " — split it at the antimeridian"
@@ -194,32 +197,44 @@ def _covering_tiles(bounds: dict[str, np.ndarray], max_rows: int) -> pa.Table | 
 
 
 def _driver_pip(
-    pts: DataFrame, rings_of: dict[int, list[np.ndarray]], bounds: dict[str, np.ndarray], zoom: int
+    pts: DataFrame,
+    rings_of: dict[int, list[np.ndarray]],
+    bounds: dict[str, np.ndarray],
+    tiles: pa.Table | None,
+    zoom: int,
 ) -> DataFrame | None:
     """The point-in-polygon answer from one bounded collect of the
-    (node_id, lat, lon) rows in the polygons' covering tiles (32 B a
-    row, ``session.collect_bounded``), decided per polygon in numpy by
-    its bbox and ``_contains_by_polygon``: a ``local_frame`` of
-    (poly_id, node_id), or ``None`` when the candidates are over the
-    bound, or the (polygon, candidate) pairs in the polygons' bboxes
-    are: they bound the answer, which like every driver-built frame
-    must fit under the threshold (24 B a row; a 4.8M-row answer built
-    on the driver cost 19-22 CPU-s where the broadcast-rings form took
-    15-17). The tile predicate is one SQL ``IN`` list over the tile keys,
-    which Spark plans as an ``InSet``: its code does not grow with the
-    polygons (a Column ``isin`` costs a py4j call per key). Past one
-    grid row's worth of covering tiles (4096 at z12) the tiles'
-    envelope stands in for it."""
+    (node_id, lat, lon) rows in the polygons' covering ``tiles`` (32 B
+    a row, ``session.collect_bounded``), decided per polygon in numpy by
+    its bbox and ``_contains_by_polygon``, or ``None`` when the
+    candidates are over the bound, or the (polygon, candidate) pairs in
+    the polygons' bboxes are at 8 B a pair: they bound the answer.
+
+    The answer is a ``local_frame`` of one row per polygon holding its
+    node ids as an array, exploded into (poly_id, node_id). A
+    LocalRelation ships its rows to the tasks of any action that is not
+    a driver-side collect, one serialized row at a time: with a
+    1.29M-row flat answer the call and its count cost 8.6-9.4 CPU-s,
+    5.7 of them the count; with the exploded one, 1.9-2.2 (ROADMAP
+    forks table).
+
+    The tile predicate is one SQL ``IN`` list over the distinct tile
+    keys, which Spark plans as an ``InSet``: its code does not grow with
+    the polygons (a Column ``isin`` costs a py4j call per key). Past one
+    grid row's worth of keys (4096 at z12; parsing the list costs
+    ~0.06 ms a key), or when the tile rows are over their bound, the
+    tiles' envelope stands in for it."""
     spark = pts.sparkSession
     if not len(bounds["poly_id"]):
         return local_frame(spark, [], RESULT_DDL)
     ntiles = 1 << zoom
-    tiles = _covering_tiles(bounds, ntiles)
+    keys = None
     if tiles is not None:
         keys = np.unique(
             tiles.column("xtile").to_numpy().astype(np.int64) * ntiles
             + tiles.column("ytile").to_numpy()
         )
+    if keys is not None and len(keys) <= ntiles:
         in_tiles = f"xtile * {ntiles} + ytile IN ({','.join(map(str, keys))})"
     else:
         in_tiles = (
@@ -242,15 +257,18 @@ def _driver_pip(
         pids.append(np.full(len(ii), pid))
         idx.append(ii)
     pid, ii = np.concatenate(pids), np.concatenate(idx)
-    if len(pid) * row_bytes(spark, RESULT_DDL) > broadcast_threshold(spark):
+    if len(pid) * 8 > broadcast_threshold(spark):
         return None
     inside = _contains_by_polygon(
         pd.Series(pid), pd.Series(lat[ii]), pd.Series(lon[ii]), lambda i: rings_of[int(pid[i])]
     ).to_numpy()
-    return local_frame(
-        spark,
-        pa.table({"poly_id": pid[inside], "node_id": node_id[ii[inside]]}),
-        RESULT_DDL,
+    pid, nid = pid[inside], node_id[ii[inside]]
+    # pid runs polygon by polygon: each run is one row's array
+    heads = np.flatnonzero(np.diff(pid, prepend=pid[:1] - 1)) if len(pid) else np.empty(0, np.int64)
+    offsets = pa.array(np.append(heads, len(pid)), pa.int32())
+    answer = pa.table({"poly_id": pid[heads], "node_ids": pa.ListArray.from_arrays(offsets, pa.array(nid))})
+    return local_frame(spark, answer, ANSWER_DDL).select(
+        "poly_id", F.explode("node_ids").alias("node_id")
     )
 
 
@@ -330,10 +348,11 @@ def points_in_polygons_bucketed(
          ``spark.sql.autoBroadcastJoinThreshold`` (``_driver_polygons``:
          rows, and their ring vertices at 16 B each), and so do the
          nodes in their covering tiles (32 B a row) and the (polygon,
-         node) pairs in the polygons' bboxes (24 B, ``_driver_pip``):
+         node) pairs in the polygons' bboxes (8 B, ``_driver_pip``):
          one bounded collect brings those nodes to the driver, numpy
          keeps each polygon's bbox and the shared ray-cast kernel
-         decides the rest; the result is a LocalRelation. Over a
+         decides the rest; the result is a LocalRelation of one row per
+         polygon with its node ids as an array, exploded. Over a
          ``polygons_df`` frame the polygons come without a job, so the
          call runs one;
        * broadcast rings: the polygons fit, their candidate nodes or
@@ -392,10 +411,10 @@ def points_in_polygons_bucketed(
     if collected is not None:
         rows, rings_of = collected
         bounds = _polygon_bounds(rings_of, zoom)
-        out = _driver_pip(pts, rings_of, bounds, zoom)
+        tiles = _covering_tiles(bounds, broadcast_threshold(spark) // row_bytes(spark, TILE_DDL))
+        out = _driver_pip(pts, rings_of, bounds, tiles, zoom)
         if out is not None:
             return out
-        tiles = _covering_tiles(bounds, broadcast_threshold(spark) // row_bytes(spark, TILE_DDL))
         if tiles is None:
             polygons = local_frame(spark, rows, POLYGON_DDL)
         else:

@@ -154,14 +154,17 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     ``pip.points_in_polygons_bucketed`` (the (node_id, lat, lon) rows
     in the polygons' covering tiles, after the polygons themselves
     fit by rows and by ring-vertex bytes; numpy decides and the result
-    is one ``local_frame`` when the (polygon, node) pairs in the
-    polygons' bboxes fit too; otherwise the driver-built tile table is
+    is one ``local_frame`` of per-polygon node-id arrays, exploded, when
+    the (polygon, node) pairs in the polygons' bboxes fit too at 8 B
+    each; otherwise the driver-built tile table is
     broadcast with the rings in a broadcast variable, or, when the
     polygons or their tile rows are over, the rings ride the
     polygon-tile rows into a SHUFFLE_HASH join), ``knn.knn_kring``'s strip rounds
     while its results are collected (the tiled-store rows in the
-    round's ring windows; numpy ranks each ring; over it, that round and
-    every later one run as a Spark join and window),
+    round's rings, filtered by their OR-ed windows or an InSet of their
+    tile keys while either is small; numpy ranks each ring; over the
+    bound, that round and every later one run as a Spark join and
+    window),
     ``dedup.components_from_pairs`` (the label-propagation loop),
     ``dedup._collect_shingles`` (one row per shingle; the MinHash band
     kernel per Arrow batch, the band self-join and the Spark verify;

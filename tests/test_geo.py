@@ -92,6 +92,20 @@ def test_knn_kring_matches_brute_force(spark, nodes_xs, meta_xs, monkeypatch):
         assert _rows(knn_kring(nodes_xs, pts, k=10)) == brute
     assert tried == [None]
 
+    # a first round ranked on the driver, then one over the bound: the
+    # call's top tables mix numpy and Spark rounds
+    tried.clear()
+    sizes = []
+    monkeypatch.setattr(
+        knn,
+        "_driver_round",
+        lambda probe, frontier, k: sizes.append(len(frontier))
+        or tried.append(None if tried else real(probe, frontier, k))
+        or tried[-1],
+    )
+    assert _rows(knn_kring(nodes_xs, pts, k=10, initial_ring=1)) == brute
+    assert tried[0] is not None and tried[1:] == [None] and sizes[1] < sizes[0]
+
 
 def test_ring_bound_is_lower_bound_high_lat():
     """_min_dist_beyond_ring must LOWER-bound the distance to every
@@ -221,7 +235,9 @@ def test_pip_bucketed_vs_golden_and_broadcast(nodes_xs, fixture_xs, meta_xs, spa
     vertices = str(16 * sum(len(ring) for rings in polys.values() for ring in rings))
     for value in (vertices, "-1"):
         with threshold(spark, value):
-            plan = _plan(points_in_polygons_bucketed(nodes_xs, many))
+            got = points_in_polygons_bucketed(nodes_xs, many)
+            plan = _plan(got)
+            assert _rows(got) == expected, value
         assert "ShuffledHashJoin" in plan and "xtile" in plan and "ytile" in plan, value
 
 
@@ -310,6 +326,28 @@ def test_knn_kring_ring_wraps_x(spark, monkeypatch):
     assert {r[2] for r in brute} & {r[0] for r in rows if r[2] < 0}  # hits across the wrap
     for ring in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=5)):
         assert ring == brute
+
+
+def test_knn_kring_many_rings_take_tile_keys(spark, monkeypatch):
+    """A frontier of 40 rings in distinct tiles either side of the
+    antimeridian is past the OR-ed windows' cap: its driver round
+    filters on an InSet of the rings' tile keys, wrapping x. Rows equal
+    brute force on all three paths. Past the keys' cap too, no
+    predicate is offered and the round runs in Spark."""
+    lons = np.r_[np.arange(177.0, 180.0, 0.05), np.arange(-179.99, -177.0, 0.05)]
+    coords = [(la, lo) for la in (10.0, 10.03, 10.06) for lo in lons]
+    rows = [(i + 1, int(la * 1e7), int(lo * 1e7), []) for i, (la, lo) in enumerate(coords)]
+    nodes = spark.createDataFrame(rows, NODE_DDL)
+    pts = [(i, 10.02, 179.995 - 0.1 * i) for i in range(20)]
+    pts += [(20 + i, 10.04, -179.995 + 0.1 * i) for i in range(20)]
+    brute = _rows(knn_brute_force(nodes, pts, k=5))
+    predicates, real = [], knn._ring_predicate
+    monkeypatch.setattr(knn, "_ring_predicate", lambda f: predicates.append(real(f)) or predicates[-1])
+    for ring in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=5, initial_ring=1)):
+        assert ring == brute
+    assert " IN (" in predicates[0]
+    wide = [dict(query_id=i, qlat=0.0, qlon=0.0, qx=40 * i, qy=2048, radius=64) for i in range(40)]
+    assert real(wide) is None
 
 
 def test_knn_kring_releases_caches_on_error(spark, monkeypatch):
