@@ -228,8 +228,11 @@ def _nearest_np(mat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     """Row index into ``cmat`` of each row's max-cosine centroid, the
     FIRST max on ties: ``dot_fold_np``/``norm_fold_np`` reproduce the
     Column fold bit-for-bit (same left-to-right float64 op order). The
-    one assignment kernel of training, encoding and ``_assign_local``."""
+    one assignment kernel of training, encoding and ``_assign_local``.
+    A zero-norm row has no cosine, so it raises, as the query tails do."""
     norm_e = norm_fold_np(mat)
+    if not norm_e.all():
+        raise ValueError("Division by zero: a zero-norm embedding has no nearest centroid")
     cnorms = norm_fold_np(cmat)
     scores = np.empty((len(cnorms), mat.shape[0]), dtype=np.float64)
     for j in range(len(cnorms)):

@@ -84,11 +84,12 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     Every frame the engine builds from driver-side rows goes through
     here. ``spark.createDataFrame(list, ddl)`` plans a ``LogicalRDD``
     with no size stats: each action that scans it runs
-    ``defaultParallelism`` Python-worker tasks (~0.08 CPU-s each on a
-    4 vCPU host, whatever the row count), and joins against it need a
-    broadcast hint. Built from an Arrow table, the frame is a
-    ``LocalRelation``: no Python task, and stats from its row count
-    that let the planner broadcast it under
+    ``defaultParallelism`` Python-worker tasks (~0.02 CPU-s each on a
+    4 vCPU host, whatever the row count, once the worker has imported
+    the engine: ``osm_lib_spark._keep_unchanged_zip_caches``), and joins
+    against it need a broadcast hint. Built from an Arrow table, the
+    frame is a ``LocalRelation``: no Python task, and stats from its row
+    count that let the planner broadcast it under
     ``spark.sql.autoBroadcastJoinThreshold`` on its own.
 
     ``rows`` are tuples in ``ddl`` column order (structs as tuples or

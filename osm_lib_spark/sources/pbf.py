@@ -44,7 +44,7 @@ Spark-first dataflow:
   by id range into ~``block_size``-row buckets. Under the broadcast
   threshold one bounded collect brings them to the driver, which
   encodes the buckets in order; over it tasks are sized by block count
-  (a Python task costs a fixed ~0.08 CPU-s), and ONE ``mapInArrow`` per
+  (a Python task costs a fixed ~0.02 CPU-s), and ONE ``mapInArrow`` per
   task encodes its buckets into part files named by (type, bucket);
   PBF blocks share no state (delta coding and string tables reset per
   block). Blocks encode in block-wide numpy passes
@@ -1090,12 +1090,13 @@ def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b""
     only job and the driver sorts, buckets and encodes it
     (``_driver_buckets``). Otherwise one aggregate gives each type's row
     count and id range, each type gets clamp(ceil(rows / block_size), 1,
-    defaultParallelism) tasks, as a Python task has a fixed cost, and ONE
-    ``mapInArrow`` per task writes each bucket as a part file named by
-    (type_rank, bucket), so the file does not depend on which task a
-    bucket hashed to: 4 jobs with AQE, after the spent collect when the
-    rows or bytes are over. Both paths cut the same buckets and hand them
-    to the same ``encode``, so they write the same bytes.
+    defaultParallelism) tasks, as a Python task has a fixed cost (~0.02
+    CPU-s on a 4 vCPU host), and ONE ``mapInArrow`` per task writes each
+    bucket as a part file named by (type_rank, bucket), so the file does
+    not depend on which task a bucket hashed to: 4 jobs with AQE, after
+    the spent collect when the rows or bytes are over. Both paths cut
+    the same buckets and hand them to the same ``encode``, so they write
+    the same bytes.
     """
     from pyspark.sql import functions as F  # noqa: N812
     from pyspark.sql.types import ArrayType

@@ -3,6 +3,7 @@
 they replace for small inputs (threshold -1)."""
 
 import tempfile
+import warnings
 
 import numpy as np
 import pytest
@@ -239,9 +240,9 @@ def test_ann_candidate_bound_falls_back(spark):
 def test_ragged_embeddings_rejected_on_both_paths(spark):
     """An embedding of another length fails IVF/PQ training with the
     same message on both paths (from a task on the partition path), and
-    a zero-norm embedding in a probed list fails the exact-cosine IVF
-    query on both (Spark's ANSI division by zero on the partition
-    path), not ranked as every query's nearest neighbor."""
+    a zero-norm embedding fails IVF training on both, in the centroid
+    assignment (no NumPy warning on the driver path), not assigned from
+    NaN scores nor ranked as every query's nearest neighbor."""
     from osm_lib_spark.operators.similarity import ivf_pq_topk, ivf_topk
 
     rng = np.random.default_rng(11)
@@ -259,9 +260,14 @@ def test_ragged_embeddings_rejected_on_both_paths(spark):
             lambda: ivf_pq_topk(ragged, k=3, n_queries=3, nlist=4, m=4, kc=4, residual=True),
             "embeddings of one length",
         ),
-        (lambda: ivf_topk(zero, k=3, n_queries=3, nlist=2, nprobe=2).collect(), "Division by zero"),
+        (
+            lambda: ivf_topk(zero, k=3, n_queries=3, nlist=2, nprobe=2).collect(),
+            "Division by zero: a zero-norm embedding has no nearest centroid",
+        ),
     ]
     for value in (spark.conf.get("spark.sql.autoBroadcastJoinThreshold"), "-1"):
         for call, message in cases:
-            with threshold(spark, value), pytest.raises(Exception, match=message):
-                call()
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", RuntimeWarning)
+                with threshold(spark, value), pytest.raises(Exception, match=message):
+                    call()
