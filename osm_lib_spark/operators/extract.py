@@ -11,11 +11,13 @@ When the context's member indexes and closure fit under
 so do the batch's way refs (each counted at its rows in every frame the
 driver path builds) and its result rows, the batch resolves on the
 driver, as osm-lib answers from in-memory indexes:
-two collects (the refs of the ways in the envelope, bounded, then which
-of them exist as nodes), the rest in numpy, and one LocalRelation of
-per-(box, type) id lists out, exploded
-(``_driver_batch``; 6 Spark jobs with a per-box count against the
-chain's 10). Otherwise it runs as ONE DataFrame DAG:
+the refs of the ways in the envelope and which of them exist as nodes
+are read from the ``session.resident`` copies of cached ``way_tiles``,
+``ways`` and ``nodes`` (no job), else come in two collects (the refs
+bounded), the rest in numpy, and one LocalRelation of per-(box, type)
+id lists out, exploded (``_driver_batch``; with a per-box count 2 Spark
+jobs over loaded caches, 6-7 over uncached inputs, against the chain's
+10). Otherwise it runs as ONE DataFrame DAG:
 
     bboxes → z12 tile ranges (y-inverted, TileOSMSource.java:43-45)
            → envelope filter + bbox × way_tiles range join  (S5, J2)
@@ -52,7 +54,7 @@ from pyspark.sql import functions as F
 from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.graph import lookup, upward_closure
 from osm_lib_spark.operators.indexes import build_way_tiles
-from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, resident, row_bytes
 
 MAX_CLOSURE_ITERATIONS = 50
 CLOSURE_DDL = "relation_id long, ancestor_id long"
@@ -233,55 +235,52 @@ def ways_in_tile_range(way_tiles: DataFrame, tile_range: tuple[int, int, int, in
 def _driver_batch(
     nodes: DataFrame,
     ways: DataFrame,
-    tiled: DataFrame,
+    way_tiles: DataFrame,
+    envelope: tuple[int, int, int, int],
     ranges: list[tuple[int, int, int, int]],
     arrays: tuple[Index, Index, Index],
 ) -> DataFrame | None:
     """``bbox_extract_batch`` resolved on the driver, the way osm-lib
     answers a tile extract from in-memory indexes (TileOSMSource.java:49-143):
-    two collects, the first bounded, then numpy over ``ExtractContext.arrays``.
-    Returns the ``EXTRACT_DDL`` rows exploded from one ``local_frame``,
-    or None when the first collect or the result rows are over
-    ``spark.sql.autoBroadcastJoinThreshold``: the way rows and distinct
-    refs are counted box by box as they are found, and the relation rows
-    are added once the closure is joined.
+    numpy over the refs of the ways in the batch's ``envelope`` and
+    ``ExtractContext.arrays``. Returns the ``EXTRACT_DDL`` rows exploded
+    from one ``local_frame``, or None when the refs or the result rows
+    are over ``spark.sql.autoBroadcastJoinThreshold``: the refs are
+    counted as one (way_id, xtile, ytile, pos, ref_id) row each, the
+    way rows and distinct refs box by box as they are found, and the
+    relation rows once the closure is joined.
 
-    The first collect is the refs of the ways in the envelope's
-    way_tiles rows (``tiled``), one (way_id, xtile, ytile, pos, ref_id)
-    row each, so its bound counts refs exactly (the planner broadcasts
-    ``tiled`` into ``ways`` while it fits). Over that bound the collect's
-    two jobs are spent and the chain runs. A way row starts at pos 0,
-    or is one row with a null pos when it has no refs. Way ids
-    are keys: a tiled way with no ``ways`` row drops out here, where the
-    Spark chain emits it. The second is which of those refs exist in
-    ``nodes`` (orphan refs drop out, TileOSMSource.java:80-82).
+    When ``way_tiles`` and ``ways`` are loaded caches held by
+    ``session.resident`` (``way_tiles`` as cached, before the envelope
+    filter), the envelope filter and the way⋈refs join run in numpy and
+    no job runs; else the refs come in one bounded collect (the planner
+    broadcasts the envelope's way_tiles rows into ``ways`` while they
+    fit), whose two jobs are spent over the bound before the chain
+    runs. A way row starts at pos 0, or is one row with a null pos when
+    it has no refs. Way ids are keys: a tiled way with no ``ways`` row
+    drops out here, where the Spark chain emits it. Which refs exist as
+    nodes (orphan refs drop out, TileOSMSource.java:80-82) is read from
+    the resident ``nodes``, else from one semi-join collect.
     """
     spark = nodes.sparkSession
-    refs = (
-        ways.select(F.col("id").alias("way_id"), "node_ids")
-        .join(tiled.select("way_id", "xtile", "ytile"), "way_id")
-        .select("way_id", "xtile", "ytile", F.posexplode_outer("node_ids").alias("pos", "ref_id"))
-    )
-    # a ref is a row of each frame the driver path builds: this collect,
-    # the node probe, its answer and the result (108 B); counted at this
-    # collect's 36 B alone, the path tied the chain's CPU from 60% of that
-    # bound and took 1.3-1.5x its wall (sf-m, one box, local[4])
-    per_ref = sum(row_bytes(spark, ddl) for ddl in (refs.schema, "ref_id long", "ref_id long", EXTRACT_DDL))
-    table = collect_bounded(refs, per_ref)
-    if table is None:
+    # a ref is a row of each frame the driver path builds: the refs, the
+    # node probe, its answer and the result (108 B); counted at the refs'
+    # 36 B alone, the path tied the chain's CPU from 60% of that bound
+    # and took 1.3-1.5x its wall (sf-m, one box, local[4])
+    per_ref = sum(row_bytes(spark, ddl) for ddl in (REFS_DDL, "ref_id long", "ref_id long", EXTRACT_DDL))
+    tiles_copy, ways_copy = resident(way_tiles), resident(ways)
+    if tiles_copy is not None and ways_copy is not None:
+        found = _resident_refs(tiles_copy, ways_copy, envelope, broadcast_threshold(spark) // per_ref)
+    else:
+        found = _collected_refs(ways, ways_in_tile_range(way_tiles, envelope), per_ref)
+    if found is None:
         return None
-    way_id, xtile, ytile = (table.column(c).to_numpy() for c in ("way_id", "xtile", "ytile"))
-    starts = pc.fill_null(table.column("pos"), 0).to_numpy() == 0
-    has_ref = table.column("ref_id").is_valid().to_numpy()
-    ref_way = way_id[has_ref]
-    order = np.argsort(ref_way, kind="stable")
-    ref_way, ref_id = ref_way[order], table.column("ref_id").drop_null().to_numpy()[order]
+    way_id, xtile, ytile, ref_way, ref_id = found
 
     # S5 + J2, then J1: each box's way rows (its way_tiles rows in the box)
     # and the distinct refs of those ways, the result rows counted box by
     # box so that no more than the bound is ever materialized
-    rows = np.flatnonzero(starts)
-    rows = rows[np.argsort(xtile[rows], kind="stable")]
+    rows = np.argsort(xtile, kind="stable")
     xs = xtile[rows]
     bound = broadcast_threshold(spark) // row_bytes(spark, EXTRACT_DDL)
     hits, box_refs, n_rows = [], [], 0
@@ -301,9 +300,13 @@ def _driver_batch(
     # J1's node semi-join: orphan refs drop out. The answer is at most the
     # distinct refs, which the collect above already bounded.
     if len(ref):
-        probe = local_frame(spark, pa.table([np.unique(ref)], names=["ref_id"]), "ref_id long")
-        found = nodes.select(F.col("id").alias("ref_id")).join(probe, "ref_id", "left_semi").toArrow()
-        keep = np.isin(ref, found.column(0).drop_null().to_numpy())
+        nodes_copy = resident(nodes)
+        if nodes_copy is not None:
+            node_ids = nodes_copy.column("id")
+        else:
+            probe = local_frame(spark, pa.table([np.unique(ref)], names=["ref_id"]), "ref_id long")
+            node_ids = nodes.select(F.col("id").alias("ref_id")).join(probe, "ref_id", "left_semi").toArrow().column(0)
+        keep = np.isin(ref, node_ids.drop_null().to_numpy())
         b_ref, ref = b_ref[keep], ref[keep]
 
     # J3/J4 then J5: relations by node and by way, then their ancestors
@@ -333,6 +336,67 @@ def _driver_batch(
     )
     grouped = local_frame(spark, groups, "bbox_id int, entity_type string, ids array<long>")
     return grouped.select("bbox_id", "entity_type", F.explode("ids").alias("id"))
+
+
+REFS_DDL = "way_id long, xtile int, ytile int, pos int, ref_id long"
+# (way_id, xtile, ytile) of the envelope's tiled ways with a ``ways`` row,
+# then their (way_id, ref_id) refs sorted by way_id
+Refs = tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]
+
+
+def _collected_refs(ways: DataFrame, tiled: DataFrame, per_ref: int) -> Refs | None:
+    """``_driver_batch``'s refs from one bounded collect of the
+    ``REFS_DDL`` rows of the ways in ``tiled`` (``per_ref`` bytes a row),
+    or None over the bound."""
+    refs = (
+        ways.select(F.col("id").alias("way_id"), "node_ids")
+        .join(tiled.select("way_id", "xtile", "ytile"), "way_id")
+        .select("way_id", "xtile", "ytile", F.posexplode_outer("node_ids").alias("pos", "ref_id"))
+    )
+    table = collect_bounded(refs, per_ref)
+    if table is None:
+        return None
+    way_id, xtile, ytile = (table.column(c).to_numpy() for c in ("way_id", "xtile", "ytile"))
+    starts = pc.fill_null(table.column("pos"), 0).to_numpy() == 0
+    has_ref = table.column("ref_id").is_valid().to_numpy()
+    ref_way = way_id[has_ref]
+    order = np.argsort(ref_way, kind="stable")
+    ref_id = table.column("ref_id").drop_null().to_numpy()[order]
+    return way_id[starts], xtile[starts], ytile[starts], ref_way[order], ref_id
+
+
+def _resident_refs(
+    way_tiles: pa.Table, ways: pa.Table, envelope: tuple[int, int, int, int], max_rows: int
+) -> Refs | None:
+    """``_collected_refs`` from the resident ``way_tiles`` and ``ways``
+    copies: the envelope filter (a null tile or id drops out, as in
+    Spark) and the way⋈refs join in numpy; None when the refs are over
+    ``max_rows`` ``REFS_DDL`` rows, where the collect would be."""
+    x0, y0, x1, y1 = envelope
+    x, y = way_tiles.column("xtile"), way_tiles.column("ytile")
+    inside = pc.and_(
+        pc.and_(pc.greater_equal(x, x0), pc.less_equal(x, x1)),
+        pc.and_(pc.greater_equal(y, y0), pc.less_equal(y, y1)),
+    )
+    tiled = way_tiles.select(["way_id", "xtile", "ytile"]).filter(inside).drop_null()
+    keys = ways.column("id")
+    valid = np.flatnonzero(keys.is_valid().to_numpy(zero_copy_only=False))
+    keys = pc.fill_null(keys, 0).to_numpy()[valid]
+    by_key = np.argsort(keys, kind="stable")
+    tiled_way = tiled.column("way_id").to_numpy()
+    at = np.minimum(np.searchsorted(keys, tiled_way, sorter=by_key), max(len(keys) - 1, 0))
+    hit = np.flatnonzero(keys[by_key[at]] == tiled_way) if len(keys) else np.empty(0, np.int64)
+    lists = ways.column("node_ids").take(pa.array(valid[by_key[at[hit]]])).combine_chunks()
+    n_refs = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+    if np.maximum(n_refs, 1).sum() > max_rows:
+        return None
+    flat, parent = pc.list_flatten(lists), pc.list_parent_indices(lists).to_numpy()
+    present = flat.is_valid().to_numpy(zero_copy_only=False)
+    way_id = tiled_way[hit]
+    ref_way, ref_id = way_id[parent[present]], flat.drop_null().to_numpy()
+    order = np.argsort(ref_way, kind="stable")
+    xtile, ytile = (tiled.column(c).to_numpy()[hit] for c in ("xtile", "ytile"))
+    return way_id, xtile, ytile, ref_way[order], ref_id[order]
 
 
 def _distinct(bbox_id: np.ndarray, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -375,7 +439,7 @@ def bbox_extract_batch(
     min_xs, min_ys, max_xs, max_ys = zip(*ranges)
     envelope = (min(min_xs), min(min_ys), max(max_xs), max(max_ys))
     if ctx.arrays is not None:
-        found = _driver_batch(nodes, ways, ways_in_tile_range(way_tiles, envelope), ranges, ctx.arrays)
+        found = _driver_batch(nodes, ways, way_tiles, envelope, ranges, ctx.arrays)
         if found is not None:
             return found
     # A local_frame is a LocalRelation of exactly known size

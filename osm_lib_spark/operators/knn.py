@@ -22,9 +22,11 @@ Two strategies, both exact:
      ``spark.sql.autoBroadcastJoinThreshold`` (32 B a row as Spark
      sizes it: ~210k queries at k=10 and the 64 MiB session default)
      and the round's candidate nodes fit too (40 B a tiled-store row:
-     1.68M), a strip round is one bounded collect of the store rows in
-     the frontier's rings, and numpy ranks each ring
-     (``_driver_round``). The filter is the OR of the rings' windows
+     1.68M), numpy ranks each ring of a strip round
+     (``_driver_round``). A cached ``tiled`` store held by
+     ``session.resident`` is ranked as it is, and a call runs no job;
+     else a round is one bounded collect of the store rows in the
+     frontier's rings. That filter is the OR of the rings' windows
      while there are at most ``RING_WINDOWS_MAX``, else an InSet of
      their tile keys while there are at most ``RING_KEYS_MAX``; past
      both, that round runs in Spark with nothing spent
@@ -69,7 +71,7 @@ from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m, np_haversine_m
 from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y
-from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, resident, row_bytes
 
 import numpy as np
 import pyarrow as pa
@@ -215,6 +217,8 @@ def _ring_window(f: dict) -> tuple[int, int, int]:
     return f["qx"] - r, max(f["qy"] - r, 0), min(f["qy"] + r, NTILES - 1)
 
 
+STORE_COLUMNS = ["node_id", "lat", "lon", "xtile", "ytile"]
+
 # a driver round's predicate: the OR of the ring windows while they
 # are few (on sf-m nodes 32 windows cost what an InSet does, 64 fell
 # out of whole-stage codegen and cost 12x), else an InSet of the rings'
@@ -253,28 +257,33 @@ def _ring_predicate(frontier: list[dict]) -> str | None:
 
 
 def _driver_round(
-    probe: DataFrame, frontier: list[dict], k: int
+    candidates: DataFrame | pa.Table, frontier: list[dict], k: int
 ) -> tuple[pa.Table, dict[int, tuple[int, float]]] | None:
-    """One strip round on the driver: the store rows in the frontier's
-    rings (``probe`` filtered by ``_ring_predicate``) come back in one
-    bounded collect (40 B a row, ``session.collect_bounded``), and numpy
-    ranks each query's ring by (distance, node_id) with the oracle's
-    haversine. → (the round's top table, as ``_ranked`` gives it, and
-    per-query (rows, k-th distance) stats), or ``None`` when the
-    candidates are over the bound."""
-    table = collect_bounded(probe.select("node_id", "lat", "lon", "xtile", "ytile"))
-    if table is None:
-        return None
-    node_id, lat, lon, xtile, ytile = (c.to_numpy() for c in table.columns)
-    # a ring's rows are one slice of the candidates sorted by ytile
-    by_y = np.argsort(ytile, kind="stable")
-    ys = ytile[by_y]
+    """One strip round on the driver: numpy ranks each query's ring by
+    (distance, node_id) with the oracle's haversine. ``candidates`` is
+    the resident tiled store (``session.resident``: no job), or the
+    store rows in the frontier's rings (the store filtered by
+    ``_ring_predicate``), which come back in one bounded collect (40 B
+    a row, ``session.collect_bounded``). → (the round's top table, as
+    ``_ranked`` gives it, and per-query (rows, k-th distance) stats), or
+    ``None`` when the collected candidates are over the bound."""
+    if isinstance(candidates, DataFrame):
+        candidates = collect_bounded(candidates.select(*STORE_COLUMNS))
+        if candidates is None:
+            return None
+    # a null tile or coordinate is in no ring, as in Spark
+    node_id, lat, lon, xtile, ytile = (c.to_numpy() for c in candidates.select(STORE_COLUMNS).drop_null().columns)
+    # a ring is one slice per tile column of the rows sorted by tile key
+    key = xtile.astype(np.int64) * NTILES + ytile
+    order = np.argsort(key, kind="stable")
+    key = key[order]
     qids, ranks, picks, dists, stats = [], [], [], [], {}
     for f in frontier:
         x0, y0, y1 = _ring_window(f)
-        ii = by_y[np.searchsorted(ys, y0, "left") : np.searchsorted(ys, y1, "right")]
-        if 2 * f["radius"] + 1 < NTILES:
-            ii = ii[(xtile[ii].astype(np.int64) - x0) % NTILES <= 2 * f["radius"]]
+        columns = (x0 + np.arange(min(2 * f["radius"] + 1, NTILES))) % NTILES * NTILES
+        lo, hi = np.searchsorted(key, columns + y0, "left"), np.searchsorted(key, columns + y1, "right")
+        n = hi - lo
+        ii = order[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
         dist = np_haversine_m(f["qlat"], f["qlon"], lat[ii], lon[ii])
         top = np.lexsort((node_id[ii], dist))[:k]
         if len(top):
@@ -453,9 +462,10 @@ def knn_kring(
     Rounds and results follow the engine's one size rule (the three
     modes of the module docstring): while the k·Q result rows
     (``RANKED_DDL``, sized by ``session.row_bytes``) fit under
-    ``spark.sql.autoBroadcastJoinThreshold``, each strip round collects
-    its candidate nodes and ranks them in numpy, one job a round, until
-    a round's candidates are over; from then on each round ranks in
+    ``spark.sql.autoBroadcastJoinThreshold``, each strip round ranks
+    its candidate nodes in numpy, read from the resident copy of a
+    cached ``tiled`` store with no job, else collected, one job a
+    round, until a round's candidates are over; from then on each round ranks in
     Spark and collects its top-k as one Arrow table. The result is a
     LocalRelation either way. Past the results' bound (or at a
     threshold ≤ 0) every result slice stays persisted ON THE EXECUTORS
@@ -500,6 +510,8 @@ def knn_kring(
         for qid, qlat, qlon in query_points
     ]
     driver_rounds = collect_mode
+    # a cached store held on the driver: every driver round reads it, no job
+    store = resident(tiled) if collect_mode and tiled is not None else None
     parts: list[DataFrame] = []
     tables: list[pa.Table] = []  # satisfied top-k rows (small-Q mode)
     round_frames: list[DataFrame] = []  # persisted per-round top-k (large-Q mode)
@@ -524,13 +536,15 @@ def knn_kring(
                     F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
                 )
             est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
-            found = predicate = None
+            found = candidates = None
             if driver_rounds and est_strip_rows <= STRIP_SWITCH_ROWS:
-                predicate = _ring_predicate(frontier)
-            if predicate is not None:
+                candidates = store
+                if store is None and (predicate := _ring_predicate(frontier)) is not None:
+                    candidates = probe.where(F.expr(predicate))
+            if candidates is not None:
                 # over the bound this round's collect is spent and every
                 # later round runs in Spark: at most one spent collect a call
-                found = _driver_round(probe.where(F.expr(predicate)), frontier, k)
+                found = _driver_round(candidates, frontier, k)
                 driver_rounds = found is not None
             if found is not None:
                 top, stats = found

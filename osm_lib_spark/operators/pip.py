@@ -6,8 +6,9 @@ Engine addition (no reference analog; BASELINE.json north_star mandates
 live in a DataFrame (``polygons_df`` builds one from a dict), and each
 covers the z12 tiles of its bbox. When the polygons, the nodes in
 their tiles and the (polygon, node) pairs in their bboxes fit under
-``spark.sql.autoBroadcastJoinThreshold``, those nodes come to the
-driver in one bounded collect and numpy decides (on sf-m nodes this
+``spark.sql.autoBroadcastJoinThreshold``, numpy decides on the driver
+over the ``session.resident`` copy of cached ``nodes`` (no job), else
+over those nodes brought in one bounded collect (on sf-m nodes this
 beat the Spark form at every polygon set and share of the bound
 timed, ROADMAP forks table); otherwise points
 equi-join the polygon tiles on the tile key and a pandas UDF decides
@@ -35,9 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_lib_spark.functions.geo import from_fixed
+from osm_lib_spark.functions.geo import FIXED_PRECISION_FACTOR, from_fixed
 from osm_lib_spark.functions.tiles import ZOOM, np_tile_x, np_tile_y, tile_x_col, tile_y_col
-from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
+from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, resident, row_bytes
 from osm_lib_spark.sources.oracle import ray_cast_contains
 
 
@@ -202,13 +203,18 @@ def _driver_pip(
     bounds: dict[str, np.ndarray],
     tiles: pa.Table | None,
     zoom: int,
+    nodes: DataFrame,
 ) -> DataFrame | None:
-    """The point-in-polygon answer from one bounded collect of the
-    (node_id, lat, lon) rows in the polygons' covering ``tiles`` (32 B
-    a row, ``session.collect_bounded``), decided per polygon in numpy by
-    its bbox and ``_contains_by_polygon``, or ``None`` when the
-    candidates are over the bound, or the (polygon, candidate) pairs in
-    the polygons' bboxes are at 8 B a pair: they bound the answer.
+    """The point-in-polygon answer decided per polygon in numpy by its
+    bbox and ``_contains_by_polygon``, or ``None`` when the candidates
+    are over the bound, or the (polygon, candidate) pairs in the
+    polygons' bboxes are at 8 B a pair: they bound the answer. The
+    candidates are the ``session.resident`` copy of ``nodes`` (no job),
+    lat/lon as ``fixed / 1e7`` in float64, the division
+    ``from_fixed`` makes, and a null coordinate drops out as in Spark;
+    else one bounded collect of the (node_id, lat, lon) rows of ``pts``
+    in the polygons' covering ``tiles`` (32 B a row,
+    ``session.collect_bounded``).
 
     The answer is a ``local_frame`` of one row per polygon holding its
     node ids as an array, exploded into (poly_id, node_id). A
@@ -227,6 +233,12 @@ def _driver_pip(
     spark = pts.sparkSession
     if not len(bounds["poly_id"]):
         return local_frame(spark, [], RESULT_DDL)
+    copy = resident(nodes)
+    if copy is not None:
+        coords = copy.select(["id", "fixed_lat", "fixed_lon"]).drop_null()
+        node_id = coords.column("id").to_numpy()
+        lat, lon = (coords.column(c).to_numpy().astype(np.float64) / FIXED_PRECISION_FACTOR for c in ("fixed_lat", "fixed_lon"))
+        return _decide(spark, rings_of, bounds, node_id, lat, lon)
     ntiles = 1 << zoom
     keys = None
     if tiles is not None:
@@ -244,7 +256,12 @@ def _driver_pip(
     table = collect_bounded(pts.where(F.expr(in_tiles)).select("node_id", "lat", "lon"))
     if table is None:
         return None
-    node_id, lat, lon = (c.to_numpy() for c in table.columns)
+    return _decide(spark, rings_of, bounds, *(c.to_numpy() for c in table.columns))
+
+
+def _decide(spark, rings_of, bounds, node_id, lat, lon) -> DataFrame | None:
+    """``_driver_pip``'s answer over its candidate (node_id, lat, lon)
+    arrays, or None when the pairs are over the bound."""
     # each polygon's latitude band is one slice of the candidates sorted
     # by latitude; its longitude range is then tested on that slice only
     by_lat = np.argsort(lat, kind="stable")
@@ -349,12 +366,13 @@ def points_in_polygons_bucketed(
          rows, and their ring vertices at 16 B each), and so do the
          nodes in their covering tiles (32 B a row) and the (polygon,
          node) pairs in the polygons' bboxes (8 B, ``_driver_pip``):
-         one bounded collect brings those nodes to the driver, numpy
-         keeps each polygon's bbox and the shared ray-cast kernel
-         decides the rest; the result is a LocalRelation of one row per
-         polygon with its node ids as an array, exploded. Over a
+         the resident copy of cached ``nodes``, else one bounded
+         collect of those nodes, on the driver, numpy keeps each
+         polygon's bbox and the shared ray-cast kernel decides the
+         rest; the result is a LocalRelation of one row per polygon
+         with its node ids as an array, exploded. Over a
          ``polygons_df`` frame the polygons come without a job, so the
-         call runs one;
+         call runs none over loaded cached nodes and one otherwise;
        * broadcast rings: the polygons fit, their candidate nodes or
          pairs do not (that collect is spent) and the polygon-tile
          rows built on the driver (``TILE_DDL``) do: points compute
@@ -412,7 +430,7 @@ def points_in_polygons_bucketed(
         rows, rings_of = collected
         bounds = _polygon_bounds(rings_of, zoom)
         tiles = _covering_tiles(bounds, broadcast_threshold(spark) // row_bytes(spark, TILE_DDL))
-        out = _driver_pip(pts, rings_of, bounds, tiles, zoom)
+        out = _driver_pip(pts, rings_of, bounds, tiles, zoom, nodes)
         if out is not None:
             return out
         if tiles is None:

@@ -67,7 +67,7 @@ from osm_lib_spark.functions.hashing import (
     l2_fold_np,
     norm_fold_np,
 )
-from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, row_bytes
+from osm_lib_spark.session import broadcast_threshold, cache_rows, collect_bounded, local_frame, row_bytes
 
 ANN_SEED = 7
 # Defaults are TEST-scale. For random-hyperplane LSH the collision
@@ -674,7 +674,8 @@ def _train_index(
     (n, dim) float64 matrix, each row's list_id and its (n, m) PQ codes
     (None without PQ), from which the query tails answer when their
     candidates fit as well (``_driver_tail``). A larger
-    corpus gives ``local`` None: the stride rows are one filtered
+    corpus gives ``local`` None (a loaded cache whose ``cache_rows``
+    say so skips the bounded collect): the stride rows are one filtered
     collect, each Lloyd pass is one mapInArrow job returning per-task
     integer sums over the lazily checkpointed corpus, and ``coded`` is
     the map-only mapInArrow of the ``CODES_DDL`` rows (None without
@@ -685,7 +686,11 @@ def _train_index(
     if lloyd or m:
         # the passes reuse the rows the bounded collect's job materialized
         emb = emb.localCheckpoint(eager=False)
-    table = collect_bounded(emb, 8 + 4 * (dim or TRAIN_DIM_BOUND))
+    row_size = 8 + 4 * (dim or TRAIN_DIM_BOUND)
+    # a loaded cache known to be over skips the collect that would be spent
+    rows = cache_rows(embeddings)
+    over = rows is not None and rows * row_size > broadcast_threshold(embeddings.sparkSession)
+    table = None if over else collect_bounded(emb, row_size)
     if table is not None:
         vec_id, mat = _as_matrix(table, dim)
 

@@ -42,8 +42,9 @@ Spark-first dataflow:
   built as Arrow arrays directly (never pandas object dicts).
 * WRITE (``write_blocks``, shared with the VEX sink): rows are bucketed
   by id range into ~``block_size``-row buckets. Under the broadcast
-  threshold one bounded collect brings them to the driver, which
-  encodes the buckets in order; over it tasks are sized by block count
+  threshold the driver encodes the buckets in order, from the
+  ``session.resident`` copies of cached tables (no job) or from one
+  bounded collect; over it tasks are sized by block count
   (a Python task costs a fixed ~0.02 CPU-s), and ONE ``mapInArrow`` per
   task encodes its buckets into part files named by (type, bucket);
   PBF blocks share no state (delta coding and string tables reset per
@@ -1055,21 +1056,19 @@ def _bucket_step(n: int, lo: int, hi: int, block_size: int) -> int:
     return -(-(hi - lo + 1) // -(-n // block_size))
 
 
-def _driver_buckets(table: pa.Table, block_size: int) -> Iterator[tuple[int, pa.Table]]:
-    """(type_rank, rows) of each non-empty bucket of ``table`` in file
-    order, id-sorted: the buckets of ``write_blocks``' cluster path, cut
-    on the driver from ``table`` sorted by (type_rank, id)."""
-    table = table.sort_by([("type_rank", "ascending"), ("id", "ascending")])
-    ranks = table.column("type_rank").to_numpy()
-    ids = table.column("id").to_numpy()
-    edges = np.searchsorted(ranks, np.arange(len(TYPE_NAMES) + 1))
-    for rank, (a, b) in enumerate(zip(edges[:-1], edges[1:])):
-        if a == b:
+def _driver_buckets(typed: list[tuple[int, pa.Table]], block_size: int) -> Iterator[tuple[int, pa.Table]]:
+    """(type_rank, rows) of each non-empty bucket in file order,
+    id-sorted: the buckets of ``write_blocks``' cluster path, cut on the
+    driver from each type's (type_rank, rows) table of ``typed``."""
+    for rank, table in typed:
+        if not table.num_rows:
             continue
-        lo, hi = int(ids[a]), int(ids[b - 1])
-        step = _bucket_step(b - a, lo, hi, block_size)
-        cuts = a + np.searchsorted(ids[a:b], list(range(lo + step, hi + 1, step)))
-        for start, end in zip([a, *cuts], [*cuts, b]):
+        table = table.sort_by("id")
+        ids = table.column("id").to_numpy()
+        lo, hi = int(ids[0]), int(ids[-1])
+        step = _bucket_step(len(ids), lo, hi, block_size)
+        cuts = np.searchsorted(ids, list(range(lo + step, hi + 1, step)))
+        for start, end in zip([0, *cuts], [*cuts, len(ids)]):
             if start < end:
                 yield rank, table.slice(start, end - start)
 
@@ -1083,25 +1082,29 @@ def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b""
     Rows are bucketed by id range into ~``block_size``-row buckets
     (``_bucket_step`` of each type's row count and id range), and each
     bucket is encoded in (type, bucket) order. Where that runs follows
-    the engine's size rule (``session.collect_bounded``): when the union
-    fits under ``spark.sql.autoBroadcastJoinThreshold``, both by its rows
-    at ``row_bytes`` and by the collected table's Arrow bytes (an array
-    counts as one element in ``row_bytes``), that one collect is the
-    only job and the driver sorts, buckets and encodes it
-    (``_driver_buckets``). Otherwise one aggregate gives each type's row
+    the engine's size rule (``session.collect_bounded``). When every
+    table is a loaded cache, their ``session.known_bytes`` decide with
+    no job: under ``spark.sql.autoBroadcastJoinThreshold`` together, and
+    so their resident copies' Arrow bytes, the driver sorts, buckets and
+    encodes those copies (``_driver_buckets``) and the call runs no job;
+    over it, the cluster path runs with no collect spent. Otherwise the
+    union is collected bounded, by its rows at ``row_bytes`` and then by
+    the collected table's Arrow bytes (an array counts as one element
+    in ``row_bytes``), and under both that one collect is the only job
+    before the driver encodes it. Otherwise one aggregate gives each type's row
     count and id range, each type gets clamp(ceil(rows / block_size), 1,
     defaultParallelism) tasks, as a Python task has a fixed cost (~0.02
     CPU-s on a 4 vCPU host), and ONE ``mapInArrow`` per task writes each
     bucket as a part file named by (type_rank, bucket), so the file does
     not depend on which task a bucket hashed to: 4 jobs with AQE, after
-    the spent collect when the rows or bytes are over. Both paths cut
+    the spent collect when uncached rows or bytes are over. Both paths cut
     the same buckets and hand them to the same ``encode``, so they write
     the same bytes.
     """
     from pyspark.sql import functions as F  # noqa: N812
     from pyspark.sql.types import ArrayType
 
-    from osm_lib_spark.session import broadcast_threshold, collect_bounded
+    from osm_lib_spark.session import broadcast_threshold, collect_bounded, known_bytes, resident
 
     typed = [df.select(F.lit(rank).alias("type_rank"), *TYPE_COLUMNS[rank])
              for rank, df in enumerate(tables) if df is not None]
@@ -1124,11 +1127,24 @@ def write_blocks(path: str, tables, encode, block_size: int, header: bytes = b""
             f.writelines(blobs)
         return len(blobs)
 
-    table = collect_bounded(rows)
-    if table is not None and table.nbytes <= broadcast_threshold(rows.sparkSession):
+    threshold = broadcast_threshold(rows.sparkSession)
+    present = [(rank, df) for rank, df in enumerate(tables) if df is not None]
+    known = [known_bytes(df) for _, df in present]
+    by_type = None
+    if None in known:
+        table = collect_bounded(rows)
+        if table is not None and table.nbytes <= threshold:
+            ranks = table.column("type_rank")
+            by_type = [(rank, table.filter(pc.equal(ranks, rank))) for rank, _ in present]
+    elif sum(known) <= threshold:
+        # every table a loaded cache: their known sizes decide without a job
+        copies = [resident(df) for _, df in present]
+        if None not in copies and sum(c.nbytes for c in copies) <= threshold:
+            by_type = [(rank, copy) for (rank, _), copy in zip(present, copies)]
+    if by_type is not None:
         with _part_files(path, header) as tmpdir:
             return sum(write_part((rank, i), bucket.to_batches())
-                       for i, (rank, bucket) in enumerate(_driver_buckets(table, block_size)))
+                       for i, (rank, bucket) in enumerate(_driver_buckets(by_type, block_size)))
 
     stats = rows.groupBy("type_rank").agg(
         F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"), F.max("id").alias("hi")

@@ -40,6 +40,23 @@ def both_paths(spark, fn):
     return kernel, loop
 
 
+def record_resident(monkeypatch, module: str) -> list:
+    """Patch ``module``'s ``resident`` to record what each call returned
+    (a driver copy, or None), so a test can tell which path ran."""
+    from osm_lib_spark.session import resident
+
+    reads = []
+    monkeypatch.setattr(f"{module}.resident", lambda df: reads.append(resident(df)) or reads[-1])
+    return reads
+
+
+def loaded(df):
+    """``df`` cached and counted: a loaded cache."""
+    df = df.cache()
+    df.count()
+    return df
+
+
 _job_groups = itertools.count()
 
 

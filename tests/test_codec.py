@@ -25,7 +25,7 @@ from osm_lib_spark.sources.span_codec import (
     render_relation_text,
     render_way_text,
 )
-from tests.conftest import assert_df_equal, both_paths, entity_batch, golden, spark_jobs, threshold
+from tests.conftest import assert_df_equal, both_paths, entity_batch, golden, loaded, record_resident, spark_jobs, threshold
 
 
 def test_parse_counts_match_golden(docs_xs, fixture_xs):
@@ -360,24 +360,39 @@ def test_sink_block_size_exercises_collisions_and_empty_partitions(spark, docs_x
     assert len(keys) > n_tasks > hit
 
 
-def _sink_both_paths(spark, tmp_path, ext: str, write) -> tuple[str, int]:
-    """``write(path)`` at the session threshold (the driver encodes) and
-    at -1 (the aggregate, shuffle and ``mapInArrow`` path): the two files
-    are byte-equal and count the same blocks. Returns (the driver path's
-    file, its block count)."""
-    files = iter(str(tmp_path / f"{side}.{ext}") for side in ("driver", "cluster"))
+def _sink_both_paths(spark, tmp_path, monkeypatch, ext: str, write, tables) -> tuple[str, int]:
+    """``write(path, tables)`` at the session threshold (the driver
+    encodes) and at -1 (the aggregate, shuffle and ``mapInArrow``
+    path), over filters on ``tables`` that keep every row (the driver
+    encodes one bounded collect) and over ``tables`` as loaded caches
+    (it encodes their resident copies): the four files are byte-equal
+    and count the same blocks. Returns (the first file, its block
+    count)."""
+    # the sink imports the session module when it runs
+    reads = record_resident(monkeypatch, "osm_lib_spark.session")
+    files = iter(str(tmp_path / f"{side}.{ext}") for side in ("driver", "cluster", "resident", "cached-cluster"))
+    written = []
+    for cached in (False, True):
+        inputs = [loaded(t) for t in tables] if cached else [t.where(F.col("id").isNotNull()) for t in tables]
+        reads.clear()
 
-    def run():
-        path = next(files)
-        return path, write(path)
+        def run():
+            path = next(files)
+            return path, write(path, inputs)
 
-    (path, n_blocks), (cluster, n_cluster) = both_paths(spark, run)
-    with open(path, "rb") as a, open(cluster, "rb") as b:
-        assert a.read() == b.read() and n_blocks == n_cluster
+        written += both_paths(spark, run)
+        # the -1 run reads no copy: the caches' known sizes are over it
+        assert [r is not None for r in reads] == [True] * len(tables) * cached, cached
+    for t in tables:
+        t.unpersist()
+    (path, n_blocks), *others = written
+    for other, n_other in others:
+        with open(path, "rb") as a, open(other, "rb") as b:
+            assert a.read() == b.read() and n_blocks == n_other
     return path, n_blocks
 
 
-def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path):
+def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path, monkeypatch):
     from osm_lib_spark.sources.pbf import (
         TYPE_NAMES,
         _inflate_blob,
@@ -389,7 +404,7 @@ def test_pbf_sink_roundtrip_small_blocks(spark, docs_xs, tmp_path):
 
     tables = _xs_tables(docs_xs)
     path, n_blocks = _sink_both_paths(
-        spark, tmp_path, "pbf", lambda p: write_pbf(p, *tables, block_size=SINK_BLOCK_SIZE)
+        spark, tmp_path, monkeypatch, "pbf", lambda p, t: write_pbf(p, *t, block_size=SINK_BLOCK_SIZE), tables
     )
     assert _canon_rows(read_pbf(spark, path)) == _source_rows(tables)
 
@@ -414,7 +429,7 @@ def test_vex_sink_roundtrip_small_buckets(spark, docs_xs, tmp_path, monkeypatch)
 
     monkeypatch.setattr(vex, "BLOCK_SIZE", SINK_BLOCK_SIZE)  # write_vex's bucket size
     tables = _xs_tables(docs_xs)
-    path, n_blocks = _sink_both_paths(spark, tmp_path, "vex", lambda p: write_vex(p, *tables))
+    path, n_blocks = _sink_both_paths(spark, tmp_path, monkeypatch, "vex", lambda p, t: write_vex(p, *t), tables)
     assert _canon_rows(read_vex(spark, path)) == _source_rows(tables)
 
     blocks = []

@@ -6,10 +6,12 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from osm_lib_spark.operators.extract import bbox_extract_batch, prepare_extract_context
+from osm_lib_spark.operators.indexes import build_way_tiles
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
-from tests.conftest import assert_df_equal, both_paths, golden, spark_jobs, threshold
+from tests.conftest import assert_df_equal, both_paths, golden, loaded, record_resident, spark_jobs, threshold
 
 NAMES = ["dense", "wide", "world", "empty", "equator"]
 
@@ -91,22 +93,38 @@ def _hand_entities(spark):
     return nodes, ways, relations
 
 
-def test_driver_path_equals_spark_chain(spark, docs_xs, meta_xs):
+def test_driver_path_equals_spark_chain(spark, docs_xs, meta_xs, monkeypatch):
     """The driver path (session threshold) and the Spark chain
     (threshold -1) return the same (bbox_id, entity_type, id) rows on
     the sf-xs named boxes as one batch, on an empty box alone, and on
     hand-built entities with orphan refs, a 3-deep relation chain and a
-    2-cycle. Where the context fits but the call's way refs do not, the
+    2-cycle, over uncached inputs (the driver path collects) and over
+    loaded caches with a cached way_tiles (it reads their resident
+    copies). Where the context fits but the call's way refs do not, the
     call falls back to the Spark chain after its collect, with the
     same rows."""
     xs = parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs)
     boxes = [tuple(meta_xs["bboxes"][n]) for n in NAMES]
     hand = _hand_entities(spark)
     hand_boxes = [(9.9, 19.9, 10.05, 20.05), (-30.1, -60.1, -29.9, -59.9), (50.0, 50.0, 50.1, 50.1)]
-    for entities, batch in ((xs, boxes), (xs, [tuple(meta_xs["bboxes"]["empty"])]), (hand, hand_boxes)):
-        driver, chain = both_paths(spark, lambda: bbox_extract_batch(*entities, batch))
+    reads = record_resident(monkeypatch, "osm_lib_spark.operators.extract")
+    cases = ((xs, boxes), (xs, [tuple(meta_xs["bboxes"]["empty"])]), (hand, hand_boxes))
+    for entities, batch in cases:
+        # filters that keep every row: no cache left by another test matches them
+        uncached = [f.where(F.col("id").isNotNull()) for f in entities[:2]] + [entities[2]]
+        driver, chain = both_paths(spark, lambda: bbox_extract_batch(*uncached, batch))
         assert _is_local(driver) and not _is_local(chain)
         assert _rows(driver) == _rows(chain)
+        assert reads and not any(r is not None for r in reads)
+        reads.clear()
+        nodes, ways, relations = (loaded(f) for f in entities)
+        way_tiles = loaded(build_way_tiles(ways, nodes))
+        cached = bbox_extract_batch(nodes, ways, relations, batch, way_tiles=way_tiles)
+        assert _is_local(cached) and _rows(cached) == _rows(driver)
+        assert reads and all(r is not None for r in reads)
+        reads.clear()
+        for frame in (nodes, ways, relations, way_tiles):
+            frame.unpersist()
     rows = _rows(driver)
     assert (0, "node", 7) in rows and (0, "node", 99) not in rows and (0, "way", 102) not in rows
     assert [i for b, t, i in rows if b == 0 and t == "relation"] == [1, 2, 3, 4, 10, 11, 30]

@@ -5,6 +5,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 import osm_lib_spark.operators.knn as knn
 from osm_lib_spark.operators.knn import RANKED_DDL, knn_brute_force, knn_kring
@@ -12,7 +13,7 @@ from osm_lib_spark.operators.pip import grid_polygons, points_in_polygons_bucket
 from osm_lib_spark.session import row_bytes
 from osm_lib_spark.sources.oracle import ray_cast_contains
 from osm_lib_spark.sources.span_codec import parse_nodes
-from tests.conftest import assert_df_equal, both_paths, golden, spark_jobs, threshold
+from tests.conftest import assert_df_equal, both_paths, golden, loaded, record_resident, spark_jobs, threshold
 
 NODE_DDL = "id long, fixed_lat int, fixed_lon int, tags array<struct<key:string,value:string>>"
 
@@ -50,6 +51,32 @@ def _three_paths(spark, monkeypatch, step, fn):
     return driver, over, at_minus_one
 
 
+def _both_inputs(spark, monkeypatch, step, call, frame):
+    """``_three_paths`` of ``call(frame)`` with ``frame`` a loaded cache
+    (the driver path reads its ``session.resident`` copy), then of
+    ``call`` over a filter on it that keeps every row (no cache matches
+    it: the driver path collects): the six sorted row lists. ``frame``
+    is released after unless it was cached before."""
+    was_cached = frame.is_cached
+    frame = loaded(frame)
+    uncached = frame.where(F.col(frame.columns[0]).isNotNull())
+    out = []
+    with monkeypatch.context() as m:
+        reads = record_resident(m, step.rsplit(".", 1)[0])
+        for held, df in ((True, frame), (False, uncached)):
+            reads.clear()
+            out += _three_paths(spark, monkeypatch, step, lambda: call(df))
+            assert reads and (reads[0] is not None) is held, held
+    if not was_cached:
+        frame.unpersist()
+    return out
+
+
+def _kring(pts, **kw):
+    """``knn_kring`` over a tiled store, as ``_both_inputs`` calls it."""
+    return lambda store: knn_kring(None, pts, tiled=store, **kw)
+
+
 def test_ray_cast_hand_computed():
     square = np.array([[0.0, 0.0], [0.0, 10.0], [10.0, 10.0], [10.0, 0.0]])
     lat = np.array([5.0, 5.0, 15.0, -1.0, 9.999])
@@ -80,7 +107,7 @@ def test_knn_kring_matches_brute_force(spark, nodes_xs, meta_xs, monkeypatch):
     # whose ring bound degrades to 0 (conservative full expansion)
     pts = [tuple(p) for p in meta_xs["knn_points"]]
     brute = _rows(knn_brute_force(nodes_xs, pts, k=10))
-    for rows in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes_xs, pts, k=10)):
+    for rows in _both_inputs(spark, monkeypatch, KNN_ROUND, _kring(pts, k=10), knn.tiled_node_store(nodes_xs)):
         assert rows == brute
     # density-derived initial ring (est_n_nodes) must be EXACTLY equal
     # too — the start radius only moves rounds, never the bound
@@ -185,7 +212,9 @@ def test_knn_kring_meridian_edge_case(spark, monkeypatch):
     )
     pts = [(0, qlat, qlon)]
     brute = _rows(knn_brute_force(nodes, pts, k=10))
-    paths = _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=10, initial_ring=radius))
+    paths = _both_inputs(
+        spark, monkeypatch, KNN_ROUND, _kring(pts, k=10, initial_ring=radius), knn.tiled_node_store(nodes)
+    )
     for ring in paths:
         assert ring == brute
         assert ring[0][2] == 1  # the outside node won
@@ -208,7 +237,7 @@ def test_pip_vs_golden(spark, nodes_xs, fixture_xs, meta_xs, monkeypatch):
     }
     frame = polygons_df(spark, polys)
     expected = _golden_rows(fixture_xs, "pip")
-    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, frame)):
+    for rows in _both_inputs(spark, monkeypatch, PIP_ANSWER, lambda n: points_in_polygons_bucketed(n, frame), nodes_xs):
         assert rows == expected
 
 
@@ -224,7 +253,7 @@ def test_pip_bucketed_vs_golden_and_broadcast(nodes_xs, fixture_xs, meta_xs, spa
     polys = grid_polygons(centers)
     many = polygons_df(spark, polys)
     expected = _golden_rows(fixture_xs, "pip_many")
-    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, many)):
+    for rows in _both_inputs(spark, monkeypatch, PIP_ANSWER, lambda n: points_in_polygons_bucketed(n, many), nodes_xs):
         assert rows == expected
     plan = _plan(points_in_polygons_bucketed(nodes_xs, many))
     assert "LocalTableScan" in plan and "Join" not in plan
@@ -257,7 +286,7 @@ def test_pip_high_vertex_polygon_measured_by_its_vertices(nodes_xs, meta_xs, spa
     inside = ray_cast_contains(outer, lat, lon) ^ ray_cast_contains(hole, lat, lon)
     expected = sorted((7, int(i)) for i in pdf["id"][inside])
     assert 0 < len(expected) < len(pdf)
-    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, poly)):
+    for rows in _both_inputs(spark, monkeypatch, PIP_ANSWER, lambda n: points_in_polygons_bucketed(n, poly), nodes_xs):
         assert rows == expected
     assert "Join" not in _plan(points_in_polygons_bucketed(nodes_xs, poly))
     with threshold(spark, "10000"):
@@ -292,9 +321,11 @@ def test_pip_empty_set_and_polygon_without_candidates(spark, nodes_xs, meta_xs, 
     lat0, lon0, lat1, lon1 = meta_xs["bboxes"]["empty"]
     empty = polygons_df(spark, {})
     lonely = polygons_df(spark, {3: [np.array([[lat0, lon0], [lat0, lon1], [lat1, lon1]])]})
-    for polygons in (empty, lonely):
-        for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, polygons)):
-            assert rows == []
+    # the empty set reads no nodes, so a cached input makes no difference
+    for rows in _three_paths(spark, monkeypatch, PIP_ANSWER, lambda: points_in_polygons_bucketed(nodes_xs, empty)):
+        assert rows == []
+    for rows in _both_inputs(spark, monkeypatch, PIP_ANSWER, lambda n: points_in_polygons_bucketed(n, lonely), nodes_xs):
+        assert rows == []
     assert spark_jobs(spark, lambda: points_in_polygons_bucketed(nodes_xs, empty).collect()) == ([], 0)
 
 
@@ -306,7 +337,7 @@ def test_knn_kring_fewer_than_k_nodes(spark, monkeypatch):
     )
     brute = _rows(knn_brute_force(nodes, [(0, 10.0, 20.0)], k=10))
     assert [r[1] for r in brute] == [1, 2, 3]
-    for rows in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, [(0, 10.0, 20.0)], k=10)):
+    for rows in _both_inputs(spark, monkeypatch, KNN_ROUND, _kring([(0, 10.0, 20.0)], k=10), knn.tiled_node_store(nodes)):
         assert rows == brute
 
 
@@ -324,7 +355,7 @@ def test_knn_kring_ring_wraps_x(spark, monkeypatch):
     pts = [(0, 10.02, 179.995), (1, 10.05, -179.995)]
     brute = _rows(knn_brute_force(nodes, pts, k=5))
     assert {r[2] for r in brute} & {r[0] for r in rows if r[2] < 0}  # hits across the wrap
-    for ring in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=5)):
+    for ring in _both_inputs(spark, monkeypatch, KNN_ROUND, _kring(pts, k=5), knn.tiled_node_store(nodes)):
         assert ring == brute
 
 
