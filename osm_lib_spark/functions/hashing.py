@@ -92,21 +92,9 @@ def cosine_fold_col(a: Column, b: Column) -> Column:
     return dot_fold_col(a, b) / (norm_fold_col(a) * norm_fold_col(b))
 
 
-def l2_fold_col(a: Column, b: Column) -> Column:
-    """Σ (a_i − b_i)² as an explicit left fold in double precision —
-    same cross-engine contract as ``dot_fold_col``."""
-    diffs = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def l2_fold_np(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """(N, D) × (D,) or (N, D) × (N, D) left-fold squared L2, float64 —
-    bit-identical to ``l2_fold_col``."""
+    bit-identical to ``l2_fold_sql``."""
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)
     if b.ndim == 1:

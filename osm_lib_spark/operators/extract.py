@@ -121,20 +121,32 @@ def relation_closure_table(relations: DataFrame) -> tuple[DataFrame, Index | Non
 
 
 def _closure_loop(edges: DataFrame) -> DataFrame:
-    """Semi-naive fixpoint of ``edges`` in Spark, one round per hop."""
+    """Semi-naive fixpoint of ``edges`` in Spark, one round per hop.
+
+    The loop's frames are joined by renamed columns, not through
+    ``alias``: an aliased frame's output attributes carry its qualifier,
+    and the constraints a checkpoint keeps from its plan
+    (isnotnull(ancestor_id) once ``relations`` is filtered on id) name
+    them without it. Spark's checkpoint relation matches the two with
+    the qualifier, so the constraint keeps an exprId its output lacks,
+    and the union with ``closure`` failed with "key not found:
+    ancestor_id#…" in ``UnionBase.rewriteConstraints``."""
+    hops = edges.select(F.col("relation_id").alias("hop_id"), F.col("ancestor_id").alias("hop_ancestor"))
     closure = edges
     frontier = edges
     for _ in range(MAX_CLOSURE_ITERATIONS):
         # extend frontier paths by one parent hop
         step = (
-            frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.ancestor_id") == F.col("e.relation_id"))
-            .select("f.relation_id", "e.ancestor_id")
+            frontier.join(hops, F.col("ancestor_id") == F.col("hop_id"))
+            .select("relation_id", F.col("hop_ancestor").alias("ancestor_id"))
             .distinct()
         )
+        seen = closure.select(F.col("relation_id").alias("seen_id"), F.col("ancestor_id").alias("seen_ancestor"))
         # null-safe: a path from a null id is found once, not every round
-        same = [F.col(f"s.{c}").eqNullSafe(F.col(f"c.{c}")) for c in ("relation_id", "ancestor_id")]
-        new = step.alias("s").join(closure.alias("c"), same, "left_anti").localCheckpoint(eager=True)
+        same = F.col("relation_id").eqNullSafe(F.col("seen_id")) & F.col("ancestor_id").eqNullSafe(
+            F.col("seen_ancestor")
+        )
+        new = step.join(seen, same, "left_anti").localCheckpoint(eager=True)
         if not new.count():
             return closure
         closure = closure.unionByName(new).localCheckpoint(eager=True)

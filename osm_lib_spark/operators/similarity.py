@@ -31,12 +31,14 @@
     driver or per Arrow batch in a map-only mapInArrow.
   - two query tails: ``_ivf_query`` (probe lists, exact-cosine rerank)
     and ``_adc_topk`` (one ADC LUT per (query, probed list), code-only
-    scan, exact-L2 rerank). When the trainer collected the corpus and
-    the candidates of the probed lists fit under the threshold too
-    (``_driver_tail``), they answer in numpy from that same matrix and
-    return a LocalRelation (the call runs one Spark job); otherwise
-    they run as Spark joins and per-query windows. Both give the same
-    rows.
+    scan, exact-L2 rerank), over one scan kernel (``_scan_lists``) and
+    one ranking kernel (``_top``). When the trainer collected the
+    corpus and the candidates of the probed lists fit under the
+    threshold too (``_driver_tail``), the scan runs in numpy over that
+    same matrix (the call runs one Spark job); otherwise one mapInArrow
+    job runs it per Arrow batch, each task keeping a running top per
+    query, and the driver ranks the tasks' tops again
+    (``_partition_top``). Both return a LocalRelation of the same rows.
 
   Spark carries Arrow batches; the per-row math is numpy over the same
   left-fold kernels as the oracle, so every trained index and ranking
@@ -46,8 +48,8 @@ Scale notes: brute force distributes perfectly (map-only over
 candidates, broadcast queries, top-k via partial per-partition heaps in
 the window agg). The LSH bucket join shuffles on (band, signature) —
 uniform md5/hyperplane bits mean no skew; AQE handles stragglers. The
-ANN scans never shuffle the corpus: probes and LUTs are broadcast
-LocalRelations, and the only wide exchange is the per-query window.
+ANN scans never shuffle the corpus: probes and LUTs ride the scan's
+closure, and each task returns at most Q·k (or Q·refine) rows.
 """
 
 from __future__ import annotations
@@ -60,13 +62,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_lib_spark.functions.hashing import (
-    cosine_fold_col,
-    dot_fold_np,
-    l2_fold_col,
-    l2_fold_np,
-    norm_fold_np,
-)
+from osm_lib_spark.functions.hashing import cosine_fold_col, dot_fold_np, l2_fold_np, norm_fold_np
 from osm_lib_spark.session import broadcast_threshold, cache_rows, collect_bounded, local_frame, row_bytes
 
 ANN_SEED = 7
@@ -228,7 +224,8 @@ def _nearest_np(mat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     """Row index into ``cmat`` of each row's max-cosine centroid, the
     FIRST max on ties: ``dot_fold_np``/``norm_fold_np`` reproduce the
     Column fold bit-for-bit (same left-to-right float64 op order). The
-    one assignment kernel of training, encoding and ``_assign_local``.
+    one assignment kernel of training, encoding and ``_ivf_query``'s
+    partition scan.
     A zero-norm row has no cosine, so it raises, as the query tails do."""
     norm_e = norm_fold_np(mat)
     if not norm_e.all():
@@ -249,24 +246,6 @@ def _centroid_arrays(cents: list):
     return (
         np.array([lid for lid, _ in cents], dtype=np.int32),
         np.array([v for _, v in cents], dtype=np.float64),
-    )
-
-
-def _assign_local(embeddings: DataFrame, cents: list) -> DataFrame:
-    """(vec_id, embedding, list_id): row-local argmax-cosine assignment
-    (ties → smaller list_id), map-only, for the exact-cosine rerank that
-    needs the embedding next to its list. With ``cents`` sorted by
-    list_id, ``_nearest_np``'s first max is exactly the oracle's ccos
-    DESC, list_id ASC tie-break."""
-    list_ids, cmat = _centroid_arrays(cents)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        return pd.Series(list_ids[_nearest_np(mat, cmat)])
-
-    return embeddings.select(
-        "vec_id", "embedding", assign(F.col("embedding")).alias("list_id")
     )
 
 
@@ -307,20 +286,34 @@ def _probe_pairs(q_rows: list, cents: list, nprobe: int) -> list:
 
 TOPK_DDL = "query_id long, rank long, neighbor_id long"
 CANDIDATE_DDL = "query_id long, vec_id long, score double"
+_NO_CANDIDATES = (np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))
 
 
-def _ranked(qids: np.ndarray, ids: np.ndarray, k: int, *keys: np.ndarray):
-    """(query_id, rank, id) arrays of the first ``k`` candidate rows of
-    each query ordered by ``keys`` (the first one first), then by id:
-    the per-query ``row_number() <= k`` window of the Spark tails. numpy
-    sorts NaN last, as Spark's ascending order does. Candidates are a
-    multiset: a row the joins repeat is ranked twice, as in Spark."""
+def _top(qids: np.ndarray, ids: np.ndarray, n: int, *keys: np.ndarray):
+    """(rows, rank): the indices of the first ``n`` candidate rows of
+    each query ordered by ``keys`` (the first one first), then by id,
+    in (query, rank) order, and their ranks — a per-query
+    ``row_number() <= n`` as one lexsort. numpy sorts NaN last, as
+    Spark's ascending order does. Candidates are a multiset: a repeated
+    row is ranked twice, as an equi-join would repeat it."""
     order = np.lexsort((ids, *keys[::-1], qids))
     q = qids[order]
     start = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
     rank = np.arange(len(q)) - np.repeat(start, np.diff(np.r_[start, len(q)])) + 1
-    keep = rank <= k
-    return q[keep], rank[keep], ids[order][keep]
+    keep = rank <= n
+    return order[keep], rank[keep]
+
+
+def _ranked(qids: np.ndarray, ids: np.ndarray, k: int, *keys: np.ndarray):
+    """(query_id, rank, id) arrays of ``_top``'s rows."""
+    rows, rank = _top(qids, ids, k, *keys)
+    return qids[rows], rank, ids[rows]
+
+
+def _by_cosine(cos: np.ndarray):
+    """``_top`` keys of a cosine: descending with NaN first, as Spark
+    orders a descending double."""
+    return ~np.isnan(cos), -cos
 
 
 def _matches(keys: np.ndarray, want: np.ndarray):
@@ -333,15 +326,15 @@ def _matches(keys: np.ndarray, want: np.ndarray):
     return np.repeat(np.arange(len(want)), n), order[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
 
 
-def _scan_lists(local, pairs: list, score):
-    """(query_id, vec_id, score) arrays of the driver tails' candidates:
-    for each probe pair p, every row of its list but the query's own
-    (the Spark tails' ``vec_id != query_id``), scored by
-    ``score(p, rows)``."""
-    vec_id, lists = local[0], local[2]
+def _scan_lists(vec_id: np.ndarray, lists: np.ndarray, pairs: list, score):
+    """(query_id, vec_id, score) arrays of the candidates among the rows
+    (``vec_id``, ``lists``): for each probe pair p, every row of its
+    list but the query's own, scored by ``score(p, rows)``. The one scan
+    of both query tails, over the trainer's collected corpus on the
+    driver or over one Arrow batch in a task."""
     order = np.argsort(lists, kind="stable")
     by_list = lists[order]
-    parts = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
+    parts = [_NO_CANDIDATES]
     for p, (qid, lid, _) in enumerate(pairs):
         rows = order[np.searchsorted(by_list, lid, "left") : np.searchsorted(by_list, lid, "right")]
         rows = rows[vec_id[rows] != qid]
@@ -349,14 +342,41 @@ def _scan_lists(local, pairs: list, score):
     return tuple(np.concatenate(c) for c in zip(*parts))
 
 
+def _partition_top(frame: DataFrame, scan, n: int, keys) -> tuple:
+    """The tails' scan over every row of ``frame`` in one mapInArrow
+    job: each task keeps a running top ``n`` per query (by
+    ``keys(score)``, then vec_id, as ``_top`` ranks) of the
+    ``scan(batch)`` candidates of its Arrow batches; returns the tasks'
+    tops as (query_id, vec_id, score) arrays, which the caller ranks
+    again. The first n of a union are the first n of its parts' first
+    n, so the ranks equal one scan's.
+
+    The driver holds at most tasks × Q × n rows at 32 B: the same order
+    as the Q·nprobe·m·kc LUT doubles it already builds, since queries
+    are the small side by contract (a tree merge would be needed past
+    ~10^5 tasks)."""
+
+    def task(batches):
+        top = _NO_CANDIDATES
+        for b in batches:
+            qids, ids, score = (np.concatenate(c) for c in zip(top, scan(b)))
+            rows, _ = _top(qids, ids, n, *keys(score))
+            top = qids[rows], ids[rows], score[rows]
+        yield pa.RecordBatch.from_arrays([pa.array(c) for c in top], names=["query_id", "vec_id", "score"])
+
+    table = frame.mapInArrow(task, CANDIDATE_DDL).toArrow()
+    return tuple(table.column(c).to_numpy() for c in ("query_id", "vec_id", "score"))
+
+
 def _driver_tail(spark, local, pairs: list) -> bool:
-    """Whether a query tail answers in numpy: the trainer collected the
-    corpus (``local``) and the candidates ``_scan_lists`` would hold at
-    once, every row of each probed list at ``row_bytes(CANDIDATE_DDL)``,
-    fit under ``spark.sql.autoBroadcastJoinThreshold`` too. A corpus
-    that fits can still give n_queries·N candidates (``pq_topk`` probes
-    list 0, the whole corpus, for every query); those go to the Spark
-    tail, whose windows can spill."""
+    """Whether a query tail scans on the driver: the trainer collected
+    the corpus (``local``) and the candidates ``_scan_lists`` would hold
+    at once, every row of each probed list at
+    ``row_bytes(CANDIDATE_DDL)``, fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` too. A corpus that fits
+    can still give n_queries·N candidates (``pq_topk`` probes list 0,
+    the whole corpus, for every query); those go to
+    ``_partition_top``, whose tasks hold one batch's at a time."""
     if local is None:
         return False
     lids = np.array([lid for _, lid, _ in pairs], dtype=np.int64)
@@ -365,7 +385,7 @@ def _driver_tail(spark, local, pairs: list) -> bool:
 
 
 def _topk_frame(spark, qids, rank, ids) -> DataFrame:
-    """A driver tail's (query_id, rank, neighbor_id) rows as a
+    """A query tail's (query_id, rank, neighbor_id) rows as a
     ``local_frame``."""
     cols = [pa.array(c, pa.int64()) for c in (qids, rank, ids)]
     return local_frame(spark, pa.table(cols, names=["query_id", "rank", "neighbor_id"]), TOPK_DDL)
@@ -379,54 +399,38 @@ def _ivf_query(
     other than the query itself, cos DESC, neighbor_id ASC.
 
     With the trainer's ``local`` (vec_id, mat, lists) arrays and
-    candidates that fit (``_driver_tail``) this runs in numpy;
-    otherwise as row-local assignment and ONE broadcast hash
-    join (tiny probes side) — the corpus is never shuffled. Each vector
-    lives in exactly one list and probes are distinct per query, so no
-    dedup/distinct step is needed (or planned)."""
+    candidates that fit (``_driver_tail``) the scan runs over them on
+    the driver with no job; otherwise one mapInArrow job runs it per
+    Arrow batch of the corpus, each task assigning its rows to lists
+    with ``_nearest_np`` (``_partition_top``). Each vector lives in
+    exactly one list and probes are distinct per query, so no dedup is
+    needed."""
+    spark = embeddings.sparkSession
     pairs = _probe_pairs(_query_rows(embeddings, n_queries, local), cents, nprobe)
-    if _driver_tail(embeddings.sparkSession, local, pairs):
-        mat = local[1]
+    list_ids, cmat = _centroid_arrays(cents)
+    qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), cmat.shape[1])
+    qnorms = norm_fold_np(qv)
+
+    def scan(vec_id, mat, lists):
         norms = norm_fold_np(mat)
-        qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), mat.shape[1])
-        qnorms = norm_fold_np(qv)
 
         def cos_of(p, rows):
             denom = qnorms[p] * norms[rows]
-            if not denom.all():  # where the Spark tail's ANSI division raises
+            if not denom.all():  # where Spark's ANSI division would raise
                 raise ValueError("Division by zero: the cosine of a zero-norm embedding")
             return dot_fold_np(mat[rows], qv[p]) / denom
 
-        qids, ids, cos = _scan_lists(local, pairs, cos_of)
-        # descending with NaN first, as Spark orders a descending double
-        return _topk_frame(embeddings.sparkSession, *_ranked(qids, ids, k, ~np.isnan(cos), -cos))
-    assign = _assign_local(embeddings, cents)
-    probes = local_frame(
-        embeddings.sparkSession,
-        [(qid, lid, [float(v) for v in vec]) for qid, lid, vec in pairs],
-        "query_id long, list_id int, q_emb array<double>",
-    )
-    cands = (
-        assign.join(probes, "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    rescored = cands.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine_fold_col(F.col("q_emb"), F.col("embedding")).alias("cos"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-        )
-    )
+        return _scan_lists(vec_id, lists, pairs, cos_of)
+
+    def scan_batch(batch):
+        vec_id, mat = _as_matrix(batch, cmat.shape[1])
+        return scan(vec_id, mat, list_ids[_nearest_np(mat, cmat)])
+
+    if _driver_tail(spark, local, pairs):
+        qids, ids, cos = scan(*local[:3])
+    else:
+        qids, ids, cos = _partition_top(embeddings.select("vec_id", "embedding"), scan_batch, k, _by_cosine)
+    return _topk_frame(spark, *_ranked(qids, ids, k, *_by_cosine(cos)))
 
 
 def ivf_topk(
@@ -446,16 +450,13 @@ def ivf_topk(
     Where it runs follows the size rule: a corpus under
     ``spark.sql.autoBroadcastJoinThreshold`` is one bounded collect and
     the whole query runs in numpy on the driver (one Spark job) when
-    its candidates fit too. Over it, that collect's job is spent and
-    the stride collect below runs after it: one job more than the
-    stride collect alone.
-    Over it, the nlist stride rows are one filtered collect (no pass
-    over the corpus), assignment is a row-local Arrow argmax over the
-    (nlist, dim) centroid matrix and probe selection runs on the driver
-    (no join, no shuffle), and candidate selection broadcasts the tiny
-    (n_queries·nprobe)-row probe table — the corpus never shuffles; the
-    only wide exchange left is the per-query top-k window over the
-    probed fraction (≈ nprobe/nlist of N per query).
+    its candidates fit too. Over it (that collect's job is spent unless
+    a loaded cache's row count says so first), the nlist stride rows
+    are one filtered collect, the query rows another, and one map-only
+    mapInArrow job assigns each row to its list (an Arrow argmax over
+    the (nlist, dim) centroid matrix), scans the probed lists and
+    returns each task's top k per query to the driver — the corpus
+    never shuffles and no window runs.
 
     Sizing at real scale: nlist should grow ~√N (16 is toy-sized for the
     test fixture; 100 TB of 1e9+ vectors wants nlist ≈ 2^15–2^17 trained
@@ -482,8 +483,8 @@ def ivf_kmeans_topk(
     The Lloyd step is one pass of ``_train_index``: on the driver when
     the corpus fits under ``spark.sql.autoBroadcastJoinThreshold``, and
     then the query too when its candidates fit, else one map-only job
-    whose tasks return nlist·dim integer sums; the only wide stage left
-    is then the final per-query top-k window.
+    whose tasks return nlist·dim integer sums; the query is then one
+    more map-only job, as in ``ivf_topk``.
     """
     cents, _, _, local = _train_index(embeddings, nlist, 1, 0, 0, False, None)
     return _ivf_query(embeddings, cents, local, k, n_queries, nprobe)
@@ -768,6 +769,18 @@ def _adc_luts(qv: np.ndarray, cb: np.ndarray) -> np.ndarray:
     )
 
 
+def _rerank(vec_id: np.ndarray, mat: np.ndarray, short_q: np.ndarray, short_id: np.ndarray, k: int):
+    """The exact-L2 rerank of an ADC shortlist → (query_id, rank,
+    neighbor_id) arrays, over (vec_id, mat) rows that hold every
+    shortlisted vec_id and query id: every row of each shortlisted
+    vec_id against every query row of its query_id (as an equi-join on
+    each would pair them), L2 ASC, neighbor_id ASC."""
+    i, rows = _matches(vec_id, short_id)
+    j, q_at = _matches(vec_id, short_q[i])
+    rows, qids = rows[j], short_q[i][j]
+    return _ranked(qids, vec_id[rows], k, l2_fold_np(mat[rows], mat[q_at]))
+
+
 def _adc_topk(
     embeddings: DataFrame,
     cents: list,
@@ -784,100 +797,67 @@ def _adc_topk(
     """The one ADC query: one LUT per (query, probed list) — from
     q − c_list with ``residual``, else from q; every code is in list 0
     when ``cents`` is empty — then a code-only scan of the probed lists
-    joined to the broadcast LUT rows, then the exact-L2 rerank of the
-    top ``refine`` ADC candidates per query: ADC ASC, vec_id ASC, then
-    L2 ASC, neighbor_id ASC.
+    (the left fold over subspaces of lut[s][codes[s]] from 0.0, the
+    oracle's addition order), then ``_rerank`` of the top ``refine``
+    ADC candidates per query: ADC ASC, vec_id ASC, then L2 ASC,
+    neighbor_id ASC.
 
     With the trainer's ``local`` (vec_id, mat, lists, codes) arrays and
-    candidates that fit (``_driver_tail``) the scan and the rerank run
-    in numpy on the driver. Otherwise the scan
-    carries (query_id, vec_id, adc) only — no embedding bytes
-    through the per-query window shuffle; full vectors are read again
-    just for the ≤refine·Q finalists. With ``prune_lists`` the probed
-    list_ids are also applied as a LITERAL filter: against a
-    ``list_id``-partitioned codes table this prunes unprobed partitions
-    at the SCAN (the persisted-index serving path), whereas the
-    broadcast join alone would read all codes."""
+    candidates that fit (``_driver_tail``) the scan runs over them on
+    the driver with no job. Otherwise one mapInArrow job scans the
+    ``CODES_DDL`` rows per Arrow batch (``_partition_top``): no
+    embedding bytes are read by the scan. The rerank reads ``local``
+    when the trainer collected the corpus, else one collect of the
+    ≤refine·Q shortlisted rows and the query rows: a left-semi join of
+    the corpus against a ``local_frame`` of their vec_ids. With
+    ``prune_lists`` the probed list_ids are also applied as a LITERAL
+    filter: against a ``list_id``-partitioned codes table this prunes
+    unprobed partitions at the SCAN (the persisted-index serving
+    path)."""
     spark = embeddings.sparkSession
     q_rows = _query_rows(embeddings, n_queries, local)
     if cents:
         pairs = _probe_pairs(q_rows, cents, nprobe)
     else:
         pairs = [(qid, 0, vec) for qid, vec in q_rows]
-    qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), cb.shape[0] * cb.shape[2])
+    m = cb.shape[0]
+    qv = np.array([vec for _, _, vec in pairs], dtype=np.float64).reshape(len(pairs), m * cb.shape[2])
     if residual:
         cmap = {lid: np.asarray(v, dtype=np.float64) for lid, v in cents}
         qv = qv - np.array([cmap[lid] for _, lid, _ in pairs]).reshape(qv.shape)
     luts = _adc_luts(qv, cb)
-    if _driver_tail(spark, local, pairs):
-        vec_id, mat, _, codes = local
 
+    def scan(vec_id, lists, codes):
         def adc_of(p, rows):
-            # the Spark scan's left fold over subspaces, from 0.0
             adc = np.zeros(len(rows))
-            for s in range(cb.shape[0]):
+            for s in range(m):
                 adc = adc + luts[p, s, codes[rows, s]]
             return adc
 
-        qids, ids, adc = _scan_lists(local, pairs, adc_of)
-        short_q, _, short_id = _ranked(qids, ids, refine, adc)
-        # rerank: every row of each shortlisted vec_id against every
-        # query row of its query_id, as the Spark joins on vec_id and
-        # query_id pair them
-        i, rows = _matches(vec_id, short_id)
-        j, q_at = _matches(vec_id, short_q[i])
-        rows, qids = rows[j], short_q[i][j]
-        l2 = l2_fold_np(mat[rows], mat[q_at])
-        return _topk_frame(spark, *_ranked(qids, vec_id[rows], k, l2))
-    if coded is None:  # the trainer collected the corpus, but not its candidates
-        coded = _local_codes(spark, local)
-    lut_rows = [(qid, lid, lut) for (qid, lid, _), lut in zip(pairs, luts.tolist())]
-    probes = local_frame(spark, lut_rows, "query_id long, list_id int, lut array<array<double>>")
-    qemb = local_frame(
-        spark,
-        [(qid, [float(v) for v in vec]) for qid, vec in q_rows],
-        "query_id long, q_emb array<double>",
-    )
-    if prune_lists:
-        coded = coded.where(F.col("list_id").isin(sorted({lid for _, lid, _ in pairs})))
-    # ADC: left-fold sum over subspaces of lut[s][codes[s]] — the float
-    # addition order matches the oracle's list_reduce
-    adc = F.lit(0.0)
-    for s in range(cb.shape[0]):
-        adc = adc + F.element_at(F.element_at(F.col("lut"), s + 1), F.col("codes").getItem(s) + 1)
-    # each vector lives in exactly one list and probes are distinct per
-    # (query, list), so the join yields each (query, vec) at most once
-    scored = (
-        coded.join(probes, "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", adc.alias("adc"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id").asc())
-    shortlist = (
-        scored.withColumn("r1", F.row_number().over(w1))
-        .where(F.col("r1") <= refine)
-        .select("query_id", "vec_id")
-    )
-    exact = (
-        embeddings.select("vec_id", "embedding")
-        .join(F.broadcast(shortlist), "vec_id")
-        .join(qemb, "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_fold_col(F.col("embedding"), F.col("q_emb")).alias("l2"),
+        return _scan_lists(vec_id, lists, pairs, adc_of)
+
+    def scan_batch(batch):
+        codes = batch.column("codes").flatten().to_numpy().reshape(batch.num_rows, m)
+        return scan(batch.column("vec_id").to_numpy(), batch.column("list_id").to_numpy(), codes)
+
+    if _driver_tail(spark, local, pairs):
+        qids, ids, adc = scan(local[0], *local[2:])
+    else:
+        if coded is None:  # the trainer collected the corpus, but not its candidates
+            coded = _local_codes(spark, local)
+        if prune_lists:
+            coded = coded.where(F.col("list_id").isin(sorted({lid for _, lid, _ in pairs})))
+        qids, ids, adc = _partition_top(coded, scan_batch, refine, lambda d: (d,))
+    short_q, _, short_id = _ranked(qids, ids, refine, adc)
+    if local is not None:
+        vec_id, mat = local[:2]
+    else:
+        want = pa.table([np.union1d(short_id, short_q)], names=["vec_id"])
+        rows = embeddings.select("vec_id", "embedding").join(
+            local_frame(spark, want, "vec_id long"), "vec_id", "left_semi"
         )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("l2").asc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-        )
-    )
+        vec_id, mat = _as_matrix(rows.toArrow())
+    return _topk_frame(spark, *_rerank(vec_id, mat, short_q, short_id, k))
 
 
 def pq_topk(
@@ -894,16 +874,17 @@ def pq_topk(
     codebook), exact-L2 rerank of the top ``refine`` ADC candidates.
 
     The 100-TB shape: vectors compress dim·4 bytes → M bytes (here
-    64·4→4, a 64× memory cut), ADC scoring touches only codes + a
-    broadcast (n_queries, M, K) LUT — no embedding bytes move for the
-    scan phase; only the ``refine`` finalists per query read their full
-    vectors. Codebook training is deterministically reproducible (see
-    ``_train_index``), so the DuckDB oracle retrains from scratch and
-    must agree bit-for-bit; every ordering tie-breaks on vec_id.
+    64·4→4, a 64× memory cut), ADC scoring touches only codes + the
+    (n_queries, M, K) LUTs shipped with the scan — no embedding bytes
+    move for the scan phase; only the ``refine`` finalists per query
+    read their full vectors. Codebook training is deterministically
+    reproducible (see ``_train_index``), so the DuckDB oracle retrains
+    from scratch and must agree bit-for-bit; every ordering tie-breaks
+    on vec_id.
 
     This is ``ivf_pq_topk`` with one list and no coarse centroid: every
     code is in list 0 and every query probes it, so the scan is the
-    same broadcast hash join on list_id, over the whole corpus.
+    same ``_adc_topk`` scan, over the whole corpus.
     """
     _, cb, coded, local = _train_index(embeddings, 0, 0, m, kc, False, dim)
     return _adc_topk(embeddings, [], cb, coded, local, k, n_queries, 1, refine, False)
@@ -928,12 +909,12 @@ def ivf_pq_topk(
     all N codes — then the shared exact-L2 rerank of the top ``refine``
     ADC candidates per query.
 
-    Plan shape at 100 TB: corpus never shuffles (assignment and PQ
-    encoding are row-local over the frozen centroids/codebooks); the
-    probe table (n_queries·nprobe rows) broadcast-joins on list_id; the
-    only wide exchange is the per-query top-``refine`` window over
-    code-only rows of the probed fraction. Memory per candidate row is
-    M ints, a dim·8/M compression of the brute scan.
+    Plan shape at 100 TB: nothing shuffles (assignment and PQ encoding
+    are row-local over the frozen centroids/codebooks); the ADC scan
+    of the probed fraction's code-only rows is one map-only job whose
+    tasks return their top ``refine`` per query, and the rerank reads
+    the ≤refine·Q finalists' vectors. Memory per candidate row is M
+    ints, a dim·8/M compression of the brute scan.
 
     With ``residual=True`` (the textbook FAISS IVFPQ and the gated
     configuration) the coarse quantizer gets one Lloyd step, and the PQ
@@ -953,7 +934,7 @@ def ivf_pq_topk(
     ENTIRE composed index from scratch and must agree bit-for-bit. On
     the driver the query answers in numpy from the collected corpus
     too when its candidates fit as well, so the call runs one Spark
-    job; otherwise the scan and rerank are the Spark plan above.
+    job; otherwise the same scan runs per partition (``_adc_topk``).
     """
     cents, cb, coded, local = _train_index(embeddings, nlist, int(residual), m, kc, residual, dim)
     return _adc_topk(embeddings, cents, cb, coded, local, k, n_queries, nprobe, refine, residual)

@@ -176,12 +176,12 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     under it ``dup_components`` returns its whole result as one
     ``local_frame``), ``similarity._train_index`` (one ``mapInArrow``
     job per Lloyd pass, a stride-row collect for ``ivf_topk``, and the
-    ANN query tails as Spark joins and windows; under it both query
-    tails answer in numpy from the collected corpus when their
-    candidates fit too; a loaded cached corpus whose ``cache_rows``
-    are over skips the collect) and ``pbf.write_blocks`` (one row per
-    entity, and the collected table's Arrow bytes against the threshold
-    too, as its tags and refs are arrays; the aggregate, the shuffle
+    ANN query tails' scan per Arrow batch in one ``mapInArrow`` job;
+    under it both query tails scan the collected corpus on the driver
+    when their candidates fit too; a loaded cached corpus whose
+    ``cache_rows`` are over skips the collect) and ``pbf.write_blocks``
+    (one row per entity, and the collected table's Arrow bytes against
+    the threshold too, as its tags and refs are arrays; the aggregate, the shuffle
     into id-range buckets and one ``mapInArrow`` encode per task; three
     loaded caches are sized by ``known_bytes`` and encoded from their
     ``resident`` copies, or sent to the cluster path, with no collect).
@@ -190,7 +190,7 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     executor-side accumulation), the driver-built closure in
     ``relation_closure_table`` (a SHUFFLE_HASH hint) and
     ``similarity._driver_tail`` (the rows of the probed lists, one per
-    candidate; the Spark query tails).
+    candidate; the same scan per partition, ``_partition_top``).
     """
     threshold = broadcast_threshold(df.sparkSession)
     if threshold <= 0:

@@ -60,6 +60,23 @@ def loaded(df):
 _job_groups = itertools.count()
 
 
+def plans_during(spark, fn):
+    """``fn()``, and the physical plans of the SQL executions it ran, by
+    execution id: the store keeps only the last
+    ``spark.sql.ui.retainedExecutions`` (1000), so once a session has run
+    more, list positions no longer mark the executions of ``fn``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        execs = store.executionsList()  # ascending execution ids
+        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+    first = last_id() + 1
+    out = fn()
+    found = (store.execution(i) for i in range(first, last_id() + 1))
+    return out, [e.get().physicalPlanDescription() for e in found if e.isDefined()]
+
+
 def spark_jobs(spark, fn):
     """(``fn()``, the number of Spark jobs it ran), counted as the job
     ids of a job group set around the call."""

@@ -111,7 +111,7 @@ def test_driver_path_equals_spark_chain(spark, docs_xs, meta_xs, monkeypatch):
     cases = ((xs, boxes), (xs, [tuple(meta_xs["bboxes"]["empty"])]), (hand, hand_boxes))
     for entities, batch in cases:
         # filters that keep every row: no cache left by another test matches them
-        uncached = [f.where(F.col("id").isNotNull()) for f in entities[:2]] + [entities[2]]
+        uncached = [f.where(F.col("id").isNotNull()) for f in entities]
         driver, chain = both_paths(spark, lambda: bbox_extract_batch(*uncached, batch))
         assert _is_local(driver) and not _is_local(chain)
         assert _rows(driver) == _rows(chain)

@@ -121,11 +121,15 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
     """Every index-based ANN operator returns the same rows whether its
     index trains and its query runs on the driver or per partition
     (threshold -1), and build_ivf_pq_index writes bit-equal centroids,
-    codebooks and codes. Three corpora:
+    codebooks and codes. Arrow batches hold 64 rows, so a query's
+    partition scan merges its running top over several batches a task.
+    Four corpora:
 
     * 500 × 64 clustered (the perfbench corpus shape). Stride rows 0 and
       31 are equal, so coarse list 1 and PQ code 1 get no members: the
       list is dropped and the code keeps its init value, on both paths.
+    * the same in one partition: one task holds every candidate, so its
+      top k (or refine) per query is the answer.
     * the same with a second row for query 3 and for corpus vec_id 250,
       the latter a copy of query 3's vector: every join on vec_id or
       query_id meets both rows, and 250 is query 3's nearest neighbor.
@@ -178,21 +182,28 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
             "ivf_pq_topk residual": lambda: _rows(ivf_pq_topk(e, residual=True, **ivf)),
         }
 
-    for corpus, e, ivf in (
-        ("clustered", emb, {}),
-        ("repeated", repeated, {}),
-        ("sparse", sparse, {"nlist": 3, "nprobe": 1}),
-    ):
-        for name, fn in operators(e, **ivf).items():
-            kernel, loop = both_paths(spark, fn)
-            assert kernel == loop, (corpus, name)
-            per_query = Counter(q for q, _, _ in kernel)
-            if corpus == "clustered":
-                assert len(kernel) == 100, name
-            if corpus == "repeated":
-                assert (3, 1, 250) in kernel, name
-            if corpus == "sparse" and name != "pq_topk":
-                assert [per_query[q] for q in range(10)] == [4] * 5 + [10] * 5, name
+    batch_rows = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(batch_rows)
+    spark.conf.set(batch_rows, "64")
+    try:
+        for corpus, e, ivf in (
+            ("clustered", emb, {}),
+            ("one task", emb.coalesce(1), {}),
+            ("repeated", repeated, {}),
+            ("sparse", sparse, {"nlist": 3, "nprobe": 1}),
+        ):
+            for name, fn in operators(e, **ivf).items():
+                kernel, loop = both_paths(spark, fn)
+                assert kernel == loop, (corpus, name)
+                per_query = Counter(q for q, _, _ in kernel)
+                if corpus in ("clustered", "one task"):
+                    assert len(kernel) == 100, name
+                if corpus == "repeated":
+                    assert (3, 1, 250) in kernel, name
+                if corpus == "sparse" and name != "pq_topk":
+                    assert [per_query[q] for q in range(10)] == [4] * 5 + [10] * 5, name
+    finally:
+        spark.conf.set(batch_rows, saved)
 
     kernel, loop = both_paths(spark, build)
     assert kernel == loop
@@ -200,16 +211,20 @@ def test_ivf_pq_training_both_paths(spark, tmp_path):
     assert len(kernel[1]["codes"]) == 500
 
 
-def test_ann_candidate_bound_falls_back(spark):
+def test_ann_candidate_bound_falls_back(spark, monkeypatch):
     """A corpus under the threshold whose probed lists hold more
-    candidates than fit runs the Spark query tail, with the rows of
+    candidates than fit runs the partition scan, with the rows of
     threshold -1: with one list, every query scans the whole corpus."""
+    import osm_lib_spark.operators.similarity as similarity
     from osm_lib_spark.operators.similarity import (
         ivf_kmeans_topk,
         ivf_pq_topk,
         ivf_topk,
         pq_topk,
     )
+
+    scans, real = [], similarity._partition_top
+    monkeypatch.setattr(similarity, "_partition_top", lambda *a: scans.append(a[2]) or real(*a))
 
     rng = np.random.default_rng(3)
     emb = spark.createDataFrame(
@@ -228,9 +243,9 @@ def test_ann_candidate_bound_falls_back(spark):
         # 200 rows at 4104 B (dim unknown: 1024 floats) = 821 kB fit;
         # 150 queries × 200 candidates × 32 B = 960 kB do not
         with threshold(spark, "900000"):
-            got = fn()
-            assert "Window" in got._jdf.queryExecution().analyzed().toString(), name
-            got = _rows(got)
+            scans.clear()
+            got = _rows(fn())
+            assert len(scans) == 1, name
         with threshold(spark, "-1"):
             assert got == _rows(fn()), name
         assert len(got) == 1500, name

@@ -20,9 +20,13 @@ def _budget(spark, fn):
 def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
     """Each index ANN operator with its collect runs ≤ 2 jobs (the
     bounded collect of the corpus; the query answers in numpy; 5-8
-    jobs when the query ran as Spark joins), ``ivf_topk`` over the
-    corpus switch ≤ 5 (a loaded cache known to be over skips the
-    bounded collect; it ran 6 with it spent), MinHash components with a
+    jobs when the query ran as Spark joins) and, at threshold -1, 3
+    (``ivf_topk``), 4 (``ivf_kmeans_topk``), 7 (``pq_topk`` and
+    ``ivf_pq_topk``) and 8 (residual ``ivf_pq_topk``), where the Spark
+    joins and windows ran 6, 7, 10, 10 and 11; ``ivf_topk`` over the
+    corpus switch ≤ 3 (a loaded cache known to be over skips the
+    bounded collect, then the stride and query-row collects and the
+    partition scan; the Spark tail ran 5), MinHash components with a
     digest ≤ 3 (the shingle collect, then the aggregate's two jobs over
     the result's LocalRelation; a join to ``documents`` adds one),
     ``prepare_extract_context`` ≤ 3 (the member indexes' bounded
@@ -53,10 +57,14 @@ def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
     }
     jobs = {name: _budget(spark, fn) for name, fn in operators.items()}
     assert all(n <= 2 for n in jobs.values()), jobs
+    with threshold(spark, "-1"):
+        jobs = {name: _budget(spark, fn) for name, fn in operators.items()}
+    budgets = {"ivf_topk": 3, "ivf_kmeans_topk": 4, "pq_topk": 7, "ivf_pq_topk": 7, "ivf_pq_topk residual": 8}
+    assert all(jobs[name] <= n for name, n in budgets.items()), jobs
     # over the corpus switch (200 rows at 4104 B, no dim given, > 10 KiB)
     # the cache's row count says so: only the stride rows are collected
     with threshold(spark, "10240"):
-        assert _budget(spark, operators["ivf_topk"]) <= 5
+        assert _budget(spark, operators["ivf_topk"]) <= 3
 
     dup = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(

@@ -21,7 +21,7 @@ from osm_lib_spark.operators.indexes import build_way_tiles, write_way_tiles_par
 from osm_lib_spark.operators.raster import rasterize_nodes, vectorize_raster
 from osm_lib_spark.session import row_bytes
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
-from tests.conftest import golden, threshold
+from tests.conftest import golden, plans_during, threshold
 
 
 def _explain_str(df) -> str:
@@ -117,7 +117,7 @@ def test_extract_batch_single_broadcast_of_bboxes(spark, docs_xs, meta_xs):
         with threshold(spark, value):
             ctx = prepare_extract_context(rels)
             assert (ctx.arrays is not None) == (join == "BroadcastHashJoin")
-            plan, checkpoints = _plans_during(
+            plan, checkpoints = plans_during(
                 spark, lambda: _explain_str(bbox_extract_batch(nodes, ways, rels, boxes, ctx=ctx))
             )
         assert any("BroadcastNestedLoopJoin" in p for p in checkpoints)
@@ -194,33 +194,17 @@ def test_new_operator_joins_are_hash_joins(spark, docs_xs):
     assert not bad.search(plan)
 
 
-def _plans_during(spark, fn):
-    """``fn()``, and the physical plans of the SQL executions it ran, by
-    execution id: the store keeps only the last
-    ``spark.sql.ui.retainedExecutions`` (1000), so once a session has run
-    more, list positions no longer mark the executions of ``fn``."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def last_id() -> int:
-        execs = store.executionsList()  # ascending execution ids
-        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
-
-    first = last_id() + 1
-    out = fn()
-    found = (store.execution(i) for i in range(first, last_id() + 1))
-    return out, [e.get().physicalPlanDescription() for e in found if e.isDefined()]
-
-
 def test_local_frames_broadcast_without_hints(spark, docs_xs, monkeypatch):
-    """The kNN strip join and the residual IVF-PQ and PQ probe joins
+    """The kNN strip join and the residual IVF-PQ and PQ rerank collects
     carry no broadcast hint: their driver-built side is a local_frame
     whose stats let the planner broadcast it. None plans a sort-merge
     join, a nested-loop join or a cartesian product. At the 10 KiB
     threshold the kNN query's candidate nodes (40 B a row) are over, so
     its one driver round is spent and its rounds run as strip joins.
     The corpus (200 rows of 16 floats, 72 B a row at its given dim:
-    14.4 kB) is over it too, so the ANN queries take the Spark scan,
-    not the driver tail; their LUT and probe frames are under it."""
+    14.4 kB) is over it too, so the ANN queries scan per partition and
+    collect their shortlisted rows through a left-semi join against a
+    local_frame of ≤ 3·50 + 3 vec_ids, under it."""
     import re
 
     import numpy as np
@@ -244,21 +228,21 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs, monkeypatch):
     tried, real = [], knn._driver_round
     monkeypatch.setattr(knn, "_driver_round", lambda *a: tried.append(real(*a)) or tried[-1])
     try:
-        rows, plans = _plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
-        tops = [
-            ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, dim=16, residual=True),
-            pq_topk(emb, k=3, n_queries=3, m=4, kc=4, dim=16),
-        ]
-        scans = [(_explain_str(top), top.count()) for top in tops]
+        rows, plans = plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
+        tops = {
+            "ivf_pq_topk": lambda: ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, dim=16, residual=True),
+            "pq_topk": lambda: pq_topk(emb, k=3, n_queries=3, m=4, kc=4, dim=16),
+        }
+        scans = {name: plans_during(spark, lambda: top().count()) for name, top in tops.items()}
     finally:
         spark.conf.set(key, saved)
     assert len(rows) == 5 and tried == [None]
     assert any("BroadcastHashJoin" in p for p in plans)
     assert not any(bad.search(p) for p in plans)
-    for plan, n_top in scans:
-        assert set(re.findall(r"\b\w+Join\b", plan)) == {"BroadcastHashJoin"}
-        assert not bad.search(plan)
-        assert n_top == 9
+    for name, (n_top, ann_plans) in scans.items():
+        assert n_top == 9, name
+        assert any(re.search(r"BroadcastHashJoin .*LeftSemi", p) for p in ann_plans), name
+        assert not any(bad.search(p) for p in ann_plans), name
 
 
 def test_driver_rows_go_through_local_frame():
@@ -348,7 +332,6 @@ CHECKPOINT_AND_HINT_SITES = {
     ("operators/extract.py", "relation_closure_table", "localCheckpoint"): 1,
     ("operators/knn.py", "knn_kring", "localCheckpoint"): 1,
     ("operators/pip.py", "_rings_on_rows", "hint"): 1,
-    ("operators/similarity.py", "_adc_topk", "broadcast"): 1,
     ("operators/similarity.py", "_train_index", "localCheckpoint"): 1,
     ("operators/similarity.py", "cosine_topk", "broadcast"): 1,
     ("streaming/replication.py", "apply_plan", "localCheckpoint"): 1,

@@ -743,12 +743,24 @@ def test_ivf_pq_persisted_index_train_once_query_many(tiny_embeddings, tmp_path)
     assert served1 == direct
     assert served1 == served2
 
-    # the codes table is hive-partitioned by coarse list (partition
-    # pruning is the serving-scan contract)
+    # the codes table is hive-partitioned by coarse list, and the served
+    # scan reads only the probed lists' partitions (partition pruning
+    # is the serving-scan contract): one query probing one list reads
+    # one of the two non-empty lists
     import os as _os
+    import re
+
+    from tests.conftest import plans_during
 
     parts = [d for d in _os.listdir(_os.path.join(idx, "codes")) if d.startswith("list_id=")]
     assert len(parts) >= 1
+    _, plans = plans_during(
+        tiny_embeddings.sparkSession,
+        lambda: ivf_pq_topk_from_index(tiny_embeddings, idx, k=3, n_queries=1, nprobe=1).collect(),
+    )
+    pruned = [re.search(r"PartitionFilters: \[[^\]]*list_id#\d+ (?:IN \(|= )([\d, ]+)", p) for p in plans]
+    probed = {int(x) for m in pruned if m for x in m.group(1).split(",")}
+    assert len(probed) == 1 < len(parts), plans
 
 
 def test_minhash_index_batch_vs_corpus(tiny_docs, tmp_path, spark):
