@@ -14,8 +14,9 @@ plus a one-line JSON summary on stdout. `--points` may also name a
 CSV file with a `lat,lon` header — the serving-batch shape.
 
 Engine strategy is automatic: small batches start near their
-density-derived terminal ring radius, large batches rely on the
-coarse-cell rounds (operators/knn.py docstrings).
+density-derived terminal ring radius, and every round ranks each
+query's ring with one numpy kernel, per partition of the node store
+(operators/knn.py docstrings).
 """
 
 from __future__ import annotations

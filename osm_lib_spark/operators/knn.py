@@ -14,37 +14,28 @@ Two strategies, both exact:
   discipline as the relation closure in operators/extract) — never a
   per-query Spark job. Ring radii double per round, so a query that
   terminates at radius R has scanned ≤ 4/3 · (2R+1)² tiles total
-  (geometric series). Where a round runs and where its results
-  accumulate follow the size rule of every driver-or-cluster choice in
-  the engine (``session.collect_bounded``), in three modes:
+  (geometric series). Every round ranks with one numpy kernel
+  (``_rank_rings``: the oracle's haversine, ties by node id); where it
+  runs and where the results accumulate follow the size rule of every
+  driver-or-cluster choice in the engine (k·Q result rows at 32 B
+  against ``spark.sql.autoBroadcastJoinThreshold``: ~210k queries at
+  k=10 and the 64 MiB session default), in three modes:
 
-  1. *Driver rounds* — while the k·Q result rows fit under
-     ``spark.sql.autoBroadcastJoinThreshold`` (32 B a row as Spark
-     sizes it: ~210k queries at k=10 and the 64 MiB session default)
-     and the round's candidate nodes fit too (40 B a tiled-store row:
-     1.68M), numpy ranks each ring of a strip round
-     (``_driver_round``). A cached ``tiled`` store held by
-     ``session.resident`` is ranked as it is, and a call runs no job;
-     else a round is one bounded collect of the store rows in the
-     frontier's rings. That filter is the OR of the rings' windows
-     while there are at most ``RING_WINDOWS_MAX``, else an InSet of
-     their tile keys while there are at most ``RING_KEYS_MAX``; past
-     both, that round runs in Spark with nothing spent
-     (``_ring_predicate``). The result is a LocalRelation.
-  2. *Spark rounds, driver accumulation* — the first round whose
-     candidates are over (that collect is spent), every later round of
-     the call, and the coarse-cell rounds: each round broadcasts a
-     (query_id, xtile-strip) table (or coarse cells) and hash-joins it
-     against the tile-keyed node store, so per-node cost is one hash
-     probe regardless of frontier size and never a broadcast-nested-
-     loop over range predicates; a window ranks each query, and the
-     round's top-k rows come to the driver as one Arrow table.
-  3. *Executor accumulation* — past the results' bound every result
-     slice stays persisted ON THE EXECUTORS: the driver exchanges only
-     Q control rows per round (stats up, satisfied ids down) and the
-     returned DataFrame is the union of the cached round frames, so an
-     offline Q=10⁶ batch never funnels k·Q result rows through one
-     process.
+  1. *Driver rounds* — a cached ``tiled`` store held by
+     ``session.resident`` is ranked as it is on the driver, and a call
+     runs no job.
+  2. *Partition rounds, driver accumulation* — otherwise, while the
+     results fit, a round is one Arrow UDF job over the store rows in
+     the frontier's bounding box (and rings, ``_ring_predicate``):
+     each task ranks its rows once and keeps k rows a query
+     (``_partition_round``), and the driver merges the tasks' tops.
+     The result is a LocalRelation.
+  3. *Executor accumulation* — past the results' bound the tasks' tops
+     are ranked by a window and every result slice stays persisted ON
+     THE EXECUTORS: the driver exchanges only Q control rows per round
+     (stats up, satisfied ids down) and the returned DataFrame is the
+     union of the cached round frames, so an offline Q=10⁶ batch never
+     funnels k·Q result rows through one process.
 
 Exactness guard: a query stops expanding only when it has k hits AND
 its k-th distance is ≤ a proven LOWER bound on the distance to any
@@ -56,22 +47,24 @@ a meridian lies poleward), which at large radii/high latitudes could
 stop the loop while a closer node exists outside the ring.
 
 At 100 TB the node store is the Hilbert-range-partitioned table built
-by operators/indexes (one tile ↦ one partition range), so the strip
-hash-join's build side is the broadcast and the probe side streams
-straight off the columnar scan; storage-level pruning comes from the
+by operators/indexes (one tile ↦ one partition range): a partition
+round streams straight off the columnar scan, the frontier's arrays
+ride the task closure, and storage-level pruning comes from the
 frontier's global tile bounding box pushed down as a min/max predicate.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Iterator, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_lib_spark.functions.geo import EARTH_RADIUS_M, from_fixed, haversine_m, np_haversine_m
-from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y
-from osm_lib_spark.session import broadcast_threshold, collect_bounded, local_frame, resident, row_bytes
+from osm_lib_spark.functions.tiles import NTILES, np_tile_bbox, np_tile_x, np_tile_y, tile_y_col
+from osm_lib_spark.operators.similarity import _top
+from osm_lib_spark.session import broadcast_threshold, local_frame, resident, row_bytes
 
 import numpy as np
 import pyarrow as pa
@@ -88,10 +81,12 @@ def _nodes_with_coords(nodes: DataFrame) -> DataFrame:
 
 def _ranked(cand: DataFrame, k: int) -> DataFrame:
     """Per-query top-k of (query_id, node_id, dist_m) candidates by
-    (distance, node_id), ranked from 1: ties broken by id."""
+    (distance, node_id), ranked from 1: ties broken by id. A candidate
+    without a distance (a node without coordinates) is no neighbour."""
     w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("node_id").asc())
     return (
-        cand.withColumn("rank", F.row_number().over(w))
+        cand.where(F.col("dist_m").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", F.col("rank").cast("int").alias("rank"), "node_id", "dist_m")
     )
@@ -169,61 +164,21 @@ def _min_dist_beyond_ring(qlat: float, qlon: float, qx: int, qy: int, radius: in
     return min(bounds)
 
 
-def _frontier_strips(spark, frontier: list[dict]) -> DataFrame:
-    """Frontier → one row per (query, xtile column in its ring).
-
-    The strip table is the broadcast build side of a HASH join on
-    xtile (wrap-aware via modulo), carrying the query's y-range and
-    coordinates; per-node probe cost is O(1) in the frontier size.
-    """
-    rows = []
-    for f in frontier:
-        r = f["radius"]
-        if 2 * r + 1 >= NTILES:
-            xs = range(NTILES)
-        else:
-            xs = ((f["qx"] + dx) % NTILES for dx in range(-r, r + 1))
-        ymin = max(f["qy"] - r, 0)
-        ymax = min(f["qy"] + r, NTILES - 1)
-        for x in xs:
-            rows.append((f["query_id"], int(x), ymin, ymax, f["qlat"], f["qlon"]))
-    return local_frame(
-        spark, rows, "query_id int, xtile int, ymin int, ymax int, qlat double, qlon double"
-    )
-
-
-def _strip_candidates(spark, probe: DataFrame, frontier: list[dict]) -> DataFrame:
-    """(query_id, node_id, dist_m) of every node in each frontier
-    query's ring: the tile-keyed store hash-joins the broadcast strip
-    table on xtile, then keeps the strip's y-range."""
-    return (
-        probe.join(_frontier_strips(spark, frontier), "xtile")
-        .where(F.col("ytile").between(F.col("ymin"), F.col("ymax")))
-        .select(
-            "query_id",
-            "node_id",
-            haversine_m(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")).alias(
-                "dist_m"
-            ),
-        )
-    )
-
-
 def _ring_window(f: dict) -> tuple[int, int, int]:
     """A frontier query's ring as (x0, y0, y1): its tiles have
-    pmod(xtile - x0, NTILES) ≤ 2·radius (wrap-aware, as in
-    ``_coarse_cell_candidates``) and y0 ≤ ytile ≤ y1."""
+    pmod(xtile - x0, NTILES) ≤ 2·radius (wrap-aware) and
+    y0 ≤ ytile ≤ y1."""
     r = f["radius"]
     return f["qx"] - r, max(f["qy"] - r, 0), min(f["qy"] + r, NTILES - 1)
 
 
 STORE_COLUMNS = ["node_id", "lat", "lon", "xtile", "ytile"]
 
-# a driver round's predicate: the OR of the ring windows while they
-# are few (on sf-m nodes 32 windows cost what an InSet does, 64 fell
-# out of whole-stage codegen and cost 12x), else an InSet of the rings'
-# tile keys while they are at most this many (parsing the list costs
-# ~0.06 ms a key); past both the round runs in Spark
+# a partition round's ring filter: the OR of the ring windows while
+# they are few (on sf-m nodes 32 windows cost what an InSet does, 64
+# fell out of whole-stage codegen and cost 12x), else an InSet of the
+# rings' tile keys while they are at most this many (parsing the list
+# costs ~0.06 ms a key); past both the round reads the bounding box
 RING_WINDOWS_MAX = 32
 RING_KEYS_MAX = 16384
 
@@ -256,139 +211,129 @@ def _ring_predicate(frontier: list[dict]) -> str | None:
     return f"xtile * {NTILES} + ytile IN ({','.join(map(str, keys))})"
 
 
-def _driver_round(
-    candidates: DataFrame | pa.Table, frontier: list[dict], k: int
-) -> tuple[pa.Table, dict[int, tuple[int, float]]] | None:
-    """One strip round on the driver: numpy ranks each query's ring by
-    (distance, node_id) with the oracle's haversine. ``candidates`` is
-    the resident tiled store (``session.resident``: no job), or the
-    store rows in the frontier's rings (the store filtered by
-    ``_ring_predicate``), which come back in one bounded collect (40 B
-    a row, ``session.collect_bounded``). → (the round's top table, as
-    ``_ranked`` gives it, and per-query (rows, k-th distance) stats), or
-    ``None`` when the collected candidates are over the bound."""
-    if isinstance(candidates, DataFrame):
-        candidates = collect_bounded(candidates.select(*STORE_COLUMNS))
-        if candidates is None:
-            return None
-    # a null tile or coordinate is in no ring, as in Spark
-    node_id, lat, lon, xtile, ytile = (c.to_numpy() for c in candidates.select(STORE_COLUMNS).drop_null().columns)
-    # a ring is one slice per tile column of the rows sorted by tile key
-    key = xtile.astype(np.int64) * NTILES + ytile
-    order = np.argsort(key, kind="stable")
-    key = key[order]
-    qids, ranks, picks, dists, stats = [], [], [], [], {}
-    for f in frontier:
-        x0, y0, y1 = _ring_window(f)
-        columns = (x0 + np.arange(min(2 * f["radius"] + 1, NTILES))) % NTILES * NTILES
-        lo, hi = np.searchsorted(key, columns + y0, "left"), np.searchsorted(key, columns + y1, "right")
-        n = hi - lo
-        ii = order[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
-        dist = np_haversine_m(f["qlat"], f["qlon"], lat[ii], lon[ii])
-        top = np.lexsort((node_id[ii], dist))[:k]
-        if len(top):
-            stats[f["query_id"]] = (len(top), float(dist[top[-1]]))
-        qids.append(np.full(len(top), f["query_id"], dtype=np.int32))
-        ranks.append(np.arange(1, len(top) + 1, dtype=np.int32))
-        picks.append(ii[top])
-        dists.append(dist[top])
-    top = pa.table(
-        {
-            "query_id": np.concatenate(qids),
-            "rank": np.concatenate(ranks),
-            "node_id": node_id[np.concatenate(picks)],
-            "dist_m": np.concatenate(dists),
-        }
-    )
-    return top, stats
+def _ring_rows(coords: DataFrame, frontier: list[dict]) -> DataFrame:
+    """The store rows a partition round reads: the frontier's global
+    tile bounding box as PLAIN column predicates, which push down to
+    parquet row-group stats and in-memory batch pruning (skipped when
+    any ring wraps the antimeridian), ANDed with the rings' own filter
+    while ``_ring_predicate`` offers one."""
+    probe = coords
+    if all(2 * f["radius"] + 1 < NTILES and f["qx"] - f["radius"] >= 0
+           and f["qx"] + f["radius"] < NTILES for f in frontier):
+        gx0 = min(f["qx"] - f["radius"] for f in frontier)
+        gx1 = max(f["qx"] + f["radius"] for f in frontier)
+        gy0 = min(max(f["qy"] - f["radius"], 0) for f in frontier)
+        gy1 = max(min(f["qy"] + f["radius"], NTILES - 1) for f in frontier)
+        probe = coords.where(F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1))
+    if (predicate := _ring_predicate(frontier)) is not None:
+        probe = probe.where(F.expr(predicate))
+    return probe
 
 
-STRIP_SWITCH_ROWS = 8192  # strip rows above which a round joins on coarse cells
 # batches above this many queries cache an ad-hoc tiled projection
 CACHE_MIN_QUERIES = 1024
 # one round's top-k row as the driver collects it
 RANKED_DDL = "query_id int, rank int, node_id long, dist_m double"
+# a partition round's value for each store row: the queries whose first
+# k of its task's rows it is among
+TOPS_TYPE = "array<struct<query_id:int,dist_m:double>>"
+# candidate rows ``_rank_rings`` ranks at once (whole queries, ~120 B
+# of numpy temporaries a row): a wide frontier never holds all its
+# rings' rows together
+RANK_CHUNK_ROWS = 1 << 20
 
 
-def _coarse_cell_candidates(spark, probe: DataFrame, frontier: list[dict]) -> DataFrame:
-    """Large-Q/large-ring rounds: the per-(query, xtile-column) strip
-    table grows as Q·(2r+1) rows; thousands of queries with wide rings
-    bloat the broadcast. Instead, cover each ring with ancestor cells in
-    the functions/cells layout at a per-query zoom where the ring spans
-    ≤3 cells per axis — ≤9 build rows per query REGARDLESS of radius —
-    and equi-join nodes on their (exploded, one per distinct zoom this
-    round) ancestor cell.
+def _sorted_store(table: pa.Table) -> tuple[np.ndarray, ...]:
+    """(tile key, node_id, lat, lon, row) arrays of a tiled-store
+    table's rows, sorted by tile key ``xtile * NTILES + ytile`` so a
+    ring is one slice per tile column; ``row`` is each one's position in
+    ``table``. A row with a null column is in no ring."""
+    valid = np.all([c.is_valid().to_numpy(zero_copy_only=False) for c in table.select(STORE_COLUMNS).columns], axis=0)
+    row = np.flatnonzero(valid)
+    node_id, lat, lon, xtile, ytile = (c.to_numpy() for c in table.select(STORE_COLUMNS).filter(valid).columns)
+    key = xtile.astype(np.int64) * NTILES + ytile
+    order = np.argsort(key)
+    return key[order], node_id[order], lat[order], lon[order], row[order]
 
-    Cells only BLOCK; a post-join tile predicate then restricts
-    candidates to EXACTLY the query's ring (same membership as the
-    strip path) before anything shuffles. Without it the cell coverage
-    is up to a ~9× superset of the ring area, and in clustered data
-    that superset flooded the per-query top-k window with tens of
-    millions of rows — measured 19s for ONE 1000-query round at sf0.1;
-    with the ring filter (map-side, same codegen stage as the broadcast
-    probe) the round is a few hundred ms. Exactness is unchanged
-    either way — membership now equals the ring, and termination is
-    gated by the ring's distance bound.
-    """
-    from osm_lib_spark.functions.tiles import ZOOM
 
-    rows = []
-    zoom_dz: dict[int, int] = {}
-    for f in frontier:
-        r = f["radius"]
-        span = min(2 * r + 1, NTILES)
-        dz = min(span.bit_length() - 1, ZOOM)  # 2^dz ∈ (span/2, span]
-        zc = ZOOM - dz
-        step = 1 << dz
-        ncells = NTILES >> dz
-        if 2 * r + 1 >= NTILES:
-            cxs = list(range(ncells))
-        else:
-            ax0 = (f["qx"] - r) // step
-            ax1 = (f["qx"] + r) // step
-            cxs = sorted({ax % ncells for ax in range(ax0, ax1 + 1)})
-        ay0 = max(f["qy"] - r, 0) // step
-        ay1 = min(f["qy"] + r, NTILES - 1) // step
-        zoom_dz[zc] = dz
-        for cx in cxs:
-            for cy in range(ay0, ay1 + 1):
-                cell = (zc << 58) | (cx << 29) | cy
-                rows.append(
-                    (f["query_id"], cell, f["qlat"], f["qlon"], f["qx"], f["qy"], r)
-                )
-    cells_df = local_frame(
-        spark,
-        rows,
-        "query_id int, cell long, qlat double, qlon double, qx int, qy int, radius int",
-    )
-    # one ancestor cell per distinct round zoom (radii grow in powers,
-    # so this is 1-3 values, not Q values)
-    cell_exprs = [
-        F.shiftleft(F.lit(zc).cast("long"), 58)
-        .bitwiseOR(F.shiftleft(F.shiftright(F.col("xtile").cast("long"), dz), 29))
-        .bitwiseOR(F.shiftright(F.col("ytile").cast("long"), dz))
-        for zc, dz in sorted(zoom_dz.items())
-    ]
-    probed = probe.withColumn("cell", F.explode(F.array(*cell_exprs)))
-    two_r = F.col("radius") * 2
-    in_x = (two_r + 1 >= F.lit(NTILES)) | (
-        F.pmod(F.col("xtile") - (F.col("qx") - F.col("radius")), F.lit(NTILES)) <= two_r
-    )
-    in_y = F.col("ytile").between(
-        F.greatest(F.col("qy") - F.col("radius"), F.lit(0)),
-        F.least(F.col("qy") + F.col("radius"), F.lit(NTILES - 1)),
-    )
-    return (
-        probed.join(cells_df, "cell")
-        .where(in_x & in_y)
-        .select(
-            "query_id",
-            "node_id",
-            haversine_m(F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")).alias(
-                "dist_m"
-            ),
-        )
-    )
+def _rank_rings(store: tuple[np.ndarray, ...], fr: dict[str, np.ndarray], k: int):
+    """(query_id, store row, dist_m) arrays of the first ``k`` rows of
+    each frontier query's ring in ``store`` (``_sorted_store``'s
+    arrays, indexed by the store rows), by (distance, node_id) with the
+    oracle's haversine: every (query, ring tile column) pair, its rows
+    found by two searchsorted calls, then one lexsort
+    (``similarity._top``) per chunk of whole queries over the rows that
+    can be among their query's first k. The driver's rounds and every
+    task of a partition round rank with it."""
+    key, node_id, lat, lon, _ = store
+    r = fr["radius"]
+    width = np.minimum(2 * r + 1, NTILES)
+    pq = np.repeat(np.arange(len(r)), width)  # the query of each pair
+    col = ((fr["qx"] - r)[pq] + np.arange(len(pq)) - np.repeat(np.cumsum(width) - width, width)) % NTILES * NTILES
+    lo = np.searchsorted(key, col + np.maximum(fr["qy"] - r, 0)[pq], "left")
+    n = np.searchsorted(key, col + np.minimum(fr["qy"] + r, NTILES - 1)[pq], "right") - lo
+    chunk = np.cumsum(n)[np.cumsum(width) - 1] // RANK_CHUNK_ROWS  # by query, nondecreasing
+    out = []
+    for c in np.unique(chunk):
+        pick = (chunk == c)[pq]
+        cn = n[pick]
+        rows = np.repeat(lo[pick] - np.cumsum(cn) + cn, cn) + np.arange(cn.sum())
+        q = np.repeat(pq[pick], cn)
+        dist = np_haversine_m(fr["qlat"][q], fr["qlon"][q], lat[rows], lon[rows])
+        # only rows whose key is at most their query's k-th smallest key
+        # reach the lexsort: fl(q·2^25 + dist) is monotone in dist and
+        # keeps the queries apart (a distance is < 2^25 m), so they hold
+        # each query's first k
+        key_q = q * 2.0**25 + dist
+        if len(key_q):
+            count = np.bincount(q, minlength=len(r))
+            kth = np.sort(key_q)[np.cumsum(count) - count + np.minimum(count, k) - 1]
+            keep = np.flatnonzero(key_q <= kth[q])
+            q, rows, dist = q[keep], rows[keep], dist[keep]
+        top, _ = _top(q, node_id[rows], k, dist)
+        out.append((fr["query_id"][q[top]], rows[top], dist[top]))
+    return tuple(np.concatenate(c) for c in zip(*out))
+
+
+def _partition_round(candidates: DataFrame, fr: dict[str, np.ndarray], k: int) -> DataFrame:
+    """One round over the store rows of ``candidates`` as one job of an
+    iterator Arrow UDF: each task ranks all its rows once with
+    ``_rank_rings`` and gives each row the queries whose first k of the
+    task's rows it is among (``TOPS_TYPE``), exploded into (query_id,
+    node_id, dist_m) rows. The first k of a union are the first k of
+    its parts' first k, so ranking the tasks' tops again gives one
+    ranking's rows. (Not ``mapInArrow``: Spark feeds that its rows as
+    one struct column, ~2.6x the JVM CPU a row on the sf-m store.)"""
+
+    def task(batches: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+        batches = [pa.RecordBatch.from_arrays(list(b), STORE_COLUMNS) for b in batches]
+        if batches:
+            table = pa.Table.from_batches(batches)
+            store = _sorted_store(table)
+            qid, rows, dist = _rank_rings(store, fr, k)
+            row = store[4][rows]
+            order = np.argsort(row, kind="stable")
+            offsets = np.r_[0, np.cumsum(np.bincount(row, minlength=table.num_rows))]
+            tops = pa.StructArray.from_arrays(
+                [pa.array(qid[order], pa.int32()), pa.array(dist[order])], ["query_id", "dist_m"]
+            )
+            yield pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), tops)
+
+    tops = F.arrow_udf(task, TOPS_TYPE)(*STORE_COLUMNS)
+    return candidates.select("node_id", F.inline(tops)).select("query_id", "node_id", "dist_m")
+
+
+def _top_table(qid: np.ndarray, node_id: np.ndarray, dist: np.ndarray, k: int):
+    """The round's top table, as ``_ranked`` gives it, of (query_id,
+    node_id, dist_m) candidates, and per-query (rows, k-th distance)
+    stats."""
+    rows, rank = _top(qid, node_id, k, dist)
+    qid, dist = qid[rows], dist[rows]
+    ids, first, count = np.unique(qid, return_index=True, return_counts=True)
+    stats = dict(zip(ids.tolist(), zip(count.tolist(), dist[first + count - 1].tolist())))
+    top = pa.table({"query_id": pa.array(qid, pa.int32()), "rank": pa.array(rank, pa.int32()),
+                    "node_id": node_id[rows], "dist_m": dist})
+    return top, stats
 
 
 def tiled_node_store(nodes: DataFrame) -> DataFrame:
@@ -397,21 +342,16 @@ def tiled_node_store(nodes: DataFrame) -> DataFrame:
     Hilbert-partitioned store from operators/indexes, not an ad-hoc
     projection) and pass to ``knn_kring`` via ``tiled=`` so repeated
     query batches skip the re-tiling scan. Polar outliers clamp onto
-    the edge rows so ring expansion reaches them."""
-    from osm_lib_spark.functions.tiles import tile_y_col
-
+    the edge rows so ring expansion reaches them; a node without
+    coordinates gets no tile, so it is in no ring."""
     return (
         _nodes_with_coords(nodes)
-        .withColumn(
-            "xtile",
-            F.pmod(
-                F.floor((F.col("lon") + 180.0) / 360.0 * NTILES).cast("int"),
-                F.lit(NTILES),
-            ),
-        )
+        .withColumn("xtile", F.pmod(F.floor((F.col("lon") + 180.0) / 360.0 * NTILES).cast("int"), F.lit(NTILES)))
         .withColumn(
             "ytile",
-            F.least(F.greatest(tile_y_col(F.col("lat")), F.lit(0)), F.lit(NTILES - 1)),
+            F.when(
+                F.col("lat").isNotNull(), F.least(F.greatest(tile_y_col(F.col("lat")), F.lit(0)), F.lit(NTILES - 1))
+            ),
         )
     )
 
@@ -426,9 +366,8 @@ def knn_kring(
 ) -> DataFrame:
     """Exact kNN via batched iterative k-ring expansion.
 
-    One Spark job per expansion ROUND (not per query): all unsatisfied
-    queries share one bounded collect of their ring windows, or one
-    join of the tile-keyed store with a broadcast strip table;
+    At most one Spark job per expansion ROUND (not per query): all
+    unsatisfied queries share one ranking of their rings (``_rank_rings``);
     satisfied queries leave the frontier. Results match
     ``knn_brute_force`` exactly (asserted in tests and oracle-gated as
     ``osm_knn_kring`` against an independent SQL brute force).
@@ -437,11 +376,6 @@ def knn_kring(
     per-call tiling scan — the steady-state serving path. With
     ``tiled`` supplied, ``nodes`` may be None (a serving layer reads
     only the persisted store).
-
-    Rounds whose strip table would exceed ``STRIP_SWITCH_ROWS`` rows
-    (Q·(2r+1) growth — thousands of queries with wide rings) switch to
-    the coarse-cell ancestor equi-join (``_coarse_cell_candidates``):
-    O(Q) broadcast rows regardless of radius, same exact results.
 
     ``initial_ring``: starting Chebyshev radius; None (default) derives
     it from global node density when ``est_n_nodes`` is supplied, else
@@ -459,19 +393,11 @@ def knn_kring(
     ring distance bound. Callers that know the corpus size (benches,
     serving layers with table stats) should pass ``est_n_nodes``.
 
-    Rounds and results follow the engine's one size rule (the three
-    modes of the module docstring): while the k·Q result rows
-    (``RANKED_DDL``, sized by ``session.row_bytes``) fit under
-    ``spark.sql.autoBroadcastJoinThreshold``, each strip round ranks
-    its candidate nodes in numpy, read from the resident copy of a
-    cached ``tiled`` store with no job, else collected, one job a
-    round, until a round's candidates are over; from then on each round ranks in
-    Spark and collects its top-k as one Arrow table. The result is a
-    LocalRelation either way. Past the results' bound (or at a
-    threshold ≤ 0) every result slice stays persisted ON THE EXECUTORS
-    and the returned DataFrame is the union of the cached round frames.
-    Either way, a batch of more than ``CACHE_MIN_QUERIES`` queries
-    without a ``tiled`` store caches its own tiled projection.
+    Rounds and results follow the module docstring's three modes, by
+    the k·Q result rows (``RANKED_DDL``, sized by
+    ``session.row_bytes``) against ``broadcast_threshold``. A batch of
+    more than ``CACHE_MIN_QUERIES`` queries without a ``tiled`` store
+    caches its own tiled projection.
     """
     if nodes is None and tiled is None:
         raise ValueError("knn_kring needs nodes or a tiled store")
@@ -485,9 +411,7 @@ def knn_kring(
             initial_ring = min(max(int(math.ceil((span - 1.0) / 2.0)), 1), 64)
         else:
             initial_ring = 1
-    collect_mode = len(query_points) * k * row_bytes(spark, RANKED_DDL) <= broadcast_threshold(
-        spark
-    )
+    collect_mode = len(query_points) * k * row_bytes(spark, RANKED_DDL) <= broadcast_threshold(spark)
     # Cache the ad-hoc tiled projection only for LARGE batches: a small
     # interactive batch runs 1-3 rounds, and materializing a full node
     # cache costs more than the rounds' re-derivation of the (cheap,
@@ -509,9 +433,10 @@ def knn_kring(
         )
         for qid, qlat, qlon in query_points
     ]
-    driver_rounds = collect_mode
-    # a cached store held on the driver: every driver round reads it, no job
+    # a cached store held on the driver: every round ranks it, no job
     store = resident(tiled) if collect_mode and tiled is not None else None
+    if store is not None:
+        store = _sorted_store(store)
     parts: list[DataFrame] = []
     tables: list[pa.Table] = []  # satisfied top-k rows (small-Q mode)
     round_frames: list[DataFrame] = []  # persisted per-round top-k (large-Q mode)
@@ -521,67 +446,29 @@ def knn_kring(
     # session must not accumulate caches without bound
     try:
         while frontier:
-            # coarse prefilter: the frontier's global tile bounding box as
-            # PLAIN column predicates — these push down to parquet row-group
-            # stats / in-memory batch pruning, which the join condition
-            # cannot; skipped when any ring wraps the antimeridian
-            probe = coords
-            if all(2 * f["radius"] + 1 < NTILES and f["qx"] - f["radius"] >= 0
-                   and f["qx"] + f["radius"] < NTILES for f in frontier):
-                gx0 = min(f["qx"] - f["radius"] for f in frontier)
-                gx1 = max(f["qx"] + f["radius"] for f in frontier)
-                gy0 = min(max(f["qy"] - f["radius"], 0) for f in frontier)
-                gy1 = max(min(f["qy"] + f["radius"], NTILES - 1) for f in frontier)
-                probe = coords.where(
-                    F.col("xtile").between(gx0, gx1) & F.col("ytile").between(gy0, gy1)
-                )
-            est_strip_rows = sum(min(2 * f["radius"] + 1, NTILES) for f in frontier)
-            found = candidates = None
-            if driver_rounds and est_strip_rows <= STRIP_SWITCH_ROWS:
-                candidates = store
-                if store is None and (predicate := _ring_predicate(frontier)) is not None:
-                    candidates = probe.where(F.expr(predicate))
-            if candidates is not None:
-                # over the bound this round's collect is spent and every
-                # later round runs in Spark: at most one spent collect a call
-                found = _driver_round(candidates, frontier, k)
-                driver_rounds = found is not None
-            if found is not None:
-                top, stats = found
+            fr = {c: np.array([f[c] for f in frontier]) for c in ("query_id", "qlat", "qlon", "qx", "qy", "radius")}
+            if store is not None:
+                qid, rows, dist = _rank_rings(store, fr, k)
+                top, stats = _top_table(qid, store[1][rows], dist, k)
+            elif collect_mode:
+                # the tasks' tops (≤ k a query each) merge on the driver
+                tops = _partition_round(_ring_rows(coords, frontier), fr, k).toArrow()
+                top, stats = _top_table(*(tops.column(c).to_numpy() for c in ("query_id", "node_id", "dist_m")), k)
             else:
-                if est_strip_rows > STRIP_SWITCH_ROWS:
-                    cand = _coarse_cell_candidates(spark, probe, frontier)
-                else:
-                    cand = _strip_candidates(spark, probe, frontier)
-                ranked = _ranked(cand, k)
-                if collect_mode:
-                    # the queries' own ≤ k·|frontier|-row top-k comes
-                    # to the driver directly as one Arrow table
-                    top = ranked.toArrow()
-                    agg = top.group_by("query_id").aggregate(
-                        [("rank", "count"), ("dist_m", "max")]
-                    )
-                    stats = dict(
-                        zip(
-                            agg["query_id"].to_pylist(),
-                            zip(agg["rank_count"].to_pylist(), agg["dist_m_max"].to_pylist()),
-                        )
-                    )
-                else:
-                    # large batch: the top-k PERSISTS executor-side and the
-                    # stats aggregate is the one materializing action: the
-                    # driver collects ONLY per-query (count, k-th distance)
-                    # control rows. Frames
-                    # stay persisted (k·Q rows per round; eviction merely
-                    # recomputes deterministically from lineage).
-                    ranked = ranked.persist()
-                    round_frames.append(ranked)
-                    stats = {
-                        r["query_id"]: (int(r["n"]), float(r["kth"]))
-                        for r in ranked.groupBy("query_id")
-                        .agg(F.count("*").alias("n"), F.max("dist_m").alias("kth"))
-                        .collect()
-                    }
+                # large batch: the top-k PERSISTS executor-side and the
+                # stats aggregate is the one materializing action: the
+                # driver collects ONLY per-query (count, k-th distance)
+                # control rows. Frames stay persisted (k·Q rows per
+                # round; eviction merely recomputes deterministically
+                # from lineage).
+                ranked = _ranked(_partition_round(_ring_rows(coords, frontier), fr, k), k).persist()
+                round_frames.append(ranked)
+                stats = {
+                    r["query_id"]: (int(r["n"]), float(r["kth"]))
+                    for r in ranked.groupBy("query_id")
+                    .agg(F.count("*").alias("n"), F.max("dist_m").alias("kth"))
+                    .collect()
+                }
 
             next_frontier = []
             satisfied_ids: list[int] = []

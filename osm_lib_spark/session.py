@@ -164,12 +164,6 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     polygons or their tile rows are over, the rings ride the
     polygon-tile rows into a SHUFFLE_HASH join; cached nodes held by
     ``resident`` are decided without a collect),
-    ``knn.knn_kring``'s strip rounds while its results are collected
-    (the tiled-store rows in the round's rings, filtered by their OR-ed
-    windows or an InSet of their tile keys while either is small; numpy
-    ranks each ring; over the bound, that round and every later one run
-    as a Spark join and window; a cached store held by ``resident`` is
-    ranked without a collect),
     ``dedup.components_from_pairs`` (the label-propagation loop),
     ``dedup._collect_shingles`` (one row per shingle; the MinHash band
     kernel per Arrow batch, the band self-join and the Spark verify;
@@ -187,7 +181,9 @@ def collect_bounded(df: DataFrame, row_size: int | None = None) -> pa.Table | No
     ``resident`` copies, or sent to the cluster path, with no collect).
     Sites whose size is known without a collect compare ``row_bytes``
     times their row count with ``broadcast_threshold``: ``knn.knn_kring`` (k·Q result rows;
-    executor-side accumulation), the driver-built closure in
+    under it a cached store held by ``resident`` is ranked with no job,
+    else each round's partition tops merge on the driver; over it they
+    accumulate executor-side), the driver-built closure in
     ``relation_closure_table`` (a SHUFFLE_HASH hint) and
     ``similarity._driver_tail`` (the rows of the probed lists, one per
     candidate; the same scan per partition, ``_partition_top``).
@@ -251,7 +247,7 @@ def resident(df: DataFrame) -> pa.Table | None:
     under ``spark.sql.autoBroadcastJoinThreshold``; else None.
 
     The driver paths of ``extract._driver_batch`` (way_tiles, ways,
-    nodes), ``knn._driver_round`` (the tiled store), ``pip._driver_pip``
+    nodes), ``knn.knn_kring`` (the tiled store), ``pip._driver_pip``
     (nodes) and ``pbf.write_blocks`` (the three entity tables) read
     their cached inputs here first, the way osm-lib answers from indexes
     already in memory (TileOSMSource.java:49-143): a warm call runs no

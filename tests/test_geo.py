@@ -33,17 +33,17 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-KNN_ROUND = "osm_lib_spark.operators.knn._driver_round"
+KNN_RESIDENT = "osm_lib_spark.operators.knn.resident"
 PIP_ANSWER = "osm_lib_spark.operators.pip._driver_pip"
 
 
 def _three_paths(spark, monkeypatch, step, fn):
     """Sorted rows of ``fn()`` on the driver path (session threshold),
-    on the Spark form under the threshold (the driver ``step`` reporting
-    its candidates over the bound) and at threshold -1: for kNN the
-    driver rounds, Spark rounds with the results collected and executor
-    accumulation; for PIP the driver's numpy, broadcast rings and rings
-    on rows."""
+    on the cluster form under the threshold (the driver ``step``
+    returning None) and at threshold -1: for kNN the rounds as chosen
+    (a resident store ranked on the driver, else partition rounds),
+    partition rounds merged on the driver and executor accumulation;
+    for PIP the driver's numpy, broadcast rings and rings on rows."""
     driver, at_minus_one = both_paths(spark, lambda: _rows(fn()))
     with monkeypatch.context() as m:
         m.setattr(step, lambda *a: None)
@@ -55,7 +55,8 @@ def _both_inputs(spark, monkeypatch, step, call, frame):
     """``_three_paths`` of ``call(frame)`` with ``frame`` a loaded cache
     (the driver path reads its ``session.resident`` copy), then of
     ``call`` over a filter on it that keeps every row (no cache matches
-    it: the driver path collects): the six sorted row lists. ``frame``
+    it: PIP's driver path collects, kNN runs partition rounds): the six
+    sorted row lists. ``frame``
     is released after unless it was cached before."""
     was_cached = frame.is_cached
     frame = loaded(frame)
@@ -99,39 +100,40 @@ def test_knn_brute_force_vs_golden(nodes_xs, fixture_xs, meta_xs):
 
 def test_knn_kring_matches_brute_force(spark, nodes_xs, meta_xs, monkeypatch):
     """k-ring rows equal brute force on all three paths, with the
-    density-derived initial ring too, and over the candidate bound: at a
-    threshold the k·Q results fit under and the first round's candidate
-    rows do not, one driver round is tried (its collect spent) and every
-    later round runs in Spark."""
+    density-derived initial ring too, and at a threshold the k·Q
+    results just fit under: there every round is one partition round,
+    one job, whose tasks' tops the driver merges."""
     # ALL query points — includes the near-polar and open-ocean ones
     # whose ring bound degrades to 0 (conservative full expansion)
     pts = [tuple(p) for p in meta_xs["knn_points"]]
     brute = _rows(knn_brute_force(nodes_xs, pts, k=10))
-    for rows in _both_inputs(spark, monkeypatch, KNN_ROUND, _kring(pts, k=10), knn.tiled_node_store(nodes_xs)):
+    for rows in _both_inputs(spark, monkeypatch, KNN_RESIDENT, _kring(pts, k=10), knn.tiled_node_store(nodes_xs)):
         assert rows == brute
     # density-derived initial ring (est_n_nodes) must be EXACTLY equal
     # too — the start radius only moves rounds, never the bound
     assert _rows(knn_kring(nodes_xs, pts, k=10, est_n_nodes=nodes_xs.count())) == brute
 
-    tried, real = [], knn._driver_round
-    monkeypatch.setattr(knn, "_driver_round", lambda *a: tried.append(real(*a)) or tried[-1])
+    rounds, real = [], knn._partition_round
+    monkeypatch.setattr(knn, "_partition_round", lambda *a: rounds.append(1) or real(*a))
     with threshold(spark, str(len(pts) * 10 * row_bytes(spark, RANKED_DDL))):
-        assert _rows(knn_kring(nodes_xs, pts, k=10)) == brute
-    assert tried == [None]
+        rows, jobs = spark_jobs(spark, lambda: _rows(knn_kring(nodes_xs, pts, k=10)))
+    assert rows == brute
+    assert rounds and jobs == len(rounds)
 
-    # a first round ranked on the driver, then one over the bound: the
-    # call's top tables mix numpy and Spark rounds
-    tried.clear()
-    sizes = []
-    monkeypatch.setattr(
-        knn,
-        "_driver_round",
-        lambda probe, frontier, k: sizes.append(len(frontier))
-        or tried.append(None if tried else real(probe, frontier, k))
-        or tried[-1],
+
+def test_knn_kring_skips_nodes_without_coordinates(spark, monkeypatch):
+    """A node with a null latitude is no neighbour on any path: Spark's
+    ``greatest`` skips a null, so the store tiled it at ytile 0, and an
+    ascending window ranks a null distance first; brute force and every
+    k-ring path leave it out."""
+    nodes = spark.createDataFrame(
+        [(1, None, 200000000, []), (2, 846000000, 200000000, []), (3, 100000000, 200000000, [])], NODE_DDL
     )
-    assert _rows(knn_kring(nodes_xs, pts, k=10, initial_ring=1)) == brute
-    assert tried[0] is not None and tried[1:] == [None] and sizes[1] < sizes[0]
+    pts = [(0, 84.9, 20.0)]
+    brute = _rows(knn_brute_force(nodes, pts, k=2))
+    assert [r[2] for r in brute] == [2, 3]
+    for rows in _both_inputs(spark, monkeypatch, KNN_RESIDENT, _kring(pts, k=2), knn.tiled_node_store(nodes)):
+        assert rows == brute
 
 
 def test_ring_bound_is_lower_bound_high_lat():
@@ -213,7 +215,7 @@ def test_knn_kring_meridian_edge_case(spark, monkeypatch):
     pts = [(0, qlat, qlon)]
     brute = _rows(knn_brute_force(nodes, pts, k=10))
     paths = _both_inputs(
-        spark, monkeypatch, KNN_ROUND, _kring(pts, k=10, initial_ring=radius), knn.tiled_node_store(nodes)
+        spark, monkeypatch, KNN_RESIDENT, _kring(pts, k=10, initial_ring=radius), knn.tiled_node_store(nodes)
     )
     for ring in paths:
         assert ring == brute
@@ -337,7 +339,7 @@ def test_knn_kring_fewer_than_k_nodes(spark, monkeypatch):
     )
     brute = _rows(knn_brute_force(nodes, [(0, 10.0, 20.0)], k=10))
     assert [r[1] for r in brute] == [1, 2, 3]
-    for rows in _both_inputs(spark, monkeypatch, KNN_ROUND, _kring([(0, 10.0, 20.0)], k=10), knn.tiled_node_store(nodes)):
+    for rows in _both_inputs(spark, monkeypatch, KNN_RESIDENT, _kring([(0, 10.0, 20.0)], k=10), knn.tiled_node_store(nodes)):
         assert rows == brute
 
 
@@ -355,7 +357,7 @@ def test_knn_kring_ring_wraps_x(spark, monkeypatch):
     pts = [(0, 10.02, 179.995), (1, 10.05, -179.995)]
     brute = _rows(knn_brute_force(nodes, pts, k=5))
     assert {r[2] for r in brute} & {r[0] for r in rows if r[2] < 0}  # hits across the wrap
-    for ring in _both_inputs(spark, monkeypatch, KNN_ROUND, _kring(pts, k=5), knn.tiled_node_store(nodes)):
+    for ring in _both_inputs(spark, monkeypatch, KNN_RESIDENT, _kring(pts, k=5), knn.tiled_node_store(nodes)):
         assert ring == brute
 
 
@@ -364,7 +366,7 @@ def test_knn_kring_many_rings_take_tile_keys(spark, monkeypatch):
     antimeridian is past the OR-ed windows' cap: its driver round
     filters on an InSet of the rings' tile keys, wrapping x. Rows equal
     brute force on all three paths. Past the keys' cap too, no
-    predicate is offered and the round runs in Spark."""
+    predicate is offered and the round reads the bounding box alone."""
     lons = np.r_[np.arange(177.0, 180.0, 0.05), np.arange(-179.99, -177.0, 0.05)]
     coords = [(la, lo) for la in (10.0, 10.03, 10.06) for lo in lons]
     rows = [(i + 1, int(la * 1e7), int(lo * 1e7), []) for i, (la, lo) in enumerate(coords)]
@@ -374,7 +376,7 @@ def test_knn_kring_many_rings_take_tile_keys(spark, monkeypatch):
     brute = _rows(knn_brute_force(nodes, pts, k=5))
     predicates, real = [], knn._ring_predicate
     monkeypatch.setattr(knn, "_ring_predicate", lambda f: predicates.append(real(f)) or predicates[-1])
-    for ring in _three_paths(spark, monkeypatch, KNN_ROUND, lambda: knn_kring(nodes, pts, k=5, initial_ring=1)):
+    for ring in _three_paths(spark, monkeypatch, KNN_RESIDENT, lambda: knn_kring(nodes, pts, k=5, initial_ring=1)):
         assert ring == brute
     assert " IN (" in predicates[0]
     wide = [dict(query_id=i, qlat=0.0, qlon=0.0, qx=40 * i, qy=2048, radius=64) for i in range(40)]
@@ -407,47 +409,27 @@ def test_knn_kring_releases_caches_on_error(spark, monkeypatch):
     assert persisted() <= before
 
 
-def test_knn_kring_coarse_cell_path_q100(nodes_xs, meta_xs, monkeypatch):
-    """Large-Q path: ≥100 queries with STRIP_SWITCH_ROWS forced low so EVERY
-    round uses the coarse-cell ancestor equi-join — results must equal
-    brute force exactly (the coarse cells cover a superset of each
-    ring, so the termination bound stays valid)."""
-    import pandas as pd
-
-    import osm_lib_spark.operators.knn as knn
-
+def test_knn_kring_partition_round_q100(spark, nodes_xs, meta_xs, monkeypatch):
+    """A 105-query fan around the fixture's points over an uncached
+    store: every round is one partition round, at the session threshold
+    (the driver merges the tasks' tops) and at -1 (a window ranks them
+    on the executors). Rows equal brute force on both."""
     base = [tuple(p) for p in meta_xs["knn_points"]]
     # fan 100+ queries around the fixture's points (deterministic jitter)
-    pts = []
-    qid = 0
-    for _, qlat, qlon in base:
-        for i in range(21):
-            pts.append((qid, qlat + (i % 5 - 2) * 0.021, qlon + (i % 7 - 3) * 0.017))
-            qid += 1
+    pts = [
+        (21 * q + i, qlat + (i % 5 - 2) * 0.021, qlon + (i % 7 - 3) * 0.017)
+        for q, (_, qlat, qlon) in enumerate(base)
+        for i in range(21)
+    ]
     assert len(pts) >= 100
-    brute = (
-        knn_brute_force(nodes_xs, pts, k=5)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    with monkeypatch.context() as m:
-        m.setattr(knn, "STRIP_SWITCH_ROWS", 1)
-        ring = (
-            knn_kring(nodes_xs, pts, k=5)
-            .toPandas()
-            .sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(brute, ring, check_dtype=False)
-    # and the default threshold (mixed strip/coarse rounds) agrees too
-    ring_default = (
-        knn_kring(nodes_xs, pts, k=5)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(brute, ring_default, check_dtype=False)
+    brute = _rows(knn_brute_force(nodes_xs, pts, k=5))
+    rounds, real = [], knn._partition_round
+    monkeypatch.setattr(knn, "_partition_round", lambda *a: rounds.append(1) or real(*a))
+    for value in (spark.conf.get("spark.sql.autoBroadcastJoinThreshold"), "-1"):
+        rounds.clear()
+        with threshold(spark, value):
+            assert _rows(knn_kring(nodes_xs, pts, k=5)) == brute, value
+        assert rounds, value
 
 
 def test_ray_cast_against_independent_implementation():

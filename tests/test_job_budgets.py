@@ -94,13 +94,15 @@ def test_driver_path_job_budgets(spark, docs_xs, fixture_xs):
 
 
 def test_knn_and_pip_job_budgets(spark, docs_xs, fixture_xs, monkeypatch):
-    """A 5-point ``knn_kring`` over a ``tiled_node_store`` with its
-    collect runs no job over a loaded cache (the rounds rank the
-    resident store; the result is a LocalRelation, collected without a
-    job) and ≤ 1 job per round uncached (the round's bounded collect of
-    its candidate nodes; a Spark round with its window ran 3), and a
-    10-polygon ``points_in_polygons_bucketed`` over a ``polygons_df``
-    with a count ≤ 2 over loaded cached nodes (the count's two over the
+    """``knn_kring`` over a ``tiled_node_store``, with its collect, for
+    the fixture's 5 points and a 105-point fan around them: no job over
+    a loaded cache (every round ranks the resident store; the result
+    is a LocalRelation, collected without a job), one job a round
+    uncached (the partition round, 5 rounds on this fixture for both
+    batches; a strip round with its window ran 3, a coarse-cell round
+    as many) and 19 at threshold -1. A 10-polygon
+    ``points_in_polygons_bucketed`` over a ``polygons_df`` with a count
+    runs ≤ 2 over loaded cached nodes (the count's two over the
     result's LocalRelation; the polygons come without a job) and ≤ 3
     uncached (the candidate collect first; the broadcast-rings form ran
     5)."""
@@ -112,20 +114,29 @@ def test_knn_and_pip_job_budgets(spark, docs_xs, fixture_xs, monkeypatch):
         meta = json.load(f)
     nodes = parse_nodes(docs_xs)
     pts = [tuple(p) for p in meta["knn_points"][:5]]
-    rounds, real = [], knn._driver_round
-    monkeypatch.setattr(knn, "_driver_round", lambda *a: rounds.append(1) or real(*a))
+    fan = [
+        (21 * q + i, lat + (i % 5 - 2) * 0.021, lon + (i % 7 - 3) * 0.017)
+        for q, (_, lat, lon) in enumerate(pts)
+        for i in range(21)
+    ]
+    rounds, real = [], knn._partition_round
+    monkeypatch.setattr(knn, "_partition_round", lambda *a: rounds.append(1) or real(*a))
     centers = [(float(p[1]), float(p[2])) for p in meta["knn_points"][:2]]
     polys = polygons_df(spark, dict(list(grid_polygons(centers, n_per=5).items())[:10]))
-    for cached, per_round, pip_jobs in ((False, 1, 3), (True, 0, 2)):
-        store = knn.tiled_node_store(nodes)
-        if cached:
-            nodes, store = loaded(nodes), loaded(store)
+    store = knn.tiled_node_store(nodes)
+    for batch in (pts, fan):
         rounds.clear()
-        jobs = _budget(spark, lambda: knn.knn_kring(None, pts, k=10, tiled=store).collect())
-        per_call = len(rounds) // 2
-        assert per_call >= 1 and len(rounds) == 2 * per_call
-        assert jobs <= per_round * per_call, (cached, jobs, per_call)
-        assert _budget(spark, lambda: points_in_polygons_bucketed(nodes, polys).count()) <= pip_jobs, cached
+        assert _budget(spark, lambda: knn.knn_kring(None, batch, k=10, tiled=store).collect()) == 5
+        assert len(rounds) == 2 * 5, len(batch)
+        with threshold(spark, "-1"):
+            assert _budget(spark, lambda: knn.knn_kring(None, batch, k=10, tiled=store).collect()) == 19
+    assert _budget(spark, lambda: points_in_polygons_bucketed(nodes, polys).count()) <= 3
+    nodes, store = loaded(nodes), loaded(knn.tiled_node_store(nodes))
+    for batch in (pts, fan):
+        rounds.clear()
+        assert _budget(spark, lambda: knn.knn_kring(None, batch, k=10, tiled=store).collect()) == 0
+        assert rounds == [], len(batch)
+    assert _budget(spark, lambda: points_in_polygons_bucketed(nodes, polys).count()) <= 2
     for frame in (store, nodes):
         frame.unpersist()
 

@@ -146,39 +146,33 @@ def test_rasterize_matches_way_tiles_math(spark, docs_xs, fixture_xs):
     assert len(pts) == 5 and pts[0] == pts[-1]
 
 
-def test_new_operator_joins_are_hash_joins(spark, docs_xs):
+def _knn_round_plans(spark, docs_xs, fixture_xs) -> list[str]:
+    """The physical plans a 5-point ``knn_kring`` runs over an uncached
+    tiled store: its partition rounds."""
+    from osm_lib_spark.operators.knn import knn_kring, tiled_node_store
+
+    with open(os.path.join(fixture_xs, "meta.json")) as f:
+        pts = [tuple(p) for p in json.load(f)["knn_points"][:5]]
+    store = tiled_node_store(parse_nodes(docs_xs))
+    rows, plans = plans_during(spark, lambda: knn_kring(None, pts, k=5, tiled=store).collect())
+    assert len(rows) == 25
+    return plans
+
+
+def test_new_operator_joins_are_hash_joins(spark, docs_xs, fixture_xs):
     """Round-2 operators must never plan nested-loop/cartesian joins:
-    the k-ring strip join, the LSH-banded embedding dedup, and the
-    prefix-filtered Jaccard candidates are all equi-joins."""
+    the k-ring rounds are one Arrow UDF scan with no join at all, and
+    the LSH-banded embedding dedup and the prefix-filtered Jaccard
+    candidates are equi-joins."""
     import re
 
-    from osm_lib_spark.functions.tiles import NTILES, tile_y_col
     from osm_lib_spark.operators.dedup import ngram_prefix_candidates
-    from osm_lib_spark.operators.knn import _frontier_strips, _nodes_with_coords
     from osm_lib_spark.operators.similarity import embedding_dup_pairs
 
     bad = re.compile(r"BroadcastNestedLoopJoin|CartesianProduct")
-
-    nodes = parse_nodes(docs_xs)
-    coords = (
-        _nodes_with_coords(nodes)
-        .withColumn(
-            "xtile",
-            F.pmod(
-                F.floor((F.col("lon") + 180.0) / 360.0 * NTILES).cast("int"),
-                F.lit(NTILES),
-            ),
-        )
-        .withColumn("ytile", tile_y_col(F.col("lat")))
-    )
-    strips = _frontier_strips(
-        spark, [dict(query_id=0, qlat=10.0, qlon=10.0, qx=2000, qy=2000, radius=4)]
-    )
-    cand = coords.join(F.broadcast(strips), "xtile").where(
-        F.col("ytile").between(F.col("ymin"), F.col("ymax"))
-    )
-    plan = _explain_str(cand)
-    assert "BroadcastHashJoin" in plan and not bad.search(plan)
+    plans = _knn_round_plans(spark, docs_xs, fixture_xs)
+    assert any("ArrowEvalPython" in p for p in plans)
+    assert not any(bad.search(p) or "SortMergeJoin" in p for p in plans)
 
     emb = spark.createDataFrame(
         [(i, [float(i % 7), 1.0, -0.5], i % 3) for i in range(40)],
@@ -194,27 +188,23 @@ def test_new_operator_joins_are_hash_joins(spark, docs_xs):
     assert not bad.search(plan)
 
 
-def test_local_frames_broadcast_without_hints(spark, docs_xs, monkeypatch):
-    """The kNN strip join and the residual IVF-PQ and PQ rerank collects
-    carry no broadcast hint: their driver-built side is a local_frame
-    whose stats let the planner broadcast it. None plans a sort-merge
-    join, a nested-loop join or a cartesian product. At the 10 KiB
-    threshold the kNN query's candidate nodes (40 B a row) are over, so
-    its one driver round is spent and its rounds run as strip joins.
-    The corpus (200 rows of 16 floats, 72 B a row at its given dim:
-    14.4 kB) is over it too, so the ANN queries scan per partition and
-    collect their shortlisted rows through a left-semi join against a
-    local_frame of ≤ 3·50 + 3 vec_ids, under it."""
+def test_local_frames_broadcast_without_hints(spark, docs_xs, fixture_xs):
+    """The residual IVF-PQ and PQ rerank collects carry no broadcast
+    hint: their driver-built side is a local_frame whose stats let the
+    planner broadcast it. None plans a sort-merge join, a nested-loop
+    join or a cartesian product, nor do the kNN rounds at the 10 KiB
+    threshold, which are one Arrow UDF scan each. The corpus (200 rows
+    of 16 floats, 72 B a row at its given dim: 14.4 kB) is over it, so
+    the ANN queries scan per partition and collect their shortlisted
+    rows through a left-semi join against a local_frame of ≤ 3·50 + 3
+    vec_ids, under it."""
     import re
 
     import numpy as np
 
-    import osm_lib_spark.operators.knn as knn
-    from osm_lib_spark.operators.knn import knn_kring
     from osm_lib_spark.operators.similarity import ivf_pq_topk, pq_topk
 
     bad = re.compile(r"SortMergeJoin|CartesianProduct|BroadcastNestedLoopJoin")
-    nodes = parse_nodes(docs_xs)
     rng = np.random.default_rng(3)
     emb = spark.createDataFrame(  # a LogicalRDD: no size stats on this side
         [(i, rng.standard_normal(16).astype(np.float32).tolist(), i % 2) for i in range(200)],
@@ -225,10 +215,8 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs, monkeypatch):
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
     spark.conf.set(key, str(10 * 1024))
-    tried, real = [], knn._driver_round
-    monkeypatch.setattr(knn, "_driver_round", lambda *a: tried.append(real(*a)) or tried[-1])
     try:
-        rows, plans = plans_during(spark, lambda: knn_kring(nodes, [(0, 33.0, -138.0)], k=5).collect())
+        plans = _knn_round_plans(spark, docs_xs, fixture_xs)
         tops = {
             "ivf_pq_topk": lambda: ivf_pq_topk(emb, k=3, n_queries=3, nlist=4, m=4, kc=4, dim=16, residual=True),
             "pq_topk": lambda: pq_topk(emb, k=3, n_queries=3, m=4, kc=4, dim=16),
@@ -236,8 +224,7 @@ def test_local_frames_broadcast_without_hints(spark, docs_xs, monkeypatch):
         scans = {name: plans_during(spark, lambda: top().count()) for name, top in tops.items()}
     finally:
         spark.conf.set(key, saved)
-    assert len(rows) == 5 and tried == [None]
-    assert any("BroadcastHashJoin" in p for p in plans)
+    assert any("ArrowEvalPython" in p for p in plans)
     assert not any(bad.search(p) for p in plans)
     for name, (n_top, ann_plans) in scans.items():
         assert n_top == 9, name
@@ -273,10 +260,9 @@ def test_driver_rows_go_through_local_frame():
 def test_driver_frames_are_local_relations(spark, docs_xs, tmp_path):
     """The driver-built frames plan as a LocalRelation, never a
     LogicalRDD: the PIP polygon set, the PBF/VEX blob indexes under
-    read_pbf/read_vex and a kNN strip table."""
+    read_pbf/read_vex."""
     import numpy as np
 
-    from osm_lib_spark.operators.knn import _frontier_strips
     from osm_lib_spark.operators.pip import polygons_df
     from osm_lib_spark.sources.pbf import read_pbf, write_pbf
     from osm_lib_spark.sources.vex import read_vex, write_vex
@@ -289,9 +275,6 @@ def test_driver_frames_are_local_relations(spark, docs_xs, tmp_path):
         "polygons_df": polygons_df(spark, {1: [ring]}),
         "read_pbf": read_pbf(spark, str(tmp_path / "xs.pbf")),
         "read_vex": read_vex(spark, str(tmp_path / "xs.vex")),
-        "knn strips": _frontier_strips(
-            spark, [dict(query_id=0, qlat=10.0, qlon=10.0, qx=2000, qy=2000, radius=4)]
-        ),
     }
     for name, df in frames.items():
         analyzed = df._jdf.queryExecution().analyzed().toString()
