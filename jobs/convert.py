@@ -150,7 +150,7 @@ def main(argv=None) -> int:
     p.add_argument("--set-tags", help="way_id,value CSV to upsert onto ways")
     p.add_argument("--tag-key", default="maxspeed:motorcar")
     p.add_argument("--tag-format", default="%.1f kph")
-    p.add_argument("--master", default="local[8]")
+    p.add_argument("--master", default=None)
     args = p.parse_args(argv)
     out_fmt = _fmt(args.output)
 

@@ -2,11 +2,7 @@
 analog beyond the z12 tile grid, WebMercatorTile.java:16-18).
 
 * ``rasterize_nodes`` — the vector→raster direction: aggregate point
-  features onto the z-level tile grid (a density/value raster), keyed
-  and range-partitioned by the Hilbert curve value so raster tiles that
-  are spatially adjacent land in the same partitions
-  (repartitionByRange over Hilbert-ordered cell IDs — the north-star
-  phrasing; the write path is ``write_raster_partitioned``).
+  features onto the z-level tile grid (a density/value raster).
 
 * ``vectorize_raster`` — raster→vector: cells above a threshold become
   bbox polygon features (WKT-ish ring rendered as text; corner coords
@@ -27,7 +23,6 @@ from pyspark.sql import types as T
 from osm_lib_spark.functions.geo import from_fixed
 from osm_lib_spark.functions.tiles import (
     ZOOM,
-    hilbert_key,
     np_tile_bbox,
     tile_x_col,
     tile_y_col,
@@ -53,19 +48,6 @@ def rasterize_nodes(nodes: DataFrame, zoom: int = ZOOM) -> DataFrame:
         )
         .groupBy("xtile", "ytile")
         .agg(F.count("*").alias("n_points"))
-    )
-
-
-def write_raster_partitioned(raster: DataFrame, path: str, num_partitions: int = 32) -> None:
-    """Persist the raster repartitionByRange'd on the Hilbert key —
-    spatially contiguous partitions, tight (xtile, ytile) min/max stats,
-    bbox reads prune files."""
-    (
-        raster.withColumn("cell_key", hilbert_key(F.col("xtile"), F.col("ytile")))
-        .repartitionByRange(num_partitions, "cell_key")
-        .sortWithinPartitions("cell_key")
-        .write.mode("overwrite")
-        .parquet(path)
     )
 
 
