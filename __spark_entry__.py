@@ -674,7 +674,7 @@ def q_emb_dup_pairs(spark, sf_dir):
 
 
 def q_media_frames(spark, sf_dir):
-    """Frame sampling: 1→N fan-out inside mapInPandas (each media span
+    """Frame sampling: 1→N fan-out inside mapInArrow (each media span
     emits every 5th of its deterministic frame count) — the oracle
     recomputes the whole fan-out in SQL."""
     from osm_lib_spark.operators.multimodal import sample_frames
@@ -686,7 +686,7 @@ def q_media_pipeline(spark, sf_dir):
     """The three per-media 1:1 stages (catalog parse, feature 'decode',
     resize) joined on the unique (doc_id, media_ref) key into ONE wide
     gate row per media span — each stage keeps its own execution path
-    (pure-Column ref parsing vs the two mapInPandas batch kernels), so
+    (pure-Column ref parsing vs the two mapInArrow batch kernels), so
     the merged gate still exercises all three operators."""
     from osm_lib_spark.operators.multimodal import (
         decode_media_features,

@@ -26,7 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# unset: get_spark sizes the session from the host
+CPUS = os.environ.get("SPARK_GRAFT_CPUS")
 PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
 
 
@@ -401,8 +402,8 @@ def main() -> int:
     stop_spark()
     spark = get_spark(
         "bench_extra",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(8, CPUS),
+        master=f"local[{CPUS}]" if CPUS else None,
+        shuffle_partitions=max(8, int(CPUS)) if CPUS else None,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024)},
     )
     c = Ctx(spark)

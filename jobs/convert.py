@@ -124,20 +124,20 @@ def _write_txt(path: str, ents) -> None:
     # global (rank, id) order, every partition writes its own part,
     # the driver concatenates — the old toLocalIterator wrote the whole
     # file serially on the driver (one job per partition, serial IO)
-    import pandas as pd
+    import pyarrow as pa
 
     from osm_lib_spark.sources.pbf import compose_blob_frame
 
     ordered = ents.select(rank.alias("r"), "id", line.alias("line")).orderBy("r", "id")
 
     def to_blobs(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    {"blob": [("\n".join(pdf["line"]) + "\n").encode("utf-8")]}
-                )
+        for batch in batches:
+            if batch.num_rows:
+                text = "\n".join(batch.column("line").to_pylist()) + "\n"
+                blob = pa.array([text.encode("utf-8")], pa.binary())
+                yield pa.RecordBatch.from_pydict({"blob": blob})
 
-    blobs = ordered.mapInPandas(to_blobs, "blob binary")
+    blobs = ordered.mapInArrow(to_blobs, "blob binary")
     compose_blob_frame(blobs, path, header=b"--- BEGINNING OF OSM TEXT OUTPUT ---\n")
     with open(path, "ab") as f:
         f.write(b"--- END OF OSM TEXT OUTPUT ---")

@@ -28,7 +28,7 @@ ZOOM = 12  # reference WebMercatorTile.java:9
 NTILES = 1 << ZOOM
 
 # ---------------------------------------------------------------------------
-# numpy implementations (shared by the pandas UDFs and the pytest oracle)
+# numpy implementations (shared by the Arrow UDFs and the pytest oracle)
 # ---------------------------------------------------------------------------
 
 

@@ -18,6 +18,11 @@ the ref string, exactly as a production decoder must, then computes
 features / resize-resample signatures / frame fan-outs FROM DECODED
 SAMPLES.
 
+Spark shape: every payload op is one ``mapInArrow`` over the narrow
+(doc_id, media_ref) rows (``_per_payload``); each task fetches and
+decodes its refs' payloads and a short per-op row function turns each
+into output values, so a batch stays Arrow in and Arrow out.
+
 Oracle-checkability: the synthetic image payload for a ref is a w×h
 RGB gradient pixel[y,x,c] = base_c + x + y, the synthetic audio
 payload a PCM16 sawtooth sample[i] = base + (i % 64), and the
@@ -35,9 +40,11 @@ import hashlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from osm_lib_spark.functions.apng import apng_decode, apng_encode, is_apng
 from osm_lib_spark.functions.png import png_decode, png_encode, resize_nearest
@@ -132,23 +139,56 @@ def decode_payload(raw: bytes):
 PAYLOAD_SCHEMA = "doc_id string, media_ref string, payload binary, n_bytes long"
 
 
+def _total(a: np.ndarray) -> int:
+    return int(a.astype(np.int64).sum())
+
+
+def _per_payload(media: DataFrame, ddl: str, row_fn) -> DataFrame:
+    """The loop behind every payload op: one ``mapInArrow`` over the
+    narrow (doc_id, media_ref) rows of ``media``. Each ref's payload is
+    fetched in the task that uses it, and ``row_fn(payload bytes)``
+    gives the values after (doc_id, media_ref) of that ref's output
+    rows: one tuple for a 1→1 op, any number for a fan-out. The payload
+    is the heavy column, so fetch and decode are fused into the one
+    Python stage and it never crosses the JVM boundary between two of
+    them."""
+    schema = to_arrow_schema(DataType.fromDDL(ddl))
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [
+                (doc_id, ref, *values)
+                for doc_id, ref in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist())
+                for values in row_fn(synth_payload(ref))
+            ]
+            cols = list(zip(*rows)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+            )
+
+    return media.select("doc_id", "media_ref").mapInArrow(task, ddl)
+
+
 def media_payloads(docs: DataFrame) -> DataFrame:
     """(doc_id, media_ref, payload, n_bytes): the binary media column.
 
-    mapInPandas fetch: one Arrow batch of refs in, one batch of PNG
-    byte payloads out — the batching/partitioning shape of a real
-    object-store fetch stage (payload bytes never touch the driver)."""
-    media = spans_of_kind(docs, "media").select("doc_id", "media_ref")
+    One Arrow batch of refs in, one batch of PNG/WAV/APNG byte payloads
+    out — the batching/partitioning shape of a real object-store fetch
+    stage (payload bytes never touch the driver)."""
+    return _per_payload(spans_of_kind(docs, "media"), PAYLOAD_SCHEMA, lambda raw: [(raw, len(raw))])
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref"]].reset_index(drop=True)
-            payloads = [synth_payload(r) for r in out["media_ref"]]
-            out["payload"] = payloads
-            out["n_bytes"] = [len(p) for p in payloads]
-            yield out
 
-    return media.mapInPandas(op, schema=PAYLOAD_SCHEMA)
+def _features(raw: bytes) -> list[tuple]:
+    kind, decoded = decode_payload(raw)
+    if kind == "img":
+        h, w = decoded.shape[:2]
+        return [(w, h, _total(decoded[:, :, 0]), _total(decoded[:, :, 1]))]
+    if kind == "vid":
+        stack = np.stack(decoded)  # (F, h, w, 3)
+        n_frames, h, w = stack.shape[:3]
+        return [(n_frames, w * h, _total(stack[:, :, :, 0]), _total(stack[-1, :, :, 1]))]
+    samples, rate = decoded
+    return [(samples.shape[0], rate, _total(samples), int(samples.max()))]
 
 
 def decode_media_features(docs: DataFrame) -> DataFrame:
@@ -167,44 +207,12 @@ def decode_media_features(docs: DataFrame) -> DataFrame:
     All four are recomputed by the oracle from the synthetic payload's
     closed form, so a bug in ANY codec breaks the gate hash.
 
-    mapInPandas partition-iterator: each Arrow batch fetches payload
-    bytes and decodes them (zlib inflate + unfilter per image/frame;
-    RIFF chunk walk + PCM frame decode per clip) — the exact batching
-    shape of a PIL/libsndfile/pyav decoder. Fetch and decode are FUSED
-    into ONE Python stage: the payload bytes are consumed where they
-    are produced instead of round-tripping Python→Arrow→JVM→Arrow→
-    Python between two mapInPandas operators (guide §4 — the payload
-    is the heavy column; it should cross the boundary zero times).
+    Each Arrow batch fetches payload bytes and decodes them (zlib
+    inflate + unfilter per image/frame; RIFF chunk walk + PCM frame
+    decode per clip) — the exact batching shape of a
+    PIL/libsndfile/pyav decoder (``_per_payload``).
     """
-    media = spans_of_kind(docs, "media").select("doc_id", "media_ref")
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref"]].reset_index(drop=True)
-            f0, f1, f2, f3 = [], [], [], []
-            for ref in pdf["media_ref"]:
-                kind, decoded = decode_payload(synth_payload(ref))
-                if kind == "img":
-                    f0.append(decoded.shape[1])
-                    f1.append(decoded.shape[0])
-                    f2.append(int(decoded[:, :, 0].astype(np.int64).sum()))
-                    f3.append(int(decoded[:, :, 1].astype(np.int64).sum()))
-                elif kind == "vid":
-                    stack = np.stack(decoded)  # (F, h, w, 3)
-                    f0.append(stack.shape[0])
-                    f1.append(stack.shape[1] * stack.shape[2])
-                    f2.append(int(stack[:, :, :, 0].astype(np.int64).sum()))
-                    f3.append(int(stack[-1, :, :, 1].astype(np.int64).sum()))
-                else:
-                    samples, rate = decoded
-                    f0.append(samples.shape[0])
-                    f1.append(rate)
-                    f2.append(int(samples.astype(np.int64).sum()))
-                    f3.append(int(samples.max()))
-            out["f0"], out["f1"], out["f2"], out["f3"] = f0, f1, f2, f3
-            yield out
-
-    return media.mapInPandas(op, schema=MEDIA_FEATURE_SCHEMA)
+    return _per_payload(spans_of_kind(docs, "media"), MEDIA_FEATURE_SCHEMA, _features)
 
 
 RESIZE_SCHEMA = "doc_id string, media_ref string, width int, height int, resized_sig long"
@@ -227,46 +235,19 @@ def resize_media(docs: DataFrame, width: int = 224, height: int = 224) -> DataFr
     The oracle recomputes all three signatures in SQL from the
     synthetic payload's closed form plus the same floor index map. A
     wrong resample (off-by-one index math, wrong rounding) breaks the
-    hash. Fetch+decode fused in one Python stage (see
-    decode_media_features).
+    hash. Fetch+decode fused in one Python stage (``_per_payload``).
     """
-    media = spans_of_kind(docs, "media").select("doc_id", "media_ref")
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["doc_id", "media_ref"]].reset_index(drop=True)
-            widths, heights, sigs = [], [], []
-            for ref in pdf["media_ref"]:
-                kind, decoded = decode_payload(synth_payload(ref))
-                if kind == "img":
-                    resized = resize_nearest(decoded, width, height)
-                    widths.append(width)
-                    heights.append(height)
-                    sigs.append(int(resized[:, :, 0].astype(np.int64).sum()))
-                elif kind == "vid":
-                    widths.append(width)
-                    heights.append(height)
-                    sigs.append(
-                        sum(
-                            int(
-                                resize_nearest(fr, width, height)[:, :, 0]
-                                .astype(np.int64)
-                                .sum()
-                            )
-                            for fr in decoded
-                        )
-                    )
-                else:
-                    resampled = resample_nearest(decoded[0], width)
-                    widths.append(width)
-                    heights.append(1)
-                    sigs.append(int(resampled.astype(np.int64).sum()))
-            out["width"] = widths
-            out["height"] = heights
-            out["resized_sig"] = sigs
-            yield out
+    def resized(raw: bytes) -> list[tuple]:
+        kind, decoded = decode_payload(raw)
+        if kind == "img":
+            return [(width, height, _total(resize_nearest(decoded, width, height)[:, :, 0]))]
+        if kind == "vid":
+            sig = sum(_total(resize_nearest(fr, width, height)[:, :, 0]) for fr in decoded)
+            return [(width, height, sig)]
+        return [(width, 1, _total(resample_nearest(decoded[0], width)))]
 
-    return media.mapInPandas(op, schema=RESIZE_SCHEMA)
+    return _per_payload(spans_of_kind(docs, "media"), RESIZE_SCHEMA, resized)
 
 
 FRAME_SCHEMA = "doc_id string, media_ref string, frame_idx int, frame_sig long"
@@ -276,7 +257,7 @@ def sample_frames(
     docs: DataFrame, every_n: int = 5, media_kind: str | None = None
 ) -> DataFrame:
     """Frame sampling: ONE media row fans out to MANY frame rows (the
-    1→N mapInPandas shape a real pyav sampler has). ``media_kind``
+    1→N shape a real pyav sampler has). ``media_kind``
     restricts to e.g. 'video' refs; None samples every media span
     (the synthetic fixtures carry img refs only).
 
@@ -292,38 +273,23 @@ def sample_frames(
     and the oracle (which re-derives w/h/n/F and the sums from the
     synthetic payload's closed form) catches either.
     """
-    media = spans_of_kind(docs, "media").select("doc_id", "media_ref")
+    media = spans_of_kind(docs, "media")
     if media_kind is not None:
         media = media.where(F.col("media_ref").contains(f"://{media_kind}/"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "media_ref": [], "frame_idx": [], "frame_sig": []}
-            for doc_id, ref in zip(pdf["doc_id"], pdf["media_ref"]):
-                kind, decoded = decode_payload(synth_payload(ref))
-                if kind == "vid":
-                    for idx in range(0, len(decoded), every_n):
-                        rows["doc_id"].append(doc_id)
-                        rows["media_ref"].append(ref)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_sig"].append(
-                            int(decoded[idx][:, :, 0].astype(np.int64).sum()) * 64
-                            + idx
-                        )
-                    continue
-                if kind == "img":
-                    h, w = decoded.shape[:2]
-                    sig_base = int(decoded[:, :, 0].astype(np.int64).sum())
-                    n_frames = 10 + (w * h) % 40
-                else:
-                    samples, _rate = decoded
-                    sig_base = int(samples.astype(np.int64).sum())
-                    n_frames = 10 + samples.shape[0] % 40
-                for idx in range(0, n_frames, every_n):
-                    rows["doc_id"].append(doc_id)
-                    rows["media_ref"].append(ref)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_sig"].append(sig_base * 64 + idx)
-            yield pd.DataFrame(rows)
+    def frames(raw: bytes) -> list[tuple]:
+        kind, decoded = decode_payload(raw)
+        if kind == "vid":
+            return [
+                (idx, _total(decoded[idx][:, :, 0]) * 64 + idx)
+                for idx in range(0, len(decoded), every_n)
+            ]
+        if kind == "img":
+            h, w = decoded.shape[:2]
+            sig_base, n_frames = _total(decoded[:, :, 0]), 10 + (w * h) % 40
+        else:
+            samples, _rate = decoded
+            sig_base, n_frames = _total(samples), 10 + samples.shape[0] % 40
+        return [(idx, sig_base * 64 + idx) for idx in range(0, n_frames, every_n)]
 
-    return media.mapInPandas(op, schema=FRAME_SCHEMA)
+    return _per_payload(media, FRAME_SCHEMA, frames)

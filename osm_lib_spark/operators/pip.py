@@ -1,7 +1,8 @@
 """Point-in-polygon via vectorized ray casting.
 
 Engine addition (no reference analog; BASELINE.json north_star mandates
-"ray-casting point-in-polygon in pandas batches"). One operator,
+"ray-casting point-in-polygon in pandas batches", run here on Arrow
+batches). One operator,
 ``points_in_polygons_bucketed``, serves every polygon set: polygons
 live in a DataFrame (``polygons_df`` builds one from a dict), and each
 covers the z12 tiles of its bbox. When the polygons, the nodes in
@@ -11,7 +12,7 @@ over the ``session.resident`` copy of cached ``nodes`` (no job), else
 over those nodes brought in one bounded collect (on sf-m nodes this
 beat the Spark form at every polygon set and share of the bound
 timed, ROADMAP forks table); otherwise points
-equi-join the polygon tiles on the tile key and a pandas UDF decides
+equi-join the polygon tiles on the tile key and an Arrow UDF decides
 membership per Arrow batch. Either way numpy does V
 vector operations per polygon group for a V-vertex polygon, never
 per-row Python.
@@ -30,7 +31,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,17 +71,14 @@ def polygons_df(spark, polygons: dict[int, list[np.ndarray]]) -> DataFrame:
 
 
 def _contains_by_polygon(
-    poly_id: pd.Series, lat: pd.Series, lon: pd.Series, rings_of
-) -> pd.Series:
-    """Per-bucket ray cast behind both UDFs: the rows of one Arrow batch
-    are grouped by polygon and each group runs the SAME vectorized
-    even-odd kernel the pandas oracle uses (``ray_cast_contains``) — one
-    kernel invocation per (polygon, ring, batch), never per row.
-    ``rings_of(i)`` gives the rings of row ``i``'s polygon as (V, 2)
-    float64 arrays."""
-    pid = poly_id.to_numpy()
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
+    pid: np.ndarray, la: np.ndarray, lo: np.ndarray, rings_of
+) -> np.ndarray:
+    """Per-bucket ray cast behind every PIP form: the rows (poly_id,
+    lat, lon arrays) are grouped by polygon and each group runs the
+    SAME vectorized even-odd kernel the pandas oracle uses
+    (``ray_cast_contains``) — one kernel invocation per (polygon, ring,
+    batch), never per row. ``rings_of(i)`` gives the rings of row
+    ``i``'s polygon as (V, 2) float64 arrays."""
     out = np.zeros(len(pid), dtype=bool)
     order = np.argsort(pid, kind="stable")
     for ii in np.split(order, np.flatnonzero(np.diff(pid[order])) + 1):
@@ -90,7 +87,7 @@ def _contains_by_polygon(
             for ring in rings_of(int(ii[0])):
                 inside ^= ray_cast_contains(ring, la[ii], lo[ii])
             out[ii] = inside
-    return pd.Series(out)
+    return out
 
 
 def _ring_arrays(rings) -> list[np.ndarray]:
@@ -102,12 +99,15 @@ def _ring_arrays(rings) -> list[np.ndarray]:
     ]
 
 
-@F.pandas_udf(T.BooleanType())
+@F.arrow_udf(T.BooleanType())
 def _contains_rings_udf(
-    poly_id: pd.Series, lat: pd.Series, lon: pd.Series, rings: pd.Series
-) -> pd.Series:
+    poly_id: pa.Array, lat: pa.Array, lon: pa.Array, rings: pa.Array
+) -> pa.Array:
     """Membership with the rings riding each candidate row."""
-    return _contains_by_polygon(poly_id, lat, lon, lambda i: _ring_arrays(rings.iloc[i]))
+    inside = _contains_by_polygon(
+        poly_id.to_numpy(), lat.to_numpy(), lon.to_numpy(), lambda i: _ring_arrays(rings[i].as_py())
+    )
+    return pa.array(inside)
 
 
 TILE_DDL = (
@@ -276,9 +276,7 @@ def _decide(spark, rings_of, bounds, node_id, lat, lon) -> DataFrame | None:
     pid, ii = np.concatenate(pids), np.concatenate(idx)
     if len(pid) * 8 > broadcast_threshold(spark):
         return None
-    inside = _contains_by_polygon(
-        pd.Series(pid), pd.Series(lat[ii]), pd.Series(lon[ii]), lambda i: rings_of[int(pid[i])]
-    ).to_numpy()
+    inside = _contains_by_polygon(pid, lat[ii], lon[ii], lambda i: rings_of[int(pid[i])])
     pid, nid = pid[inside], node_id[ii[inside]]
     # pid runs polygon by polygon: each run is one row's array
     heads = np.flatnonzero(np.diff(pid, prepend=pid[:1] - 1)) if len(pid) else np.empty(0, np.int64)
@@ -341,6 +339,10 @@ def _rings_on_rows(pts: DataFrame, polygons: DataFrame, zoom: int):
             *bbox_cols,
         )
     )
+    # 500 polygons over sf-m nodes at 105-120% of the candidate bound:
+    # this form cost 127-150 CPU-s where broadcast rings cost 49-53
+    # (ROADMAP forks table), so it runs only for polygons or tile rows
+    # over the threshold, the size no broadcast form can take
     return (
         pts.join(ptiles.hint("SHUFFLE_HASH"), ["xtile", "ytile"]),
         _contains_rings_udf(F.col("poly_id"), F.col("lat"), F.col("lon"), F.col("rings")),
@@ -438,12 +440,13 @@ def points_in_polygons_bucketed(
         else:
             bc = spark.sparkContext.broadcast(rings_of)
 
-            @F.pandas_udf(T.BooleanType())
-            def contains_bc(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-                by_pid = bc.value
-                return _contains_by_polygon(
-                    poly_id, lat, lon, lambda i: by_pid[int(poly_id.iat[i])]
+            @F.arrow_udf(T.BooleanType())
+            def contains_bc(poly_id: pa.Array, lat: pa.Array, lon: pa.Array) -> pa.Array:
+                by_pid, pid = bc.value, poly_id.to_numpy()
+                inside = _contains_by_polygon(
+                    pid, lat.to_numpy(), lon.to_numpy(), lambda i: by_pid[int(pid[i])]
                 )
+                return pa.array(inside)
 
             cand = pts.join(local_frame(spark, tiles, TILE_DDL), ["xtile", "ytile"])
             contains = contains_bc(F.col("poly_id"), F.col("lat"), F.col("lon"))

@@ -15,7 +15,7 @@ corners use the shared numpy kernel inside a vectorized Arrow UDF.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,22 +51,15 @@ def rasterize_nodes(nodes: DataFrame, zoom: int = ZOOM) -> DataFrame:
     )
 
 
-_CORNER_SCHEMA = T.StructType(
-    [
-        T.StructField("north", T.DoubleType()),
-        T.StructField("south", T.DoubleType()),
-        T.StructField("east", T.DoubleType()),
-        T.StructField("west", T.DoubleType()),
-    ]
+_CORNERS = T.StructType(
+    [T.StructField(c, T.DoubleType()) for c in ("north", "south", "east", "west")]
 )
 
 
-@F.pandas_udf(_CORNER_SCHEMA)
-def _tile_corners(xtile: pd.Series, ytile: pd.Series) -> pd.DataFrame:
-    north, south, east, west = np_tile_bbox(
-        xtile.to_numpy(dtype=np.int64), ytile.to_numpy(dtype=np.int64)
-    )
-    return pd.DataFrame({"north": north, "south": south, "east": east, "west": west})
+@F.arrow_udf(_CORNERS)
+def _tile_corners(xtile: pa.Array, ytile: pa.Array) -> pa.Array:
+    corners = np_tile_bbox(xtile.to_numpy().astype(np.int64), ytile.to_numpy().astype(np.int64))
+    return pa.StructArray.from_arrays([pa.array(c) for c in corners], _CORNERS.names)
 
 
 def vectorize_raster(raster: DataFrame, min_points: int = 1) -> DataFrame:

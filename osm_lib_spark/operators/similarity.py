@@ -55,12 +55,10 @@ closure, and each task returns at most Q·k (or Q·refine) rows.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm_lib_spark.functions.hashing import cosine_fold_col, dot_fold_np, l2_fold_np, norm_fold_np
 from osm_lib_spark.session import broadcast_threshold, cache_rows, collect_bounded, local_frame, row_bytes
@@ -128,14 +126,14 @@ def lsh_signature_udf(planes: np.ndarray):
     assignment is deterministic and replayable.
     """
 
-    @F.pandas_udf(T.LongType())
-    def sig(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy())  # (batch, dim) float32
+    @F.arrow_udf("long")
+    def sig(emb: pa.Array) -> pa.Array:
+        mat = emb.flatten().to_numpy().reshape(len(emb), planes.shape[1])  # (batch, dim) float32
         out = np.zeros(len(mat), dtype=np.int64)
         for j in range(planes.shape[0]):
             d = dot_fold_np(mat, planes[j])
             out |= (d > 0).astype(np.int64) << j
-        return pd.Series(out)
+        return pa.array(out)
 
     return sig
 

@@ -15,7 +15,7 @@ We parse members as the OSC schema defines them.
 
 Spark shape: one diff FILE is the parallelism unit (files are
 replication minutes — thousands exist at catch-up time), decoded with
-``xml.etree.iterparse`` inside ``mapInPandas``. Rows carry a per-file
+``xml.etree.iterparse`` inside ``mapInArrow``. Rows carry a per-file
 ``seq`` so ``apply_changes`` keeps last-wins semantics within a batch.
 """
 
@@ -25,13 +25,14 @@ import gzip
 import io
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-CHANGE_SCHEMA = (
-    "path string, seq long, action string, entity_type string, id long, "
-    "fixed_lat int, fixed_lon int, "
-    "tags array<struct<key:string,value:string>>, node_ids array<long>, "
-    "members array<struct<type:string,member_id:long,role:string>>"
+from osm_lib_spark.sources.pbf import _PA_SCHEMA, ENTITY_SCHEMA
+
+CHANGE_SCHEMA = "path string, seq long, action string, " + ENTITY_SCHEMA
+_CHANGE_ARROW = pa.schema(
+    [("path", pa.string()), ("seq", pa.int64()), ("action", pa.string()), *_PA_SCHEMA]
 )
 
 _ACTIONS = {"create": "add", "add": "add", "modify": "modify", "delete": "delete"}
@@ -42,8 +43,9 @@ def _to_fixed(deg_str: str) -> int:
     return int(float(deg_str) * 1e7)
 
 
-def parse_osc_bytes(path: str, data: bytes) -> pd.DataFrame:
-    """One osmChange document → change rows (order-preserving)."""
+def parse_osc_bytes(path: str, data: bytes) -> pa.Table:
+    """One osmChange document → its ``CHANGE_SCHEMA`` rows as an Arrow
+    table (order-preserving)."""
     import xml.etree.ElementTree as ET
 
     if data[:2] == b"\x1f\x8b":
@@ -95,23 +97,7 @@ def parse_osc_bytes(path: str, data: bytes) -> pd.DataFrame:
         rows.append(row)
         seq += 1
         el.clear()
-    return pd.DataFrame(rows, columns=list(_EMPTY.columns)) if rows else _EMPTY.copy()
-
-
-_EMPTY = pd.DataFrame(
-    {
-        "path": pd.Series(dtype=object),
-        "seq": pd.Series(dtype="int64"),
-        "action": pd.Series(dtype=object),
-        "entity_type": pd.Series(dtype=object),
-        "id": pd.Series(dtype="int64"),
-        "fixed_lat": pd.Series(dtype=object),
-        "fixed_lon": pd.Series(dtype=object),
-        "tags": pd.Series(dtype=object),
-        "node_ids": pd.Series(dtype=object),
-        "members": pd.Series(dtype=object),
-    }
-)
+    return pa.Table.from_pylist(rows, schema=_CHANGE_ARROW)
 
 
 def read_osc(spark, paths: list[str]):
@@ -132,15 +118,15 @@ def read_osc(spark, paths: list[str]):
     idx = local_frame(spark, [(p, i) for i, p in enumerate(paths)], "path string, i long")
     idx = idx.repartition(max(1, min(len(paths), 64)), "i")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for r in batch.to_pylist():
                 with open(r["path"], "rb") as f:
                     out = parse_osc_bytes(r["path"], f.read())
-                out["seq"] = out["seq"] + (int(r["i"]) << 32)
-                yield out
+                seq = pc.add(out.column("seq"), pa.scalar(r["i"] << 32, pa.int64()))
+                yield from out.set_column(1, "seq", seq).to_batches()
 
-    return idx.mapInPandas(decode, schema=CHANGE_SCHEMA)
+    return idx.mapInArrow(decode, schema=CHANGE_SCHEMA)
 
 
 def osc_node_changes(changes):

@@ -70,7 +70,7 @@ def test_convert_pbf_to_vex_with_speeds_and_txt(spark, tmp_path, capsys):
     assert first[0] == "N" and "." in first[2] and len(first[2].split(".")[1]) == 6
     # GLOBAL line order must be fully (type rank, id)-sorted — the
     # TextOutput.java contract. This guards the range-partitioned
-    # orderBy surviving mapInPandas + name-ordered part concatenation
+    # orderBy surviving mapInArrow + name-ordered part concatenation
     # (an optimizer/AQE regression dropping the sort would reorder
     # lines while leaving the per-line grammar intact).
     rank = {"N": 0, "W": 1, "R": 2}

@@ -166,6 +166,37 @@ def test_media_cli_pipeline(spark, tmp_path, capsys):
     assert media_main(["--docs", docs, "--out", out, "--every-n", "0"]) == 2
 
 
+def test_convert_cli_txt_and_vex_sinks(spark, docs_xs, tmp_path):
+    """jobs/convert.py from a .pbf of the sf-xs entities: the .txt sink
+    writes the TextOutput sentinels and one line per source entity in
+    (type rank, id) order, and the .vex sink holds each type's source
+    count."""
+    from jobs.convert import main as convert_main
+    from osm_lib_spark.sources.pbf import write_pbf
+    from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
+    from osm_lib_spark.sources.vex import read_vex
+
+    tables = {"node": parse_nodes(docs_xs), "way": parse_ways(docs_xs), "relation": parse_relations(docs_xs)}
+    src = str(tmp_path / "xs.pbf")
+    write_pbf(src, *tables.values())
+    ids = {kind: [r.id for r in t.select("id").collect()] for kind, t in tables.items()}
+
+    out_txt = str(tmp_path / "xs.txt")
+    assert convert_main([src, out_txt]) == 0
+    with open(out_txt) as f:
+        lines = f.read().split("\n")
+    assert lines[0] == "--- BEGINNING OF OSM TEXT OUTPUT ---"
+    assert lines[-1] == "--- END OF OSM TEXT OUTPUT ---"
+    rank = {"N": 0, "W": 1, "R": 2}
+    keys = [(rank[ln[0]], int(ln.split(" ", 2)[1])) for ln in lines[1:-1]]
+    assert keys == sorted((rank[kind[0].upper()], i) for kind, kind_ids in ids.items() for i in kind_ids)
+
+    out_vex = str(tmp_path / "xs.vex")
+    assert convert_main([src, out_vex]) == 0
+    counts = read_vex(spark, out_vex).groupBy("entity_type").count().collect()
+    assert {r.entity_type: r["count"] for r in counts} == {kind: len(v) for kind, v in ids.items()}
+
+
 def test_ingest_cli_end_to_end(spark, tmp_path, capsys):
     """jobs/ingest.py: bootstrap the corpus index, ingest a batch with
     one corpus dup, one internal dup pair, and one novel doc — the

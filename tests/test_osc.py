@@ -41,10 +41,11 @@ OSC = b"""<?xml version='1.0' encoding='UTF-8'?>
 
 
 def test_parse_osc_bytes_semantics():
-    df = parse_osc_bytes("x.osc", OSC)
-    assert list(df["action"]) == ["modify", "modify", "delete", "add", "add"]
-    assert list(df["seq"]) == [0, 1, 2, 3, 4]
-    node = df.iloc[0]
+    table = parse_osc_bytes("x.osc", OSC)
+    assert table.column("action").to_pylist() == ["modify", "modify", "delete", "add", "add"]
+    assert table.column("seq").to_pylist() == [0, 1, 2, 3, 4]
+    rows = table.to_pylist()
+    node = rows[0]
     # fixed-point truncation parity with Java's (int)(parseDouble * 1e7):
     # 44.7730578 * 1e7 = 447730577.99999994 in float64 → truncates to
     # ...577 — one ulp BELOW the PBF-decoded value for the same
@@ -52,9 +53,9 @@ def test_parse_osc_bytes_semantics():
     # (Node.setLatLon double path vs PBF's exact integer path)
     assert node["fixed_lat"] == 447730577 and node["fixed_lon"] == -688692696
     assert node["tags"] == [{"key": "railway", "value": "level_crossing"}]
-    way = df.iloc[1]
+    way = rows[1]
     assert way["node_ids"] == [1, 2, 3]
-    rel = df.iloc[4]
+    rel = rows[4]
     # intended semantics: members ARE parsed (the reference's SAX
     # handler drops them — OSMChangeParser.java:55-63)
     assert rel["members"] == [

@@ -7,10 +7,11 @@ import io
 import json
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osm_lib_spark.functions.tiles import bbox_tile_range
+from osm_lib_spark.functions.tiles import bbox_tile_range, np_tile_bbox
 from osm_lib_spark.operators.extract import (
     CLOSURE_DDL,
     bbox_extract_batch,
@@ -139,11 +140,23 @@ def test_rasterize_matches_way_tiles_math(spark, docs_xs, fixture_xs):
     assert raster.agg(F.sum("n_points")).first()[0] == nodes.count()
 
     vec = vectorize_raster(raster, min_points=5)
-    row = vec.first()
-    assert row.wkt.startswith("POLYGON ((") and row.wkt.endswith("))")
-    # ring is closed: first point == last point
-    pts = row.wkt[len("POLYGON (("):-2].split(", ")
-    assert len(pts) == 5 and pts[0] == pts[-1]
+    cells = vec.collect()
+    assert cells
+    for row in cells:
+        assert row.wkt.startswith("POLYGON ((") and row.wkt.endswith("))")
+        # ring is closed: first point == last point
+        pts = row.wkt[len("POLYGON (("):-2].split(", ")
+        assert len(pts) == 5 and pts[0] == pts[-1]
+    # each ring's (lon, lat) corners are its tile's bbox, to the 7 decimals written
+    ring = np.array(
+        [[p.split(" ") for p in r.wkt[len("POLYGON (("):-2].split(", ")] for r in cells],
+        dtype=np.float64,
+    )
+    north, south, east, west = np_tile_bbox(
+        np.array([r.xtile for r in cells], np.int64), np.array([r.ytile for r in cells], np.int64)
+    )
+    want = np.array([[west, south], [east, south], [east, north], [west, north], [west, south]])
+    np.testing.assert_allclose(ring, want.transpose(2, 0, 1), rtol=0, atol=1e-7)
 
 
 def _knn_round_plans(spark, docs_xs, fixture_xs) -> list[str]:
@@ -298,40 +311,70 @@ def test_row_bytes_is_the_local_relation_estimate(spark):
         assert int(size) == 5 * row_bytes(spark, ddl), ddl
 
 
-# Every localCheckpoint, F.broadcast and .hint( call in osm_lib_spark/,
-# by (module, enclosing function, call) → number of calls.
+# Every localCheckpoint, F.broadcast and .hint( call in osm_lib_spark/
+# and jobs/, by (module, enclosing function, call) → number of calls.
 CHECKPOINT_AND_HINT_SITES = {
-    ("operators/dedup.py", "_components", "localCheckpoint"): 1,
-    ("operators/dedup.py", "_propagate_labels", "localCheckpoint"): 3,
-    ("operators/dedup.py", "_spark_dup_pairs", "localCheckpoint"): 1,
-    ("operators/dedup.py", "_verify_pairs", "localCheckpoint"): 4,
-    ("operators/enrich.py", "enrich_tags", "broadcast"): 1,
-    ("operators/extract.py", "_closure_loop", "localCheckpoint"): 2,
-    ("operators/extract.py", "_member_index", "hint"): 1,
-    ("operators/extract.py", "_member_index", "localCheckpoint"): 1,
-    ("operators/extract.py", "bbox_extract_batch", "hint"): 1,
-    ("operators/extract.py", "bbox_extract_batch", "localCheckpoint"): 2,
-    ("operators/extract.py", "relation_closure_table", "hint"): 1,
-    ("operators/extract.py", "relation_closure_table", "localCheckpoint"): 1,
-    ("operators/knn.py", "knn_kring", "localCheckpoint"): 1,
-    ("operators/pip.py", "_rings_on_rows", "hint"): 1,
-    ("operators/similarity.py", "_train_index", "localCheckpoint"): 1,
-    ("operators/similarity.py", "cosine_topk", "broadcast"): 1,
-    ("streaming/replication.py", "apply_plan", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/dedup.py", "_components", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/dedup.py", "_propagate_labels", "localCheckpoint"): 3,
+    ("osm_lib_spark/operators/dedup.py", "_spark_dup_pairs", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/dedup.py", "_verify_pairs", "localCheckpoint"): 4,
+    ("osm_lib_spark/operators/enrich.py", "enrich_tags", "broadcast"): 1,
+    ("osm_lib_spark/operators/extract.py", "_closure_loop", "localCheckpoint"): 2,
+    ("osm_lib_spark/operators/extract.py", "_member_index", "hint"): 1,
+    ("osm_lib_spark/operators/extract.py", "_member_index", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/extract.py", "bbox_extract_batch", "hint"): 1,
+    ("osm_lib_spark/operators/extract.py", "bbox_extract_batch", "localCheckpoint"): 2,
+    ("osm_lib_spark/operators/extract.py", "relation_closure_table", "hint"): 1,
+    ("osm_lib_spark/operators/extract.py", "relation_closure_table", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/knn.py", "knn_kring", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/pip.py", "_rings_on_rows", "hint"): 1,
+    ("osm_lib_spark/operators/similarity.py", "_train_index", "localCheckpoint"): 1,
+    ("osm_lib_spark/operators/similarity.py", "cosine_topk", "broadcast"): 1,
+    ("osm_lib_spark/streaming/replication.py", "apply_plan", "localCheckpoint"): 1,
+    ("jobs/convert.py", "_apply_speeds", "broadcast"): 1,
+}
+
+# Every Python-task carrier call (mapInArrow, arrow_udf and the two
+# stateful streaming applyInPandasWithState sites) in the same modules,
+# keyed the same way (a decorator under the function it decorates). No
+# mapInPandas or pandas_udf is listed: each batch stays Arrow in and
+# Arrow out.
+PYTHON_TASK_SITES = {
+    ("osm_lib_spark/operators/dedup.py", "_banded", "mapInArrow"): 1,
+    ("osm_lib_spark/operators/knn.py", "_partition_round", "arrow_udf"): 1,
+    ("osm_lib_spark/operators/multimodal.py", "_per_payload", "mapInArrow"): 1,
+    ("osm_lib_spark/operators/pip.py", "_contains_rings_udf", "arrow_udf"): 1,
+    ("osm_lib_spark/operators/pip.py", "contains_bc", "arrow_udf"): 1,
+    ("osm_lib_spark/operators/raster.py", "_tile_corners", "arrow_udf"): 1,
+    ("osm_lib_spark/operators/similarity.py", "_encode_frame", "mapInArrow"): 1,
+    ("osm_lib_spark/operators/similarity.py", "_partition_sums", "mapInArrow"): 1,
+    ("osm_lib_spark/operators/similarity.py", "_partition_top", "mapInArrow"): 1,
+    ("osm_lib_spark/operators/similarity.py", "sig", "arrow_udf"): 1,
+    ("osm_lib_spark/sources/osc.py", "read_osc", "mapInArrow"): 1,
+    ("osm_lib_spark/sources/pbf.py", "compose_blob_frame", "mapInArrow"): 1,
+    ("osm_lib_spark/sources/pbf.py", "read_pbf", "mapInArrow"): 1,
+    ("osm_lib_spark/sources/pbf.py", "write_blocks", "mapInArrow"): 1,
+    ("osm_lib_spark/sources/vex.py", "read_vex", "mapInArrow"): 1,
+    ("osm_lib_spark/streaming/sessions.py", "session_stream", "applyInPandasWithState"): 1,
+    ("osm_lib_spark/streaming/stateful.py", "entity_state_stream", "applyInPandasWithState"): 1,
+    ("jobs/convert.py", "_write_txt", "mapInArrow"): 1,
 }
 
 
 def test_checkpoint_and_hint_sites_are_listed():
-    """The engine's checkpoint and join-hint calls are exactly the ones
-    in CHECKPOINT_AND_HINT_SITES: a new site fails this test until it is
-    listed there, and a removed one until it is struck, so their number
-    is tracked."""
+    """The checkpoint and join-hint calls under osm_lib_spark/ and jobs/
+    are exactly the ones in CHECKPOINT_AND_HINT_SITES, and the
+    Python-task carrier calls the ones in PYTHON_TASK_SITES: a new site
+    fails this test until it is listed there, and a removed one until it
+    is struck, so their number is tracked."""
     import ast
     import pathlib
     from collections import Counter
 
-    root = pathlib.Path(__file__).resolve().parents[1] / "osm_lib_spark"
+    root = pathlib.Path(__file__).resolve().parents[1]
+    carriers = ("mapInArrow", "mapInPandas", "arrow_udf", "pandas_udf", "applyInPandasWithState")
     sites: Counter = Counter()
+    tasks: Counter = Counter()
 
     class Sites(ast.NodeVisitor):
         def __init__(self, module):
@@ -344,13 +387,18 @@ def test_checkpoint_and_hint_sites_are_listed():
 
         def visit_Call(self, node):
             f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            key = (self.module, self.scope[-1], name)
             if isinstance(f, ast.Attribute) and (
-                f.attr in ("localCheckpoint", "hint")
-                or (f.attr == "broadcast" and isinstance(f.value, ast.Name) and f.value.id == "F")
+                name in ("localCheckpoint", "hint")
+                or (name == "broadcast" and isinstance(f.value, ast.Name) and f.value.id == "F")
             ):
-                sites[(self.module, self.scope[-1], f.attr)] += 1
+                sites[key] += 1
+            if name in carriers:
+                tasks[key] += 1
             self.generic_visit(node)
 
-    for path in sorted(root.rglob("*.py")):
+    for path in sorted([*(root / "osm_lib_spark").rglob("*.py"), *(root / "jobs").rglob("*.py")]):
         Sites(path.relative_to(root).as_posix()).visit(ast.parse(path.read_text()))
     assert dict(sites) == CHECKPOINT_AND_HINT_SITES
+    assert dict(tasks) == PYTHON_TASK_SITES
